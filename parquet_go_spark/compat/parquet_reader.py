@@ -137,13 +137,13 @@ def _decode_values(enc: int, ptype: str, payload, pos: int, nvals: int, dict_val
         vals, _ = plain.decode_fixed(payload, nvals, ptype, pos)
         return vals
     if enc == 5:  # DELTA_BINARY_PACKED
-        vals, _ = deltabp.decode(payload, pos, 32 if ptype == "int32" else 64)
+        vals, _ = deltabp.decode(payload, pos, 32 if ptype == "int32" else 64, nvals)
         return vals
     if enc == 6:  # DELTA_LENGTH_BYTE_ARRAY
-        lens, data, _ = bytearrays.decode_delta_length(payload, pos)
+        lens, data, _ = bytearrays.decode_delta_length(payload, pos, nvals)
         return (lens, data)
     if enc == 7:  # DELTA_BYTE_ARRAY
-        lens, data, _ = bytearrays.decode_delta(payload, pos)
+        lens, data, _ = bytearrays.decode_delta(payload, pos, nvals)
         return (lens, data)
     if enc == 9:  # BYTE_STREAM_SPLIT (fixed-width transpose)
         if ptype == "flba":

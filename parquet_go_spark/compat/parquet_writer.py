@@ -79,18 +79,22 @@ def _encode_page_values(enc: int, col: ColumnData, vlo, vhi, dlo, dhi, codes, di
 
 
 def _choose(col: ColumnData, encoding: str | None):
+    """-> (encoding, factorization). The factorization ``(codes, uniques,
+    distinct)`` is set for dictionary chunks: the writer reuses the one
+    the choice computed instead of factorizing the column again."""
     if encoding:
-        return {
+        enc = {
             "plain": E_PLAIN,
             "delta_bp": E_DELTA_BP,
             "delta_length": E_DELTA_LEN,
             "delta_bytes": E_DELTA_BA,
             "rle_dict": E_RLE_DICT,
         }[encoding]
+        return enc, (_factorize(col) if enc == E_RLE_DICT else None)
     if col.ptype == "bool" or col.num_values == 0:
-        return E_PLAIN
-    _, _, distinct = _factorize(col)
-    return E_RLE_DICT if distinct <= DICT_MAX else E_PLAIN
+        return E_PLAIN, None
+    fact = _factorize(col)
+    return (E_RLE_DICT, fact) if fact[2] <= DICT_MAX else (E_PLAIN, None)
 
 
 def _stats_bytes(v, ptype: str) -> bytes:
@@ -219,12 +223,12 @@ def _write_chunk(out: bytearray, col: ColumnData, name: str, enc_name: str | Non
     nanos-of-day + Julian-day values, no dictionary, no min/max stats
     (INT96 ordering is undefined by the spec, so stats carry only the
     null count)."""
-    enc = E_PLAIN if as_int96 else _choose(col, enc_name)
+    enc, fact = (E_PLAIN, None) if as_int96 else _choose(col, enc_name)
     codes = uniques = None
     dict_size = 0
     distinct = -1
     if enc == E_RLE_DICT:
-        codes, uniques, dict_size = _factorize(col)
+        codes, uniques, dict_size = fact
         distinct = dict_size
     chunk_start = len(out)
     dict_offset = None
@@ -433,12 +437,12 @@ def _write_chunk_nested(
     rep, deflv, leaf, row_counts, has = shred_leaf(arr, spec)
     max_rep, max_def = spec["max_rep"], spec["max_def"]
     col = from_arrow(leaf)  # all-defined leaf values
-    enc = _choose(col, enc_name)
+    enc, fact = _choose(col, enc_name)
     codes = uniques = None
     dict_size = 0
     distinct = -1
     if enc == E_RLE_DICT:
-        codes, uniques, dict_size = _factorize(col)
+        codes, uniques, dict_size = fact
         distinct = dict_size
     chunk_start = len(out)
     dict_offset = None

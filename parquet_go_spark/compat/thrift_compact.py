@@ -59,6 +59,12 @@ def _read_value(buf, pos: int, vtype: int, depth: int = 0):
     if vtype == T_BINARY:
         ln, pos = read_uvarint(buf, pos)
         return bytes(buf[pos : pos + ln]), pos + ln
+    if vtype in (T_LIST, T_SET, T_MAP):
+        # a collection nests like a struct: its elements read one level
+        # deeper, so forged list-of-list chains hit the same governor
+        depth += 1
+        if depth > _MAX_DEPTH:
+            raise ValueError("thrift compact: implausible nesting depth")
     if vtype in (T_LIST, T_SET):
         hdr = buf[pos]
         pos += 1

@@ -541,7 +541,10 @@ def _chunk_fsst_table(col: ColumnData):
     return fsst.train(lens, data)
 
 
-def _encode_values(enc: str, col: ColumnData, vlo: int, vhi: int, dlo: int, dhi: int, codes, dict_size: int, index_mode: str, fsst_table=None, codec_dict: bytes = b"", zcodec: int | None = None, alp_hint: dict | None = None, zlevel: int | None = None) -> bytes:
+def _encode_values(enc: str, col: ColumnData, vlo: int, vhi: int, dlo: int, dhi: int, codes, dict_size: int, index_mode: str, hint=None) -> bytes:
+    """Encode values [vlo, vhi) (bytes [dlo, dhi)). ``hint`` is the
+    chunk's probe result for ``enc`` (FSST table, zdict plan or ALP
+    parameters; see ``selector.choose_encoding``)."""
     if enc == "rle_dict":
         return dictenc.encode_indices(codes[vlo:vhi].astype(np.uint64), dict_size, mode=index_mode)
     if col.ptype == "flba":
@@ -569,9 +572,9 @@ def _encode_values(enc: str, col: ColumnData, vlo: int, vhi: int, dlo: int, dhi:
         if enc == "delta_bytes":
             return bytearrays.encode_delta(lens, data)
         if enc == "fsst":
-            return fsst.encode_column(lens, data, fsst_table)
+            return fsst.encode_column(lens, data, hint)
         if enc == "zdict":
-            return bytearrays.encode_zdict(lens, data, codec_dict, level=zlevel, codec=zcodec)
+            return bytearrays.encode_zdict(lens, data, hint.zdict, level=hint.level, codec=hint.codec)
         raise ValueError(f"bad bytes encoding {enc}")
     vals = col.values[vlo:vhi]
     if enc == "plain":
@@ -587,7 +590,7 @@ def _encode_values(enc: str, col: ColumnData, vlo: int, vhi: int, dlo: int, dhi:
     if enc == "bss":
         return bytestreamsplit.encode(vals)
     if enc == "alp":
-        return alp.encode(vals, hint=alp_hint)
+        return alp.encode(vals, hint=hint)
     raise ValueError(f"bad encoding {enc} for {col.ptype}")
 
 
@@ -621,20 +624,20 @@ def _decode_values(enc: str, ptype: str, payload: bytes, pos: int, nvals: int, d
             data = np.frombuffer(payload, np.uint8, total, pos)
             return np.ascontiguousarray(data.reshape(w, nvals).T).reshape(-1), pos + total
         if enc == "delta_bytes":
-            _lens, data, pos = bytearrays.decode_delta(payload, pos)
+            _lens, data, pos = bytearrays.decode_delta(payload, pos, nvals)
             return np.asarray(data), pos
         raise ValueError(f"bad flba encoding {enc}")
     if ptype == "bytes":
         if enc == "plain":
             lens, data, pos = plain.decode_byte_array(payload, nvals, pos)
         elif enc == "delta_length":
-            lens, data, pos = bytearrays.decode_delta_length(payload, pos)
+            lens, data, pos = bytearrays.decode_delta_length(payload, pos, nvals)
         elif enc == "delta_bytes":
-            lens, data, pos = bytearrays.decode_delta(payload, pos)
+            lens, data, pos = bytearrays.decode_delta(payload, pos, nvals)
         elif enc == "fsst":
-            lens, data, pos = fsst.decode_column(payload, pos)
+            lens, data, pos = fsst.decode_column(payload, pos, nvals)
         elif enc == "zdict":
-            lens, data, pos = bytearrays.decode_zdict(payload, pos, codec_dict)
+            lens, data, pos = bytearrays.decode_zdict(payload, pos, codec_dict, nvals)
         else:
             raise ValueError(enc)
         return (lens, data), pos
@@ -648,7 +651,7 @@ def _decode_values(enc: str, ptype: str, payload: bytes, pos: int, nvals: int, d
         vals, pos = hybrid.decode_sized(payload, 1, nvals, pos)
         return vals.astype(bool), pos
     if enc == "delta_bp":
-        vals, pos = deltabp.decode(payload, pos, 32 if ptype == "int32" else 64)
+        vals, pos = deltabp.decode(payload, pos, 32 if ptype == "int32" else 64, nvals)
         return vals, pos
     if enc == "for_bp":
         vals, pos = forbp.decode(payload, pos, 32 if ptype == "int32" else 64)
@@ -755,33 +758,22 @@ def encode_chunk(
         enc, codes, uniques, distinct, dict_size, sel_aux = choose_encoding(col, compression)
 
     bounds = _page_boundaries(col, max_page)
-    fsst_table = None
+    # one probe per CHUNK (pages inherit the hint): the selector's, or
+    # the same probe when the encoding is forced
+    hint = sel_aux
+    if hint is None:
+        if enc == "alp" and col.ptype in ("float", "double"):
+            # pages verify the (e, rb) hint and re-search only on
+            # divergence (kernels/alp.py choose_params)
+            hint = alp.choose_params(col.values)
+        elif enc == "fsst":
+            hint = _chunk_fsst_table(col)
+        elif enc == "zdict":
+            hint = bytearrays.plan_zdict(col.lengths, col.data)
     codec_dict = b""
-    alp_hint = None
-    if enc == "alp" and col.ptype in ("float", "double"):
-        # one (e, rb) search per CHUNK; pages verify and re-search only
-        # on divergence (kernels/alp.py choose_params)
-        alp_hint = sel_aux if isinstance(sel_aux, dict) else alp.choose_params(col.values)
-    if enc == "fsst":
-        fsst_table = sel_aux if sel_aux is not None else _chunk_fsst_table(col)
-    zcodec = None
-    zlevel = None
     if enc == "zdict":
-        codec_dict = (
-            sel_aux
-            if isinstance(sel_aux, bytes)
-            else bytearrays.train_zdict(col.lengths, col.data)
-        )
-        # one entropy-coder decision per chunk (every page inherits it);
-        # zstd pages never consult the trained dict, so don't store it
-        zcodec = bytearrays.choose_zdict_codec(col.lengths, col.data, codec_dict)
-        if zcodec == 1:
-            codec_dict = b""
-        else:
-            # one DEFLATE level probe per CHUNK (pages inherit): per-page
-            # probes cost two 256 KiB compress passes EACH — on a 240 MB
-            # html chunk that's ~240 probes for one decision
-            zlevel = bytearrays.choose_deflate_level(col.data)
+        # zstd pages never consult the trained dict, so the plan stores none
+        codec_dict = hint.zdict
         # the value stream is already entropy-coded: a second block-
         # compression pass over the pages re-reads and re-writes the
         # chunk's dominant byte volume for ~no size win (snappy over
@@ -833,9 +825,7 @@ def encode_chunk(
         else:
             dlo = dhi = 0
         lvl = levels.encode_def_levels(validity, mode=level_mode)
-        vals = _encode_values(
-            enc, col, vstart, vend, dlo, dhi, codes, dict_size or 0, index_mode, fsst_table, codec_dict, zcodec, alp_hint, zlevel
-        )
+        vals = _encode_values(enc, col, vstart, vend, dlo, dhi, codes, dict_size or 0, index_mode, hint)
         payload = lvl + vals
         comp = _compress(payload, compression)
         out += uvarint(row_hi - row_lo)

@@ -11,6 +11,14 @@ The selection is cost-aware: each candidate's estimated output bytes are
 scaled by a relative CPU-cost penalty so an expensive codec (FSST) only
 wins when its size advantage is real. The reference decision is the
 strict special case ``profile="reference"`` in chunk.py.
+
+One-probe contract: every expensive per-chunk probe runs at most once
+per chunk — the zdict plan (trained dict, entropy coder and DEFLATE
+level, from ``bytearrays.plan_zdict`` over the whole column), the FSST
+symbol table and the ALP parameter search. Its result is the candidate's
+``hint``: the sample re-estimates reuse it, and ``encode_chunk`` hands the
+chosen encoding's hint to every page instead of probing again (ALP
+pages only re-search when a page diverges from the hint).
 """
 
 from __future__ import annotations
@@ -76,15 +84,18 @@ def _sample_distinct_ratio(col: ColumnData, k: int = 4096) -> float:
 
 
 def choose_encoding(col: ColumnData, compression: str = "none"):
-    """-> (encoding, codes, uniques, distinct, dict_size, fsst_table).
+    """-> (encoding, codes, uniques, distinct, dict_size, hint).
 
-    ``fsst_table`` is the symbol table trained during estimation (on the
-    full column or a representative strided sample) — reused by the
-    encoder so FSST never trains twice."""
-    from .chunk import _compress, _encode_dict_values, _factorize
+    ``hint`` is the chosen encoding's chunk-level probe result, or None:
+    the FSST symbol table (trained on the full column or a strided
+    sample), the zdict :class:`~..kernels.bytearrays.ZdictPlan` or the
+    ALP parameters. Every probe runs once per chunk: the sample
+    re-estimates below and the chunk encoder reuse the same hint, so
+    FSST trains once and the zdict dict, codec and level are each
+    decided once."""
+    from .chunk import _compress, _factorize
 
     n = col.num_values
-    fsst_table = None
     if n == 0:
         if col.ptype == "bool":
             return "plain", None, None, 0, 0, None
@@ -119,36 +130,34 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
                 dict_page = dict_size * (4 if col.ptype in ("int32", "float") else 8)
             est["rle_dict"] = dict_page + idx_stream
 
-    zdict_aux = None
+    hints: dict = {}  # per-candidate chunk hint: probed once, reused by every encode
     zdict_penalty = COST_PENALTY["zdict"]
+    z_sample = (-1, b"")  # (value count, encoding) of the zdict prefix sample
     if col.ptype == "bytes":
         total = int(col.lengths.sum())
         est["plain"] = total + 4 * n
         # delta_length: lengths stream is cheap to encode exactly
         lens_enc = deltabp.encode(col.lengths.astype(np.int32), 32)
         est["delta_length"] = total + len(lens_enc)
-        # zdict: entropy coding of the value stream under a trained
-        # per-chunk dictionary; estimated on a byte-capped prefix sample
-        # (DEFLATE ratio is positionally stable on one column's data)
+        # zdict: entropy coding of the value stream under the chunk's
+        # one plan (dict, codec, level — probed on the whole column),
+        # estimated on a byte-capped prefix sample (the ratio is
+        # positionally stable on one column's data)
         if total >= 4096:
-            zdict_aux = bytearrays.train_zdict(col.lengths, col.data)
+            plan = hints["zdict"] = bytearrays.plan_zdict(col.lengths, col.data)
             zk = min(n, int(np.searchsorted(np.cumsum(col.lengths), SAMPLE_BYTES)) + 1)
             z_total = int(col.lengths[:zk].sum())
-            # probe the entropy coder once on the sample; zstd-3 runs at
-            # ~330 MB/s/core (vs DEFLATE's 20-105), so when it wins the
-            # codec the encoding's CPU-cost penalty drops accordingly
-            z_codec = bytearrays.choose_zdict_codec(
-                col.lengths[:zk], col.data[:z_total], zdict_aux
-            )
             z_enc = bytearrays.encode_zdict(
-                col.lengths[:zk], col.data[:z_total], zdict_aux, codec=z_codec
+                col.lengths[:zk], col.data[:z_total], plan.zdict, level=plan.level, codec=plan.codec
             )
-            if z_codec == 1:
+            # zstd-3 runs at ~330 MB/s/core (vs DEFLATE's 20-105), so
+            # when it wins the codec the encoding's CPU-cost penalty
+            # drops accordingly
+            if plan.codec == 1:
                 zdict_penalty = 0.08
-                zdict_aux = b""  # zstd chunks never consult the trained dict
-            dict_bytes = len(zdict_aux) if z_codec == 0 else 0
+            z_sample = (zk, z_enc)
             est["zdict"] = (
-                len(z_enc) / max(z_total + 4 * zk, 1) * (total + 4 * n) + dict_bytes
+                len(z_enc) / max(z_total + 4 * zk, 1) * (total + 4 * n) + len(plan.zdict)
             )
         # delta_bytes: prefix savings measured on a byte-capped prefix
         # sample (prefix sharing is positionally local, so a contiguous
@@ -192,8 +201,8 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
             n_strs = len(col.lengths)
             starts = np.concatenate([[0], np.cumsum(col.lengths)[:-1]])
             if total <= 2 * sample_bytes:
-                fsst_table = _fsst.train(col.lengths, col.data, sample_bytes=train_bytes)
-                s_enc = _fsst.encode_column(col.lengths, col.data, fsst_table)
+                table = hints["fsst"] = _fsst.train(col.lengths, col.data, sample_bytes=train_bytes)
+                s_enc = _fsst.encode_column(col.lengths, col.data, table)
                 est["fsst"] = float(len(s_enc))
             else:
                 from .columns import gather_segments
@@ -207,8 +216,8 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
                 data_b = gather_segments(col.data, starts[idx_b], lens_b)
                 b_total = int(lens_b.sum())
                 if b_total > 0:
-                    fsst_table = _fsst.train(lens_a, data_a, sample_bytes=train_bytes)
-                    s_enc = _fsst.encode_column(lens_b, data_b, fsst_table)
+                    table = hints["fsst"] = _fsst.train(lens_a, data_a, sample_bytes=train_bytes)
+                    s_enc = _fsst.encode_column(lens_b, data_b, table)
                     est["fsst"] = len(s_enc) / b_total * total
     elif col.ptype == "flba":
         est["plain"] = n * col.type_length
@@ -233,8 +242,8 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
             # noise columns never rank it. The parameter search runs
             # once here and rides sel_aux to every page as the chunk
             # hint (encode verifies per page, re-searches on divergence)
-            alp_params = alp.choose_params(col.values)
-            est["alp"] = alp.estimate_size(col.values, alp_params)
+            hints["alp"] = alp.choose_params(col.values)
+            est["alp"] = alp.estimate_size(col.values, hints["alp"])
 
     if compression != "none":
         # re-estimate the top candidates on compressed sample encodings
@@ -250,14 +259,17 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
                     # byte-capped sample: 8192 long strings could be tens of MB
                     k = min(k, int(np.searchsorted(np.cumsum(col.lengths), SAMPLE_BYTES)) + 1)
                     dhi = int(col.lengths[:k].sum())
-                    enc_s = _encode_values(e, col, 0, k, 0, dhi, codes, dict_size, "auto")
+                    if e == "zdict" and k == z_sample[0]:
+                        enc_s = z_sample[1]  # the same prefix, already encoded above
+                    else:
+                        enc_s = _encode_values(e, col, 0, k, 0, dhi, codes, dict_size, "auto", hints.get(e))
                     raw_s = dhi + 4 * k
                 elif col.ptype == "flba":
                     dhi = k * col.type_length
-                    enc_s = _encode_values(e, col, 0, k, 0, dhi, codes, dict_size, "auto")
+                    enc_s = _encode_values(e, col, 0, k, 0, dhi, codes, dict_size, "auto", hints.get(e))
                     raw_s = dhi
                 else:
-                    enc_s = _encode_values(e, col, 0, k, 0, 0, codes, dict_size, "auto")
+                    enc_s = _encode_values(e, col, 0, k, 0, 0, codes, dict_size, "auto", hints.get(e))
                     raw_s = k * (4 if col.ptype in ("int32", "float") else 8)
                 comp_s = len(_compress(enc_s, compression))
                 est[e] = comp_s / max(raw_s, 1) * est.get("plain", raw_s)
@@ -269,11 +281,4 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
     if best != "rle_dict":
         codes = uniques = None
         dict_size = 0
-    aux = None
-    if best == "fsst":
-        aux = fsst_table
-    elif best == "zdict":
-        aux = zdict_aux if zdict_aux is not None else b""
-    elif best == "alp":
-        aux = alp_params
-    return best, codes, uniques, distinct, dict_size, aux
+    return best, codes, uniques, distinct, dict_size, hints.get(best)

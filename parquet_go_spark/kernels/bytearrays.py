@@ -16,6 +16,8 @@ against its predecessor — no per-row Python.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
 from . import deltabp
@@ -27,6 +29,8 @@ __all__ = [
     "encode_delta",
     "decode_delta",
     "train_zdict",
+    "ZdictPlan",
+    "plan_zdict",
     "choose_zdict_codec",
     "encode_zdict",
     "decode_zdict",
@@ -73,7 +77,9 @@ def _sample_stream(raw) -> bytes:
     return b"".join(bytes(raw[i * step : i * step + w]) for i in range(k))
 
 
-def choose_zdict_codec(lengths: np.ndarray, data: np.ndarray, zdict: bytes = b"") -> int:
+def choose_zdict_codec(
+    lengths: np.ndarray, data: np.ndarray, zdict: bytes = b"", probe: dict | None = None
+) -> int:
     """Value-stream codec for the zdict layout: 0 = DEFLATE (+ trained
     dict), 1 = zstd-3. Sampled side-by-side; measured on web text, zstd-3
     compresses at ~330 MB/s/core vs DEFLATE-6's ~20 and DEFLATE-1's
@@ -88,7 +94,13 @@ def choose_zdict_codec(lengths: np.ndarray, data: np.ndarray, zdict: bytes = b""
     over-represents the dict's benefit ~8x vs the contiguous stream.
     That bias sent an 18.7 MB text chunk to DEFLATE-6 at 24 MB/s when
     zstd-3 was 10x faster AND smaller on the full stream (r5 profile).
-    When the sample IS the whole stream the dicted probe is exact."""
+    When the sample IS the whole stream the dicted probe is exact.
+
+    One probe per chunk: the chunk encoders take this decision through
+    :func:`plan_zdict`, over the chunk's whole column, and never probe a
+    prefix or a page. When ``probe`` is given and the DEFLATE side ran at
+    level 6 without a dict, ``probe["deflate6"]`` receives that sample's
+    compressed size, which :func:`choose_deflate_level` reuses."""
     import zlib as _z
 
     z = _zstd_codec()
@@ -104,20 +116,25 @@ def choose_zdict_codec(lengths: np.ndarray, data: np.ndarray, zdict: bytes = b""
         else _z.compressobj(lvl)
     )
     d_len = len(co.compress(s) + co.flush())
+    if probe is not None and lvl == 6 and not probe_dict:
+        probe["deflate6"] = d_len
     z_len = len(z.compress(s, asbytes=True))
     margin = 0.9 if len(data) > 1 << 20 else 1.0
     return 0 if d_len <= margin * z_len else 1
 
 
-def choose_deflate_level(data) -> int:
+def choose_deflate_level(data, deflate6: int | None = None) -> int:
     """DEFLATE level policy (throughput-first at scale): tiny streams
     take 6 (microseconds), > 32 MiB always take 1 (level 6 costs
     seconds per task for a minority size win), in between a strided
     sampled side-by-side picks 6 only when it saves >= 20%. Hoisted to
-    ONE probe per chunk by the chunk encoder (every page inherits via
+    ONE probe per chunk by :func:`plan_zdict` (every page inherits via
     ``level=``), the same per-chunk-hint shape as ``choose_zdict_codec``
     and the ALP (e, rb) search — the probe costs two 256 KiB compress
-    passes, which dominated per-page encode on DEFLATE chunks."""
+    passes, which dominated per-page encode on DEFLATE chunks.
+    ``deflate6`` is the strided sample's DEFLATE-6 size when the caller
+    already compressed it (the codec probe's undicted pass); the probe
+    then runs only the level-1 pass."""
     import zlib as _z
 
     raw = np.ascontiguousarray(data, dtype=np.uint8)
@@ -127,7 +144,34 @@ def choose_deflate_level(data) -> int:
     if n > 1 << 25:
         return 1
     s = _sample_stream(raw)
-    return 6 if len(_z.compress(s, 6)) <= 0.8 * len(_z.compress(s, 1)) else 1
+    if deflate6 is None:
+        deflate6 = len(_z.compress(s, 6))
+    return 6 if deflate6 <= 0.8 * len(_z.compress(s, 1)) else 1
+
+
+class ZdictPlan(NamedTuple):
+    """One chunk's zdict decision: the trained DEFLATE preset dictionary
+    (``b""`` under zstd, whose pages never consult it), the value-stream
+    codec (0 = DEFLATE, 1 = zstd-3) and the DEFLATE level (None under
+    zstd)."""
+
+    zdict: bytes
+    codec: int
+    level: int | None
+
+
+def plan_zdict(lengths: np.ndarray, data: np.ndarray) -> ZdictPlan:
+    """Probe a chunk's zdict layout once: train the dict, pick the codec
+    on the whole column (strided sample) and, only when DEFLATE wins, the
+    level — sharing the codec probe's DEFLATE-6 pass when both compressed
+    the same undicted sample. The selector calls this once per chunk and
+    hands the plan to the chunk encoder; a forced ``encoding="zdict"``
+    calls it from the encoder. Every page inherits the plan."""
+    zdict = train_zdict(lengths, data)
+    probe: dict = {}
+    if choose_zdict_codec(lengths, data, zdict, probe) == 1:
+        return ZdictPlan(b"", 1, None)
+    return ZdictPlan(zdict, 0, choose_deflate_level(data, probe.get("deflate6")))
 
 
 def encode_zdict(
@@ -144,8 +188,9 @@ def encode_zdict(
     codec 1 = zstd-3 (no dictionary; pyarrow's codec exposes no dict API).
     The codec-selector picks this encoding when entropy coding the values
     beats the lightweight codecs even after the block-compression stage;
-    ``choose_zdict_codec`` picks between the two entropy coders once per
-    chunk (every page inherits the choice via ``codec=``).
+    :func:`plan_zdict` picks the dict, entropy coder and level once per
+    chunk, and every page inherits them via ``zdict``/``codec=``/``level=``;
+    ``codec=None`` and ``level=None`` probe this one stream instead.
 
     DEFLATE ``level=None`` adapts per stream from STRIDED disjoint
     samples (a head-only probe mischose whole chunks: one
@@ -179,8 +224,11 @@ def encode_zdict(
     return bytes(uvarint(raw_len) + uvarint(len(comp)) + bytes([codec]) + comp + lens)
 
 
-def decode_zdict(buf, pos: int = 0, zdict: bytes = b"") -> tuple[np.ndarray, np.ndarray, int]:
-    """-> (lengths, data, new_pos)."""
+def decode_zdict(
+    buf, pos: int = 0, zdict: bytes = b"", max_count: int | None = None
+) -> tuple[np.ndarray, np.ndarray, int]:
+    """-> (lengths, data, new_pos). ``max_count`` bounds the value count
+    (see ``deltabp.decode``)."""
     import zlib as _z
 
     from .varint import read_uvarint
@@ -212,7 +260,7 @@ def decode_zdict(buf, pos: int = 0, zdict: bytes = b"") -> tuple[np.ndarray, np.
     if len(raw) != raw_len:
         raise ValueError("zdict stream truncated")
     pos += comp_len
-    lengths, pos = deltabp.decode(buf, pos, 32)
+    lengths, pos = deltabp.decode(buf, pos, 32, max_count)
     lengths = lengths.astype(np.int64)
     if int(lengths.sum()) != raw_len:
         raise ValueError("zdict length stream inconsistent")
@@ -224,9 +272,12 @@ def encode_delta_length(lengths: np.ndarray, data: np.ndarray) -> bytes:
     return lens + np.ascontiguousarray(data, dtype=np.uint8).tobytes()
 
 
-def decode_delta_length(buf, pos: int = 0) -> tuple[np.ndarray, np.ndarray, int]:
-    """-> (lengths, data, new_pos)."""
-    lengths, pos = deltabp.decode(buf, pos, 32)
+def decode_delta_length(
+    buf, pos: int = 0, max_count: int | None = None
+) -> tuple[np.ndarray, np.ndarray, int]:
+    """-> (lengths, data, new_pos). ``max_count`` bounds the value count
+    (see ``deltabp.decode``)."""
+    lengths, pos = deltabp.decode(buf, pos, 32, max_count)
     lengths = lengths.astype(np.int64)
     total = int(lengths.sum())
     data = np.frombuffer(buf, np.uint8, total, pos)
@@ -286,15 +337,15 @@ def encode_delta(lengths: np.ndarray, data: np.ndarray) -> bytes:
     return head + encode_delta_length(suffix_lens, suffix_data)
 
 
-def decode_delta(buf, pos: int = 0) -> tuple[np.ndarray, np.ndarray, int]:
+def decode_delta(buf, pos: int = 0, max_count: int | None = None) -> tuple[np.ndarray, np.ndarray, int]:
     """-> (lengths, data, new_pos). Sequential prefix chains resolved in
     O(n) total work by materializing values front-to-back per "carry depth"
     is unnecessary: each output byte is either copied from the suffix
     stream or transitively from an earlier suffix byte. We resolve the
     indirection with pointer-chasing over at most ``log2(n)`` rounds."""
-    prefixes, pos = deltabp.decode(buf, pos, 32)
+    prefixes, pos = deltabp.decode(buf, pos, 32, max_count)
     prefixes = prefixes.astype(np.int64)
-    suffix_lens, suffix_data, pos = decode_delta_length(buf, pos)
+    suffix_lens, suffix_data, pos = decode_delta_length(buf, pos, max_count)
     n = len(prefixes)
     if n == 0:
         return np.empty(0, np.int64), np.empty(0, np.uint8), pos

@@ -126,12 +126,16 @@ def encode(values: np.ndarray, bits: int) -> bytes:
     return header + out.tobytes()
 
 
-def decode(buf, pos: int, bits: int) -> tuple[np.ndarray, int]:
+def decode(buf, pos: int, bits: int, max_count: int | None = None) -> tuple[np.ndarray, int]:
     """Decode one delta-BP stream starting at ``pos``.
 
     Returns ``(values, new_pos)`` where new_pos is the first byte after the
     stream (consuming trailing miniblock padding exactly like the reference
     decoder, ``deltabp_decoder.go:146-164``).
+
+    ``max_count`` bounds the stream's declared value count; page decoders
+    pass the page's value count, so a forged count fails before anything
+    is allocated. Counts above 2^28 are rejected regardless (forbp's cap).
     """
     sdt = np.int32 if bits == 32 else np.int64
     mv = memoryview(buf).cast("B")  # normalize signed buffer views
@@ -152,6 +156,10 @@ def decode(buf, pos: int, bits: int) -> tuple[np.ndarray, int]:
     if mbv % 8 != 0:
         raise ValueError("delta-bp: miniblock values not multiple of 8")
     count, pos = read_uvarint(mv, pos)
+    # count governor: zero-width blocks cost ~2 bytes per block_size
+    # values, so a 67-byte forged stream declared 30M values
+    if count > 1 << 28 or (max_count is not None and count > max_count):
+        raise ValueError(f"delta-bp: implausible count {count}")
     first, pos = read_varint(mv, pos)
     if count == 0:
         return np.empty(0, dtype=sdt), pos

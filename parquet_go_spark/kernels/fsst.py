@@ -339,10 +339,11 @@ def encode_column(lengths: np.ndarray, data: np.ndarray, table: SymbolTable | No
     return head + deltabp.encode(comp_lens.astype(np.int32), 32) + out.tobytes()
 
 
-def decode_column(buf, pos: int = 0) -> tuple[np.ndarray, np.ndarray, int]:
-    """-> (lengths, data, new_pos)."""
+def decode_column(buf, pos: int = 0, max_count: int | None = None) -> tuple[np.ndarray, np.ndarray, int]:
+    """-> (lengths, data, new_pos). ``max_count`` bounds the string
+    count (see ``deltabp.decode``)."""
     table, pos = SymbolTable.deserialize(buf, pos)
-    comp_lens32, pos = deltabp.decode(buf, pos, 32)
+    comp_lens32, pos = deltabp.decode(buf, pos, 32, max_count)
     comp_lens = comp_lens32.astype(np.int64)
     total_c = int(comp_lens.sum())
     cdata = np.frombuffer(buf, np.uint8, total_c, pos)

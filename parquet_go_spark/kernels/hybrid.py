@@ -102,13 +102,22 @@ def encode_rle(values: np.ndarray, width: int) -> bytes:
 
 
 def rle_size(values: np.ndarray, width: int) -> int:
-    """Exact byte size :func:`encode_rle` would produce (cheap)."""
+    """Exact byte size :func:`encode_rle` would produce, from the run
+    lengths alone: a run's uvarint header ``len << 1`` takes
+    ``max(1, ceil(bit_length / 7))`` bytes, i.e. one byte plus one per
+    7-bit boundary ``2**(7k)`` it reaches."""
     if width == 0 or len(values) == 0:
         return 0
     _, rl = _runs(values)
     vsize = (width + 7) // 8
-    _, hlens = uvarint_array(rl.astype(np.uint64) << np.uint64(1))
-    return int(hlens.sum()) + len(rl) * vsize
+    headers = rl << 1
+    size = len(rl) * (1 + vsize)
+    bound = 1 << 7
+    top = int(headers.max())
+    while bound <= top:
+        size += int(np.count_nonzero(headers >= bound))
+        bound <<= 7
+    return size
 
 
 def encode_auto(values: np.ndarray, width: int) -> bytes:

@@ -154,3 +154,49 @@ def test_forbp_width0_large_count_is_fast_and_constant():
     out, _pos = forbp.decode(b"\x90\xe2\xc8B\xe8\xcf@\x00", 0, 32)
     assert time.time() - t < 8.0
     assert len(out) == 139_604_240 and (out[:1000] == out[0]).all() and (out[-1000:] == out[0]).all()
+
+
+def test_thrift_depth_counts_through_collections():
+    """The depth governor counted only struct nesting: a list-of-list
+    chain recursed once per byte into Python's RecursionError. Collection
+    elements now read one level deeper, so the governor's ValueError
+    fires."""
+    from parquet_go_spark.compat.thrift_compact import read_struct
+
+    for bomb in (
+        b"\x19" * 2001 + b"\x10\x00",                        # list of lists
+        b"\x1a" * 2001 + b"\x10\x00",                        # set of sets
+        b"\x1b" + b"\x01\x5b\x02" * 2000 + b"\x00",          # map of i32 -> map
+    ):
+        t = time.time()
+        with pytest.raises(ValueError, match="nesting depth"):
+            read_struct(bomb, 0)
+        assert time.time() - t < 2.0
+
+
+def test_deltabp_count_governor():
+    """ADVICE's finding: 29 zero-width blocks of 2^20 values (2 bytes
+    each) made a 67-byte stream declare 30,000,001 values — ~9 s and
+    ~1.4 GB to decode. A page decoder bounds the count by the page's
+    value count, and no stream may declare more than 2^28 values."""
+    import numpy as np
+
+    from parquet_go_spark.core.chunk import _decode_values
+    from parquet_go_spark.kernels import deltabp
+
+    forged = _varint(1 << 20) + _varint(1) + _varint(30_000_001) + b"\x00" + b"\x00\x00" * 29
+    assert len(forged) == 67
+    t = time.time()
+    with pytest.raises(ValueError, match="count"):
+        deltabp.decode(forged, 0, 32, max_count=1000)
+    with pytest.raises(ValueError, match="count"):
+        _decode_values("delta_bp", "int32", forged, 0, 1000, None)
+    assert time.time() - t < 2.0
+    # beyond 2^28 is rejected with no page bound at all (forbp's cap)
+    huge = _varint(128) + _varint(4) + _varint((1 << 28) + 1) + b"\x00" + b"\x00" * 5
+    with pytest.raises(ValueError, match="count"):
+        deltabp.decode(huge, 0, 64)
+    # a real stream decodes under a bound equal to its count
+    vals = np.arange(1000, dtype=np.int32) * 3
+    out, _ = deltabp.decode(deltabp.encode(vals, 32), 0, 32, max_count=1000)
+    np.testing.assert_array_equal(out, vals)

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from parquet_go_spark.kernels import bitpack, bytearrays, deltabp, dictenc, hybrid, levels, plain
 
@@ -72,6 +73,37 @@ def test_hybrid_rle_roundtrip(width):
     out = hybrid.decode(enc, width, len(vals))
     np.testing.assert_array_equal(out, vals)
     assert hybrid.decode(hybrid.encode_auto(vals, width), width, len(vals)).tolist() == vals.tolist()
+
+
+# run lengths whose uvarint header (len << 1) sits at the 7/14/21-bit
+# byte boundaries: 63/64, 8191/8192, 2^20 - 1 / 2^20
+_HEADER_EDGES = [1, 2, 63, 64, 65, 8191, 8192, 8193, (1 << 20) - 1, 1 << 20]
+
+
+@given(
+    width=st.integers(0, 64),
+    runs=st.lists(
+        st.tuples(st.integers(0, (1 << 64) - 1), st.one_of(st.sampled_from(_HEADER_EDGES), st.integers(1, 300))),
+        min_size=0,
+        max_size=12,
+    ),
+)
+@settings(max_examples=150, deadline=None)
+def test_hybrid_rle_size_is_exact(width, runs):
+    # rle_size counts header bytes from the run lengths alone; it must
+    # equal the encoder's output length for every width and run shape
+    mask = (1 << width) - 1
+    vals = np.concatenate(
+        [np.full(n, v & mask, np.uint64) for v, n in runs] or [np.empty(0, np.uint64)]
+    )
+    assert hybrid.rle_size(vals, width) == len(hybrid.encode_rle(vals, width))
+
+
+def test_hybrid_rle_size_header_edges():
+    for n in _HEADER_EDGES:
+        for width in (0, 1, 9, 64):
+            vals = np.concatenate([np.zeros(n, np.uint64), np.ones(3, np.uint64)]) if width else np.zeros(n, np.uint64)
+            assert hybrid.rle_size(vals, width) == len(hybrid.encode_rle(vals, width)), (n, width)
 
 
 def test_hybrid_rle_value_too_large_rejected():

@@ -153,3 +153,25 @@ def test_v2_pages_and_page_crc():
             bad[spot] ^= 0xFF
             with pytest.raises(Exception):
                 pq.read_table(io.BytesIO(bytes(bad)), page_checksum_verification=True)
+
+
+def test_each_chunk_factorizes_once(monkeypatch):
+    # the dictionary choice's factorization is the one the chunk writes:
+    # one factorize per non-bool chunk (flat and nested), none for bool
+    from parquet_go_spark.compat import parquet_writer as pw
+
+    calls = []
+    orig = pw._factorize
+
+    def counted(col):
+        calls.append(col.ptype)
+        return orig(col)
+
+    monkeypatch.setattr(pw, "_factorize", counted)
+    nested = TBL.append_column("lst", pa.array([[i % 7, i % 3] for i in range(N)], pa.list_(pa.int32())))
+    buf = write_parquet(nested, compression="snappy")
+    assert sorted(calls) == sorted(["int32", "int64", "double", "bytes", "bytes", "int32"])
+    assert pq.read_table(io.BytesIO(buf)).equals(nested)
+    calls.clear()
+    write_parquet(TBL, encodings={"low": "rle_dict", "i32": "plain"})
+    assert calls.count("bytes") == 2 and "int32" not in calls
