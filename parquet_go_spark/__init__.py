@@ -5,4 +5,10 @@ re-expressed Spark-first: vectorized numpy kernels inside Arrow-batched
 and a resumable per-partition manifest.
 """
 
+from parquet_go_spark import _zipcache
+
+# every process that runs engine code imports the package first: Spark
+# workers on their first UDF unpickle, forking daemons, --py-files drivers
+_zipcache.install()
+
 __version__ = "0.1.0"

@@ -26,9 +26,16 @@ spins.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, functions as F
 
 __all__ = ["dup_clusters", "canonical_docs"]
+
+# serializes the constraint-propagation toggle in ``dup_clusters``: two
+# overlapping calls would otherwise each save the other's ``false`` as
+# the value to restore, leaving it off for the session for good
+_CP_LOCK = threading.Lock()
 
 
 def dup_clusters(
@@ -42,7 +49,14 @@ def dup_clusters(
     themselves. Deterministic (min over ids).
 
     ``pairs`` carries (id_a, id_b) candidate edges (e.g. ``lsh_pairs``
-    output); treated as undirected."""
+    output); treated as undirected.
+
+    Side effect: while the iteration runs, the SESSION-WIDE conf
+    ``spark.sql.constraintPropagation.enabled`` is ``false`` — any other
+    query planned on this session meanwhile runs without inferred
+    constraints. The original value is restored on return or error;
+    concurrent calls in one process are serialized so none of them can
+    save another's ``false`` as the value to restore."""
     spark = docs.sparkSession
     # Constraint propagation is OFF for the iteration (restored in the
     # finally): a checkpointed LogicalRDD keeps the ORIGIN plan's
@@ -57,81 +71,88 @@ def dup_clusters(
     # is itself a known analysis-time sink. The returned frame is built
     # AFTER the flag is restored and carries no union.
     _CP = "spark.sql.constraintPropagation.enabled"
-    _cp_old = spark.conf.get(_CP, "true")
-    spark.conf.set(_CP, "false")
-    try:
-        # symmetrize with ONE explode pass, not a self-union of the
-        # pairs plan — reads pairs once and halves the candidate scan
-        edges = (
-            pairs.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-                        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
-                    )
-                ).alias("e")
-            )
-            .select("e.src", "e.dst")
-            .distinct()
-            .localCheckpoint()
-        )
-        doc_ids = docs.select(F.col(id_col).alias("id"))
-        # seed EVERY vertex — docs AND pair endpoints: an edge id absent
-        # from docs previously had no label row, so round 1 dropped its
-        # edges, the changed-check (an inner join on the OLD id set)
-        # could not see it, and a component bridged only by such a
-        # vertex was silently returned split
-        labels = (
-            doc_ids.unionByName(edges.select(F.col("src").alias("id")))
-            .distinct()
-            .select("id", F.col("id").alias("lab"))
-            .localCheckpoint()
-        )
-        for _ in range(max_iter):
-            relayed = (
-                edges.join(labels, edges.src == labels.id)
-                .select(F.col("dst").alias("id"), "lab")
-            )
-            hop = labels.unionByName(relayed).groupBy("id").agg(
-                F.min("lab").alias("lab")
-            )
-            # pointer jumping: every label IS a vertex id, so resolve
-            # each label through its own current label (lab <= id
-            # always, so the resolved label only decreases) — doubles
-            # hop reach per round
-            new_labels = (
-                hop.alias("a")
-                .join(hop.alias("b"), F.col("a.lab") == F.col("b.id"))
-                .select(F.col("a.id").alias("id"), F.col("b.lab").alias("lab"))
-                .localCheckpoint()  # truncate lineage: state, not a plan
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .where(F.col("n.lab") != F.col("o.lab"))
-                .limit(1)
-                .count()
-            )
-            # release the previous round's state promptly (best-effort:
-            # for localCheckpoint blocks the ContextCleaner frees on
-            # driver GC; dropping our reference right here enables that)
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"dup_clusters did not converge in {max_iter} rounds — component "
-                "diameter exceeds the cap; raise max_iter or switch to "
-                "large-star/small-star for deep-path graphs"
-            )
-    finally:
-        spark.conf.set(_CP, _cp_old)
+    with _CP_LOCK:
+        _cp_old = spark.conf.get(_CP, "true")
+        spark.conf.set(_CP, "false")
+        try:
+            labels, doc_ids = _propagate_labels(docs, pairs, id_col, max_iter)
+        finally:
+            spark.conf.set(_CP, _cp_old)
     # output contract: one row per DOC (edge-only vertices served as
     # connectivity bridges, not corpus members)
     return labels.join(doc_ids, "id").select(
         F.col("id").alias(id_col), F.col("lab").alias("cluster_id")
     )
+
+
+def _propagate_labels(docs, pairs, id_col, max_iter):
+    """-> (labels(id, lab), doc_ids(id)): the min-label iteration."""
+    # symmetrize with ONE explode pass, not a self-union of the
+    # pairs plan — reads pairs once and halves the candidate scan
+    edges = (
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+                    F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
+        .distinct()
+        .localCheckpoint()
+    )
+    doc_ids = docs.select(F.col(id_col).alias("id"))
+    # seed EVERY vertex — docs AND pair endpoints: an edge id absent
+    # from docs previously had no label row, so round 1 dropped its
+    # edges, the changed-check (an inner join on the OLD id set)
+    # could not see it, and a component bridged only by such a
+    # vertex was silently returned split
+    labels = (
+        doc_ids.unionByName(edges.select(F.col("src").alias("id")))
+        .distinct()
+        .select("id", F.col("id").alias("lab"))
+        .localCheckpoint()
+    )
+    for _ in range(max_iter):
+        relayed = (
+            edges.join(labels, edges.src == labels.id)
+            .select(F.col("dst").alias("id"), "lab")
+        )
+        hop = labels.unionByName(relayed).groupBy("id").agg(
+            F.min("lab").alias("lab")
+        )
+        # pointer jumping: every label IS a vertex id, so resolve
+        # each label through its own current label (lab <= id
+        # always, so the resolved label only decreases) — doubles
+        # hop reach per round
+        new_labels = (
+            hop.alias("a")
+            .join(hop.alias("b"), F.col("a.lab") == F.col("b.id"))
+            .select(F.col("a.id").alias("id"), F.col("b.lab").alias("lab"))
+            .localCheckpoint()  # truncate lineage: state, not a plan
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "id")
+            .where(F.col("n.lab") != F.col("o.lab"))
+            .limit(1)
+            .count()
+        )
+        # release the previous round's state promptly (best-effort:
+        # for localCheckpoint blocks the ContextCleaner frees on
+        # driver GC; dropping our reference right here enables that)
+        labels.unpersist()
+        labels = new_labels
+        if changed == 0:
+            break
+    else:
+        raise RuntimeError(
+            f"dup_clusters did not converge in {max_iter} rounds — component "
+            "diameter exceeds the cap; raise max_iter or switch to "
+            "large-star/small-star for deep-path graphs"
+        )
+    return labels, doc_ids
 
 
 def canonical_docs(

@@ -55,7 +55,11 @@ def get_spark(
         # scan-split size: smaller splits give even waves per core at low
         # parallelism (the N vs 4N scaling config pins 64m — the classic
         # HDFS/Iceberg block size); the local[32] default keeps bigger
-        # splits so the ~140 ms/task python handshake stays amortized
+        # splits so the fixed per-task Python cost stays amortized: ~70 ms
+        # of slot time per task on a 4-vCPU host (tools/task_overhead.py),
+        # the pyspark daemon's per-task gc.collect() among it; without
+        # parquet_go_spark/_zipcache.py every task start would also re-read
+        # pyspark.zip's directory (~280 ms)
         .config(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "256m"),

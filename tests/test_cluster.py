@@ -86,3 +86,43 @@ def test_nonconvergence_raises(spark):
     pairs = _pairs(spark, [(i, i + 1) for i in range(5)])
     with pytest.raises(RuntimeError, match="converge"):
         dup_clusters(docs, pairs, max_iter=0)
+
+
+def test_overlapping_calls_restore_constraint_propagation(spark):
+    """dup_clusters turns constraint propagation off session-wide while
+    it iterates. A second call that starts inside the first one's window
+    must not save that ``false`` as the value to restore: afterwards the
+    conf is back to its original value and both results are right."""
+    import threading
+    import time
+
+    key = "spark.sql.constraintPropagation.enabled"
+    original = spark.conf.get(key, "true")
+    n = 200
+    short_docs = _docs(spark, [(i, "x") for i in range(4)])
+    short_pairs = _pairs(spark, [(0, 1), (2, 3)])
+    long_docs = _docs(spark, [(i, "x") for i in range(n)])
+    long_pairs = _pairs(spark, [(i, i + 1) for i in range(n - 1)])
+    got, errors = {}, []
+
+    def run(name, docs, pairs):
+        try:
+            got[name] = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(docs, pairs).collect()}
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    first = threading.Thread(target=run, args=("short", short_docs, short_pairs))
+    second = threading.Thread(target=run, args=("long", long_docs, long_pairs))
+    first.start()
+    # start the longer call once the first has switched the conf off
+    deadline = time.monotonic() + 30
+    while spark.conf.get(key, "true") != "false" and time.monotonic() < deadline:
+        time.sleep(0.005)
+    second.start()
+    first.join(timeout=300)
+    second.join(timeout=300)
+    assert not first.is_alive() and not second.is_alive()
+    assert not errors
+    assert spark.conf.get(key, "true") == original
+    assert got["short"] == {0: 0, 1: 0, 2: 2, 3: 2}
+    assert got["long"] == {i: 0 for i in range(n)}
