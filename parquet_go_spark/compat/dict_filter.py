@@ -18,14 +18,11 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..kernels import int96, plain
-from .thrift_compact import read_struct
+from ..core import codecs
 
 __all__ = ["all_data_pages_dict", "dict_probe_file", "decode_dict_page"]
 
 _PHYS = {0: "bool", 1: "int32", 2: "int64", 3: "int96", 4: "float", 5: "double", 6: "bytes", 7: "flba"}
-_DICT_ENCODINGS = {2, 8}  # PLAIN_DICTIONARY / RLE_DICTIONARY
-_MAX_DICT_REGION = 1 << 26  # governor: 64 MiB dictionary page region
 
 
 def all_data_pages_dict(cmeta: dict) -> bool:
@@ -39,7 +36,7 @@ def all_data_pages_dict(cmeta: dict) -> bool:
     for s in stats:
         if s.get(1) in (0, 3):  # DATA_PAGE / DATA_PAGE_V2
             saw_data = True
-            if s.get(2) not in _DICT_ENCODINGS:
+            if codecs.PARQUET_ENCODINGS.get(s.get(2)) != "rle_dict":
                 return False
     return saw_data
 
@@ -47,30 +44,14 @@ def all_data_pages_dict(cmeta: dict) -> bool:
 def decode_dict_page(region: bytes, cmeta: dict):
     """Dictionary page bytes (header + payload at offset 0) -> decoded
     values: ndarray for fixed types, (lengths, data) for byte types."""
-    from .parquet_reader import _MAX_RAW_PAGE, _decompress
+    from .parquet_reader import _read_page
 
-    mv = memoryview(region).cast("B")  # normalize signed buffer views
-    hdr, pos = read_struct(mv, 0)
-    if hdr.get(1) != 2:  # DICTIONARY_PAGE
+    info = {"type": cmeta[1], "type_length": 0, "max_rep": 0, "max_def": 0}
+    with codecs.as_value_error("dictionary page"):
+        _, page_type, _, values = _read_page(memoryview(region).cast("B"), 0, cmeta[4], info, None)
+    if page_type != 2:
         raise ValueError("dictionary_page_offset points at a non-dictionary page")
-    raw_len, comp_len = hdr[2], hdr[3]
-    if not (0 <= comp_len <= len(mv) - pos and 0 <= raw_len <= _MAX_RAW_PAGE):
-        raise ValueError("implausible dictionary page header")
-    dn = hdr[7][1]
-    payload = _decompress(bytes(mv[pos : pos + comp_len]), cmeta[4], raw_len)
-    if not 0 <= dn <= len(payload):
-        raise ValueError("implausible dictionary count")
-    ptype = _PHYS[cmeta[1]]
-    if ptype == "bytes":
-        lens, data, _ = plain.decode_byte_array(payload, dn)
-        return lens, data
-    if ptype == "flba":
-        raise ValueError("flba dictionary probe unsupported")  # needs type_length
-    if ptype == "int96":
-        vals, _ = int96.decode_plain_nanos(payload, dn)
-        return vals
-    vals, _ = plain.decode_fixed(payload, dn, ptype)
-    return vals
+    return values
 
 
 def _contains(decoded, value, ptype: str) -> bool:
@@ -112,7 +93,7 @@ def dict_probe_file(path: str, cmeta: dict, values: tuple) -> bool:
     if dict_off is None or data_off is None or not 0 <= dict_off < data_off:
         return True
     size = data_off - dict_off
-    if size > _MAX_DICT_REGION:
+    if size > codecs.MAX_DICT_REGION:
         return True
     ptype = _PHYS.get(cmeta[1])
     if ptype in (None, "flba", "bool", "int96"):
@@ -122,6 +103,6 @@ def dict_probe_file(path: str, cmeta: dict, values: tuple) -> bool:
         region = fh.read(size)
     try:
         decoded = decode_dict_page(region, cmeta)
-    except (ValueError, KeyError, IndexError):
+    except ValueError:
         return True
     return any(_contains(decoded, v, ptype) for v in values)

@@ -10,17 +10,20 @@ DELTA_LENGTH_BYTE_ARRAY (6), DELTA_BYTE_ARRAY (7),
 BYTE_STREAM_SPLIT (9, incl. the 2.11 int/FLBA extension); data page V1 + V2,
 dictionary pages, UNCOMPRESSED/SNAPPY/ZSTD/GZIP codecs.
 
-``read_column`` serves flat leaves; ``read_column_arrow`` decodes any
-leaf path — nested lists (any depth, 3-level or legacy shape) and
-optional structs — by running the Dremel record assembly over the
-rep/def level streams (reference ``data_store.go`` /
-``schema.go:585-647`` semantics): repetition levels split element
-boundaries per depth, definition levels distinguish null list / empty
-list / null element. In a single-leaf read, struct nesting folds into
-null propagation (the leaf comes back wrapped in its list dimensions
-only); ``read_field_arrow`` assembles a whole top-level field of ANY
-shape — struct, map, list, mixed — from all of its leaves' level
-streams, and ``read_table_arrow`` serves complete files.
+One page walker (:func:`read_leaf_levels`) decodes every leaf, flat or
+nested, REQUIRED or OPTIONAL, from V1 or V2 pages, through the codec
+dispatch both containers share (``core/codecs.py``); ``read_column`` is
+its flat (validity, values) view. ``read_column_arrow`` decodes any leaf
+path — nested lists (any depth, 3-level or legacy shape) and optional
+structs — by running the Dremel record assembly over the rep/def level
+streams (reference ``data_store.go`` / ``schema.go:585-647`` semantics):
+repetition levels split element boundaries per depth, definition levels
+distinguish null list / empty list / null element. In a single-leaf
+read, struct nesting folds into null propagation (the leaf comes back
+wrapped in its list dimensions only); ``read_field_arrow`` assembles a
+whole top-level field of ANY shape — struct, map, list, mixed — from all
+of its leaves' level streams, and ``read_table_arrow`` serves complete
+files, parsing the footer once. Forged pages raise ``ValueError``.
 """
 
 from __future__ import annotations
@@ -30,7 +33,9 @@ import zlib
 import numpy as np
 import pyarrow as pa
 
-from ..kernels import bytearrays, bytestreamsplit, deltabp, hybrid, int96, plain
+from ..core import codecs
+from ..core.columns import gather_segments
+from ..kernels import hybrid
 from .thrift_compact import read_struct
 
 __all__ = ["read_column", "file_meta"]
@@ -48,11 +53,6 @@ def _decompress(payload: bytes, codec: int, raw_len: int) -> bytes:
     if codec == 6:  # ZSTD
         return pa.Codec("zstd").decompress(payload, raw_len, asbytes=True)
     raise ValueError(f"unsupported codec {codec}")
-
-
-
-_MAX_PAGE_VALUES = 1 << 27  # governor: 128M level positions per page
-_MAX_RAW_PAGE = 1 << 30  # governor: 1 GiB decompressed page
 
 
 def _plausible(cond: bool, msg: str) -> None:
@@ -99,185 +99,6 @@ def column_kv_metadata(meta: dict, column: str, row_group: int = 0) -> dict[str,
     raise KeyError(column)
 
 
-def _schema_leaves(meta: dict) -> dict[str, dict]:
-    """name -> {type, type_length} for flat leaf columns."""
-    out = {}
-    for el in meta[2][1:]:  # skip root
-        if 1 in el:  # has a physical type => leaf
-            out[el[4].decode()] = {"type": el[1], "type_length": el.get(2, 0)}
-    return out
-
-
-def _decode_values(enc: int, ptype: str, payload, pos: int, nvals: int, dict_vals, type_length: int):
-    mv = memoryview(payload)
-    if enc in (2, 8):  # PLAIN_DICTIONARY / RLE_DICTIONARY index stream
-        bw = mv[pos]
-        idx = hybrid.decode(bytes(mv[pos + 1 :]), bw, nvals).astype(np.int64)
-        if ptype in ("bytes", "flba"):
-            u_lens, u_data = dict_vals
-            starts = np.concatenate([[0], np.cumsum(u_lens)[:-1]]) if len(u_lens) else u_lens
-            from ..core.columns import gather_segments
-
-            lens = u_lens[idx]
-            return (lens, gather_segments(u_data, starts[idx], lens))
-        return dict_vals[idx]
-    if enc == 0:  # PLAIN
-        if ptype == "bytes":
-            lens, data, _ = plain.decode_byte_array(payload, nvals, pos)
-            return (lens, data)
-        if ptype == "flba":
-            lens, data, _ = plain.decode_fixed_byte_array(payload, nvals, type_length, pos)
-            return (lens, data)
-        if ptype == "bool":
-            vals, _ = plain.decode_bool(payload, nvals, pos)
-            return vals
-        if ptype == "int96":
-            vals, _ = int96.decode_plain_nanos(payload, nvals, pos)
-            return vals
-        vals, _ = plain.decode_fixed(payload, nvals, ptype, pos)
-        return vals
-    if enc == 5:  # DELTA_BINARY_PACKED
-        vals, _ = deltabp.decode(payload, pos, 32 if ptype == "int32" else 64, nvals)
-        return vals
-    if enc == 6:  # DELTA_LENGTH_BYTE_ARRAY
-        lens, data, _ = bytearrays.decode_delta_length(payload, pos, nvals)
-        return (lens, data)
-    if enc == 7:  # DELTA_BYTE_ARRAY
-        lens, data, _ = bytearrays.decode_delta(payload, pos, nvals)
-        return (lens, data)
-    if enc == 9:  # BYTE_STREAM_SPLIT (fixed-width transpose)
-        if ptype == "flba":
-            total = nvals * type_length
-            raw = np.frombuffer(mv, np.uint8, total, pos).reshape(type_length, nvals)
-            data = np.ascontiguousarray(raw.T).reshape(-1)
-            return (np.full(nvals, type_length, dtype=np.int64), data)
-        np_t = {"int32": np.int32, "int64": np.int64, "float": np.float32, "double": np.float64}
-        if ptype not in np_t:
-            raise ValueError(f"BYTE_STREAM_SPLIT on unsupported type {ptype}")
-        vals, _ = bytestreamsplit.decode(mv, nvals, np.dtype(np_t[ptype]), pos)
-        return vals
-    raise ValueError(f"unsupported encoding {enc}")
-
-
-def read_column(buf: bytes, column: str, row_groups: list[int] | None = None):
-    """Decode one flat column entirely with this engine's kernels.
-
-    -> (validity bool[n], values ndarray | (lengths, data))."""
-    meta = file_meta(buf)
-    leaves = _schema_leaves(meta)
-    if column not in leaves:
-        raise KeyError(column)
-    ptype = _PHYS[leaves[column]["type"]]
-    type_length = leaves[column]["type_length"]
-    validity_parts, value_parts, len_parts, data_parts = [], [], [], []
-    for _rgi, rg in enumerate(meta[4]):
-        if row_groups is not None and _rgi not in row_groups:
-            continue
-        for cc in rg[1]:
-            cmeta = cc[3]
-            if [p.decode() for p in cmeta[3]] != [column]:
-                continue
-            codec = cmeta[4]
-            n_values = cmeta[5]
-            start = min(cmeta.get(11, cmeta[9]), cmeta[9])
-            end = start + cmeta[7]
-            mv = memoryview(buf).cast("B")
-            pos = start
-            dict_vals = None
-            seen = 0
-            while seen < n_values and pos < end:
-                hdr, pos = read_struct(mv, pos)
-                page_type = hdr[1]
-                raw_len, comp_len = hdr[2], hdr[3]
-                _plausible(0 <= comp_len <= len(mv) - pos, "compressed size exceeds file")
-                _plausible(0 <= raw_len <= _MAX_RAW_PAGE, "decompressed size")
-                raw_page = bytes(mv[pos : pos + comp_len])
-                pos += comp_len
-                if page_type == 3:
-                    # V2: rep/def level streams sit OUTSIDE the compressed
-                    # region (page_v2.go:173-190 semantics)
-                    dph2 = hdr[8]
-                    lvl_len = dph2[5] + dph2[6]
-                    is_comp = dph2.get(7, True)
-                    body = (
-                        _decompress(raw_page[lvl_len:], codec, raw_len - lvl_len)
-                        if is_comp
-                        else raw_page[lvl_len:]
-                    )
-                    payload = raw_page[:lvl_len] + body
-                else:
-                    payload = _decompress(raw_page, codec, raw_len)
-                if page_type == 2:  # dictionary page
-                    dph = hdr[7]
-                    dn = dph[1]
-                    _plausible(0 <= dn <= len(payload), "dictionary count")
-                    if ptype == "bytes":
-                        u_lens, u_data, _ = plain.decode_byte_array(payload, dn)
-                        dict_vals = (u_lens, u_data)
-                    elif ptype == "flba":
-                        u_lens, u_data, _ = plain.decode_fixed_byte_array(
-                            payload, dn, type_length
-                        )
-                        dict_vals = (u_lens, u_data)
-                    else:
-                        dict_vals, _ = (
-                            int96.decode_plain_nanos(payload, dn)
-                            if ptype == "int96"
-                            else plain.decode_fixed(payload, dn, ptype)
-                        )
-                    continue
-                if page_type == 0:  # data page V1
-                    dph = hdr[5]
-                    nv = dph[1]
-                    _plausible(0 <= nv <= _MAX_PAGE_VALUES, "page value count")
-                    enc = dph[2]
-                    # def levels: RLE with 4-byte size prefix, bit width 1
-                    validity, ppos = _def_levels_v1(payload, nv)
-                    repr_ = _decode_values(
-                        enc, ptype, payload, ppos, int(validity.sum()), dict_vals, type_length
-                    )
-                elif page_type == 3:  # data page V2
-                    dph = hdr[8]
-                    nv, nnulls = dph[1], dph[2]
-                    _plausible(0 <= nv <= _MAX_PAGE_VALUES and 0 <= nnulls <= nv, "page value count")
-                    enc = dph[4]
-                    dl_len, rl_len = dph[5], dph[6]
-                    lv = payload[rl_len : rl_len + dl_len]
-                    if dl_len:
-                        validity = hybrid.decode(lv, 1, nv).astype(bool)
-                    else:
-                        validity = np.ones(nv, dtype=bool)
-                    repr_ = _decode_values(
-                        enc, ptype, payload, rl_len + dl_len, nv - nnulls, dict_vals, type_length
-                    )
-                else:
-                    raise ValueError(f"unsupported page type {page_type}")
-                validity_parts.append(validity)
-                if ptype in ("bytes", "flba"):
-                    len_parts.append(repr_[0])
-                    data_parts.append(repr_[1])
-                else:
-                    value_parts.append(repr_)
-                seen += nv
-    validity = np.concatenate(validity_parts) if validity_parts else np.empty(0, bool)
-    if ptype in ("bytes", "flba"):
-        lens = np.concatenate(len_parts) if len_parts else np.empty(0, np.int64)
-        data = np.concatenate(data_parts) if data_parts else np.empty(0, np.uint8)
-        return validity, (lens.astype(np.int64), data)
-    return validity, (np.concatenate(value_parts) if value_parts else np.empty(0))
-
-
-def _def_levels_v1(payload, nv: int):
-    """V1 def-level stream for a flat column: 4-byte LE size + hybrid
-    (bit width 1). A required column has... pyarrow always writes the
-    stream for optional columns; for required ones max_def=0 and no
-    stream exists — callers pass columns written as optional."""
-    size = int.from_bytes(bytes(payload[:4]), "little")
-    lv = payload[4 : 4 + size]
-    validity = hybrid.decode(lv, 1, nv).astype(bool)
-    return validity, 4 + size
-
-
 # ---------------------------------------------------------------------------
 # Nested leaves: schema tree, generic level decode, Dremel assembly
 # ---------------------------------------------------------------------------
@@ -286,74 +107,176 @@ _REQUIRED, _OPTIONAL, _REPEATED = 0, 1, 2
 
 
 def schema_leaf_info(meta: dict) -> dict[str, dict]:
-    """Walk the flattened schema (num_children spans) into per-leaf info:
-
-    dotted path -> {type, type_length, utf8, max_def, max_rep, d_leaf,
-    lists: [(rep_depth, d_elem, d_present|None), ...]}.
+    """Per-leaf info, dotted path -> {type, type_length, utf8, max_def,
+    max_rep, d_leaf, lists: [(rep_depth, d_elem, d_present|None), ...],
+    path}: the leaves of :func:`schema_tree`.
 
     ``d_elem`` is the cumulative definition level at the repeated node
     (``def >= d_elem`` ⇒ at least one element); ``d_present`` is the
     level at which the list itself is defined (None when the enclosing
     group is required / legacy-repeated ⇒ never null, only empty).
     """
-    elems = meta[2]
-    out: dict[str, dict] = {}
-    pos = 1  # skip root
+    return {node["path"]: node["leaf"] for node in _node_leaves(schema_tree(meta))}
 
-    def walk(n_children: int, path: tuple, d: int, r: int, lists: tuple, parent_opt: bool):
-        nonlocal pos
-        for _ in range(n_children):
-            el = elems[pos]
-            pos += 1
-            rep_t = el.get(3, _REQUIRED)
-            name = el[4].decode()
-            d2, r2, lists2 = d, r, lists
-            if rep_t != _REQUIRED:
-                d2 += 1
-            if rep_t == _REPEATED:
-                r2 += 1
-                # null-vs-empty: the level below d_elem belongs to the
-                # enclosing group only when that group is optional
-                d_present = d2 - 1 if parent_opt else None
-                lists2 = lists + ((r2, d2, d_present),)
-            if 1 in el:  # leaf (has a physical type)
-                out[".".join(path + (name,))] = {
-                    "type": el[1],
-                    "type_length": el.get(2, 0),
-                    "utf8": el.get(6) == 0,  # ConvertedType UTF8
-                    "converted": el.get(6),
-                    "scale": el.get(7),
-                    "precision": el.get(8),
-                    "max_def": d2,
-                    "max_rep": r2,
-                    "d_leaf": d2,
-                    "lists": list(lists2),
-                    "path": list(path) + [name],
-                }
-            else:
-                walk(el.get(5, 0), path + (name,), d2, r2, lists2, rep_t == _OPTIONAL)
 
-    walk(elems[0].get(5, 0), (), 0, 0, (), False)
-    return out
+def _levels(stream, max_level: int, nv: int) -> np.ndarray:
+    """One rep or def level stream; none exists when the max level is 0."""
+    if max_level == 0:
+        return np.zeros(nv, dtype=np.int64)
+    return np.asarray(hybrid.decode(stream, max_level.bit_length(), nv), np.int64)
 
 
 def _levels_v1(payload, nv: int, max_rep: int, max_def: int):
-    """Rep then def level streams (each 4-byte size + hybrid), present
-    only when the respective max is > 0."""
+    """V1 rep then def level streams, each a 4-byte size + hybrid, present
+    only when the respective max is > 0 (a REQUIRED flat column has none)."""
     pos = 0
-    if max_rep > 0:
-        size = int.from_bytes(bytes(payload[pos : pos + 4]), "little")
-        rep = hybrid.decode(payload[pos + 4 : pos + 4 + size], max_rep.bit_length(), nv)
-        pos += 4 + size
+    out = []
+    for max_level in (max_rep, max_def):
+        stream = b""
+        if max_level > 0:
+            size = int.from_bytes(bytes(payload[pos : pos + 4]), "little")
+            stream = payload[pos + 4 : pos + 4 + size]
+            pos += 4 + size
+        out.append(_levels(stream, max_level, nv))
+    return out[0], out[1], pos
+
+
+def _read_page(mv, pos: int, codec: int, info: dict, dict_vals):
+    """Decode the page at ``pos`` -> (next_pos, page_type, nv, out): ``out``
+    is the decoded dictionary for a dictionary page, else (rep, def,
+    values) with values holding only the fully-defined entries."""
+    ptype = _PHYS[info["type"]]
+    max_rep, max_def = info["max_rep"], info["max_def"]
+    hdr, pos = read_struct(mv, pos)
+    page_type, raw_len, comp_len = hdr[1], hdr[2], hdr[3]
+    _plausible(0 <= comp_len <= len(mv) - pos, "compressed size exceeds file")
+    _plausible(0 <= raw_len <= codecs.MAX_RAW_PAGE, "decompressed size")
+    raw_page = bytes(mv[pos : pos + comp_len])
+    pos += comp_len
+    if page_type == 2:  # dictionary page
+        payload = _decompress(raw_page, codec, raw_len)
+        return pos, 2, 0, codecs.decode_dictionary(payload, hdr[7][1], ptype, info["type_length"])
+    if page_type == 0:  # data page V1: levels inside the compressed body
+        nv, enc = hdr[5][1], hdr[5][2]
+        _plausible(0 <= nv <= codecs.MAX_PAGE_VALUES, "page value count")
+        payload = _decompress(raw_page, codec, raw_len)
+        rep, deflv, ppos = _levels_v1(payload, nv, max_rep, max_def)
+    elif page_type == 3:
+        # data page V2: the level streams sit OUTSIDE the compressed
+        # region (page_v2.go:173-190 semantics)
+        dph = hdr[8]
+        nv, enc, dl_len, rl_len = dph[1], dph[4], dph[5], dph[6]
+        ppos = rl_len + dl_len
+        _plausible(0 <= nv <= codecs.MAX_PAGE_VALUES, "page value count")
+        _plausible(0 <= rl_len and 0 <= dl_len and ppos <= comp_len, "level stream lengths")
+        body = raw_page[ppos:]
+        if dph.get(7, True):
+            body = _decompress(body, codec, raw_len - ppos)
+        payload = raw_page[:ppos] + body
+        rep = _levels(payload[:rl_len], max_rep, nv)
+        deflv = _levels(payload[rl_len:ppos], max_def, nv)
     else:
-        rep = np.zeros(nv, dtype=np.int64)
-    if max_def > 0:
-        size = int.from_bytes(bytes(payload[pos : pos + 4]), "little")
-        deflv = hybrid.decode(payload[pos + 4 : pos + 4 + size], max_def.bit_length(), nv)
-        pos += 4 + size
+        raise ValueError(f"unsupported page type {page_type}")
+    n_present = int((deflv == max_def).sum())
+    values = codecs.decode_values(
+        codecs.parquet_encoding(enc), ptype, payload, ppos, n_present, dict_vals, info["type_length"]
+    )
+    return pos, page_type, nv, (rep, deflv, values)
+
+
+def _chunk_pages(buf, mv, rg: dict, cc: dict, info: dict, row_ranges) -> tuple[list, list | None]:
+    """Walk one column chunk's pages -> ([(rep, def, values)] per data
+    page, row ids per page when the OffsetIndex page-seeked, else None)."""
+    cmeta = cc[3]
+    dict_vals = None
+    pages: list = []
+
+    def page_at(pos: int) -> tuple[int, int, int]:
+        nonlocal dict_vals
+        pos, page_type, nv, out = _read_page(mv, pos, cmeta[4], info, dict_vals)
+        if page_type == 2:
+            dict_vals = out
+        else:
+            pages.append(out)
+        return pos, page_type, nv
+
+    locs = None
+    if row_ranges is not None and info["max_rep"] == 0:
+        from .page_index import read_offset_index
+
+        locs = read_offset_index(buf, cc)
+    if not locs:
+        pos = min(cmeta.get(11, cmeta[9]), cmeta[9])
+        end = pos + cmeta[7]
+        seen = 0
+        while seen < cmeta[5] and pos < end:
+            pos, _pt, nv = page_at(pos)
+            seen += nv
+        return pages, None
+    # page-seek: only pages whose row span overlaps a range
+    rows: list = []
+    firsts = [loc[2] for loc in locs] + [int(rg[3])]
+    if 11 in cmeta and cmeta[11] < cmeta[9]:
+        _, pt, _ = page_at(cmeta[11])
+        _plausible(pt == 2, "dictionary_page_offset points at a data page")
+    r_starts = np.array([r[0] for r in row_ranges], dtype=np.int64)
+    r_ends = np.array([r[1] for r in row_ranges], dtype=np.int64)
+    for i, loc in enumerate(locs):
+        lo, hi = firsts[i], firsts[i + 1]
+        # page [lo, hi) overlaps some surviving range?
+        j = int(np.searchsorted(r_ends, lo, side="right"))
+        if j >= len(r_starts) or r_starts[j] >= hi:
+            continue
+        _, pt, nv = page_at(loc[0])
+        _plausible(pt in (0, 3) and nv == hi - lo, "OffsetIndex row spans disagree with page headers")
+        rows.append(np.arange(lo, hi, dtype=np.int64))
+    return pages, rows
+
+
+def _leaf_levels(buf, meta: dict, info: dict, row_groups=None, row_ranges=None):
+    """:func:`read_leaf_levels` over an already parsed footer."""
+    if row_ranges is not None and (row_groups is None or len(row_groups) != 1):
+        raise ValueError("row_ranges requires exactly one selected row group")
+    ptype = _PHYS[info["type"]]
+    max_def = info["max_def"]
+    mv = memoryview(buf).cast("B")
+    pages: list = []
+    page_rows = None  # row ids of the pages an OffsetIndex seek decoded
+    with codecs.as_value_error(f"column chunk {'.'.join(info['path'])}"):
+        for rgi, rg in enumerate(meta[4]):
+            if row_groups is not None and rgi not in row_groups:
+                continue
+            for cc in rg[1]:
+                if [p.decode() for p in cc[3][3]] == info["path"]:
+                    chunk_pages, page_rows = _chunk_pages(buf, mv, rg, cc, info, row_ranges)
+                    pages += chunk_pages
+    rep = np.concatenate([p[0] for p in pages]) if pages else np.empty(0, np.int64)
+    deflv = np.concatenate([p[1] for p in pages]) if pages else np.empty(0, np.int64)
+    if ptype in ("bytes", "flba"):
+        lens = np.concatenate([p[2][0] for p in pages]) if pages else np.empty(0, np.int64)
+        data = np.concatenate([p[2][1] for p in pages]) if pages else np.empty(0, np.uint8)
+        values = (lens, data)
     else:
-        deflv = np.zeros(nv, dtype=np.int64)
-    return np.asarray(rep, np.int64), np.asarray(deflv, np.int64), pos
+        values = np.concatenate([p[2] for p in pages]) if pages else np.empty(0)
+    if row_ranges is not None:
+        from .page_index import rows_in_ranges
+
+        if page_rows is not None:
+            rows = np.concatenate(page_rows) if page_rows else np.empty(0, np.int64)
+        else:
+            # every level position belongs to the row opened by the last
+            # rep == 0 position at or before it
+            rows = np.cumsum(rep == 0) - 1
+        keep_pos = rows_in_ranges(rows, row_ranges)
+        vmask = keep_pos[deflv == max_def]
+        rep, deflv = rep[keep_pos], deflv[keep_pos]
+        if ptype in ("bytes", "flba"):
+            starts_v = np.zeros(len(lens), dtype=np.int64)
+            np.cumsum(lens[:-1], out=starts_v[1:])
+            values = (lens[vmask], gather_segments(data, starts_v[vmask], lens[vmask]))
+        else:
+            values = values[vmask]
+    return rep, deflv, values, info
 
 
 def read_leaf_levels(
@@ -380,181 +303,17 @@ def read_leaf_levels(
     leaves = schema_leaf_info(meta)
     if column not in leaves:
         raise KeyError(f"{column!r}; leaves: {sorted(leaves)}")
-    if row_ranges is not None and (row_groups is None or len(row_groups) != 1):
-        raise ValueError("row_ranges requires exactly one selected row group")
-    info = leaves[column]
-    ptype = _PHYS[info["type"]]
-    type_length = info["type_length"]
-    max_def, max_rep = info["max_def"], info["max_rep"]
-    rep_parts, def_parts, value_parts, len_parts, data_parts = [], [], [], [], []
-    rows_parts: list[np.ndarray] = []
-    page_seeked = False
-    mv = memoryview(buf).cast("B")
-    for _rgi, rg in enumerate(meta[4]):
-        if row_groups is not None and _rgi not in row_groups:
-            continue
-        for cc in rg[1]:
-            cmeta = cc[3]
-            if [p.decode() for p in cmeta[3]] != info["path"]:
-                continue
-            codec = cmeta[4]
-            n_values = cmeta[5]
-            start = min(cmeta.get(11, cmeta[9]), cmeta[9])
-            end = start + cmeta[7]
-            dict_vals = None
-            seen = 0
+    return _leaf_levels(buf, meta, leaves[column], row_groups, row_ranges)
 
-            def walk_page(pos: int) -> tuple[int, int]:
-                """Decode ONE page at ``pos``; appends to the stream parts
-                (or sets the dictionary). -> (new_pos, page_type, nv)."""
-                nonlocal dict_vals
-                hdr, pos = read_struct(mv, pos)
-                page_type = hdr[1]
-                raw_len, comp_len = hdr[2], hdr[3]
-                _plausible(0 <= comp_len <= len(mv) - pos, "compressed size exceeds file")
-                _plausible(0 <= raw_len <= _MAX_RAW_PAGE, "decompressed size")
-                raw_page = bytes(mv[pos : pos + comp_len])
-                pos += comp_len
-                if page_type == 3:
-                    dph2 = hdr[8]
-                    lvl_len = dph2[5] + dph2[6]
-                    is_comp = dph2.get(7, True)
-                    body = (
-                        _decompress(raw_page[lvl_len:], codec, raw_len - lvl_len)
-                        if is_comp
-                        else raw_page[lvl_len:]
-                    )
-                    payload = raw_page[:lvl_len] + body
-                else:
-                    payload = _decompress(raw_page, codec, raw_len)
-                if page_type == 2:  # dictionary page
-                    dph = hdr[7]
-                    dn = dph[1]
-                    _plausible(0 <= dn <= len(payload), "dictionary count")
-                    if ptype == "bytes":
-                        u_lens, u_data, _ = plain.decode_byte_array(payload, dn)
-                        dict_vals = (u_lens, u_data)
-                    elif ptype == "flba":
-                        u_lens, u_data, _ = plain.decode_fixed_byte_array(
-                            payload, dn, type_length
-                        )
-                        dict_vals = (u_lens, u_data)
-                    else:
-                        dict_vals, _ = (
-                            int96.decode_plain_nanos(payload, dn)
-                            if ptype == "int96"
-                            else plain.decode_fixed(payload, dn, ptype)
-                        )
-                    return pos, page_type, 0
-                if page_type == 0:  # data page V1
-                    dph = hdr[5]
-                    nv, enc = dph[1], dph[2]
-                    _plausible(0 <= nv <= _MAX_PAGE_VALUES, "page value count")
-                    rep, deflv, ppos = _levels_v1(payload, nv, max_rep, max_def)
-                elif page_type == 3:  # data page V2
-                    dph = hdr[8]
-                    nv = dph[1]
-                    _plausible(0 <= nv <= _MAX_PAGE_VALUES, "page value count")
-                    enc = dph[4]
-                    dl_len, rl_len = dph[5], dph[6]
-                    if rl_len:
-                        rep = np.asarray(
-                            hybrid.decode(payload[:rl_len], max_rep.bit_length(), nv), np.int64
-                        )
-                    else:
-                        rep = np.zeros(nv, dtype=np.int64)
-                    if dl_len:
-                        deflv = np.asarray(
-                            hybrid.decode(
-                                payload[rl_len : rl_len + dl_len], max_def.bit_length(), nv
-                            ),
-                            np.int64,
-                        )
-                    else:
-                        deflv = np.zeros(nv, dtype=np.int64)
-                    ppos = rl_len + dl_len
-                else:
-                    raise ValueError(f"unsupported page type {page_type}")
-                n_present = int((deflv == max_def).sum())
-                repr_ = _decode_values(
-                    enc, ptype, payload, ppos, n_present, dict_vals, info["type_length"]
-                )
-                rep_parts.append(rep)
-                def_parts.append(deflv)
-                if ptype in ("bytes", "flba"):
-                    len_parts.append(np.asarray(repr_[0], np.int64))
-                    data_parts.append(np.asarray(repr_[1], np.uint8))
-                else:
-                    value_parts.append(repr_)
-                return pos, page_type, nv
 
-            locs = None
-            if row_ranges is not None and max_rep == 0:
-                from .page_index import read_offset_index
+def read_column(buf: bytes, column: str, row_groups: list[int] | None = None):
+    """Decode one flat column (REQUIRED or OPTIONAL, V1 or V2 pages)
+    entirely with this engine's kernels.
 
-                locs = read_offset_index(buf, cc)
-            if locs:
-                # page-seek: only pages whose row span overlaps a range
-                n_rg_rows = int(rg[3])
-                firsts = [loc[2] for loc in locs] + [n_rg_rows]
-                if 11 in cmeta and cmeta[11] < cmeta[9]:
-                    _, pt, _ = walk_page(cmeta[11])
-                    _plausible(pt == 2, "dictionary_page_offset points at a data page")
-                r_starts = np.array([r[0] for r in row_ranges], dtype=np.int64)
-                r_ends = np.array([r[1] for r in row_ranges], dtype=np.int64)
-                for i, loc in enumerate(locs):
-                    lo, hi = firsts[i], firsts[i + 1]
-                    # page [lo, hi) overlaps some surviving range?
-                    j = int(np.searchsorted(r_ends, lo, side="right"))
-                    if j >= len(r_starts) or r_starts[j] >= hi:
-                        continue
-                    _, pt, nv = walk_page(loc[0])
-                    _plausible(
-                        pt in (0, 3) and nv == hi - lo,
-                        "OffsetIndex row spans disagree with page headers",
-                    )
-                    rows_parts.append(np.arange(lo, hi, dtype=np.int64))
-                page_seeked = True
-            else:
-                pos = start
-                while seen < n_values and pos < end:
-                    pos, _pt, nv = walk_page(pos)
-                    seen += nv
-    rep = np.concatenate(rep_parts) if rep_parts else np.empty(0, np.int64)
-    deflv = np.concatenate(def_parts) if def_parts else np.empty(0, np.int64)
-    if ptype in ("bytes", "flba"):
-        lens = np.concatenate(len_parts) if len_parts else np.empty(0, np.int64)
-        data = np.concatenate(data_parts) if data_parts else np.empty(0, np.uint8)
-        values = (lens, data)
-    else:
-        values = np.concatenate(value_parts) if value_parts else np.empty(0)
-    if row_ranges is not None:
-        from .page_index import rows_in_ranges
-
-        if page_seeked:
-            rows = (
-                np.concatenate(rows_parts) if rows_parts else np.empty(0, np.int64)
-            )
-        else:
-            # every level position belongs to the row opened by the last
-            # rep == 0 position at or before it
-            rows = np.cumsum(rep == 0) - 1
-        keep_pos = rows_in_ranges(rows, row_ranges)
-        vmask = keep_pos[deflv == max_def]
-        rep, deflv = rep[keep_pos], deflv[keep_pos]
-        if ptype in ("bytes", "flba"):
-            lens, data = values
-            from ..core.columns import gather_segments
-
-            starts_v = (
-                np.concatenate([[0], np.cumsum(lens)[:-1]]).astype(np.int64)
-                if len(lens)
-                else np.empty(0, np.int64)
-            )
-            values = (lens[vmask], gather_segments(data, starts_v[vmask], lens[vmask]))
-        else:
-            values = values[vmask]
-    return rep, deflv, values, info
+    -> (validity bool[n], values ndarray | (lengths, data)), values
+    holding the non-null entries only."""
+    _rep, deflv, values, info = read_leaf_levels(buf, column, row_groups)
+    return deflv == info["max_def"], values
 
 
 # ConvertedType ids (parquet.thrift)
@@ -631,8 +390,6 @@ def _leaf_arrow(positions, deflv, values, info) -> pa.Array:
             # contiguous fast path: values already in slot order
             buf_data = data
         else:
-            from ..core.columns import gather_segments
-
             sel = value_idx[positions][mask]
             buf_data = gather_segments(data, starts[sel], lens[sel])
         cls = pa.utf8() if info["utf8"] else pa.binary()
@@ -728,7 +485,7 @@ def read_column_arrow(
         if len(cands) != 1:
             raise KeyError(f"{column!r}; leaves: {sorted(leaves)}")
         column = cands[0]
-    rep, deflv, values, info = read_leaf_levels(buf, column, row_groups, row_ranges)
+    rep, deflv, values, info = _leaf_levels(buf, meta, leaves[column], row_groups, row_ranges)
     # top-level rows: one slot per rep==0 run
     starts = np.flatnonzero(rep == 0)
     ends = np.concatenate([starts[1:], [len(rep)]]) if len(starts) else np.empty(0, np.int64)
@@ -785,6 +542,8 @@ def read_table_arrow(
     when the writer emitted one — the PageIndex read path."""
     meta = file_meta(buf)
     fields = table_fields(meta)
+    leaves = schema_leaf_info(meta)
+    nodes = {c["name"]: c for c in schema_tree(meta)["children"]}
     if columns is not None:
         known = {t for t, _ in fields}
         missing = [c for c in columns if c not in known]
@@ -797,7 +556,7 @@ def read_table_arrow(
         # read_field_arrow serves every shape, including the single-leaf
         # struct that read_column_arrow would fold down to its leaf
         names.append(top)
-        arrays.append(read_field_arrow(buf, top, row_groups, row_ranges))
+        arrays.append(_field_arrow(buf, meta, leaves, nodes[top], row_groups, row_ranges))
     if row_ranges is not None:
         rg_rows = int(meta[4][row_groups[0]][3])
         n_rows = sum(min(hi, rg_rows) - lo for lo, hi in row_ranges if lo < rg_rows)
@@ -883,10 +642,10 @@ _CT_MAP, _CT_MAP_KV, _CT_LIST = 1, 2, 3
 
 
 def schema_tree(meta: dict) -> dict:
-    """Nested schema tree with per-node cumulative levels — the group
-    structure :func:`schema_leaf_info` flattens away, needed to
-    re-assemble struct/map fields (reference ``schema.go:585-647``
-    group handling)."""
+    """Walk the flattened schema (num_children spans) into a nested tree
+    with per-node cumulative levels — the group structure needed to
+    re-assemble struct/map fields (reference ``schema.go:585-647`` group
+    handling); :func:`schema_leaf_info` lists its leaves."""
     elems = meta[2]
     pos = 1
 
@@ -901,6 +660,8 @@ def schema_tree(meta: dict) -> dict:
             d2 += 1
         if rep_t == _REPEATED:
             r2 += 1
+            # null-vs-empty: the level below d_elem belongs to the
+            # enclosing group only when that group is optional
             d_present = d2 - 1 if parent_opt else None
             lists2 = lists + ((r2, d2, d_present),)
         node: dict = {
@@ -913,11 +674,11 @@ def schema_tree(meta: dict) -> dict:
             "converted": el.get(6),
             "path": ".".join(path + (name,)),
         }
-        if 1 in el:  # leaf
+        if 1 in el:  # leaf (has a physical type)
             node["leaf"] = {
                 "type": el[1],
                 "type_length": el.get(2, 0),
-                "utf8": el.get(6) == 0,
+                "utf8": el.get(6) == 0,  # ConvertedType UTF8
                 "converted": el.get(6),
                 "scale": el.get(7),
                 "precision": el.get(8),
@@ -925,6 +686,7 @@ def schema_tree(meta: dict) -> dict:
                 "max_rep": r2,
                 "d_leaf": d2,
                 "lists": list(lists2),
+                "path": list(path) + [name],
             }
         else:
             node["children"] = [
@@ -1085,10 +847,14 @@ def read_field_arrow(
     node = next((c for c in tree["children"] if c["name"] == field), None)
     if node is None:
         raise KeyError(f"{field!r}; fields: {[c['name'] for c in tree['children']]}")
-    leaves = _node_leaves(node)
+    return _field_arrow(buf, meta, schema_leaf_info(meta), node, row_groups, row_ranges)
+
+
+def _field_arrow(buf, meta: dict, leaves: dict, node: dict, row_groups, row_ranges) -> pa.Array:
+    """:func:`read_field_arrow` over an already parsed footer."""
     streams, state = {}, {}
-    for lf in leaves:
-        rep, deflv, values, info = read_leaf_levels(buf, lf["path"], row_groups, row_ranges)
+    for lf in _node_leaves(node):
+        rep, deflv, values, info = _leaf_levels(buf, meta, leaves[lf["path"]], row_groups, row_ranges)
         streams[lf["path"]] = (rep, deflv, values, info)
         starts = np.flatnonzero(rep == 0)
         ends = (

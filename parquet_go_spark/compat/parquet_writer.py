@@ -3,15 +3,16 @@ interop layer (analogue of the reference's dockerized cross-impl harness,
 ``compatibility/run_tests.bash``: write with parquet-go, read with
 parquet-mr; here: write with these kernels, read with pyarrow/DuckDB).
 
-V1 data pages, flat optional columns, reference-default layout:
-dictionary unless distinct > 32767 (``chunk_writer.go:174-227``), else
-the column's fallback encoding; def levels as length-prefixed RLE/BP
-hybrid; SNAPPY/ZSTD/GZIP/UNCOMPRESSED codecs; 1 MiB page cuts; multiple
-row groups (``WithMaxRowGroupSize``, ``file_writer.go:114-118``); and
-per-chunk column statistics (min_value/max_value/null_count/
-distinct_count) in ColumnMetaData, matching the reference's stats
-emission (``chunk_writer.go:283-314``, ``stats.go:9-225``) so downstream
-engines can prune on our files.
+Flat optional columns and nested lists/structs/maps (Dremel levels from
+``shred.py``), V1 or V2 data pages, reference-default layout: dictionary
+unless distinct > 32767 (``chunk_writer.go:174-227``), else the column's
+fallback encoding; levels as RLE/BP hybrid streams; SNAPPY/ZSTD/GZIP/
+UNCOMPRESSED codecs; 1 MiB page cuts; multiple row groups
+(``WithMaxRowGroupSize``, ``file_writer.go:114-118``); and per-chunk
+column statistics (min_value/max_value/null_count/distinct_count) in
+ColumnMetaData, matching the reference's stats emission
+(``chunk_writer.go:283-314``, ``stats.go:9-225``) so downstream engines
+can prune on our files.
 """
 
 from __future__ import annotations
@@ -22,24 +23,19 @@ import zlib
 import numpy as np
 import pyarrow as pa
 
-from ..core.chunk import DICT_MAX, _encode_dict_values, _factorize, _page_boundaries, column_minmax
+from ..core import codecs
+from ..core.chunk import _factorize, _page_boundaries, _page_slice_column, column_minmax
 from ..core.columns import ColumnData, from_arrow, one_chunk
-from ..kernels import bytearrays, deltabp, dictenc, hybrid, int96, levels, plain
+from ..kernels import hybrid
 from .thrift_writer import write_struct
 
 __all__ = ["write_parquet"]
 
 MAGIC = b"PAR1"
 
-_PQ_TYPE = {"bool": 0, "int32": 1, "int64": 2, "float": 4, "double": 5, "bytes": 6}
+_PQ_TYPE = {"bool": 0, "int32": 1, "int64": 2, "int96": 3, "float": 4, "double": 5, "bytes": 6}
 _CODEC = {"none": 0, "snappy": 1, "gzip": 2, "zstd": 6}
-# parquet encoding ids
-E_PLAIN = 0
-E_RLE = 3
-E_DELTA_BP = 5
-E_DELTA_LEN = 6
-E_DELTA_BA = 7
-E_RLE_DICT = 8
+_PLAIN = codecs.PARQUET_IDS["plain"]
 
 
 def _kv_structs(kv: dict[str, str]) -> list[dict]:
@@ -57,44 +53,18 @@ def _compress(payload: bytes, codec: str) -> bytes:
     return pa.Codec(codec).compress(payload, asbytes=True)
 
 
-def _encode_page_values(enc: int, col: ColumnData, vlo, vhi, dlo, dhi, codes, dict_size):
-    if enc == E_RLE_DICT:
-        return dictenc.encode_indices(codes[vlo:vhi].astype(np.uint64), dict_size, mode="auto")
-    if col.ptype == "bytes":
-        lens = col.lengths[vlo:vhi]
-        data = col.data[dlo:dhi]
-        if enc == E_PLAIN:
-            return plain.encode_byte_array(lens, data)
-        if enc == E_DELTA_LEN:
-            return bytearrays.encode_delta_length(lens, data)
-        if enc == E_DELTA_BA:
-            return bytearrays.encode_delta(lens, data)
-    else:
-        vals = col.values[vlo:vhi]
-        if enc == E_PLAIN:
-            return plain.encode_bool(vals) if col.ptype == "bool" else plain.encode_fixed(vals, col.ptype)
-        if enc == E_DELTA_BP:
-            return deltabp.encode(vals, 32 if col.ptype == "int32" else 64)
-    raise ValueError(f"encoding {enc} for {col.ptype}")
-
-
 def _choose(col: ColumnData, encoding: str | None):
     """-> (encoding, factorization). The factorization ``(codes, uniques,
     distinct)`` is set for dictionary chunks: the writer reuses the one
     the choice computed instead of factorizing the column again."""
     if encoding:
-        enc = {
-            "plain": E_PLAIN,
-            "delta_bp": E_DELTA_BP,
-            "delta_length": E_DELTA_LEN,
-            "delta_bytes": E_DELTA_BA,
-            "rle_dict": E_RLE_DICT,
-        }[encoding]
-        return enc, (_factorize(col) if enc == E_RLE_DICT else None)
+        if encoding not in codecs.PARQUET_IDS:
+            raise KeyError(f"{encoding}: not a Parquet encoding")
+        return encoding, (_factorize(col) if encoding == "rle_dict" else None)
     if col.ptype == "bool" or col.num_values == 0:
-        return E_PLAIN, None
+        return "plain", None
     fact = _factorize(col)
-    return (E_RLE_DICT, fact) if fact[2] <= DICT_MAX else (E_PLAIN, None)
+    return ("rle_dict", fact) if fact[2] <= codecs.DICT_MAX else ("plain", None)
 
 
 def _stats_bytes(v, ptype: str) -> bytes:
@@ -149,8 +119,6 @@ def _record_page(
     """Append one data page's ColumnIndex/OffsetIndex record."""
     if pidx is None:
         return
-    from ..core.chunk import _page_slice_column
-
     nvals = vend - vstart
     if nvals:
         mn, mx = column_minmax(_page_slice_column(col, vstart, vend, dlo, dhi))
@@ -183,68 +151,157 @@ def _statistics_struct(col: ColumnData, distinct: int):
     return st
 
 
-_ENC_NAMES = {
-    E_PLAIN: "plain",
-    E_RLE_DICT: "rle_dict",
-    E_DELTA_BP: "delta_bp",
-    E_DELTA_LEN: "delta_length",
-    E_DELTA_BA: "delta_bytes",
-}
+class _ChunkWriter:
+    """The pages of one column chunk, appended to ``out``: its dictionary
+    page, then data pages (V1 or V2 header, CRC, page-index record) with
+    running byte totals; :meth:`column_chunk` describes them in a
+    ColumnChunk/ColumnMetaData struct. The flat and nested chunk writers
+    differ only in their page cuts, levels and statistics."""
 
+    def __init__(
+        self, out: bytearray, col: ColumnData, enc: str, fact, compression: str, codec: int,
+        crc: bool, page_version: int, pidx: list | None, ptype: str | None = None,
+    ):
+        self.out, self.col, self.enc, self.ptype = out, col, enc, ptype or col.ptype
+        self.compression, self.codec, self.crc, self.page_version, self.pidx = (
+            compression, codec, crc, page_version, pidx,
+        )
+        self.codes, uniques, self.dict_size = fact or (None, None, 0)
+        self.start = len(out)
+        self.raw = self.comp = self.n_pages = 0
+        self.dict_offset = None
+        if enc == "rle_dict" and self.dict_size:
+            payload = codecs.encode_dictionary(uniques, col.ptype)
+            comp = _compress(payload, compression)
+            self.dict_offset = self._emit(
+                {
+                    1: ("i32", 2),  # DICTIONARY_PAGE
+                    2: ("i32", len(payload)),
+                    3: ("i32", len(comp)),
+                    7: ("struct", {1: ("i32", self.dict_size), 2: ("i32", _PLAIN)}),
+                },
+                len(payload),
+                comp,
+            )
+        self.data_offset = len(out)
 
-def _write_dict_page(
-    out: bytearray, uniques, dict_size: int, ptype: str, compression: str, crc: bool
-) -> tuple[int, int, int]:
-    """Emit one DICTIONARY_PAGE (shared by the flat and nested chunk
-    writers — previously two hand-maintained copies); returns
-    (dict_offset, raw_bytes_added, comp_bytes_added)."""
-    payload = _encode_dict_values(uniques, ptype)
-    comp = _compress(payload, compression)
-    dict_hdr = {
-        1: ("i32", 2),  # DICTIONARY_PAGE
-        2: ("i32", len(payload)),
-        3: ("i32", len(comp)),
-        7: ("struct", {1: ("i32", dict_size), 2: ("i32", E_PLAIN)}),
-    }
-    if crc:  # page_dict.go:124-128
-        c = zlib.crc32(comp)
-        dict_hdr[4] = ("i32", c - (1 << 32) if c >= 1 << 31 else c)
-    hdr = write_struct(dict_hdr)
-    dict_offset = len(out)
-    out += hdr + comp
-    return dict_offset, len(payload) + len(hdr), len(comp) + len(hdr)
+    def _emit(self, hdr_fields: dict, raw_len: int, page_bytes: bytes) -> int:
+        """Append header + page bytes; returns the page offset."""
+        if self.crc:
+            # page CRC32 in the header over the page bytes following it
+            # (WithCRC, page_v1.go:210-214 / page_v2.go:224-228 / page_dict.go:124-128)
+            c = zlib.crc32(page_bytes)
+            hdr_fields[4] = ("i32", c - (1 << 32) if c >= 1 << 31 else c)
+        hdr = write_struct(hdr_fields)
+        offset = len(self.out)
+        self.out += hdr + page_bytes
+        self.raw += raw_len + len(hdr)
+        self.comp += len(page_bytes) + len(hdr)
+        return offset
+
+    def data_page(self, vlo, vhi, dlo, dhi, first_row, n_rows, rep, max_rep, deflv, max_def) -> None:
+        """One data page: values [vlo, vhi) (bytes [dlo, dhi)), ``n_rows``
+        top-level rows from ``first_row``, and their rep/def levels (a
+        stream exists only when its max level is > 0)."""
+        vals = codecs.encode_values(
+            self.enc, self.col, vlo, vhi, dlo, dhi, self.codes, self.dict_size, ptype=self.ptype
+        )
+        rep_lvl, def_lvl = (
+            hybrid.encode_auto(lv.astype(np.uint64), m.bit_length()) if m > 0 else b""
+            for lv, m in ((rep, max_rep), (deflv, max_def))
+        )
+        n_levels = len(deflv)
+        enc = codecs.PARQUET_IDS[self.enc]
+        if self.page_version == 2:
+            # V2: unprefixed rep then def streams OUTSIDE the compressed
+            # region, byte lengths in header fields 6/5 (page_v2.go:111-125,
+            # 173-190, 237-245)
+            comp = _compress(vals, self.compression)
+            page_bytes = bytes(rep_lvl) + bytes(def_lvl) + comp
+            raw_len = len(rep_lvl) + len(def_lvl) + len(vals)
+            hdr_fields = {
+                1: ("i32", 3),  # DATA_PAGE_V2
+                8: (
+                    "struct",
+                    {
+                        1: ("i32", n_levels),
+                        2: ("i32", n_levels - (vhi - vlo)),
+                        3: ("i32", n_rows),
+                        4: ("i32", enc),
+                        5: ("i32", len(def_lvl)),
+                        6: ("i32", len(rep_lvl)),
+                        7: ("bool", self.compression != "none"),
+                    },
+                ),
+            }
+        else:
+            # V1: size-prefixed rep + def streams inside the compressed body
+            body = (
+                hybrid.with_size_prefix(rep_lvl, max_rep.bit_length())
+                + hybrid.with_size_prefix(def_lvl, max_def.bit_length())
+                + vals
+            )
+            page_bytes = _compress(body, self.compression)
+            raw_len = len(body)
+            lvl_enc = codecs.PARQUET_RLE
+            hdr_fields = {
+                1: ("i32", 0),  # DATA_PAGE
+                5: ("struct", {1: ("i32", n_levels), 2: ("i32", enc), 3: ("i32", lvl_enc), 4: ("i32", lvl_enc)}),
+            }
+        hdr_fields[2] = ("i32", raw_len)
+        hdr_fields[3] = ("i32", len(page_bytes))
+        offset = self._emit(hdr_fields, raw_len, page_bytes)
+        # the index's null_count counts null LEAF SLOTS (level positions
+        # below max_def), not null rows
+        _record_page(
+            self.pidx, self.col, offset, len(self.out) - offset, first_row, n_levels, vlo, vhi, dlo, dhi
+        )
+        self.n_pages += 1
+
+    def column_chunk(self, path: list[str], n_values: int, stats: dict) -> dict:
+        """ColumnChunk struct: ColumnMetaData with PageEncodingStats (field
+        13), which lets readers prove every data page is dictionary-encoded
+        and use the dict page as the exact distinct set (parquet-mr
+        DictionaryFilter)."""
+        enc = codecs.PARQUET_IDS[self.enc]
+        encodings = {codecs.PARQUET_RLE, enc}
+        enc_stats = []
+        if self.dict_offset is not None:
+            encodings.add(_PLAIN)
+            enc_stats.append({1: ("i32", 2), 2: ("i32", _PLAIN), 3: ("i32", 1)})
+        enc_stats.append(
+            {1: ("i32", 3 if self.page_version == 2 else 0), 2: ("i32", enc), 3: ("i32", self.n_pages)}
+        )
+        meta = {
+            1: ("i32", _PQ_TYPE[self.ptype]),
+            2: ("list", ("i32", sorted(encodings))),
+            3: ("list", ("binary", path)),
+            4: ("i32", self.codec),
+            5: ("i64", n_values),
+            6: ("i64", self.raw),
+            7: ("i64", self.comp),
+            9: ("i64", self.data_offset),
+            12: ("struct", stats),
+            13: ("list", ("struct", enc_stats)),
+        }
+        if self.dict_offset is not None:
+            meta[11] = ("i64", self.dict_offset)
+        return {2: ("i64", self.start), 3: ("struct", meta)}
 
 
 def _write_chunk(out: bytearray, col: ColumnData, name: str, enc_name: str | None, compression: str, codec: int, max_page: int, page_version: int = 1, crc: bool = False, pidx: list | None = None, as_int96: bool = False):
-    """Write one column chunk (dict page + data pages) into ``out``;
+    """Write one flat column chunk (dict page + data pages) into ``out``;
     returns (col_chunk_struct, meta_row). ``as_int96`` writes an INT64-
     micros timestamp column as legacy PLAIN INT96 (type_int96.go:11-66 /
     int96_time.go:17-50 inverse) for Impala/Hive-era readers: 12-byte
     nanos-of-day + Julian-day values, no dictionary, no min/max stats
     (INT96 ordering is undefined by the spec, so stats carry only the
     null count)."""
-    enc, fact = (E_PLAIN, None) if as_int96 else _choose(col, enc_name)
-    codes = uniques = None
-    dict_size = 0
-    distinct = -1
-    if enc == E_RLE_DICT:
-        codes, uniques, dict_size = fact
-        distinct = dict_size
-    chunk_start = len(out)
-    dict_offset = None
-    encodings_used = {E_RLE}
-    total_raw = total_comp = 0
-    if enc == E_RLE_DICT and dict_size:
-        dict_offset, raw_add, comp_add = _write_dict_page(
-            out, uniques, dict_size, col.ptype, compression, crc
-        )
-        total_raw += raw_add
-        total_comp += comp_add
-        encodings_used.add(E_PLAIN)
-    data_offset = len(out)
-    encodings_used.add(enc)
+    enc, fact = ("plain", None) if as_int96 else _choose(col, enc_name)
+    w = _ChunkWriter(
+        out, col, enc, fact, compression, codec, crc, page_version, pidx, "int96" if as_int96 else None
+    )
     vstart = 0
-    n_data_pages = 0
     vcum = (
         np.concatenate([[0], np.cumsum(col.lengths)]).astype(np.int64)
         if col.ptype == "bytes"
@@ -252,112 +309,22 @@ def _write_chunk(out: bytearray, col: ColumnData, name: str, enc_name: str | Non
     )
     for row_lo, row_hi in _page_boundaries(col, max_page):
         validity = col.validity[row_lo:row_hi]
-        nvals = int(validity.sum())
-        vend = vstart + nvals
+        vend = vstart + int(validity.sum())
         dlo, dhi = (int(vcum[vstart]), int(vcum[vend])) if vcum is not None else (0, 0)
-        if as_int96:
-            vals = int96.encode_plain(col.values[vstart:vend])
-        else:
-            vals = _encode_page_values(enc, col, vstart, vend, dlo, dhi, codes, dict_size)
-        if page_version == 2:
-            # V2: def levels (no size prefix) OUTSIDE the compressed
-            # region; byte length in the header (page_v2.go:111-125,
-            # 173-190, 237-245)
-            lvl = hybrid.encode_auto(validity.astype("uint64"), 1)
-            comp = _compress(vals, compression)
-            page_bytes = bytes(lvl) + comp
-            hdr_fields = {
-                1: ("i32", 3),  # DATA_PAGE_V2
-                2: ("i32", len(lvl) + len(vals)),
-                3: ("i32", len(lvl) + len(comp)),
-                8: (
-                    "struct",
-                    {
-                        1: ("i32", row_hi - row_lo),
-                        2: ("i32", (row_hi - row_lo) - nvals),
-                        3: ("i32", row_hi - row_lo),
-                        4: ("i32", enc),
-                        5: ("i32", len(lvl)),
-                        6: ("i32", 0),
-                        7: ("bool", compression != "none"),
-                    },
-                ),
-            }
-            raw_add = len(lvl) + len(vals)
-        else:
-            lvl = levels.encode_def_levels(validity, mode="auto")
-            body = bytes(lvl) + vals
-            comp = _compress(body, compression)
-            page_bytes = comp
-            hdr_fields = {
-                1: ("i32", 0),  # DATA_PAGE
-                2: ("i32", len(body)),
-                3: ("i32", len(comp)),
-                5: (
-                    "struct",
-                    {
-                        1: ("i32", row_hi - row_lo),
-                        2: ("i32", enc),
-                        3: ("i32", E_RLE),
-                        4: ("i32", E_RLE),
-                    },
-                ),
-            }
-            raw_add = len(body)
-        if crc:
-            # page CRC32 in the header (WithCRC, page_v1.go:210-214 /
-            # page_v2.go:224-228), over the page bytes following it
-            c = zlib.crc32(page_bytes)
-            hdr_fields[4] = ("i32", c - (1 << 32) if c >= 1 << 31 else c)
-        hdr = write_struct(hdr_fields)
-        _record_page(
-            pidx, col, len(out), len(hdr) + len(page_bytes),
-            row_lo, row_hi - row_lo, vstart, vend, dlo, dhi,
-        )
-        out += hdr + page_bytes
-        total_raw += raw_add + len(hdr)
-        total_comp += len(page_bytes) + len(hdr)
+        w.data_page(vstart, vend, dlo, dhi, row_lo, row_hi - row_lo, None, 0, validity, 1)
         vstart = vend
-        n_data_pages += 1
-    # PageEncodingStats (field 13): lets readers prove every data page
-    # is dictionary-encoded and use the dict page as the exact distinct
-    # set (parquet-mr DictionaryFilter)
-    enc_stats = []
-    if dict_offset is not None:
-        enc_stats.append({1: ("i32", 2), 2: ("i32", E_PLAIN), 3: ("i32", 1)})
-    enc_stats.append(
-        {1: ("i32", 3 if page_version == 2 else 0), 2: ("i32", enc), 3: ("i32", n_data_pages)}
-    )
-    meta = {
-        1: ("i32", 3 if as_int96 else _PQ_TYPE[col.ptype]),
-        2: ("list", ("i32", sorted(encodings_used))),
-        3: ("list", ("binary", [name])),
-        4: ("i32", codec),
-        5: ("i64", col.num_rows),
-        6: ("i64", total_raw),
-        7: ("i64", total_comp),
-        9: ("i64", data_offset),
-        12: (
-            "struct",
-            {3: ("i64", col.num_rows - col.num_values)}
-            if as_int96
-            else _statistics_struct(col, distinct),
-        ),
-        13: ("list", ("struct", enc_stats)),
-    }
-    if dict_offset is not None:
-        meta[11] = ("i64", dict_offset)
-    col_chunk = {2: ("i64", chunk_start), 3: ("struct", meta)}
+    nulls = col.num_rows - col.num_values
+    stats = {3: ("i64", nulls)} if as_int96 else _statistics_struct(col, fact[2] if fact else -1)
     meta_row = {
         "column": name,
-        "ptype": "int96" if as_int96 else col.ptype,
-        "encoding": _ENC_NAMES[enc],
+        "ptype": w.ptype,
+        "encoding": enc,
         "num_rows": col.num_rows,
-        "null_count": col.num_rows - col.num_values,
+        "null_count": nulls,
         "raw_bytes": col.raw_bytes,
-        "encoded_bytes": total_comp,
+        "encoded_bytes": w.comp,
     }
-    return col_chunk, meta_row
+    return w.column_chunk([name], col.num_rows, stats), meta_row
 
 
 def _is_nested(t: pa.DataType) -> bool:
@@ -427,36 +394,13 @@ def _write_chunk_nested(
     page_version: int = 1,
 ):
     """Write one NESTED leaf chunk; pages cut on row boundaries so every
-    page starts at rep == 0. V1 pages carry size-prefixed rep + def
-    hybrid streams inside the compressed body; ``page_version=2`` puts
-    the (unprefixed) level streams OUTSIDE the compressed region with
-    their byte lengths in the header — previously V2 was silently
-    downgraded to V1 for nested columns."""
+    page starts at rep == 0."""
     from .shred import shred_leaf
 
     rep, deflv, leaf, row_counts, has = shred_leaf(arr, spec)
-    max_rep, max_def = spec["max_rep"], spec["max_def"]
     col = from_arrow(leaf)  # all-defined leaf values
     enc, fact = _choose(col, enc_name)
-    codes = uniques = None
-    dict_size = 0
-    distinct = -1
-    if enc == E_RLE_DICT:
-        codes, uniques, dict_size = fact
-        distinct = dict_size
-    chunk_start = len(out)
-    dict_offset = None
-    encodings_used = {E_RLE, enc}
-    total_raw = total_comp = 0
-    if enc == E_RLE_DICT and dict_size:
-        dict_offset, raw_add, comp_add = _write_dict_page(
-            out, uniques, dict_size, col.ptype, compression, crc
-        )
-        total_raw += raw_add
-        total_comp += comp_add
-        encodings_used.add(E_PLAIN)
-    data_offset = len(out)
-    n_data_pages = 0
+    w = _ChunkWriter(out, col, enc, fact, compression, codec, crc, page_version, pidx)
     # row-aligned page cuts by estimated leaf bytes per row
     per_pos_bytes = 8.0 if col.ptype != "bytes" else max(
         1.0, (col.data.nbytes / max(len(leaf), 1))
@@ -485,115 +429,21 @@ def _write_chunk_nested(
             continue
         vlo, vhi = int(has_cum[plo]), int(has_cum[phi])
         dlo, dhi = (int(vcum[vlo]), int(vcum[vhi])) if vcum is not None else (0, 0)
-        vals = _encode_page_values(enc, col, vlo, vhi, dlo, dhi, codes, dict_size)
-        if page_version == 2:
-            # V2: raw (unprefixed) rep then def streams OUTSIDE the
-            # compressed region, byte lengths in header fields 6/5
-            rep_lvl = (
-                hybrid.encode_auto(rep[plo:phi].astype(np.uint64), max_rep.bit_length())
-                if max_rep > 0
-                else b""
-            )
-            def_lvl = (
-                hybrid.encode_auto(deflv[plo:phi].astype(np.uint64), max_def.bit_length())
-                if max_def > 0
-                else b""
-            )
-            comp = _compress(vals, compression)
-            page_bytes = bytes(rep_lvl) + bytes(def_lvl) + comp
-            hdr_fields = {
-                1: ("i32", 3),  # DATA_PAGE_V2
-                2: ("i32", len(rep_lvl) + len(def_lvl) + len(vals)),
-                3: ("i32", len(page_bytes)),
-                8: (
-                    "struct",
-                    {
-                        1: ("i32", phi - plo),  # num_values = level positions
-                        2: ("i32", (phi - plo) - (vhi - vlo)),
-                        3: ("i32", hi_row - lo_row),  # top-level rows
-                        4: ("i32", enc),
-                        5: ("i32", len(def_lvl)),
-                        6: ("i32", len(rep_lvl)),
-                        7: ("bool", compression != "none"),
-                    },
-                ),
-            }
-            raw_add = len(rep_lvl) + len(def_lvl) + len(vals)
-        else:
-            lvl = b""
-            if max_rep > 0:
-                lvl += hybrid.with_size_prefix(
-                    hybrid.encode_auto(rep[plo:phi].astype(np.uint64), max_rep.bit_length()),
-                    max_rep.bit_length(),
-                )
-            if max_def > 0:
-                lvl += hybrid.with_size_prefix(
-                    hybrid.encode_auto(deflv[plo:phi].astype(np.uint64), max_def.bit_length()),
-                    max_def.bit_length(),
-                )
-            body = lvl + vals
-            page_bytes = _compress(body, compression)
-            hdr_fields = {
-                1: ("i32", 0),  # DATA_PAGE
-                2: ("i32", len(body)),
-                3: ("i32", len(page_bytes)),
-                5: (
-                    "struct",
-                    {
-                        1: ("i32", phi - plo),  # num_values = level positions
-                        2: ("i32", enc),
-                        3: ("i32", E_RLE),
-                        4: ("i32", E_RLE),
-                    },
-                ),
-            }
-            raw_add = len(body)
-        if crc:
-            c = zlib.crc32(page_bytes)
-            hdr_fields[4] = ("i32", c - (1 << 32) if c >= 1 << 31 else c)
-        hdr = write_struct(hdr_fields)
-        # null_count counts NULL LEAF SLOTS (level positions below
-        # max_def), not null rows — phi-plo positions, vhi-vlo present
-        _record_page(
-            pidx, col, len(out), len(hdr) + len(page_bytes),
-            lo_row, phi - plo, vlo, vhi, dlo, dhi,
+        w.data_page(
+            vlo, vhi, dlo, dhi, lo_row, hi_row - lo_row,
+            rep[plo:phi], spec["max_rep"], deflv[plo:phi], spec["max_def"],
         )
-        out += hdr + page_bytes
-        total_raw += raw_add + len(hdr)
-        total_comp += len(page_bytes) + len(hdr)
-        n_data_pages += 1
     n_positions = int(pos_edges[-1])
-    enc_stats = []
-    if dict_offset is not None:
-        enc_stats.append({1: ("i32", 2), 2: ("i32", E_PLAIN), 3: ("i32", 1)})
-    enc_stats.append(
-        {1: ("i32", 3 if page_version == 2 else 0), 2: ("i32", enc), 3: ("i32", n_data_pages)}
-    )
-    meta = {
-        1: ("i32", _PQ_TYPE[col.ptype]),
-        2: ("list", ("i32", sorted(encodings_used))),
-        3: ("list", ("binary", spec["path"])),
-        4: ("i32", codec),
-        5: ("i64", n_positions),
-        6: ("i64", total_raw),
-        7: ("i64", total_comp),
-        9: ("i64", data_offset),
-        12: ("struct", {3: ("i64", n_positions - len(leaf))}),
-        13: ("list", ("struct", enc_stats)),
-    }
-    if dict_offset is not None:
-        meta[11] = ("i64", dict_offset)
-    col_chunk = {2: ("i64", chunk_start), 3: ("struct", meta)}
     meta_row = {
         "column": ".".join(spec["path"]),
         "ptype": col.ptype,
-        "encoding": _ENC_NAMES[enc],
+        "encoding": enc,
         "num_rows": len(arr),
         "null_count": n_positions - len(leaf),
-        "raw_bytes": total_raw,
-        "encoded_bytes": total_comp,
+        "raw_bytes": w.raw,
+        "encoded_bytes": w.comp,
     }
-    return col_chunk, meta_row
+    return w.column_chunk(spec["path"], n_positions, {3: ("i64", n_positions - len(leaf))}), meta_row
 
 
 def write_parquet(

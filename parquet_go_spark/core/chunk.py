@@ -35,14 +35,16 @@ the value stream) matches the reference's uncompressed page-V1 block
 from __future__ import annotations
 
 import zlib
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
 
 from ..kernels import bitpack  # noqa: F401  (re-exported for selectors)
-from ..kernels import alp, bytearrays, bytestreamsplit, deltabp, dictenc, forbp, fsst, hybrid, levels, plain
+from ..kernels import levels
 from ..kernels.varint import read_uvarint, uvarint
+from . import codecs
+from .codecs import DICT_MAX
 from .columns import ColumnData, gather_segments
 
 __all__ = [
@@ -58,9 +60,6 @@ __all__ = [
 
 MAGIC = b"PGSC"
 VERSION = 1
-# decode-side allocation cap (reference WithMaximumMemorySize, alloc.go)
-MAX_DECODE_ROWS = 1 << 28
-DICT_MAX = 32767  # math.MaxInt16, type_dict.go:101 / chunk_writer.go:188,200
 DEFAULT_PAGE = 1 << 20  # data_store.go:149-154
 
 PTYPES = {"bool": 0, "int32": 1, "int64": 2, "float": 3, "double": 4, "bytes": 5, "flba": 6}
@@ -83,8 +82,6 @@ ENCODINGS_R = {v: k for k, v in ENCODINGS.items()}
 
 COMPRESSIONS = {"none": 0, "zlib": 1, "snappy": 2, "zstd": 3, "lz4": 4}
 COMPRESSIONS_R = {v: k for k, v in COMPRESSIONS.items()}
-
-_FIXED_KIND = {"int32": "int32", "int64": "int64", "float": "float", "double": "double"}
 
 
 def _compress(payload: bytes, compression: str) -> bytes:
@@ -434,14 +431,6 @@ def _factorize(col: ColumnData) -> tuple[np.ndarray, ColumnData | np.ndarray, in
     return codes.astype(np.int32), uniques, len(uniques)
 
 
-def _encode_dict_values(uniques, ptype: str) -> bytes:
-    if ptype == "bytes":
-        return plain.encode_byte_array(uniques.lengths, uniques.data)
-    if ptype == "flba":
-        return plain.encode_fixed_byte_array(uniques.data)
-    return plain.encode_fixed(uniques, _FIXED_KIND[ptype])
-
-
 # -------------------------------------------------------------- page logic
 def _page_boundaries(col: ColumnData, max_page: int) -> list[tuple[int, int]]:
     """Row ranges per page, cutting at ~max_page estimated bytes
@@ -469,9 +458,6 @@ def _page_boundaries(col: ColumnData, max_page: int) -> list[tuple[int, int]]:
         base = est[cut - 1]
         start = cut
     return bounds
-
-
-_PAGE_STATS_MAX_LEN = 1 << 12  # bounds are <= 64 chars (<= 260 UTF-8 bytes)
 
 
 def _page_slice_column(col: ColumnData, vstart: int, vend: int, dlo: int, dhi: int) -> ColumnData:
@@ -514,156 +500,11 @@ def _read_page_stats(mv, pos: int) -> tuple[str | None, str | None, int]:
     for i in range(2):
         if present & (1 << i):
             ln, pos = read_uvarint(mv, pos)
-            if ln > _PAGE_STATS_MAX_LEN or pos + ln > len(mv):
+            if ln > codecs.MAX_PAGE_STATS_LEN or pos + ln > len(mv):
                 raise ValueError("implausible page stats length")
             vals[i] = bytes(mv[pos : pos + ln]).decode("utf-8")
             pos += ln
     return vals[0], vals[1], pos
-
-
-# ------------------------------------------------------------ value codecs
-def _chunk_fsst_table(col: ColumnData):
-    """Train one symbol table per chunk on a strided string sample (pages
-    reuse it — training per page would redo the dominant cost and a
-    prefix sample misrepresents heterogeneous columns)."""
-    from .columns import gather_segments
-
-    total = int(col.lengths.sum())
-    if total <= 1 << 17:
-        return fsst.train(col.lengths, col.data)
-    n_strs = len(col.lengths)
-    starts = np.concatenate([[0], np.cumsum(col.lengths)[:-1]])
-    avg = total / max(n_strs, 1)
-    k = max(2, min(n_strs, int((1 << 16) / max(avg, 1))))
-    idx = np.unique(np.linspace(0, n_strs - 1, k).astype(np.int64))
-    lens = col.lengths[idx]
-    data = gather_segments(col.data, starts[idx], lens)
-    return fsst.train(lens, data)
-
-
-def _encode_values(enc: str, col: ColumnData, vlo: int, vhi: int, dlo: int, dhi: int, codes, dict_size: int, index_mode: str, hint=None) -> bytes:
-    """Encode values [vlo, vhi) (bytes [dlo, dhi)). ``hint`` is the
-    chunk's probe result for ``enc`` (FSST table, zdict plan or ALP
-    parameters; see ``selector.choose_encoding``)."""
-    if enc == "rle_dict":
-        return dictenc.encode_indices(codes[vlo:vhi].astype(np.uint64), dict_size, mode=index_mode)
-    if col.ptype == "flba":
-        w = col.type_length
-        data = col.data[dlo:dhi]
-        if enc == "plain":
-            return plain.encode_fixed_byte_array(data)
-        if enc == "bss":
-            # byte-stream-split generalizes to any fixed width: transpose
-            # the (n, w) byte matrix so same-significance bytes stream
-            # together (compresses like the float case)
-            k = (dhi - dlo) // w if w else 0
-            return np.ascontiguousarray(data.reshape(k, w).T).tobytes()
-        if enc == "delta_bytes":
-            k = (dhi - dlo) // w if w else 0
-            return bytearrays.encode_delta(np.full(k, w, np.int64), data)
-        raise ValueError(f"bad flba encoding {enc}")
-    if col.ptype == "bytes":
-        lens = col.lengths[vlo:vhi]
-        data = col.data[dlo:dhi]
-        if enc == "plain":
-            return plain.encode_byte_array(lens, data)
-        if enc == "delta_length":
-            return bytearrays.encode_delta_length(lens, data)
-        if enc == "delta_bytes":
-            return bytearrays.encode_delta(lens, data)
-        if enc == "fsst":
-            return fsst.encode_column(lens, data, hint)
-        if enc == "zdict":
-            return bytearrays.encode_zdict(lens, data, hint.zdict, level=hint.level, codec=hint.codec)
-        raise ValueError(f"bad bytes encoding {enc}")
-    vals = col.values[vlo:vhi]
-    if enc == "plain":
-        if col.ptype == "bool":
-            return plain.encode_bool(vals)
-        return plain.encode_fixed(vals, _FIXED_KIND[col.ptype])
-    if enc == "rle_bool":
-        return hybrid.with_size_prefix(hybrid.encode_auto(vals.astype(np.uint64), 1), 1)
-    if enc == "delta_bp":
-        return deltabp.encode(vals, 32 if col.ptype == "int32" else 64)
-    if enc == "for_bp":
-        return forbp.encode(vals, 32 if col.ptype == "int32" else 64)
-    if enc == "bss":
-        return bytestreamsplit.encode(vals)
-    if enc == "alp":
-        return alp.encode(vals, hint=hint)
-    raise ValueError(f"bad encoding {enc} for {col.ptype}")
-
-
-def _decode_values(enc: str, ptype: str, payload: bytes, pos: int, nvals: int, dict_vals, type_length: int = 0, codec_dict: bytes = b""):
-    """-> (values_repr, pos). values_repr: ndarray or (lengths, data)."""
-    if enc == "rle_dict":
-        bw = payload[pos]
-        pos += 1
-        idx = hybrid.decode(bytes(memoryview(payload)[pos:]), bw, nvals).astype(np.int64)
-        if ptype == "bytes":
-            u_lens, u_data = dict_vals
-            if len(idx) == 0:
-                return (np.empty(0, np.int64), np.empty(0, np.uint8)), len(payload)
-            starts = np.concatenate([[0], np.cumsum(u_lens)[:-1]]) if len(u_lens) else u_lens
-            lens = u_lens[idx]
-            return (lens, gather_segments(u_data, starts[idx], lens)), len(payload)
-        if ptype == "flba":
-            w = type_length
-            ds = len(dict_vals) // w if w else 0
-            if len(idx) == 0:
-                return np.empty(0, np.uint8), len(payload)
-            return dict_vals.reshape(ds, w)[idx].reshape(-1), len(payload)
-        return dict_vals[idx], len(payload)
-    if ptype == "flba":
-        w = type_length
-        if enc == "plain":
-            _lens, data, pos = plain.decode_fixed_byte_array(payload, nvals, w, pos)
-            return np.asarray(data), pos
-        if enc == "bss":
-            total = nvals * w
-            data = np.frombuffer(payload, np.uint8, total, pos)
-            return np.ascontiguousarray(data.reshape(w, nvals).T).reshape(-1), pos + total
-        if enc == "delta_bytes":
-            _lens, data, pos = bytearrays.decode_delta(payload, pos, nvals)
-            return np.asarray(data), pos
-        raise ValueError(f"bad flba encoding {enc}")
-    if ptype == "bytes":
-        if enc == "plain":
-            lens, data, pos = plain.decode_byte_array(payload, nvals, pos)
-        elif enc == "delta_length":
-            lens, data, pos = bytearrays.decode_delta_length(payload, pos, nvals)
-        elif enc == "delta_bytes":
-            lens, data, pos = bytearrays.decode_delta(payload, pos, nvals)
-        elif enc == "fsst":
-            lens, data, pos = fsst.decode_column(payload, pos, nvals)
-        elif enc == "zdict":
-            lens, data, pos = bytearrays.decode_zdict(payload, pos, codec_dict, nvals)
-        else:
-            raise ValueError(enc)
-        return (lens, data), pos
-    if enc == "plain":
-        if ptype == "bool":
-            vals, pos = plain.decode_bool(payload, nvals, pos)
-        else:
-            vals, pos = plain.decode_fixed(payload, nvals, _FIXED_KIND[ptype], pos)
-        return vals, pos
-    if enc == "rle_bool":
-        vals, pos = hybrid.decode_sized(payload, 1, nvals, pos)
-        return vals.astype(bool), pos
-    if enc == "delta_bp":
-        vals, pos = deltabp.decode(payload, pos, 32 if ptype == "int32" else 64, nvals)
-        return vals, pos
-    if enc == "for_bp":
-        vals, pos = forbp.decode(payload, pos, 32 if ptype == "int32" else 64)
-        return vals, pos
-    if enc == "bss":
-        dt = {"int32": np.int32, "int64": np.int64, "float": np.float32, "double": np.float64}[ptype]
-        vals, pos = bytestreamsplit.decode(payload, nvals, np.dtype(dt), pos)
-        return vals, pos
-    if enc == "alp":
-        vals, pos = alp.decode(payload, pos, nvals, np.float32 if ptype == "float" else np.float64)
-        return vals, pos
-    raise ValueError(enc)
 
 
 # ------------------------------------------------------------------ encode
@@ -760,16 +601,7 @@ def encode_chunk(
     bounds = _page_boundaries(col, max_page)
     # one probe per CHUNK (pages inherit the hint): the selector's, or
     # the same probe when the encoding is forced
-    hint = sel_aux
-    if hint is None:
-        if enc == "alp" and col.ptype in ("float", "double"):
-            # pages verify the (e, rb) hint and re-search only on
-            # divergence (kernels/alp.py choose_params)
-            hint = alp.choose_params(col.values)
-        elif enc == "fsst":
-            hint = _chunk_fsst_table(col)
-        elif enc == "zdict":
-            hint = bytearrays.plan_zdict(col.lengths, col.data)
+    hint = sel_aux if sel_aux is not None else codecs.chunk_hint(enc, col)
     codec_dict = b""
     if enc == "zdict":
         # zstd pages never consult the trained dict, so the plan stores none
@@ -796,7 +628,7 @@ def encode_chunk(
         out += uvarint(col.type_length)
     if enc == "rle_dict":
         dict_payload = (
-            _encode_dict_values(uniques, col.ptype) if uniques is not None and dict_size else b""
+            codecs.encode_dictionary(uniques, col.ptype) if uniques is not None and dict_size else b""
         )
         dcomp = _compress(dict_payload, compression)
         out += uvarint(dict_size)
@@ -825,7 +657,7 @@ def encode_chunk(
         else:
             dlo = dhi = 0
         lvl = levels.encode_def_levels(validity, mode=level_mode)
-        vals = _encode_values(enc, col, vstart, vend, dlo, dhi, codes, dict_size or 0, index_mode, hint)
+        vals = codecs.encode_values(enc, col, vstart, vend, dlo, dhi, codes, dict_size or 0, index_mode, hint)
         payload = lvl + vals
         comp = _compress(payload, compression)
         out += uvarint(row_hi - row_lo)
@@ -860,6 +692,76 @@ def encode_chunk(
 
 
 # ------------------------------------------------------------------ decode
+@dataclass
+class _Header:
+    """A PGSC header parsed through the page count; ``pos`` is the first
+    page header's offset."""
+
+    ptype: str
+    enc: str
+    compression: str
+    flags: int
+    num_rows: int
+    type_length: int
+    dict_size: int
+    dict_raw_len: int
+    dict_comp: memoryview
+    codec_dict: bytes
+    num_pages: int
+    pos: int
+
+    def dictionary(self):
+        """The decoded dictionary (``codecs.decode_dictionary`` shape)."""
+        with codecs.as_value_error("dictionary"):
+            payload = _decompress(bytes(self.dict_comp), self.compression, self.dict_raw_len)
+        return codecs.decode_dictionary(payload, self.dict_size, self.ptype, self.type_length)
+
+
+def _read_header(mv) -> _Header:
+    """Parse and bound a PGSC header (magic already checked). The caps
+    are the memory governor analogue (reference alloc.go, O12): RLE packs
+    millions of rows into a few bytes legitimately, so the bounds are
+    absolute allocation budgets from ``codecs``, not blob-relative."""
+    with codecs.as_value_error("chunk header"):
+        version, pt, en, cp, flags = mv[4], mv[5], mv[6], mv[7], mv[8]
+        if version != VERSION:
+            raise ValueError(f"bad chunk version {version}")
+        ptype, enc, compression = PTYPES_R[pt], ENCODINGS_R[en], COMPRESSIONS_R[cp]
+    pos = 9
+    num_rows, pos = read_uvarint(mv, pos)
+    null_count, pos = read_uvarint(mv, pos)
+    if num_rows > codecs.MAX_ROWS or null_count > num_rows:
+        raise ValueError(f"implausible chunk header: rows={num_rows} nulls={null_count}")
+    type_length = 0
+    if ptype == "flba":
+        type_length, pos = read_uvarint(mv, pos)
+        if not 0 < type_length <= codecs.MAX_TYPE_LENGTH:
+            raise ValueError(f"implausible flba type_length {type_length}")
+    dict_size = raw_len = comp_len = 0
+    if flags & 1:
+        dict_size, pos = read_uvarint(mv, pos)
+        raw_len, pos = read_uvarint(mv, pos)
+        comp_len, pos = read_uvarint(mv, pos)
+        if dict_size > DICT_MAX + 1 or pos + comp_len > len(mv) or raw_len > codecs.MAX_RAW_PAGE:
+            raise ValueError("implausible dict header")
+    dict_comp = mv[pos : pos + comp_len]
+    pos += comp_len
+    codec_dict = b""
+    if flags & 2:
+        cd_len, pos = read_uvarint(mv, pos)
+        if cd_len > codecs.MAX_CODEC_DICT:
+            raise ValueError("implausible codec dict length")
+        codec_dict = bytes(mv[pos : pos + cd_len])
+        pos += cd_len
+    num_pages, pos = read_uvarint(mv, pos)
+    if num_pages > len(mv):
+        raise ValueError("implausible page count")
+    return _Header(
+        ptype, enc, compression, flags, num_rows, type_length,
+        dict_size, raw_len, dict_comp, codec_dict, num_pages, pos,
+    )
+
+
 def chunk_dict_values(blob) -> set | None:
     """The chunk's complete dictionary as a set of Python values, read
     from the header region alone (no data page is touched or
@@ -874,41 +776,14 @@ def chunk_dict_values(blob) -> set | None:
     mv = memoryview(blob).cast("B")  # normalize signed buffer views
     if len(mv) < 9 or bytes(mv[:4]) != MAGIC:
         return None
-    en, cp, flags = mv[6], mv[7], mv[8]
-    if ENCODINGS_R.get(en) != "rle_dict" or not flags & 1:
-        return None
-    ptype = PTYPES_R[mv[5]]
-    compression = COMPRESSIONS_R[cp]
-    pos = 9
-    num_rows, pos = read_uvarint(mv, pos)
-    null_count, pos = read_uvarint(mv, pos)
-    if num_rows > MAX_DECODE_ROWS or null_count > num_rows:
-        raise ValueError("implausible chunk header")
-    type_length = 0
-    if ptype == "flba":
-        type_length, pos = read_uvarint(mv, pos)
-        if type_length == 0 or type_length > 1 << 16:
-            raise ValueError(f"implausible flba type_length {type_length}")
-    dict_size, pos = read_uvarint(mv, pos)
-    raw_len, pos = read_uvarint(mv, pos)
-    comp_len, pos = read_uvarint(mv, pos)
-    if dict_size > DICT_MAX + 1 or pos + comp_len > len(mv) or raw_len > comp_len * 1024 + (1 << 20):
-        raise ValueError("implausible dict header")
-    if dict_size == 0:
-        return set()
-    payload = _decompress(bytes(mv[pos : pos + comp_len]), compression, raw_len)
-    if ptype == "bytes":
-        lens, data, _ = plain.decode_byte_array(payload, dict_size)
+    if ENCODINGS_R.get(mv[6]) != "rle_dict" or not mv[8] & 1 or PTYPES_R.get(mv[5]) == "bool":
+        return None  # bool: forged, a dictionary on a type that never has one
+    vals = _read_header(mv).dictionary()
+    if isinstance(vals, tuple):
+        lens, data = vals
         offs = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
-        raw = bytes(np.ascontiguousarray(data))
-        return {raw[offs[i] : offs[i + 1]] for i in range(dict_size)}
-    if ptype == "flba":
-        _l, data, _ = plain.decode_fixed_byte_array(payload, dict_size, type_length)
-        raw = bytes(np.ascontiguousarray(data))
-        return {raw[i * type_length : (i + 1) * type_length] for i in range(dict_size)}
-    if ptype not in _FIXED_KIND:  # forged: dict on a type that never has one
-        return None
-    vals, _ = plain.decode_fixed(payload, dict_size, _FIXED_KIND[ptype])
+        raw = bytes(data)
+        return {raw[offs[i] : offs[i + 1]] for i in range(len(lens))}
     return set(vals.tolist())
 
 
@@ -918,43 +793,21 @@ def chunk_page_index(blob) -> list[dict] | None:
     ColumnIndex analogue).  ``None`` when the chunk was written without
     ``page_stats`` or is a nested container (no page stats there)."""
     mv = memoryview(blob).cast("B")  # normalize signed buffer views
-    if bytes(mv[:4]) != MAGIC or len(mv) < 9:
+    if bytes(mv[:4]) != MAGIC or len(mv) < 9 or not mv[8] & 8:
         return None
-    flags = mv[8]
-    if not flags & 8:
-        return None
-    ptype = PTYPES_R[mv[5]]
-    pos = 9
-    num_rows, pos = read_uvarint(mv, pos)
-    _nulls, pos = read_uvarint(mv, pos)
-    if num_rows > MAX_DECODE_ROWS:
-        raise ValueError("implausible chunk header")
-    if ptype == "flba":
-        _tl, pos = read_uvarint(mv, pos)
-    if flags & 1:
-        _ds, pos = read_uvarint(mv, pos)
-        _rl, pos = read_uvarint(mv, pos)
-        comp_len, pos = read_uvarint(mv, pos)
-        if pos + comp_len > len(mv):
-            raise ValueError("implausible dict header")
-        pos += comp_len
-    if flags & 2:
-        cd_len, pos = read_uvarint(mv, pos)
-        pos += cd_len
-    num_pages, pos = read_uvarint(mv, pos)
-    if num_pages > len(mv):
-        raise ValueError("implausible page count")
+    h = _read_header(mv)
+    pos = h.pos
     out = []
     cursor = 0
-    for _ in range(num_pages):
+    for _ in range(h.num_pages):
         rows, pos = read_uvarint(mv, pos)
         _pn, pos = read_uvarint(mv, pos)
         _rl, pos = read_uvarint(mv, pos)
         comp_len, pos = read_uvarint(mv, pos)
-        if flags & 4:
+        if h.flags & 4:
             pos += 4
         mn, mx, pos = _read_page_stats(mv, pos)
-        if rows > num_rows or pos + comp_len > len(mv):
+        if rows > h.num_rows or pos + comp_len > len(mv):
             raise ValueError("implausible page header")
         out.append(
             {
@@ -966,7 +819,7 @@ def chunk_page_index(blob) -> list[dict] | None:
                 # the bound-ordering family the prune compare must use
                 # (numeric vs lexicographic) is the column's, not the
                 # probe's — carried per page for decode_job._page_excludes
-                "ptype": ptype,
+                "ptype": h.ptype,
             }
         )
         cursor += rows
@@ -1013,59 +866,13 @@ def decode_chunk(blob, logical: str = "", row_sel=None):
         return decode_struct_chunk(blob, logical=logical)
     if bytes(mv[:4]) != MAGIC:
         raise ValueError("bad chunk magic")
-    version, pt, en, cp, flags = mv[4], mv[5], mv[6], mv[7], mv[8]
-    if version != VERSION:
-        raise ValueError(f"bad chunk version {version}")
-    ptype = PTYPES_R[pt]
-    enc = ENCODINGS_R[en]
-    compression = COMPRESSIONS_R[cp]
-    pos = 9
-    num_rows, pos = read_uvarint(mv, pos)
-    null_count, pos = read_uvarint(mv, pos)
-    # memory governor analogue (reference alloc.go, O12): cap the
-    # allocations a header can demand before touching numpy — RLE packs
-    # millions of rows into a few bytes legitimately, so the bound is an
-    # absolute allocation budget, not blob-relative
-    if num_rows > MAX_DECODE_ROWS or null_count > num_rows:
-        raise ValueError(f"implausible chunk header: rows={num_rows} nulls={null_count}")
-    type_length = 0
-    if ptype == "flba":
-        type_length, pos = read_uvarint(mv, pos)
-        if type_length == 0 or type_length > 1 << 16:
-            raise ValueError(f"implausible flba type_length {type_length}")
-    dict_vals = None
-    if flags & 1:
-        dict_size, pos = read_uvarint(mv, pos)
-        raw_len, pos = read_uvarint(mv, pos)
-        comp_len, pos = read_uvarint(mv, pos)
-        if dict_size > DICT_MAX + 1 or comp_len > len(mv) or raw_len > comp_len * 1024 + (1 << 20):
-            raise ValueError("implausible dict header")
-        dict_payload = _decompress(bytes(mv[pos : pos + comp_len]), compression, raw_len)
-        pos += comp_len
-        if ptype == "bytes":
-            u_lens, u_data, _ = plain.decode_byte_array(dict_payload, dict_size)
-            dict_vals = (u_lens, u_data)
-        elif ptype == "flba":
-            _ul, dict_vals, _ = plain.decode_fixed_byte_array(dict_payload, dict_size, type_length)
-            dict_vals = np.asarray(dict_vals)
-        else:
-            dict_vals, _ = plain.decode_fixed(dict_payload, dict_size, _FIXED_KIND[ptype])
-    codec_dict = b""
-    if flags & 2:
-        cd_len, pos = read_uvarint(mv, pos)
-        if cd_len > 1 << 20:
-            raise ValueError("implausible codec dict length")
-        codec_dict = bytes(mv[pos : pos + cd_len])
-        pos += cd_len
-    num_pages, pos = read_uvarint(mv, pos)
-    validity_parts = []
-    value_parts = []
-    len_parts = []
-    data_parts = []
-    if num_pages > len(mv):
-        raise ValueError("implausible page count")
+    h = _read_header(mv)
+    ptype, flags = h.ptype, h.flags
+    dict_vals = h.dictionary() if flags & 1 else None
+    pos = h.pos
+    validity_parts, value_parts, len_parts, data_parts = [], [], [], []
     row_cursor = 0
-    for page_i in range(num_pages):
+    for page_i in range(h.num_pages):
         rows, pos = read_uvarint(mv, pos)
         nulls, pos = read_uvarint(mv, pos)
         raw_len, pos = read_uvarint(mv, pos)
@@ -1076,7 +883,7 @@ def decode_chunk(blob, logical: str = "", row_sel=None):
             pos += 4
         if flags & 8:
             _mn, _mx, pos = _read_page_stats(mv, pos)
-        if rows > num_rows or nulls > rows or pos + comp_len > len(mv) or raw_len > (comp_len + 64) * 1024:
+        if rows > h.num_rows or nulls > rows or pos + comp_len > len(mv) or raw_len > codecs.MAX_RAW_PAGE:
             raise ValueError("implausible page header")
         if row_sel is not None:
             mask = _page_row_mask(row_sel, row_cursor, rows)
@@ -1092,58 +899,37 @@ def decode_chunk(blob, logical: str = "", row_sel=None):
             raise ValueError(
                 f"page {page_i} CRC mismatch: corruption localized to this page"
             )
-        payload = _decompress(comp_bytes, compression, raw_len)
         pos += comp_len
-        # untrusted-bytes contract: a corrupt payload that slips past the
-        # header plausibility checks must still surface as ValueError,
-        # never a kernel-level IndexError/OverflowError
-        try:
+        nvals = rows - nulls
+        with codecs.as_value_error(f"page {page_i} payload"):
+            payload = _decompress(comp_bytes, h.compression, raw_len)
             validity, ppos = levels.decode_def_levels(payload, rows, 0)
-            nvals = rows - nulls
-            repr_, _ = _decode_values(enc, ptype, payload, ppos, nvals, dict_vals, type_length, codec_dict)
-        except ValueError:
-            raise
-        except (IndexError, KeyError, OverflowError, EOFError, TypeError) as e:
-            # TypeError included: a forged header claiming rle_dict with
-            # the dict-page flag CLEAR leaves dict_vals=None, and the
-            # kernels then unpack/index None — still corrupt bytes, still
-            # the documented ValueError contract
-            raise ValueError(f"corrupt page {page_i} payload: {e}") from e
+        if int(validity.sum()) != nvals:
+            raise ValueError(f"page {page_i}: def levels disagree with its null count")
+        repr_ = codecs.decode_values(h.enc, ptype, payload, ppos, nvals, dict_vals, h.type_length, h.codec_dict)
         if mask is not None:
             vmask = mask[validity]  # selected positions among non-null values
             validity = validity[mask]
-            if ptype == "bytes":
+            if isinstance(repr_, tuple):
                 lens, data = repr_
-                lens = np.asarray(lens)
-                sel_lens = lens[vmask]
                 starts = np.concatenate([[0], np.cumsum(lens)[:-1]]).astype(np.int64)
-                repr_ = (sel_lens, gather_segments(np.asarray(data), starts[vmask], sel_lens))
-            elif ptype == "flba":
-                repr_ = np.asarray(repr_).reshape(nvals, type_length)[vmask].reshape(-1)
+                repr_ = (lens[vmask], gather_segments(data, starts[vmask], lens[vmask]))
             else:
-                repr_ = np.asarray(repr_)[vmask]
+                repr_ = repr_[vmask]
         validity_parts.append(validity)
-        if ptype == "bytes":
+        if isinstance(repr_, tuple):
             len_parts.append(repr_[0])
             data_parts.append(repr_[1])
         else:
             value_parts.append(repr_)
     validity = np.concatenate(validity_parts) if validity_parts else np.empty(0, bool)
-    if ptype == "bytes":
+    if ptype in ("bytes", "flba"):
         lengths = np.concatenate(len_parts) if len_parts else np.empty(0, np.int64)
         data = np.concatenate(data_parts) if data_parts else np.empty(0, np.uint8)
-        return ColumnData(ptype, validity, lengths=lengths.astype(np.int64), data=data, logical=logical or "binary")
-    if ptype == "flba":
-        data = np.concatenate(value_parts) if value_parts else np.empty(0, np.uint8)
-        return ColumnData(
-            ptype, validity, data=data, type_length=type_length, logical=logical or f"fixed_size_binary[{type_length}]"
-        )
+        if ptype == "flba":
+            w = h.type_length
+            return ColumnData(ptype, validity, data=data, type_length=w, logical=logical or f"fixed_size_binary[{w}]")
+        return ColumnData(ptype, validity, lengths=lengths, data=data, logical=logical or "binary")
     dt = {"bool": np.bool_, "int32": np.int32, "int64": np.int64, "float": np.float32, "double": np.float64}[ptype]
-    values = (
-        np.concatenate([v.astype(dt, copy=False).view(dt) if v.dtype != dt else v for v in value_parts])
-        if value_parts
-        else np.empty(0, dt)
-    )
-    if values.dtype != dt:
-        values = values.view(dt) if values.dtype.itemsize == np.dtype(dt).itemsize else values.astype(dt)
+    values = np.concatenate(value_parts) if value_parts else np.empty(0, dt)
     return ColumnData(ptype, validity, values=values, logical=logical or ptype)

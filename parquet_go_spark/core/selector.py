@@ -26,11 +26,11 @@ from __future__ import annotations
 import numpy as np
 
 from ..kernels import alp, bytearrays, deltabp, dictenc, forbp, hybrid
+from .codecs import DICT_MAX, encode_values
 from .columns import ColumnData
 
 __all__ = ["choose_encoding", "COST_PENALTY"]
 
-DICT_MAX = 32767
 SAMPLE_VALUES = 1 << 16
 SAMPLE_BYTES = 1 << 17
 
@@ -247,8 +247,6 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
 
     if compression != "none":
         # re-estimate the top candidates on compressed sample encodings
-        from .chunk import _encode_values
-
         ranked = sorted(est, key=est.get)[:3]
         if "bss" not in ranked and "bss" in est:
             ranked.append("bss")
@@ -262,14 +260,14 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
                     if e == "zdict" and k == z_sample[0]:
                         enc_s = z_sample[1]  # the same prefix, already encoded above
                     else:
-                        enc_s = _encode_values(e, col, 0, k, 0, dhi, codes, dict_size, "auto", hints.get(e))
+                        enc_s = encode_values(e, col, 0, k, 0, dhi, codes, dict_size, "auto", hints.get(e))
                     raw_s = dhi + 4 * k
                 elif col.ptype == "flba":
                     dhi = k * col.type_length
-                    enc_s = _encode_values(e, col, 0, k, 0, dhi, codes, dict_size, "auto", hints.get(e))
+                    enc_s = encode_values(e, col, 0, k, 0, dhi, codes, dict_size, "auto", hints.get(e))
                     raw_s = dhi
                 else:
-                    enc_s = _encode_values(e, col, 0, k, 0, 0, codes, dict_size, "auto", hints.get(e))
+                    enc_s = encode_values(e, col, 0, k, 0, 0, codes, dict_size, "auto", hints.get(e))
                     raw_s = k * (4 if col.ptype in ("int32", "float") else 8)
                 comp_s = len(_compress(enc_s, compression))
                 est[e] = comp_s / max(raw_s, 1) * est.get("plain", raw_s)

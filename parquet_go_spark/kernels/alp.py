@@ -316,7 +316,7 @@ def decode(payload, pos: int, nvals: int, dtype) -> tuple[np.ndarray, int]:
     pos += 4 * n_exc
     exc_vals = np.frombuffer(payload, dtype, n_exc, pos)
     pos += dtype.itemsize * n_exc
-    digits, pos = forbp.decode(payload, pos, 64)
+    digits, pos = forbp.decode(payload, pos, 64, nvals)
     if len(digits) < nvals or (n_exc and exc_pos.max(initial=0) >= nvals):
         raise ValueError("alp: truncated digit stream or bad exception position")
     vals = _decode_expr(digits[:nvals], e, dtype)

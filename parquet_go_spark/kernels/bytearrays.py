@@ -352,6 +352,10 @@ def decode_delta(buf, pos: int = 0, max_count: int | None = None) -> tuple[np.nd
     if len(suffix_lens) != n:
         raise ValueError("delta byte array: prefix/suffix count mismatch")
     lengths = prefixes + suffix_lens
+    # a prefix reaching past the previous value would make a byte its own
+    # source: the pointer chase below would never finish
+    if prefixes[0] != 0 or prefixes.min() < 0 or (prefixes[1:] > lengths[:-1]).any():
+        raise ValueError("delta byte array: prefix longer than the previous value")
     out_starts = np.concatenate([[0], np.cumsum(lengths)[:-1]])
     total = int(lengths.sum())
     # source index per output byte: suffix bytes map to the suffix stream,

@@ -58,12 +58,13 @@ def encode(values: np.ndarray, bits: int) -> bytes:
     return uvarint(n) + varint(ref) + bytes([width]) + bitpack.pack(adj, width)
 
 
-def decode(buf, pos: int, bits: int) -> tuple[np.ndarray, int]:
-    """Decode one FOR stream starting at ``pos`` -> (values, new_pos)."""
+def decode(buf, pos: int, bits: int, max_count: int | None = None) -> tuple[np.ndarray, int]:
+    """Decode one FOR stream starting at ``pos`` -> (values, new_pos).
+    ``max_count`` bounds the declared count (see ``deltabp.decode``)."""
     sdt, _udt = _dtypes(bits)
     mv = memoryview(buf).cast("B")  # normalize signed buffer views
     n, pos = read_uvarint(mv, pos)
-    if n > 1 << 28:
+    if n > 1 << 28 or (max_count is not None and n > max_count):
         # allocation governor: a width-0 stream stores no packed bytes,
         # so a forged count would otherwise allocate unbounded zeros
         raise ValueError(f"for_bp: implausible count {n}")

@@ -174,14 +174,49 @@ def test_thrift_depth_counts_through_collections():
         assert time.time() - t < 2.0
 
 
+def _bounded(fn, *args, budget_s: float = 2.0, hang_s: int = 20):
+    """Call ``fn`` expecting ValueError within ``budget_s``; a call that
+    spins (a pointer chase with a cycle) is interrupted at ``hang_s`` so
+    the failure does not stall the suite."""
+    import signal
+
+    def _hang(_sig, _frame):
+        raise TimeoutError(f"{fn.__name__} still running after {hang_s}s")
+
+    old = signal.signal(signal.SIGALRM, _hang)
+    signal.alarm(hang_s)
+    t = time.time()
+    try:
+        with pytest.raises(ValueError) as info:
+            fn(*args)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+    assert time.time() - t < budget_s
+    return info
+
+
+def _parquet_page_swap(table, column: str, encoding: str, old: bytes, new: bytes) -> bytes:
+    """Our writer's uncompressed file with the one occurrence of ``old``
+    (a page's value stream) replaced by ``new`` zero-padded to the same
+    length: page sizes stay valid and readers ignore the trailing pad."""
+    from parquet_go_spark.compat.parquet_writer import write_parquet
+
+    buf = write_parquet(table, encodings={column: encoding})
+    assert buf.count(old) == 1 and len(new) <= len(old)
+    return buf.replace(old, new + b"\x00" * (len(old) - len(new)))
+
+
 def test_deltabp_count_governor():
     """ADVICE's finding: 29 zero-width blocks of 2^20 values (2 bytes
     each) made a 67-byte stream declare 30,000,001 values — ~9 s and
     ~1.4 GB to decode. A page decoder bounds the count by the page's
     value count, and no stream may declare more than 2^28 values."""
     import numpy as np
+    import pyarrow as pa
 
-    from parquet_go_spark.core.chunk import _decode_values
+    from parquet_go_spark.compat.parquet_reader import read_table_arrow
+    from parquet_go_spark.core.codecs import decode_values, parquet_encoding
     from parquet_go_spark.kernels import deltabp
 
     forged = _varint(1 << 20) + _varint(1) + _varint(30_000_001) + b"\x00" + b"\x00\x00" * 29
@@ -190,8 +225,15 @@ def test_deltabp_count_governor():
     with pytest.raises(ValueError, match="count"):
         deltabp.decode(forged, 0, 32, max_count=1000)
     with pytest.raises(ValueError, match="count"):
-        _decode_values("delta_bp", "int32", forged, 0, 1000, None)
+        decode_values("delta_bp", "int32", forged, 0, 1000)
     assert time.time() - t < 2.0
+    # the same stream as a Parquet DELTA_BINARY_PACKED (id 5) page of 1000 values
+    vals = (np.arange(1000, dtype=np.int32) * 7919) % 1000
+    assert parquet_encoding(5) == "delta_bp"
+    buf = _parquet_page_swap(
+        pa.table({"x": pa.array(vals)}), "x", "delta_bp", deltabp.encode(vals, 32), forged
+    )
+    assert "count" in str(_bounded(read_table_arrow, buf).value)
     # beyond 2^28 is rejected with no page bound at all (forbp's cap)
     huge = _varint(128) + _varint(4) + _varint((1 << 28) + 1) + b"\x00" + b"\x00" * 5
     with pytest.raises(ValueError, match="count"):
@@ -200,3 +242,55 @@ def test_deltabp_count_governor():
     vals = np.arange(1000, dtype=np.int32) * 3
     out, _ = deltabp.decode(deltabp.encode(vals, 32), 0, 32, max_count=1000)
     np.testing.assert_array_equal(out, vals)
+
+
+def _pgsc_chunk(ptype: int, enc: int, rows: int, values: bytes) -> bytes:
+    """A one-page, no-null, uncompressed PGSC chunk around a value stream."""
+    import numpy as np
+
+    from parquet_go_spark.kernels import levels
+
+    payload = levels.encode_def_levels(np.ones(rows, bool)) + values
+    page = _varint(rows) + _varint(0) + _varint(len(payload)) + _varint(len(payload)) + payload
+    return b"PGSC" + bytes([1, ptype, enc, 0, 0]) + _varint(rows) + _varint(0) + _varint(1) + page
+
+
+def test_delta_bytes_prefix_past_previous_value_is_rejected():
+    """A DELTA_BYTE_ARRAY prefix longer than the previous value made a
+    byte its own source, and the decoder's pointer chase never returned:
+    a 3-row PGSC chunk (prefixes [0, 0, 1], suffix lengths [1, 0, 1])
+    spun in decode_chunk, and so did a Parquet page forged the same way."""
+    import numpy as np
+    import pyarrow as pa
+
+    from parquet_go_spark.compat.parquet_reader import read_table_arrow
+    from parquet_go_spark.core.chunk import decode_chunk
+    from parquet_go_spark.kernels import bytearrays, deltabp
+
+    def stream(prefixes, suffix_lens, suffixes: bytes) -> bytes:
+        return deltabp.encode(np.array(prefixes, np.int32), 32) + bytearrays.encode_delta_length(
+            np.array(suffix_lens, np.int64), np.frombuffer(suffixes, np.uint8)
+        )
+
+    forged = stream([0, 0, 1], [1, 0, 1], b"ab")
+    _bounded(decode_chunk, _pgsc_chunk(5, 5, 3, forged))  # bytes, delta_bytes
+    vals = [b"x" * 20, b"y" * 20, b"z" * 20]
+    good = bytearrays.encode_delta(np.array([20, 20, 20], np.int64), np.frombuffer(b"".join(vals), np.uint8))
+    buf = _parquet_page_swap(pa.table({"s": pa.array(vals)}), "s", "delta_bytes", good, forged)
+    _bounded(read_table_arrow, buf)
+    # a first prefix != 0 has no previous value to borrow from
+    with pytest.raises(ValueError, match="prefix"):
+        bytearrays.decode_delta(stream([1, 0, 0], [1, 1, 1], b"abc"))
+
+
+def test_forbp_page_count_is_bounded_by_the_page():
+    """A 28-byte PGSC for_bp chunk claiming 3 rows declared a width-0
+    stream of 268,435,440 values, gigabytes of output decoded into a
+    column whose validity and values disagreed. The page's value count
+    now bounds the stream."""
+    from parquet_go_spark.core.chunk import decode_chunk
+
+    forged = _varint(268_435_440) + _varint(0) + b"\x00"  # count, zigzag ref, width 0
+    blob = _pgsc_chunk(2, 10, 3, forged)  # int64, for_bp
+    assert len(blob) == 28
+    assert "count" in str(_bounded(decode_chunk, blob).value)

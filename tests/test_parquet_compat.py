@@ -144,3 +144,77 @@ def test_byte_stream_split_flba():
     assert validity.all()
     assert lens.tolist() == [3] * N
     assert bytes(data.tobytes()) == b"".join(v.as_py() for v in fixed)
+
+
+@pytest.mark.parametrize("version", ["1.0", "2.0"])
+@pytest.mark.parametrize("use_dictionary", [True, False])
+def test_required_flat_columns(version, use_dictionary):
+    """A REQUIRED flat column has no def-level stream (max_def = 0); V1
+    pages are pyarrow's default and used to fail as a misread level
+    stream."""
+    tbl = pa.table(
+        {"i": pa.array(RNG.integers(0, 50, N)), "s": pa.array([f"v{i % 13}" for i in range(N)])},
+        schema=pa.schema([pa.field("i", pa.int64(), nullable=False), pa.field("s", pa.string(), nullable=False)]),
+    )
+    buf = _write(tbl, data_page_version=version, use_dictionary=use_dictionary)
+    _check_fixed(buf, "i", _col(tbl, "i"))
+    _check_bytes(buf, "s", _col(tbl, "s"))
+
+
+def _one_page_file(table, column: str, encoding: str):
+    from parquet_go_spark.compat.parquet_reader import file_meta
+    from parquet_go_spark.compat.parquet_writer import write_parquet
+
+    buf = write_parquet(table, encodings={column: encoding})
+    return bytearray(buf), file_meta(buf)[4][0][1][0][3]
+
+
+def test_forged_pages_raise_value_error():
+    """Forged Parquet pages surface as ValueError, never a kernel's
+    IndexError, Arrow's 'Negative offsets' or a header KeyError."""
+    from parquet_go_spark.compat.parquet_reader import read_table_arrow
+    from parquet_go_spark.kernels import bytearrays, dictenc
+
+    n = 64
+    # a dictionary index past the end of a one-entry dictionary
+    buf, _ = _one_page_file(pa.table({"s": pa.array(["a"] * n)}), "s", "rle_dict")
+    good = dictenc.encode_indices(np.zeros(n, np.uint64), 1, mode="auto")
+    bad = dictenc.encode_indices(np.ones(n, np.uint64), 1, mode="auto")
+    assert len(good) == len(bad) and buf.count(good) == 1
+    with pytest.raises(ValueError):
+        read_table_arrow(bytes(buf.replace(good, bad)))
+    # a negative DELTA_LENGTH_BYTE_ARRAY length (the lengths still sum right)
+    buf, _ = _one_page_file(pa.table({"s": pa.array(["abc", "def"])}), "s", "delta_length")
+    good = bytearrays.encode_delta_length(np.array([3, 3]), np.frombuffer(b"abcdef", np.uint8))
+    bad = bytearrays.encode_delta_length(np.array([-1, 7]), np.frombuffer(b"abcdef", np.uint8))
+    assert len(good) == len(bad) and buf.count(good) == 1
+    with pytest.raises(ValueError):
+        read_table_arrow(bytes(buf.replace(good, bad)))
+    # a V1 page header whose data_page_header (field 5) reads as field 6
+    buf, cmeta = _one_page_file(pa.table({"i": pa.array(range(n))}), "i", "plain")
+    pos = cmeta[9]
+    for _ in range(3):  # fields 1-3: i32 header byte, zigzag varint
+        pos += 1
+        while buf[pos] & 0x80:
+            pos += 1
+        pos += 1
+    assert buf[pos] == 0x2C  # field delta 2, type struct
+    buf[pos] = 0x3C
+    with pytest.raises(ValueError):
+        read_table_arrow(bytes(buf))
+
+
+def test_read_table_parses_the_footer_once(monkeypatch):
+    from parquet_go_spark.compat import parquet_reader
+
+    tbl = pa.table({
+        "a": pa.array(range(10)),
+        "l": pa.array([[i, i] for i in range(10)]),
+        "st": pa.array([{"x": i, "y": str(i)} for i in range(10)]),
+    })
+    buf = _write(tbl)
+    calls = []
+    real = parquet_reader.file_meta
+    monkeypatch.setattr(parquet_reader, "file_meta", lambda b: calls.append(1) or real(b))
+    assert parquet_reader.read_table_arrow(buf).equals(tbl)
+    assert len(calls) == 1

@@ -44,7 +44,7 @@ def test_pyarrow_readback(comp):
 def test_forced_delta_encodings_readback():
     buf = write_parquet(
         TBL,
-        encodings={"i32": "delta_bp", "i64": "delta_bp", "s": "delta_bytes", "low": "delta_length"},
+        encodings={"i32": "delta_bp", "i64": "delta_bp", "s": "delta_bytes", "low": "delta_length", "f64": "bss"},
     )
     assert _readback_equal(buf, TBL)
     # the footer must advertise those encodings
@@ -52,6 +52,7 @@ def test_forced_delta_encodings_readback():
     encs = {md.row_group(0).column(i).path_in_schema: md.row_group(0).column(i).encodings for i in range(md.num_columns)}
     assert "DELTA_BINARY_PACKED" in encs["i32"]
     assert "DELTA_BYTE_ARRAY" in encs["s"]
+    assert "BYTE_STREAM_SPLIT" in encs["f64"]
 
 
 def test_multi_page_readback():
