@@ -268,7 +268,7 @@ def _parquet_meta(path: str) -> int:
     stats, and which prune structures the writer stored (PageIndex,
     bloom filter, fully-dict encoding_stats)."""
     from .compat.dict_filter import all_data_pages_dict
-    from .compat.page_index import decode_stat
+    from .core.prune import footer_zone
     from .compat.parquet_reader import file_meta_path
     from .spark.parquet_source import _list_files
 
@@ -286,8 +286,7 @@ def _parquet_meta(path: str) -> int:
                 md = cc.get(3)
                 if md is None:
                     continue
-                st = md.get(12, {})
-                ptype = md[1]
+                zone = footer_zone(md)
                 row = {
                     "rg": rgi,
                     "column": b".".join(md[3]).decode(),
@@ -295,9 +294,9 @@ def _parquet_meta(path: str) -> int:
                     "values": md[5],
                     "bytes": md[7],
                     "encodings": [enc_names.get(e, e) for e in md[2]],
-                    "nulls": st.get(3),
-                    "min": repr(decode_stat(st.get(6, st.get(2)), ptype)),
-                    "max": repr(decode_stat(st.get(5, st.get(1)), ptype)),
+                    "nulls": zone.null_count,
+                    "min": repr(zone.lo),
+                    "max": repr(zone.hi),
                     "page_index": 6 in cc and 4 in cc,
                     "bloom": 14 in md,
                     "dict_complete": all_data_pages_dict(md),

@@ -24,8 +24,10 @@ import struct as _s
 
 import numpy as np
 
+from ..core.prune import PLAIN_FORMATS, point_key
 from ..kernels.bloom import BLOOM_BLOCK_BYTES, bloom_build, bloom_might_contain
 from ..kernels.xxhash64 import _xxh64_fixed, xxh64, xxh64_column
+from .parquet_reader import PHYSICAL_TYPES
 from .thrift_compact import read_struct
 from .thrift_writer import write_struct
 
@@ -132,23 +134,15 @@ def read_bloom_bitset(buf, cmeta: dict) -> bytes | None:
 
 def hash_probe_value(value, ptype: int) -> int | None:
     """XXH64 of one predicate literal's PLAIN encoding, by the column's
-    physical type id; None = unsupported (caller must not prune)."""
-    try:
-        if ptype == 1:
-            raw = _s.pack("<i", int(value))
-        elif ptype == 2:
-            raw = _s.pack("<q", int(value))
-        elif ptype == 4:
-            raw = _s.pack("<f", float(value))
-        elif ptype == 5:
-            raw = _s.pack("<d", float(value))
-        elif ptype in (6, 7):
-            raw = value.encode() if isinstance(value, str) else bytes(value)
-        else:
-            return None
-    except (ValueError, TypeError, OverflowError, _s.error):
+    physical type id; None = no point-lookup proof
+    (``core.prune.point_key``) — the caller must not prune."""
+    key = point_key(value, PHYSICAL_TYPES.get(ptype))
+    if key is None:
         return None
-    return xxh64(raw)
+    try:
+        return xxh64(key if isinstance(key, bytes) else _s.pack(PLAIN_FORMATS[ptype], key))
+    except (KeyError, _s.error):
+        return None
 
 
 def bloom_probe_file(path: str, cmeta: dict, value) -> bool:

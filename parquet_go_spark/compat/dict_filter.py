@@ -16,13 +16,11 @@ headers — keeps the chunk.
 
 from __future__ import annotations
 
-import numpy as np
-
 from ..core import codecs
+from ..core.prune import point_excluded, value_set
+from .parquet_reader import PHYSICAL_TYPES, _read_page
 
-__all__ = ["all_data_pages_dict", "dict_probe_file", "decode_dict_page"]
-
-_PHYS = {0: "bool", 1: "int32", 2: "int64", 3: "int96", 4: "float", 5: "double", 6: "bytes", 7: "flba"}
+__all__ = ["all_data_pages_dict", "dict_probe_file", "dict_values_file", "decode_dict_page"]
 
 
 def all_data_pages_dict(cmeta: dict) -> bool:
@@ -44,8 +42,6 @@ def all_data_pages_dict(cmeta: dict) -> bool:
 def decode_dict_page(region: bytes, cmeta: dict):
     """Dictionary page bytes (header + payload at offset 0) -> decoded
     values: ndarray for fixed types, (lengths, data) for byte types."""
-    from .parquet_reader import _read_page
-
     info = {"type": cmeta[1], "type_length": 0, "max_rep": 0, "max_def": 0}
     with codecs.as_value_error("dictionary page"):
         _, page_type, _, values = _read_page(memoryview(region).cast("B"), 0, cmeta[4], info, None)
@@ -54,55 +50,36 @@ def decode_dict_page(region: bytes, cmeta: dict):
     return values
 
 
-def _contains(decoded, value, ptype: str) -> bool:
-    if ptype == "bytes":
-        lens, data = decoded
-        # only str/bytes probes compare against a byte_array dictionary:
-        # bytes(123) is 123 NUL bytes (a guaranteed miss = FALSE
-        # exclusion of present rows) and bytes(1.5) raises — both mean
-        # 'no proof', keep the chunk
-        if isinstance(value, str):
-            raw = value.encode()
-        elif isinstance(value, (bytes, bytearray, memoryview)):
-            raw = bytes(value)
-        else:
-            return True  # incomparable probe: inconclusive, keep
-        starts = np.zeros(len(lens) + 1, dtype=np.int64)
-        np.cumsum(lens, out=starts[1:])
-        want = np.flatnonzero(lens == len(raw))
-        probe = np.frombuffer(raw, dtype=np.uint8)
-        for i in want:
-            if np.array_equal(data[starts[i] : starts[i + 1]], probe):
-                return True
-        return False
+def dict_values_file(path: str, cmeta: dict) -> set | None:
+    """The chunk's complete distinct-value set (``core.prune.value_set``)
+    from its dictionary page, or None when it cannot be proven complete
+    or read. Reads only [dictionary_page_offset, data_page_offset) — one
+    bounded pread."""
+    if not all_data_pages_dict(cmeta):
+        return None
+    dict_off = cmeta.get(11)
+    data_off = cmeta.get(9)
+    if dict_off is None or data_off is None or not 0 <= dict_off < data_off:
+        return None
+    size = data_off - dict_off
+    if size > codecs.MAX_DICT_REGION:
+        return None
+    if PHYSICAL_TYPES.get(cmeta[1]) in (None, "flba", "bool", "int96"):
+        return None
+    with open(path, "rb") as fh:
+        fh.seek(dict_off)
+        region = fh.read(size)
     try:
-        return bool(np.isin(np.asarray([value]), decoded)[0])
-    except (TypeError, ValueError):
-        return True  # incomparable probe: inconclusive, keep
+        return value_set(decode_dict_page(region, cmeta))
+    except ValueError:
+        return None
 
 
 def dict_probe_file(path: str, cmeta: dict, values: tuple) -> bool:
     """True ⇒ the chunk MIGHT contain some of ``values``; False ⇒ every
     member provably absent (exact: the dictionary enumerates the chunk's
-    distinct values). Reads only [dictionary_page_offset,
-    data_page_offset) — one bounded pread."""
-    if not all_data_pages_dict(cmeta):
-        return True
-    dict_off = cmeta.get(11)
-    data_off = cmeta.get(9)
-    if dict_off is None or data_off is None or not 0 <= dict_off < data_off:
-        return True
-    size = data_off - dict_off
-    if size > codecs.MAX_DICT_REGION:
-        return True
-    ptype = _PHYS.get(cmeta[1])
-    if ptype in (None, "flba", "bool", "int96"):
-        return True
-    with open(path, "rb") as fh:
-        fh.seek(dict_off)
-        region = fh.read(size)
-    try:
-        decoded = decode_dict_page(region, cmeta)
-    except ValueError:
-        return True
-    return any(_contains(decoded, v, ptype) for v in values)
+    distinct values)."""
+    ptype = PHYSICAL_TYPES.get(cmeta[1])
+    return not point_excluded(
+        None, "in", tuple(values), ptype, dictionary=lambda: dict_values_file(path, cmeta)
+    )

@@ -11,19 +11,14 @@ only the pages those ranges touch. This is the page-granularity analogue
 of the engine's own ``page_stats=True`` container flag — but against
 foreign files.
 
-Pruning contract (same as ``decode_table(prune=...)``): conservative.
-Bounds may be truncated by the writer (truncate-and-increment on max per
-the spec), so a stored min is a valid lower bound and a stored max a
-valid upper bound; a page survives unless a predicate PROVABLY excludes
-it. Callers re-apply the exact filter.
+Pruning contract: ``core.prune`` (conservative). Bounds may be truncated
+by the writer (truncate-and-increment on max per the spec), so a stored
+min is a valid lower bound and a stored max a valid upper bound.
 """
 
 from __future__ import annotations
 
-import struct as _s
-
-import numpy as np
-
+from ..core import prune as pz
 from .thrift_compact import read_struct
 from .thrift_writer import write_struct
 
@@ -31,7 +26,6 @@ __all__ = [
     "read_offset_index",
     "read_column_index",
     "page_prune_ranges",
-    "decode_stat",
     "offset_index_struct",
     "column_index_struct",
 ]
@@ -70,148 +64,42 @@ def read_column_index(buf, cc: dict) -> dict | None:
     }
 
 
-def decode_stat(raw: bytes | None, ptype: int):
-    """Plain-encoded Statistics/ColumnIndex bound -> comparable Python
-    value. None, empty (a writer with no safe truncated bound stores
-    b''), and non-UTF8 byte bounds compared against str predicates all
-    mean 'unknown' — callers must keep the page/row group."""
-    if raw is None or len(raw) == 0:
-        return None
-    try:
-        if ptype == 0:
-            return bool(raw[0])
-        if ptype == 1:
-            return _s.unpack("<i", raw)[0]
-        if ptype == 2:
-            return _s.unpack("<q", raw)[0]
-        if ptype == 4:
-            return _s.unpack("<f", raw)[0]
-        if ptype == 5:
-            return _s.unpack("<d", raw)[0]
-    except _s.error:
-        # malformed/forged bound of the wrong byte length (foreign
-        # files): 'unknown — keep', per the contract above, never a
-        # task-killing struct.error
-        return None
-    if ptype == 6:
-        try:
-            return raw.decode()
-        except UnicodeDecodeError:
-            return None
-    return None
-
-
-def _page_excluded(op: str, value, mn, mx) -> bool:
-    """Provable exclusion for one page given decoded bounds. NaN or
-    unknown bounds keep the page (every comparison with NaN is False,
-    which would wrongly 'exclude'). ``notnull`` never excludes here —
-    all-null pages are dropped by the null_pages flag before bounds are
-    consulted."""
-    if op == "notnull":
-        return False
-    if mn is None or mx is None:
-        return False
-    try:
-        if mn != mn or mx != mx:  # NaN bound
-            return False
-        if op == "==":
-            return value < mn or value > mx
-        if op == "in":
-            return all(v < mn or v > mx for v in value)
-        if op == "<=":
-            return mn > value
-        if op == "<":
-            return mn >= value
-        if op == ">=":
-            return mx < value
-        if op == ">":
-            return mx <= value
-    except TypeError:
-        return False
-    return False
-
-
-def _merge_ranges(ranges: list[tuple[int, int]]) -> list[tuple[int, int]]:
-    out: list[tuple[int, int]] = []
-    for lo, hi in ranges:
-        if out and lo <= out[-1][1]:
-            out[-1] = (out[-1][0], max(out[-1][1], hi))
-        else:
-            out.append((lo, hi))
-    return out
-
-
-def _intersect_ranges(
-    a: list[tuple[int, int]], b: list[tuple[int, int]]
-) -> list[tuple[int, int]]:
-    out = []
-    i = j = 0
-    while i < len(a) and j < len(b):
-        lo = max(a[i][0], b[j][0])
-        hi = min(a[i][1], b[j][1])
-        if lo < hi:
-            out.append((lo, hi))
-        if a[i][1] <= b[j][1]:
-            i += 1
-        else:
-            j += 1
-    return out
-
-
-def rows_in_ranges(rows: np.ndarray, ranges: list[tuple[int, int]]) -> np.ndarray:
-    """Boolean mask: row index inside any [lo, hi) range (sorted,
-    non-overlapping)."""
-    if not ranges:
-        return np.zeros(len(rows), dtype=bool)
-    starts = np.array([r[0] for r in ranges], dtype=np.int64)
-    ends = np.array([r[1] for r in ranges], dtype=np.int64)
-    idx = np.searchsorted(starts, rows, side="right") - 1
-    ok = idx >= 0
-    out = np.zeros(len(rows), dtype=bool)
-    out[ok] = rows[ok] < ends[idx[ok]]
-    return out
-
-
 def page_prune_ranges(
     buf, meta: dict, rg_idx: int, prune: list[tuple]
 ) -> list[tuple[int, int]] | None:
     """Surviving row ranges (relative to the row group's first row) after
     applying every predicate against the row group's ColumnIndex +
-    OffsetIndex, or None when no predicate column carries an index (no
-    page-level narrowing possible; read everything).
-
-    Predicates AND together: a row survives only while every predicate's
-    page might match, so per-column surviving ranges intersect."""
+    OffsetIndex (``core.prune.page_ranges``), or None when no predicate
+    column carries an index (no page-level narrowing possible; read
+    everything). A page flagged in ``null_pages`` is all-null."""
     rg = meta[4][rg_idx]
     n_rows = int(rg[3])
-    ranges: list[tuple[int, int]] | None = None
-    for col, op, value in prune:
-        cc = None
-        for cand in rg[1]:
-            md = cand.get(3)
-            if md is not None and [p.decode() for p in md[3]] == [col]:
-                cc = cand
-                break
+
+    def pages_of(col: str):
+        cc = pz.footer_chunk(rg, col)
         if cc is None:
-            continue
+            return None
         oi = read_offset_index(buf, cc)
         ci = read_column_index(buf, cc)
         if not oi or not ci or len(ci["min_values"]) != len(oi):
-            continue
+            return None
         ptype = cc[3][1]
+        nulls = ci["null_pages"]
         firsts = [loc[2] for loc in oi] + [n_rows]
-        keep: list[tuple[int, int]] = []
+        out = []
         for i in range(len(oi)):
-            if ci["null_pages"][i] if i < len(ci["null_pages"]) else False:
-                # all-null page: no row can satisfy a comparison predicate
-                continue
-            mn = decode_stat(ci["min_values"][i], ptype)
-            mx = decode_stat(ci["max_values"][i], ptype)
-            if not _page_excluded(op, value, mn, mx):
-                keep.append((firsts[i], firsts[i + 1]))
-        keep = _merge_ranges(keep)
-        ranges = keep if ranges is None else _intersect_ranges(ranges, keep)
-    return ranges
+            rows = firsts[i + 1] - firsts[i]
+            all_null = i < len(nulls) and nulls[i]
+            zone = pz.Zone(
+                pz.decode_stat(ci["min_values"][i], ptype),
+                pz.decode_stat(ci["max_values"][i], ptype),
+                rows if all_null else None,
+                rows,
+            )
+            out.append((firsts[i], firsts[i + 1], zone))
+        return out
+
+    return pz.page_ranges(prune, pages_of)
 
 
 # --------------------------------------------------------------- write side
@@ -238,7 +126,7 @@ def column_index_struct(pages: list[dict]) -> dict:
     ``pages``: [{null_page: bool, min: bytes|None, max: bytes|None,
     null_count: int}]. Pages with unknown bounds that are not all-null
     store empty byte bounds with null_page=False — readers must treat
-    undecodable bounds as 'keep' (``decode_stat`` -> None does)."""
+    undecodable bounds as 'keep' (``core.prune.decode_stat`` -> None does)."""
     return {
         1: ("list", ("bool", [bool(p["null_page"]) for p in pages])),
         2: ("list", ("binary", [p["min"] or b"" for p in pages])),

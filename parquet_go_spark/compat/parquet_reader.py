@@ -40,7 +40,7 @@ from .thrift_compact import read_struct
 
 __all__ = ["read_column", "file_meta"]
 
-_PHYS = {0: "bool", 1: "int32", 2: "int64", 3: "int96", 4: "float", 5: "double", 6: "bytes", 7: "flba"}
+PHYSICAL_TYPES = {0: "bool", 1: "int32", 2: "int64", 3: "int96", 4: "float", 5: "double", 6: "bytes", 7: "flba"}
 
 
 def _decompress(payload: bytes, codec: int, raw_len: int) -> bytes:
@@ -145,7 +145,7 @@ def _read_page(mv, pos: int, codec: int, info: dict, dict_vals):
     """Decode the page at ``pos`` -> (next_pos, page_type, nv, out): ``out``
     is the decoded dictionary for a dictionary page, else (rep, def,
     values) with values holding only the fully-defined entries."""
-    ptype = _PHYS[info["type"]]
+    ptype = PHYSICAL_TYPES[info["type"]]
     max_rep, max_def = info["max_rep"], info["max_def"]
     hdr, pos = read_struct(mv, pos)
     page_type, raw_len, comp_len = hdr[1], hdr[2], hdr[3]
@@ -237,7 +237,7 @@ def _leaf_levels(buf, meta: dict, info: dict, row_groups=None, row_ranges=None):
     """:func:`read_leaf_levels` over an already parsed footer."""
     if row_ranges is not None and (row_groups is None or len(row_groups) != 1):
         raise ValueError("row_ranges requires exactly one selected row group")
-    ptype = _PHYS[info["type"]]
+    ptype = PHYSICAL_TYPES[info["type"]]
     max_def = info["max_def"]
     mv = memoryview(buf).cast("B")
     pages: list = []
@@ -259,7 +259,7 @@ def _leaf_levels(buf, meta: dict, info: dict, row_groups=None, row_ranges=None):
     else:
         values = np.concatenate([p[2] for p in pages]) if pages else np.empty(0)
     if row_ranges is not None:
-        from .page_index import rows_in_ranges
+        from ..core.prune import rows_in_ranges
 
         if page_rows is not None:
             rows = np.concatenate(page_rows) if page_rows else np.empty(0, np.int64)
@@ -361,7 +361,7 @@ def _leaf_arrow(positions, deflv, values, info) -> pa.Array:
     """Leaf slots (one level-position each) -> Arrow array with nulls,
     typed by the leaf's logical annotation (DATE, TIMESTAMP, DECIMAL,
     sized ints) when one is declared."""
-    ptype = _PHYS[info["type"]]
+    ptype = PHYSICAL_TYPES[info["type"]]
     d_leaf = info["d_leaf"]
     ct = info.get("converted")
     full = deflv == d_leaf  # global mask: positions carrying a value
@@ -577,7 +577,7 @@ def leaf_arrow_type(info: dict) -> pa.DataType:
     derived from the footer alone (physical type + converted-type
     annotation + list nesting) — lets a driver plan a distributed scan
     without reading any data pages."""
-    ptype = _PHYS[info["type"]]
+    ptype = PHYSICAL_TYPES[info["type"]]
     ct = info.get("converted")
     if ct == _CT_DECIMAL and (
         (ptype == "flba" and info["type_length"] <= 16) or ptype in ("int32", "int64")

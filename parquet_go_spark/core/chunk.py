@@ -46,6 +46,7 @@ from ..kernels.varint import read_uvarint, uvarint
 from . import codecs
 from .codecs import DICT_MAX
 from .columns import ColumnData, gather_segments
+from .prune import rows_in_ranges, value_set
 
 __all__ = [
     "encode_chunk",
@@ -138,12 +139,12 @@ class ChunkMeta:
 def bound_str(v, is_max=False) -> str | None:
     """Prune-safe string bound for a typed min/max value.
 
-    Manifest and page bounds are compared as strings on the prune path
-    (decode_job ``_le``): non-UTF8 bytes -> None (pruning disabled,
-    conservative); long strings -> truncated prefix for min (a valid
-    lower bound) and truncate-and-increment for max (Parquet's
-    convention: the incremented prefix upper-bounds every string sharing
-    the original prefix)."""
+    Manifest and page bounds are parsed back by the column's ptype on the
+    prune path (``core.prune.pgsc_zone``; bytes compare as str): non-UTF8
+    bytes -> None (pruning disabled, conservative); long strings ->
+    truncated prefix for min (a valid lower bound) and
+    truncate-and-increment for max (Parquet's convention: the incremented
+    prefix upper-bounds every string sharing the original prefix)."""
     if v is None:
         return None
     if isinstance(v, bytes):
@@ -778,13 +779,7 @@ def chunk_dict_values(blob) -> set | None:
         return None
     if ENCODINGS_R.get(mv[6]) != "rle_dict" or not mv[8] & 1 or PTYPES_R.get(mv[5]) == "bool":
         return None  # bool: forged, a dictionary on a type that never has one
-    vals = _read_header(mv).dictionary()
-    if isinstance(vals, tuple):
-        lens, data = vals
-        offs = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
-        raw = bytes(data)
-        return {raw[offs[i] : offs[i + 1]] for i in range(len(lens))}
-    return set(vals.tolist())
+    return value_set(_read_header(mv).dictionary())
 
 
 def chunk_page_index(blob) -> list[dict] | None:
@@ -818,26 +813,13 @@ def chunk_page_index(blob) -> list[dict] | None:
                 "nulls": _pn,
                 # the bound-ordering family the prune compare must use
                 # (numeric vs lexicographic) is the column's, not the
-                # probe's — carried per page for decode_job._page_excludes
+                # probe's — carried per page for core.prune.pgsc_zone
                 "ptype": h.ptype,
             }
         )
         cursor += rows
         pos += comp_len
     return out
-
-
-def _page_row_mask(row_sel, cursor: int, rows: int) -> np.ndarray | None:
-    """Bool mask over one page's rows for global row ranges ``row_sel``;
-    None when the page is entirely outside every range (skip it)."""
-    mask = None
-    for lo, hi in row_sel:
-        a, b = max(lo - cursor, 0), min(hi - cursor, rows)
-        if a < b:
-            if mask is None:
-                mask = np.zeros(rows, dtype=bool)
-            mask[a:b] = True
-    return mask
 
 
 def decode_chunk(blob, logical: str = "", row_sel=None):
@@ -885,15 +867,13 @@ def decode_chunk(blob, logical: str = "", row_sel=None):
             _mn, _mx, pos = _read_page_stats(mv, pos)
         if rows > h.num_rows or nulls > rows or pos + comp_len > len(mv) or raw_len > codecs.MAX_RAW_PAGE:
             raise ValueError("implausible page header")
+        mask = None
         if row_sel is not None:
-            mask = _page_row_mask(row_sel, row_cursor, rows)
-            row_cursor += rows
-            if mask is None:
-                pos += comp_len  # seek past: never decompressed
-                continue
-        else:
-            mask = None
-            row_cursor += rows
+            mask = rows_in_ranges(np.arange(row_cursor, row_cursor + rows), row_sel)
+        row_cursor += rows
+        if mask is not None and not mask.any():
+            pos += comp_len  # seek past: never decompressed
+            continue
         comp_bytes = bytes(mv[pos : pos + comp_len])
         if want_crc is not None and zlib.crc32(comp_bytes) != want_crc:
             raise ValueError(

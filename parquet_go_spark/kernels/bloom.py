@@ -25,6 +25,8 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 
+from ..core.prune import point_key
+
 __all__ = [
     "bloom_build",
     "bloom_might_contain",
@@ -127,27 +129,11 @@ def hash_column(col) -> np.ndarray | None:
 
 def hash_scalar(value, ptype: str) -> int | None:
     """Hash one probe literal the way :func:`hash_column` hashed the
-    column; None when the type is unsupported (caller must not prune)."""
-    if ptype in ("int32", "int64"):
-        try:
-            arr = np.array([int(value)], dtype=np.int64)
-        except (TypeError, ValueError):
-            return None
-        return int(_hash_objects(arr)[0])
-    if ptype == "bytes":
-        if isinstance(value, str) or isinstance(value, (bytes, bytearray)):
-            obj = np.empty(1, dtype=object)
-            obj[0] = bytes(value) if isinstance(value, bytearray) else value
-            return int(_hash_objects(obj)[0])
+    column; None when it gives no point-lookup proof
+    (``core.prune.point_key``: flba blooms hash raw storage bytes, so
+    only a bytes probe compares) or the type has no bloom."""
+    key = point_key(value, ptype)
+    if key is None or ptype not in ("int32", "int64", "bytes", "flba"):
         return None
-    if ptype == "flba":
-        # flba blooms hash RAW storage bytes (big-endian unscaled
-        # decimals / fixed binary); a str/number probe hashes something
-        # else entirely and would "prove" absence of a present value —
-        # only an exact-width bytes probe is comparable
-        if isinstance(value, (bytes, bytearray)):
-            obj = np.empty(1, dtype=object)
-            obj[0] = bytes(value)
-            return int(_hash_objects(obj)[0])
-        return None
-    return None
+    arr = np.array([key], dtype=np.int64 if isinstance(key, int) else object)
+    return int(_hash_objects(arr)[0])

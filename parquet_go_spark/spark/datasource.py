@@ -30,7 +30,6 @@ from dataclasses import dataclass
 
 import datetime as _dt
 
-from ..core.columns import one_chunk
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -702,33 +701,10 @@ class _PGSQReaderNoPushdown(DataSourceReader):
     def read(self, partition: _PGSQPartition):
         if not partition.path:
             return
-        import mmap
+        from .parquet_source import read_row_group
 
-        import pyarrow as pa
-
-        from ..compat.page_index import page_prune_ranges
-        from ..compat.parquet_reader import file_meta, read_table_arrow
-        from .decode_job import arrow_type_of_ddl
-
-        cols = [n for n, _, _ in self.triples]
-        with open(partition.path, "rb") as fh:
-            with mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ) as mm:
-                ranges = None
-                if self.prune:
-                    # page tier: pushed filters narrow the row group to
-                    # surviving pages via the file's own PageIndex;
-                    # Spark re-applies every filter exactly afterwards
-                    ranges = page_prune_ranges(
-                        mm, file_meta(mm), partition.rg, self.prune
-                    )
-                tbl = read_table_arrow(
-                    mm, columns=cols, row_groups=[partition.rg], row_ranges=ranges
-                )
-                arrays = [
-                    one_chunk(tbl.column(n)).cast(arrow_type_of_ddl(ddl))
-                    for n, _, ddl in self.triples
-                ]
-        yield from pa.table(dict(zip(cols, arrays))).to_batches(max_chunksize=1 << 16)
+        tbl = read_row_group(partition.path, partition.rg, self.triples, self.prune)
+        yield from tbl.to_batches(max_chunksize=1 << 16)
 
 
 class _PGSQReader(_PGSQReaderNoPushdown):
@@ -737,12 +713,7 @@ class _PGSQReader(_PGSQReaderNoPushdown):
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         for f in filters:
-            for col, op, value in _filter_to_prune(f):
-                # ==/<=/>= compare footer stats and page-index bounds;
-                # ==/IN additionally probe bloom filters; notnull drops
-                # all-null chunks/pages via null counts
-                if op in ("==", "<=", ">=", "in", "notnull"):
-                    self.prune.append((col, op, value))
+            self.prune.extend(_filter_to_prune(f))
             yield f  # conservative: Spark re-applies every filter
 
 

@@ -14,126 +14,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 import numpy as np
 
+from ..core import prune as pz
 from ..core.chunk import chunk_page_index, decode_chunk
 from ..core.columns import one_chunk, to_arrow
 from . import manifest as mf
 from .encode_job import parse_partition_file, partition_file_epoch
-
-
-_NUM_PTYPES = {"int32", "int64", "float", "double"}
-
-
-def _bound_kind(ptype: str | None) -> str:
-    """Ordering family a column's string bounds were WRITTEN with
-    (``core.chunk.column_minmax`` + ``bound_str``): numeric ptypes and
-    flba (decimal/int carrier keys) compare numerically, bytes and bool
-    compare as strings. Unknown ptype -> "none" (no ordering proof —
-    the pre-fix code guessed numerically whenever both sides parsed as
-    floats, which inverted pruning on string columns holding
-    numeric-looking values: lexicographic bounds '100'..'99' read as
-    the numeric interval [100, 99], provably 'excluding' the value '5'
-    that the partition actually contains)."""
-    if ptype in _NUM_PTYPES or ptype == "flba":
-        return "num"
-    if ptype in ("bytes", "bool"):
-        return "str"
-    return "none"
-
-
-def _le_bound(a, b, kind: str = "num"):
-    """Conservative ordered compare shared by partition- and page-level
-    pruning: True/False when the ordering is PROVEN, None when no proof
-    is possible (NaN bounds, unparseable or cross-type operands, or an
-    unknown column kind) — callers must treat None as 'cannot
-    exclude'. NaN matters: ``float('nan') <= x`` is False for every x,
-    and the pre-fix code read that False as proof of exclusion, so one
-    NaN in a float column silently pruned partitions containing real
-    matches (the sibling compat/page_index.py guard, mirrored here)."""
-    if kind == "num":
-        try:
-            fa, fb = float(a), float(b)
-        except (TypeError, ValueError):
-            return None
-        if fa != fa or fb != fb:  # NaN bound or probe: no ordering proof
-            return None
-        return fa <= fb
-    if kind == "str":
-        try:
-            sa = a.decode("utf-8") if isinstance(a, bytes) else str(a)
-            sb = b.decode("utf-8") if isinstance(b, bytes) else str(b)
-        except UnicodeDecodeError:
-            return None
-        return sa <= sb
-    return None
-
-
-def _bounds_exclude_eq(value, mn, mx, kind: str = "num") -> bool:
-    """[mn, mx] provably excludes ``== value`` (None bound or unprovable
-    ordering never excludes)."""
-    if mn is not None and _le_bound(mn, value, kind) is False:
-        return True
-    if mx is not None and _le_bound(value, mx, kind) is False:
-        return True
-    return False
-
-
-def _page_excludes(op: str, value, page: dict) -> bool:
-    """True when a page's stats provably exclude the predicate
-    (None bound = unknown, never excludes)."""
-    mn, mx = page["min_str"], page["max_str"]
-    kind = _bound_kind(page.get("ptype"))
-    if op == "==":
-        return _bounds_exclude_eq(value, mn, mx, kind)
-    if op == "in":
-        return all(_bounds_exclude_eq(v, mn, mx, kind) for v in value)
-    if op == "<=":
-        return mn is not None and _le_bound(mn, value, kind) is False
-    if op == ">=":
-        return mx is not None and _le_bound(value, mx, kind) is False
-    if op == "notnull":
-        # every row of the page is null ⇒ no non-null value can match
-        return page.get("nulls", 0) >= page["row_hi"] - page["row_lo"]
-    return False
-
-
-def _intersect_ranges(a: list[tuple], b: list[tuple]) -> list[tuple]:
-    """Intersection of two sorted non-overlapping range lists."""
-    out, i, j = [], 0, 0
-    while i < len(a) and j < len(b):
-        lo = max(a[i][0], b[j][0])
-        hi = min(a[i][1], b[j][1])
-        if lo < hi:
-            out.append((lo, hi))
-        if a[i][1] <= b[j][1]:
-            i += 1
-        else:
-            j += 1
-    return out
-
-
-def _dict_key(v, ptype: str):
-    """Normalize a predicate value to the form ``chunk_dict_values``
-    emits; None = not comparable (never excludes). flba dictionaries
-    hold RAW storage bytes (big-endian unscaled decimals / fixed
-    binary): only a bytes probe can match them — ``bytes(5)`` is five
-    NUL bytes, not the number 5, so a numeric probe must yield NO proof
-    rather than a guaranteed miss that falsely excludes the chunk."""
-    try:
-        if ptype == "bytes":
-            if isinstance(v, str):
-                return v.encode()
-            return bytes(v) if isinstance(v, (bytes, bytearray, memoryview)) else None
-        if ptype == "flba":
-            return bytes(v) if isinstance(v, (bytes, bytearray, memoryview)) else None
-        if ptype in ("int32", "int64"):
-            return int(v)
-        if ptype == "float":
-            return float(np.float32(v))
-        if ptype == "double":
-            return float(v)
-    except (TypeError, ValueError, UnicodeEncodeError):
-        return None
-    return None
 
 
 def _read_chunk_dict(enc_dir: str, pid: int, col: str) -> set | None:
@@ -164,83 +49,59 @@ def _read_chunk_dict(enc_dir: str, pid: int, col: str) -> set | None:
 def surviving_partitions(
     enc_dir: str, prune: list[tuple], within: "set[int] | None" = None
 ) -> list[int]:
-    """Committed partition ids the predicates cannot exclude, from three
-    proofs per equality probe: manifest min/max bounds, the per-chunk
-    bloom filter (probabilistic), and — when the manifest shows the
-    column ``rle_dict``-encoded — the chunk's dictionary page itself
-    (EXACT: every non-null value is a dict member, so a missed probe
-    excludes with zero false positives; parquet-mr DictionaryFilter
+    """Committed partition ids the predicates cannot exclude. Each
+    partition's manifest rows become zones (``core.prune``); min/max
+    runs first for every predicate, then each ``==``/``in`` probe tries
+    the per-chunk bloom filter (probabilistic) and — when the manifest
+    shows the column ``rle_dict``-encoded — the chunk's dictionary page
+    itself (EXACT: every non-null value is a dict member, so a missed
+    probe excludes with zero false positives; parquet-mr DictionaryFilter
     semantics on the native container). Conservative: a partition is
     dropped only on proof of absence. ``within`` restricts the candidate
     set (time travel)."""
-    _le = _le_bound
+    from ..kernels.bloom import bloom_might_contain, hash_scalar
+
     dict_cache: dict[tuple[int, str], set | None] = {}
 
-    def _excludes_point(r: dict, v, pid: int, col: str) -> bool:
-        """min/max + bloom + dict proof that ``v`` is absent from chunk ``r``."""
-        if _bounds_exclude_eq(v, r["min_str"], r["max_str"], _bound_kind(r["ptype"])):
-            return True
-        # bloom probe: min/max rarely excludes a point lookup on
-        # high-cardinality keys (every partition spans the range); the
-        # manifest bloom proves absence instead
-        if r.get("bloom") is not None:
-            from ..kernels.bloom import bloom_might_contain, hash_scalar
+    def _bloom(r: dict):
+        bits = r.get("bloom")
+        if bits is None:
+            return None
+        return lambda k: (h := hash_scalar(k, r["ptype"])) is None or bloom_might_contain(bits, h)
 
-            h = hash_scalar(v, r["ptype"])
-            if h is not None and not bloom_might_contain(r["bloom"], h):
-                return True
-        # dictionary probe (exact, one bounded read per partition+column,
-        # dict <= 32767 values by construction): only for chunks the
-        # manifest proves fully dictionary-encoded
-        if r.get("encoding") == "rle_dict":
-            key = (pid, col)
+    def _dictionary(pid: int, r: dict):
+        if r.get("encoding") != "rle_dict":
+            return None
+        key = (pid, r["column"])
+
+        def read() -> set | None:
+            # one bounded read per (partition, column); each pid touches
+            # only its own keys, so planning threads never share one
             if key not in dict_cache:
-                dict_cache[key] = _read_chunk_dict(enc_dir, pid, col)
-            d = dict_cache[key]
-            if d is not None:
-                k = _dict_key(v, r["ptype"])
-                if k is not None and k not in d:
-                    return True
-        return False
+                dict_cache[key] = _read_chunk_dict(enc_dir, pid, r["column"])
+            return dict_cache[key]
+
+        return read
+
+    def _pid_survives(pid: int) -> bool:
+        rows = {r["column"]: r for r in mf.read_partition_manifest(enc_dir, pid)}
+        preds = [
+            (r, pz.pgsc_zone(r, r["null_count"], r["num_rows"]), op, v)
+            for c, op, v in prune
+            if (r := rows.get(c)) is not None
+        ]
+        if any(pz.excludes(z, op, v) for _, z, op, v in preds):
+            return False
+        return not any(
+            pz.point_excluded(z, op, v, r["ptype"], _bloom(r), _dictionary(pid, r))
+            for r, z, op, v in preds
+        )
 
     pids = mf.committed_partitions(enc_dir)
     if within is not None:
         pids &= within
-
-    def _pid_survives(pid: int) -> bool:
-        rows = {r["column"]: r for r in mf.read_partition_manifest(enc_dir, pid)}
-        for col_name, op, value in prune:
-            r = rows.get(col_name)
-            if r is None:
-                continue  # no stats -> cannot prune
-            mn, mx = r["min_str"], r["max_str"]  # each may be None (inexact)
-            kind = _bound_kind(r["ptype"])
-            if op == "==":
-                if _excludes_point(r, value, pid, col_name):
-                    return False
-            elif op == "in":
-                if all(_excludes_point(r, v, pid, col_name) for v in value):
-                    return False
-            elif op == "<=" and mn is not None and _le(mn, value, kind) is False:
-                return False
-            elif op == ">=" and mx is not None and _le(value, mx, kind) is False:
-                return False
-            elif op == "notnull" and r["null_count"] >= r["num_rows"]:
-                return False  # all-null chunk: no non-null value to match
-        return True
-
     ordered = sorted(pids)
-    # plan IO (per-partition manifest reads + bounded dict probes) is
-    # IO-bound and independent per partition — thread it like the parquet
-    # planner; each pid touches only its own dict_cache keys
-    if len(ordered) <= 1:
-        flags = [_pid_survives(p) for p in ordered]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(32, len(ordered))) as ex:
-            flags = list(ex.map(_pid_survives, ordered))
-    return [p for p, ok in zip(ordered, flags) if ok]
+    return [p for p, ok in zip(ordered, pz.fan_out(_pid_survives, ordered)) if ok]
 
 
 def _surviving_ranges(prune: list[tuple], blobs: dict) -> tuple[list[tuple] | None, int]:
@@ -248,28 +109,21 @@ def _surviving_ranges(prune: list[tuple], blobs: dict) -> tuple[list[tuple] | No
     from the page stats of each predicate column (``chunk_page_index``);
     ranges is None when no predicate column carries page stats (full
     decode)."""
-    ranges = None
     total = 0
-    for col_name, op, value in prune:
-        blob = blobs.get(col_name)
-        if blob is None:
-            continue
-        pidx = chunk_page_index(blob)
+
+    def pages_of(col: str):
+        nonlocal total
+        blob = blobs.get(col)
+        pidx = chunk_page_index(blob) if blob is not None else None
         if pidx is None:
-            continue
+            return None
         total = max(total, pidx[-1]["row_hi"] if pidx else 0)
-        keep = []
-        for p in pidx:
-            if not _page_excludes(op, value, p):
-                # extend the previous range instead of appending (pages
-                # are already sorted and non-overlapping)
-                if keep and keep[-1][1] == p["row_lo"]:
-                    keep[-1] = (keep[-1][0], p["row_hi"])
-                else:
-                    keep.append((p["row_lo"], p["row_hi"]))
-        keep = [tuple(r) for r in keep]
-        ranges = keep if ranges is None else _intersect_ranges(ranges, keep)
-    return ranges, total
+        return [
+            (p["row_lo"], p["row_hi"], pz.pgsc_zone(p, p["nulls"], p["row_hi"] - p["row_lo"]))
+            for p in pidx
+        ]
+
+    return pz.page_ranges(prune, pages_of), total
 
 
 def missing_column_rows(enc_dir: str, pid: int, missing: set[str]) -> int:
@@ -525,9 +379,10 @@ def decode_table(
     partition manifest before decoding (reference ``WithCRC32Validation``,
     ``file_reader.go:134-139`` / ``chunk_reader.go:173-177``).
 
-    ``prune`` = [(column, op, value), ...] with op in {"==", "<=", ">=",
-    "in", "notnull"} ("in" takes a tuple of values and survives when any
-    value might be present; "notnull" drops all-null chunks/pages):
+    ``prune`` = [(column, op, value), ...] with op in {"==", "<", "<=",
+    ">", ">=", "in", "notnull"} (``core.prune.OPS``; "in" takes a tuple of
+    values and survives when any value might be present; "notnull" drops
+    all-null chunks/pages):
     partitions whose manifest min/max provably exclude the predicate are
     never read (the stats-pruning the reference writes stats for but
     never uses, ``README.md:47`` — here the manifest makes it real).

@@ -23,19 +23,27 @@ contract as the engine's own manifest pruning.
 from __future__ import annotations
 
 import glob
+import mmap
 import os
 from collections.abc import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from ..core.columns import one_chunk
+from ..compat.bloom_filter import bloom_probe_file
+from ..compat.dict_filter import dict_values_file
+from ..compat.page_index import page_prune_ranges
 from ..compat.parquet_reader import (
+    PHYSICAL_TYPES,
     field_arrow_type,
+    file_meta,
     file_meta_path,
     read_table_arrow,
     schema_tree,
 )
+from ..core import prune as pz
+from ..core.columns import one_chunk
+from .decode_job import arrow_type_of_ddl
 
 __all__ = ["read_parquet_table", "parquet_scan_schema", "file_prunes"]
 
@@ -99,131 +107,44 @@ def _list_files(path: str) -> list[str]:
 
 
 def file_prunes(files: list[str], prune: list[tuple]) -> list[str]:
-    """Footer-statistics file pruning: drop files whose row-group
-    column Statistics (thrift field 12 of ColumnMetaData: ordered
-    min_value/max_value in fields 6/5, legacy min/max in 2/1) provably
-    exclude every predicate
-    match. Conservative — missing stats keep the file. Footer preads
-    run through a thread pool (IO-bound; order preserved)."""
-    from ..compat.parquet_reader import file_meta, table_fields  # noqa: F401
+    """Footer-statistics file pruning: drop files whose every row group's
+    column Statistics (thrift field 12 of ColumnMetaData) provably
+    exclude some predicate. Conservative — missing stats keep the file.
+    Footer preads run through a thread pool (IO-bound; order kept)."""
 
     def survives(f: str) -> bool:
-        return not _footer_excludes(file_meta_path(f), prune)
+        rgs = file_meta_path(f).get(4) or []
+        return not rgs or not all(_rg_excluded(rg, prune) for rg in rgs)
 
-    if len(files) <= 1:
-        flags = [survives(f) for f in files]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(32, len(files))) as ex:
-            flags = list(ex.map(survives, files))
-    return [f for f, ok in zip(files, flags) if ok]
+    return [f for f, ok in zip(files, pz.fan_out(survives, files)) if ok]
 
 
-def _decode_stat(raw: bytes, ptype: int):
-    import struct as _s
-
-    if raw is None:
-        return None
-    if ptype == 1:
-        return _s.unpack("<i", raw)[0]
-    if ptype == 2:
-        return _s.unpack("<q", raw)[0]
-    if ptype == 4:
-        return _s.unpack("<f", raw)[0]
-    if ptype == 5:
-        return _s.unpack("<d", raw)[0]
-    if ptype == 6:
-        try:
-            return raw.decode()
-        except UnicodeDecodeError:
-            return None
-    return None
-
-
-def _rg_chunks_by_name(rg: dict) -> dict[str, dict]:
-    by_name = {}
-    for ch in rg[1]:
-        md = ch.get(3)
-        if md is None:
-            continue
-        by_name[b".".join(md[3]).decode()] = md
-    return by_name
-
-
-def _rg_point_lookup_excluded(path: str, rg: dict, eq: list[tuple]) -> bool:
-    """Point-lookup exclusion for ==/IN predicates the Statistics
-    couldn't decide: probe the chunk's parquet BloomFilter
-    (BloomFilter.md; probabilistic, no false negatives), then — when the
-    chunk's encoding_stats prove full dictionary encoding — the
-    dictionary page itself (parquet-mr DictionaryFilter semantics: the
-    dict IS the exact distinct set, so a miss is proof). One bounded
-    pread per probe, never a data page. Anything inconclusive keeps the
-    group."""
-    from ..compat.bloom_filter import bloom_probe_file
-    from ..compat.dict_filter import dict_probe_file
-
-    by_name = _rg_chunks_by_name(rg)
-    for col, values in eq:
-        md = by_name.get(col)
-        if md is None:
-            continue
-        if not any(bloom_probe_file(path, md, v) for v in values):
-            return True
-        if not dict_probe_file(path, md, values):
-            return True
-    return False
-
-
-def _rg_excluded(rg: dict, prune: list[tuple]) -> bool:
-    """One row group provably excluded by some predicate?"""
-    by_name = _rg_chunks_by_name(rg)
-    for col, op, value in prune:
-        md = by_name.get(col)
-        if md is None or 12 not in md:
-            continue
-        st = md[12]
-        ptype = md[1]
-        if op == "notnull":
-            # Statistics.null_count == value count ⇒ the chunk is all
-            # null ⇒ no row satisfies IsNotNull
-            if st.get(3) is not None and st[3] >= md[5]:
-                return True
-            continue
-        if ptype == 6:
-            # byte arrays: trust only the ORDERED min_value/max_value
-            # (fields 6/5). Legacy min/max (2/1) were computed with
-            # signed-byte ordering by old parquet-mr (PARQUET-686), so
-            # range-pruning strings on them wrongly excludes row groups
-            # whose values sort differently unsigned — parquet-mr's
-            # CorruptStatistics rule is to ignore them, and so do we.
-            mx = _decode_stat(st.get(5), ptype)
-            mn = _decode_stat(st.get(6), ptype)
-        else:
-            mx = _decode_stat(st.get(5, st.get(1)), ptype)
-            mn = _decode_stat(st.get(6, st.get(2)), ptype)
-        if mn is None or mx is None:
-            continue
-        try:
-            if op == "==" and (value < mn or value > mx):
-                return True
-            if op == "in" and all(v < mn or v > mx for v in value):
-                return True
-            if op == "<=" and mn > value:
-                return True
-            if op == ">=" and mx < value:
-                return True
-        except TypeError:
-            continue
-    return False
-
-
-def _footer_excludes(meta: dict, prune: list[tuple]) -> bool:
-    """True when EVERY row group is provably excluded by some predicate."""
-    rgs = meta.get(4) or []
-    if not rgs:
-        return False
-    return all(_rg_excluded(rg, prune) for rg in rgs)
+def _rg_excluded(rg: dict, prune: list[tuple], path: str | None = None) -> bool:
+    """One row group provably excluded by some predicate: the footer
+    Statistics of every predicate column first; then, given the file
+    ``path``, each ==/IN probe tries the chunk's parquet BloomFilter
+    (BloomFilter.md; probabilistic, no false negatives) and — when
+    encoding_stats prove full dictionary encoding — the dictionary page
+    itself (parquet-mr DictionaryFilter semantics: the dict IS the exact
+    distinct set). One bounded pread per probe, never a data page."""
+    preds = [
+        (cc[3], pz.footer_zone(cc[3]), op, v)
+        for c, op, v in prune
+        if (cc := pz.footer_chunk(rg, c)) is not None
+    ]
+    if any(pz.excludes(z, op, v) for _, z, op, v in preds):
+        return True
+    return path is not None and any(
+        pz.point_excluded(
+            z,
+            op,
+            v,
+            PHYSICAL_TYPES.get(md[1]),
+            lambda k: bloom_probe_file(path, md, k),
+            lambda: dict_values_file(path, md),
+        )
+        for md, z, op, v in preds
+    )
 
 
 def plan_scan_tasks(files: list[str], prune: list[tuple] | None) -> list[tuple[str, int]]:
@@ -231,41 +152,30 @@ def plan_scan_tasks(files: list[str], prune: list[tuple] | None) -> list[tuple[s
     a ROW GROUP, not a file, so one multi-gigabyte file fans out across
     executors instead of pinning one task (reference
     ``SeekToRowGroup``, ``file_reader.go:144-155``, distributed).
-    Row groups whose Statistics provably exclude the predicates are
-    never planned; ==/IN predicates additionally probe any parquet
-    BloomFilters the writer stored and — on fully dictionary-encoded
-    chunks — the dictionary page itself (exact membership, parquet-mr
-    DictionaryFilter semantics), one bounded pread each.
-
-    Planning is IO-bound (tail preads + index probes, no CPU), so files
-    plan through a thread pool: a 100k-file table's planning latency is
-    max(pread latency) x files/32, not their sum. Results keep the
-    files' order, so the task list stays deterministic."""
-    eq = [
-        (c, (v,) if op == "==" else tuple(v))
-        for c, op, v in (prune or [])
-        if op in ("==", "in")
-    ]
+    Row groups the predicates provably exclude (``_rg_excluded``: footer
+    Statistics, then bloom and dictionary probes) are never planned.
+    Files plan through a thread pool; results keep the files' order, so
+    the task list stays deterministic."""
 
     def plan_file(f: str) -> list[tuple[str, int]]:
-        out = []
-        meta = file_meta_path(f)
-        for rgi, rg in enumerate(meta.get(4) or []):
-            if prune and _rg_excluded(rg, prune):
-                continue
-            if eq and _rg_point_lookup_excluded(f, rg, eq):
-                continue
-            out.append((f, rgi))
-        return out
+        rgs = file_meta_path(f).get(4) or []
+        return [(f, i) for i, rg in enumerate(rgs) if not (prune and _rg_excluded(rg, prune, f))]
 
-    if len(files) <= 1:
-        per_file = [plan_file(f) for f in files]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
+    return [t for group in pz.fan_out(plan_file, files) for t in group]
 
-        with ThreadPoolExecutor(max_workers=min(32, len(files))) as ex:
-            per_file = list(ex.map(plan_file, files))
-    return [t for group in per_file for t in group]
+
+def read_row_group(path: str, rg: int, schema: list[tuple], prune: list[tuple] | None) -> pa.Table:
+    """One planned row group of ``schema`` ((name, arrow type, ddl)
+    triples) cast to its Spark types. With ``prune`` the file's own
+    PageIndex (ColumnIndex/OffsetIndex) first narrows the row group to
+    surviving PAGES — excluded pages' bytes never decompress or fault
+    in; a file without an index is read whole."""
+    cols = [n for n, _, _ in schema]
+    with open(path, "rb") as fh, mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ) as mm:
+        ranges = page_prune_ranges(mm, file_meta(mm), rg, prune) if prune else None
+        tbl = read_table_arrow(mm, columns=cols, row_groups=[rg], row_ranges=ranges)
+        arrays = [one_chunk(tbl.column(n)).cast(arrow_type_of_ddl(ddl)) for n, _, ddl in schema]
+    return pa.table(dict(zip(cols, arrays)))
 
 
 def read_parquet_table(
@@ -297,48 +207,15 @@ def read_parquet_table(
     tasks = plan_scan_tasks(files, prune)
     if not tasks:
         return spark.createDataFrame([], schema=out_ddl)
-    target = {n: _spark_arrow_type(ddl) for n, _, ddl in schema}
-
     fdf = spark.createDataFrame(
         [(f, rg) for f, rg in tasks], "path string, rg int"
     ).repartition(min(len(tasks), 4096), "path", "rg")
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import mmap
-
-        from ..compat.page_index import page_prune_ranges
-        from ..compat.parquet_reader import file_meta
-
         for b in batches:
             for p, rg in zip(b.column("path"), b.column("rg")):
-                with open(p.as_py(), "rb") as fh:
-                    with mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ) as mm:
-                        ranges = None
-                        if prune:
-                            # page tier: the file's own PageIndex
-                            # (ColumnIndex/OffsetIndex) narrows this row
-                            # group to surviving PAGES — excluded pages'
-                            # bytes never decompress or fault in.
-                            # None = writer emitted no index: read all.
-                            ranges = page_prune_ranges(
-                                mm, file_meta(mm), rg.as_py(), prune
-                            )
-                        tbl = read_table_arrow(
-                            mm,
-                            columns=cols,
-                            row_groups=[rg.as_py()],
-                            row_ranges=ranges,
-                        )
-                        arrays = [
-                            one_chunk(tbl.column(n)).cast(target[n]) for n in cols
-                        ]
-                out = pa.table(dict(zip(cols, arrays)))
-                yield from out.to_batches(max_chunksize=1 << 16)
+                tbl = read_row_group(p.as_py(), rg.as_py(), schema, prune)
+                yield from tbl.to_batches(max_chunksize=1 << 16)
 
     return fdf.mapInArrow(scan, schema=out_ddl)
 
-
-def _spark_arrow_type(ddl: str) -> pa.DataType:
-    from .decode_job import arrow_type_of_ddl
-
-    return arrow_type_of_ddl(ddl)

@@ -21,10 +21,10 @@ from parquet_go_spark.compat.page_index import (
     page_prune_ranges,
     read_column_index,
     read_offset_index,
-    rows_in_ranges,
 )
 from parquet_go_spark.compat.parquet_reader import file_meta, read_table_arrow
 from parquet_go_spark.compat.parquet_writer import write_parquet
+from parquet_go_spark.core.prune import rows_in_ranges
 
 N = 20_000
 

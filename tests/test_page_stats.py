@@ -167,7 +167,8 @@ def test_nested_chunk_has_no_page_index_and_rejects_row_sel():
 
 
 def test_surviving_ranges_and_intersection():
-    from parquet_go_spark.spark.decode_job import _intersect_ranges, _surviving_ranges
+    from parquet_go_spark.core.prune import intersect_ranges as _intersect_ranges
+    from parquet_go_spark.spark.decode_job import _surviving_ranges
 
     col = _int_col(np.arange(1000))
     blob, _ = encode_chunk(col, max_page=SMALL_PAGE, page_stats=True)

@@ -104,7 +104,7 @@ def test_cli_where_on_curate_and_unknown_op(spark, tmp_path, capsys):
 
 
 def test_forged_column_index_bound_is_unknown_not_crash():
-    from parquet_go_spark.compat.page_index import decode_stat
+    from parquet_go_spark.core.prune import decode_stat
 
     assert decode_stat(b"\x01\x02", 1) is None  # 2 bytes for INT32
     assert decode_stat(b"\x01", 5) is None  # 1 byte for DOUBLE
