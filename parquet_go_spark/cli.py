@@ -268,7 +268,7 @@ def _parquet_meta(path: str) -> int:
     stats, and which prune structures the writer stored (PageIndex,
     bloom filter, fully-dict encoding_stats)."""
     from .compat.dict_filter import all_data_pages_dict
-    from .core.prune import footer_zone
+    from .core.prune import footer_leaf, footer_zone
     from .compat.parquet_reader import file_meta_path
     from .spark.parquet_source import _list_files
 
@@ -286,7 +286,8 @@ def _parquet_meta(path: str) -> int:
                 md = cc.get(3)
                 if md is None:
                     continue
-                zone = footer_zone(md)
+                top = md[3][0].decode() if len(md[3]) == 1 else None
+                zone = footer_zone(md, top and footer_leaf(meta.get(2), top))
                 row = {
                     "rg": rgi,
                     "column": b".".join(md[3]).decode(),

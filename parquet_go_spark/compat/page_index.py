@@ -71,7 +71,9 @@ def page_prune_ranges(
     applying every predicate against the row group's ColumnIndex +
     OffsetIndex (``core.prune.page_ranges``), or None when no predicate
     column carries an index (no page-level narrowing possible; read
-    everything). A page flagged in ``null_pages`` is all-null."""
+    everything). A page flagged in ``null_pages`` is all-null; a leaf
+    whose bounds do not order like its values (``unordered_leaf``)
+    prunes on its null pages only."""
     rg = meta[4][rg_idx]
     n_rows = int(rg[3])
 
@@ -83,7 +85,7 @@ def page_prune_ranges(
         ci = read_column_index(buf, cc)
         if not oi or not ci or len(ci["min_values"]) != len(oi):
             return None
-        ptype = cc[3][1]
+        ptype = None if pz.unordered_leaf(pz.footer_leaf(meta.get(2), col)) else cc[3][1]
         nulls = ci["null_pages"]
         firsts = [loc[2] for loc in oi] + [n_rows]
         out = []

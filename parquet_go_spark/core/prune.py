@@ -26,6 +26,10 @@ OPS = frozenset({"==", "in", "<", "<=", ">", ">=", "notnull"})
 POINT_OPS = ("==", "in")
 _NUMBER = (int, float, decimal.Decimal)
 PLAIN_FORMATS = {1: "<i", 2: "<q", 4: "<f", 5: "<d"}  # Parquet physical type id -> struct
+# ConvertedType DECIMAL (stats hold unscaled values), TIMESTAMP_MILLIS
+# (probes are epoch micros) and UINT_8..UINT_64 (stats decode signed):
+# physical bounds that do not compare like the probes
+_UNORDERED_CONVERTED = frozenset({5, 9, 11, 12, 13, 14})
 
 
 class Zone(NamedTuple):
@@ -101,13 +105,45 @@ def footer_chunk(rg: dict, col: str) -> dict | None:
     return None
 
 
-def footer_zone(md: dict) -> Zone:
-    """Zone of a ColumnMetaData from its Statistics (field 12). Byte
-    arrays trust only the ordered min_value/max_value (fields 6/5): old
-    parquet-mr wrote the legacy min/max (2/1) in signed-byte order
-    (PARQUET-686), and its CorruptStatistics rule ignores them."""
+def footer_leaf(schema: list | None, col: str) -> dict | None:
+    """The SchemaElement (FileMetaData field 2) of TOP-LEVEL column
+    ``col`` — the logical type its footer and ColumnIndex bounds are
+    read under — or None."""
+    want = col.encode("utf-8", "surrogatepass")
+    i = 1
+    for _ in range((schema[0].get(5) or 0) if schema else 0):
+        if schema[i].get(4) == want:
+            return schema[i]
+        todo = 1  # step past this child's subtree
+        while todo:
+            todo += (schema[i].get(5) or 0) - 1
+            i += 1
+    return None
+
+
+def unordered_leaf(leaf: dict | None) -> bool:
+    """True when a Parquet leaf's physical bounds do not compare like
+    the probes: decimals (unscaled), unsigned integers (decoded signed)
+    and timestamps in a unit other than the microseconds a timestamp
+    probe carries. Such a leaf gets no bounds and no point-lookup key."""
+    lt = (leaf or {}).get(10) or {}
+    return (
+        (leaf or {}).get(6) in _UNORDERED_CONVERTED
+        or 5 in lt
+        or (10 in lt and lt[10].get(2) is False)
+        or (8 in lt and 2 not in (lt[8].get(2) or {}))
+    )
+
+
+def footer_zone(md: dict, leaf: dict | None = None) -> Zone:
+    """Zone of a ColumnMetaData from its Statistics (field 12), read
+    under the column's SchemaElement ``leaf`` (``unordered_leaf``: null
+    count only). Byte arrays trust only the ordered min_value/max_value
+    (fields 6/5): old parquet-mr wrote the legacy min/max (2/1) in
+    signed-byte order (PARQUET-686), and its CorruptStatistics rule
+    ignores them."""
     st = md.get(12) or {}
-    ptype = md[1]
+    ptype = None if unordered_leaf(leaf) else md[1]  # decode_stat(_, None): unknown
     if ptype in (6, 7):
         lo, hi = st.get(6), st.get(5)
     else:

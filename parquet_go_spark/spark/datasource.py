@@ -52,11 +52,41 @@ from pyspark.sql.datasource import (
 __all__ = ["PGSDataSource"]
 
 _EPOCH_DATE = _dt.date(1970, 1, 1)
+_COMPARISONS = {
+    EqualTo: "==",
+    LessThan: "<",
+    LessThanOrEqual: "<=",
+    GreaterThan: ">",
+    GreaterThanOrEqual: ">=",
+}
 
 
 @dataclass
 class _PGSPartition(InputPartition):
+    # PySpark pickles the reader BEFORE it calls partitions(), so each
+    # partition carries its own share of the scan plan
     pid: int
+    plan: object = None  # decode_job.ScanPlan narrowed to ``pid``
+
+
+def _split(plan) -> list[_PGSPartition]:
+    return [_PGSPartition(pid, plan.only(pid)) for pid in plan.pids]
+
+
+def _read_partition(enc_dir: str, part: _PGSPartition):
+    """One planned partition -> its decoded batch (``decode_partition``
+    over the file's bytes); shared by the batch and stream readers."""
+    import os
+
+    from .decode_job import decode_partition
+
+    if part.pid < 0:
+        return
+    with open(os.path.join(enc_dir, f"part-{part.pid:05d}.bin"), "rb") as fh:
+        payload = fh.read()
+    batch = decode_partition(enc_dir, part.pid, payload, part.plan)
+    if batch is not None:
+        yield batch
 
 
 def _pushdown_enabled() -> bool | None:
@@ -143,9 +173,8 @@ def _prune_value(value):
 def _filter_to_prune(f: Filter) -> list[tuple]:
     """Translate a catalyst filter into (col, op, value) prune triples;
     [] when it isn't prunable (nested path, unsupported op/value).
-    Strict < and > push as their inclusive forms, StartsWith as a prefix
-    range — pruning is conservative and Spark re-applies the exact
-    predicate anyway."""
+    StartsWith pushes as a prefix range — pruning is conservative and
+    Spark re-applies the exact predicate anyway."""
     if len(f.attribute) != 1:  # nested column paths carry no chunk stats
         return []
     col = f.attribute[0]
@@ -168,142 +197,49 @@ def _filter_to_prune(f: Filter) -> list[tuple]:
                 triples.append((col, "<=", p[:i] + chr(ord(p[i]) + 1)))
                 break
         return triples
-    if not isinstance(f, (EqualTo, LessThan, LessThanOrEqual, GreaterThan, GreaterThanOrEqual)):
-        return []
-    value = _prune_value(f.value)
-    if value is None:
-        return []
-    if isinstance(f, EqualTo):
-        return [(col, "==", value)]
-    if isinstance(f, (LessThan, LessThanOrEqual)):
-        return [(col, "<=", value)]
-    return [(col, ">=", value)]
-
-
-def _decode_partition_to_batches(
-    enc_dir: str,
-    fields: list[dict],
-    pid: int,
-    prune: list[tuple],
-    delete_files: list[str] | None = None,
-    eq_files: list[str] | None = None,
-):
-    """Decode one committed partition file -> Arrow batch iterator;
-    shared by the batch reader and the stream reader. ``delete_files``/
-    ``eq_files`` pin the merge-on-read sidecar apply sets (time travel);
-    None applies every sidecar on disk (current read)."""
-    import os
-
-    from . import manifest as mf
-    from .decode_job import decode_blobs_to_batch, logical_of_ddl
-    from .encode_job import parse_partition_file
-
-    if pid < 0:
-        return
-    path = os.path.join(enc_dir, f"part-{pid:05d}.bin")
-    with open(path, "rb") as fh:
-        payload = fh.read()
-    from .encode_job import partition_file_epoch
-
-    # sidecar staleness is judged against the epoch of the bytes we just
-    # read, so a concurrent in-place rewrite can never make us apply old
-    # ordinals to new data (or new ordinals to old data — that raises).
-    # A non-None delete_files here IS a time-travel pin: older-epoch or
-    # missing pinned sidecars raise 'invalidated' instead of silently
-    # serving post-rewrite bytes as the old version.
-    dpos = mf.delete_positions(
-        enc_dir,
-        pid,
-        files=delete_files,
-        file_epoch=partition_file_epoch(payload),
-        pinned=delete_files is not None,
-    )
-    eq_specs = mf.eq_deletes_by_pid(enc_dir, eq_files).get(pid)
-    cols = [f["name"] for f in fields]
-    want = set(cols) | {p[0] for p in prune}
-    blobs = parse_partition_file(payload, want)
-    missing = set(cols) - set(blobs)
-    fallback = None
-    arrow_types = None
-    if missing:
-        from .decode_job import arrow_type_of_ddl, missing_column_rows
-
-        fallback = missing_column_rows(enc_dir, pid, missing)
-        arrow_types = {f["name"]: arrow_type_of_ddl(f["ddl"]) for f in fields}
-    if not blobs and not missing:
-        return
-    nested = {
-        f["name"] for f in fields if f["ddl"].strip().startswith(("array<", "map<", "struct<"))
-    }
-    logicals = {f["name"]: logical_of_ddl(f["ddl"]) for f in fields}
-    batch = decode_blobs_to_batch(
-        blobs, cols, nested, logicals, prune or None,
-        arrow_types=arrow_types, fallback_rows=fallback,
-        delete_pos=dpos if dpos.size else None,
-        eq_deletes=eq_specs,
-    )
-    if batch is not None:
-        yield batch
+    op = _COMPARISONS.get(type(f))
+    value = _prune_value(f.value) if op else None
+    return [] if value is None else [(col, op, value)]
 
 
 class _PGSReaderNoPushdown(DataSourceReader):
     """Reader without a ``pushFilters`` override: safe in sessions where
     ``spark.sql.python.filterPushdown.enabled`` is off (Spark refuses to
     plan a reader that defines the method there).  ``self.prune`` stays
-    empty ⇒ full scan, Spark applies all filters after the scan."""
+    empty ⇒ full scan, Spark applies all filters after the scan.
+    ``partitions()`` is ``decode_job.plan_scan``; ``read()`` is
+    ``decode_job.decode_partition`` on one partition file."""
 
-    def __init__(self, enc_dir: str, schema_fields: list[dict], as_of: int | None = None):
-        from . import manifest as mf
-
+    def __init__(self, enc_dir: str, as_of: "int | str | None" = None):
         self.enc_dir = enc_dir
-        self.fields = schema_fields
         self.prune: list[tuple] = []
         self.as_of = as_of
-        # merge-on-read apply sets: pinned by the snapshot under time
-        # travel, else every sidecar on disk (resolved per task)
-        self.delete_files = (
-            mf.snapshot_delete_files(enc_dir, as_of) if as_of is not None else None
-        )
-        self.eq_files = (
-            mf.snapshot_eq_delete_files(enc_dir, as_of) if as_of is not None else None
-        )
 
     def partitions(self) -> Sequence[InputPartition]:
-        from .decode_job import surviving_partitions
-        from . import manifest as mf
+        from .decode_job import plan_scan
 
-        pinned = (
-            mf.snapshot_partitions(self.enc_dir, self.as_of)
-            if self.as_of is not None
-            else None
-        )
-        if self.prune:
-            pids = surviving_partitions(self.enc_dir, self.prune, within=pinned)
-        elif pinned is not None:
-            pids = sorted(pinned & mf.committed_partitions(self.enc_dir))
-        else:
-            pids = mf.committed_partitions(self.enc_dir)
-        # always at least one (possibly empty) split: Spark requires a
-        # non-empty partition list only implicitly; an empty table reads
-        # as zero rows through a single no-op split
-        return [_PGSPartition(pid) for pid in pids] or [_PGSPartition(-1)]
+        plan = plan_scan(self.enc_dir, prune=self.prune, as_of=self.as_of)
+        # an empty table reads as zero rows through a single no-op split
+        return _split(plan) or [_PGSPartition(-1)]
 
     def read(self, partition: _PGSPartition):
-        return _decode_partition_to_batches(
-            self.enc_dir, self.fields, partition.pid, self.prune,
-            delete_files=self.delete_files, eq_files=self.eq_files,
-        )
+        return _read_partition(self.enc_dir, partition)
 
 
-class _PGSReader(_PGSReaderNoPushdown):
-    """Pushdown-capable variant, planned only when the session conf
-    allows it (``_choose_reader``)."""
+class _PushFilters:
+    """``pushFilters`` for a reader with a ``prune`` list: pushed catalyst
+    filters become prune triples. Pruning is conservative, so Spark must
+    re-apply EVERY filter."""
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         for f in filters:
             self.prune.extend(_filter_to_prune(f))
-            # conservative pruning ⇒ Spark must re-apply EVERY filter
             yield f
+
+
+class _PGSReader(_PushFilters, _PGSReaderNoPushdown):
+    """Pushdown-capable variant, planned only when the session conf
+    allows it (``_choose_reader``)."""
 
 
 def _offset_pids(offset: dict) -> set[int]:
@@ -320,11 +256,12 @@ class _PGSStreamReader(DataSourceStreamReader):
     last batch, one Spark task per partition. Pairs with the streaming
     encode sink (``streaming/encode_stream.py``) for an end-to-end
     encode->tail pipeline. Overwriting the directory mid-stream is not
-    supported (offsets only grow)."""
+    supported (offsets only grow). Each micro-batch is planned by
+    ``decode_job.plan_scan`` and read by ``decode_partition``, like the
+    batch reader."""
 
-    def __init__(self, enc_dir: str, schema_fields: list[dict]):
+    def __init__(self, enc_dir: str):
         self.enc_dir = enc_dir
-        self.fields = schema_fields
 
     def initialOffset(self) -> dict:
         return {"committed": ""}
@@ -336,11 +273,12 @@ class _PGSStreamReader(DataSourceStreamReader):
         return {"committed": ",".join(map(str, pids))}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        fresh = sorted(_offset_pids(end) - _offset_pids(start))
-        return [_PGSPartition(pid) for pid in fresh]
+        from .decode_job import plan_scan
+
+        return _split(plan_scan(self.enc_dir, pids=_offset_pids(end) - _offset_pids(start)))
 
     def read(self, partition: _PGSPartition):
-        return _decode_partition_to_batches(self.enc_dir, self.fields, partition.pid, [])
+        return _read_partition(self.enc_dir, partition)
 
 
 @dataclass
@@ -578,24 +516,15 @@ class PGSDataSource(DataSource):
         return ", ".join(f"`{f['name']}` {f['ddl']}" for f in fields)
 
     def reader(self, schema) -> _PGSReaderNoPushdown:
-        from . import manifest as mf
-
         as_of = self.options.get("as_of")
-        seq = int(as_of) if as_of is not None else None
-        if seq is None and self.options.get("as_of_ts") is not None:
-            # Iceberg TIMESTAMP AS OF: .option("as_of_ts", "<ISO-8601>")
-            seq = mf.seq_as_of_timestamp(self._dir(), self.options["as_of_ts"])
+        # Iceberg TIMESTAMP AS OF: .option("as_of_ts", "<ISO-8601>"),
+        # resolved by plan_scan
+        as_of = int(as_of) if as_of is not None else self.options.get("as_of_ts")
         cls = _choose_reader(self.options.get("pushdown"), _PGSReader, _PGSReaderNoPushdown)
-        return cls(
-            self._dir(),
-            mf.read_table_schema(self._dir()),
-            as_of=seq,
-        )
+        return cls(self._dir(), as_of=as_of)
 
     def streamReader(self, schema) -> _PGSStreamReader:
-        from . import manifest as mf
-
-        return _PGSStreamReader(self._dir(), mf.read_table_schema(self._dir()))
+        return _PGSStreamReader(self._dir())
 
     def streamWriter(self, schema, overwrite: bool) -> _PGSStreamWriter:
         import os
@@ -707,14 +636,9 @@ class _PGSQReaderNoPushdown(DataSourceReader):
         yield from tbl.to_batches(max_chunksize=1 << 16)
 
 
-class _PGSQReader(_PGSQReaderNoPushdown):
+class _PGSQReader(_PushFilters, _PGSQReaderNoPushdown):
     """Pushdown-capable variant: pushed catalyst filters become
     footer-Statistics row-group pruning + PageIndex page pruning."""
-
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        for f in filters:
-            self.prune.extend(_filter_to_prune(f))
-            yield f  # conservative: Spark re-applies every filter
 
 
 class PGSParquetDataSource(DataSource):

@@ -1,5 +1,11 @@
 """Distributed decode job: read partition files -> Arrow batches.
 
+Every reader of an encoded table — ``decode_table``, the ``pgs`` batch
+and stream readers, and the maintenance scans — shares one plan and one
+decode: ``plan_scan`` resolves the read on the driver (committed
+partitions, snapshot pin, prune, delete sidecars, column types) and
+``decode_partition`` turns one partition file into one Arrow batch.
+
 Column projection mirrors the reference's read-side SELECT
 (``file_reader.go:112-130`` / ``skipChunk``): unselected chunks are seeked
 past in the partition file and never decoded.
@@ -7,7 +13,10 @@ past in the partition file and never decoded.
 
 from __future__ import annotations
 
+import os
+import zlib
 from collections.abc import Iterator
+from dataclasses import dataclass, replace
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -27,11 +36,10 @@ def _read_chunk_dict(enc_dir: str, pid: int, col: str) -> set | None:
     fault in a few pages while every data page stays untouched (the
     parquet side's bounded-pread bloom/dict probes, same idea)."""
     import mmap
-    import os as _os
 
     from ..core.chunk import chunk_dict_values
 
-    path = _os.path.join(enc_dir, f"part-{pid:05d}.bin")
+    path = os.path.join(enc_dir, f"part-{pid:05d}.bin")
     try:
         with open(path, "rb") as f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
             blob = parse_partition_file(mm, {col}).pop(col, None)
@@ -352,6 +360,154 @@ def binary_value_view(arr: "pa.Array", i: int) -> "pa.Buffer":
     return data_buf.slice(int(offs[i]), int(offs[i + 1] - offs[i]))
 
 
+@dataclass
+class ScanPlan:
+    """What every task of one read of a PGSC table needs, resolved once
+    on the driver by ``plan_scan``; ``decode_partition`` consumes it."""
+
+    pids: list[int]  # partitions to read, ascending
+    ddl: str  # Spark DDL of the output columns
+    cols: list[str]  # output columns, in order
+    want: set[str]  # chunks to parse: ``cols`` plus predicate columns
+    nested: set[str]
+    logicals: dict[str, str]
+    arrow_types: dict  # for null-filling evolved columns
+    prune: list[tuple] | None
+    deletes: dict[int, list[str]]  # pid -> positional sidecar names
+    eq_deletes: dict[int, list[tuple]]  # pid -> [(column, values), ...]
+    pinned: bool  # the sidecar sets are a time-travel snapshot's pin
+    validate_crc: bool
+
+    def only(self, pid: int) -> "ScanPlan":
+        """This plan narrowed to partition ``pid``'s share."""
+        return replace(
+            self,
+            pids=[pid],
+            deletes={pid: self.deletes[pid]} if pid in self.deletes else {},
+            eq_deletes={pid: self.eq_deletes[pid]} if pid in self.eq_deletes else {},
+        )
+
+
+def plan_scan(
+    enc_dir: str,
+    columns: list[str] | None = None,
+    prune: list[tuple] | None = None,
+    as_of: "int | str | None" = None,
+    pids: "set[int] | list[int] | None" = None,
+    validate_crc: bool = False,
+) -> ScanPlan:
+    """Plan one read on the driver: the committed partitions (listed
+    from the manifests, so a data file whose manifest never committed
+    is never read), narrowed by the ``as_of`` snapshot pin, by ``pids``
+    and by ``surviving_partitions``; per partition, the positional and
+    equality delete sidecars to apply — the snapshot's pinned sets
+    under time travel, else every sidecar on disk now, so all tasks
+    apply one consistent set; and the column type maps. Equality-delete
+    key columns ride along in the type maps even when unselected, like
+    predicate columns in ``want``."""
+    if as_of is not None and not isinstance(as_of, int):
+        as_of = mf.seq_as_of_timestamp(enc_dir, as_of)
+    ddls = {f["name"]: f["ddl"] for f in mf.read_table_schema(enc_dir)}
+    cols = list(columns or ddls)
+    keep = mf.committed_partitions(enc_dir)
+    if as_of is not None:
+        keep &= mf.snapshot_partitions(enc_dir, as_of)
+    if pids is not None:
+        keep &= set(pids)
+    ordered = surviving_partitions(enc_dir, prune, within=keep) if prune else sorted(keep)
+    if as_of is None:
+        del_names, eq_names = mf.list_delete_files(enc_dir), mf.list_eq_delete_files(enc_dir)
+    else:
+        del_names, eq_names = mf.snapshot_sidecars(enc_dir, as_of)
+    deletes: dict[int, list[str]] = {}
+    for name in del_names:
+        deletes.setdefault(int(name[len("del-") : len("del-") + 5]), []).append(name)
+    eq = mf.eq_deletes_by_pid(enc_dir, eq_names) if eq_names else {}
+    deletes = {p: deletes[p] for p in ordered if p in deletes}
+    eq = {p: eq[p] for p in ordered if p in eq}
+    eq_cols = {c for specs in eq.values() for c, _ in specs if c in ddls}
+    typed = list(dict.fromkeys(cols + sorted(eq_cols)))
+    arrow_types = {}
+    for c in typed:
+        try:
+            arrow_types[c] = arrow_type_of_ddl(ddls[c])
+        except ValueError:
+            # only matters if this column actually needs a null fill;
+            # decode_blobs_to_batch errors then, not here
+            continue
+    return ScanPlan(
+        pids=ordered,
+        ddl=", ".join(f"`{c}` {ddls[c]}" for c in cols),
+        cols=cols,
+        # predicate columns ride along so their page stats are readable
+        # even when not selected (their pages are never decompressed)
+        want=set(cols) | {p[0] for p in prune or ()},
+        nested={c for c in typed if ddls[c].strip().startswith(("array<", "map<", "struct<"))},
+        logicals={c: logical_of_ddl(ddls[c]) for c in typed},
+        arrow_types=arrow_types,
+        prune=prune or None,
+        deletes=deletes,
+        eq_deletes=eq,
+        pinned=as_of is not None,
+        validate_crc=validate_crc,
+    )
+
+
+def decode_partition(enc_dir: str, pid: int, payload, plan: ScanPlan) -> "pa.RecordBatch | None":
+    """Decode partition ``pid``'s file bytes (``payload``: bytes, mmap or
+    ``pa.Buffer``) under ``plan`` -> one Arrow batch, or None when no
+    row survives. Positional sidecars are judged against the epoch of
+    THESE bytes: sidecars from before an in-place rewrite are skipped
+    with proof, never applied to compacted rows — except under time
+    travel, where an older-epoch pinned sidecar means the version is
+    gone, and that raises. Selected columns never written here (schema
+    evolution) are null-filled; a manifest row without its chunk
+    (corruption) raises."""
+    eq = plan.eq_deletes.get(pid)
+    want = plan.want | {c for c, _ in eq} if eq else plan.want
+    blobs = parse_partition_file(payload, want)
+    missing = set(plan.cols) - set(blobs)
+    if not blobs and not missing:
+        return None
+    dels = plan.deletes.get(pid)
+    dpos = (
+        mf.delete_positions(
+            enc_dir, pid, files=dels, file_epoch=partition_file_epoch(payload), pinned=plan.pinned
+        )
+        if dels
+        else None
+    )
+    if plan.validate_crc:
+        # every decoded chunk validates — including eq-delete key columns
+        # that ride along beyond the selection: a bit-flipped key chunk
+        # would delete the wrong rows, the exact class this flag catches
+        name = f"part-{pid:05d}.bin"
+        crc_of = {r["column"]: r["crc32"] for r in mf.read_partition_manifest(enc_dir, pid)}
+        for c in sorted(want & set(blobs)):
+            if c not in crc_of:
+                raise ValueError(
+                    f"manifest for {name} has no CRC row for column {c}: "
+                    "cannot validate (truncated or partial manifest)"
+                )
+            got = zlib.crc32(blobs[c])
+            if got != crc_of[c]:
+                raise ValueError(
+                    f"crc mismatch for column {c} in {name}: "
+                    f"{got:#x} != manifest {crc_of[c]:#x}"
+                )
+    return decode_blobs_to_batch(
+        blobs,
+        plan.cols,
+        plan.nested,
+        plan.logicals,
+        plan.prune,
+        arrow_types=plan.arrow_types,
+        fallback_rows=missing_column_rows(enc_dir, pid, missing) if missing else None,
+        delete_pos=dpos,
+        eq_deletes=eq,
+    )
+
+
 def decode_table(
     spark: SparkSession,
     enc_dir: str,
@@ -361,7 +517,10 @@ def decode_table(
     as_of: "int | str | None" = None,
     pids: set[int] | None = None,
 ) -> DataFrame:
-    """Decode an encoded table directory back into a DataFrame.
+    """Decode an encoded table directory back into a DataFrame:
+    ``plan_scan`` on the driver, then one ``decode_partition`` per
+    committed partition file inside a ``mapInArrow`` over the
+    ``binaryFile`` scan.
 
     ``as_of`` time-travels: read only the partitions pinned by snapshot
     ``seq`` (``manifest.snapshot_partitions``) — the table exactly as it
@@ -397,160 +556,23 @@ def decode_table(
     ranges so columns stay row-aligned. Pruning is conservative (min/max
     bounds + no-false-negative blooms); the caller still applies the
     exact filter."""
-    if as_of is not None and not isinstance(as_of, int):
-        as_of = mf.seq_as_of_timestamp(enc_dir, as_of)
-    fields = mf.read_table_schema(enc_dir)
-    by_name = {f["name"]: f for f in fields}
-    cols = columns or [f["name"] for f in fields]
-    out_ddl = ", ".join(f"`{c}` {by_name[c]['ddl']}" for c in cols)
-    import glob as _glob
-
-    paths = sorted(_glob.glob(f"{enc_dir}/part-*.bin"))
-    pinned = mf.snapshot_partitions(enc_dir, as_of) if as_of is not None else None
-    if pids is not None:
-        pinned = set(pids) if pinned is None else (pinned & set(pids))
-    if prune:
-        keep = {
-            f"part-{pid:05d}.bin"
-            for pid in surviving_partitions(enc_dir, prune, within=pinned)
-        }
-    elif pinned is not None:
-        keep = {f"part-{pid:05d}.bin" for pid in pinned}
-    else:
-        keep = None
-    if keep is not None:
-        import os as _os
-
-        paths = [p for p in paths if _os.path.basename(p) in keep]
-    if not paths:
+    plan = plan_scan(enc_dir, columns, prune, as_of, pids, validate_crc)
+    if not plan.pids:
         # empty input (zero-task encode) or everything pruned
-        return spark.createDataFrame([], schema=out_ddl)
+        return spark.createDataFrame([], schema=plan.ddl)
+    paths = [os.path.join(enc_dir, f"part-{pid:05d}.bin") for pid in plan.pids]
     files = spark.read.format("binaryFile").load(paths).select("path", "content")
 
-    # merge-on-read delete sidecars: the apply set is pinned by the
-    # snapshot under time travel (a version before a MOR delete still
-    # reads the rows), else every sidecar on disk. Planned on the driver
-    # so every task applies the same consistent set.
-    del_names = (
-        mf.snapshot_delete_files(enc_dir, as_of)
-        if as_of is not None
-        else mf.list_delete_files(enc_dir)
-    )
-    del_by_pid: dict[int, list[str]] = {}
-    for name in del_names:
-        del_by_pid.setdefault(int(name[len("del-") : len("del-") + 5]), []).append(name)
-    # time travel pins the apply set: an older-epoch/missing pinned
-    # sidecar must RAISE 'invalidated' (the rewrite baked in more than
-    # this version's deletes), never silently serve post-rewrite bytes
-    pin_deletes = as_of is not None
-    eq_names = (
-        mf.snapshot_eq_delete_files(enc_dir, as_of)
-        if as_of is not None
-        else mf.list_eq_delete_files(enc_dir)
-    )
-    eq_by_pid = mf.eq_deletes_by_pid(enc_dir, eq_names) if eq_names else {}
-    # equality-delete key columns ride along in the decode (and in the
-    # type maps) even when unselected, like predicate columns
-    eq_cols = {c for specs in eq_by_pid.values() for c, _ in specs if c in by_name}
-
-    typed = list(dict.fromkeys(list(cols) + sorted(eq_cols)))
-    nested_cols = {
-        c for c in typed if by_name[c]["ddl"].strip().startswith(("array<", "map<", "struct<"))
-    }
-    logicals = {c: logical_of_ddl(by_name[c]["ddl"]) for c in typed}
-    arrow_types = {}
-    for c in typed:
-        try:
-            arrow_types[c] = arrow_type_of_ddl(by_name[c]["ddl"])
-        except ValueError:
-            # only matters if this column actually needs a null fill;
-            # decode_blobs_to_batch errors then, not here
-            continue
-
-    def decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # predicate columns ride along so their page stats are readable
-        # even when not selected (their pages are never decompressed)
-        want = set(cols) | ({p[0] for p in prune} if prune else set())
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            content_arr = b.column("content")
+            content = b.column("content")
             for i, path in enumerate(b.column("path")):
-                import os as _os
-
-                bpid = int(_os.path.basename(path.as_py())[len("part-") : -len(".bin")])
-                eq_specs = eq_by_pid.get(bpid)
-                want_here = (
-                    want | {c for c, _ in eq_specs if c in by_name} if eq_specs else want
-                )
-                payload = binary_value_view(content_arr, i)
-                blobs = parse_partition_file(payload, want_here)
-                dpos = (
-                    mf.delete_positions(
-                        enc_dir,
-                        bpid,
-                        files=del_by_pid[bpid],
-                        # epoch of the bytes THIS task holds: sidecars
-                        # from before an in-place rewrite are skipped
-                        # with proof, never applied to compacted rows —
-                        # except under time travel, where an older-epoch
-                        # pinned sidecar means the version is gone: raise
-                        file_epoch=partition_file_epoch(payload),
-                        pinned=pin_deletes,
-                    )
-                    if bpid in del_by_pid
-                    else None
-                )
-                missing = set(cols) - set(blobs)
-                fallback = None
-                if missing:
-                    # schema evolution (never written here → null fill)
-                    # vs corruption (manifest row exists → raise)
-                    import os as _os
-
-                    name = _os.path.basename(path.as_py())
-                    pid = int(name[len("part-") : -len(".bin")])
-                    fallback = missing_column_rows(enc_dir, pid, missing)
-                if not blobs and not missing:
-                    continue
-                if validate_crc:
-                    import os as _os
-                    import zlib as _zlib
-
-                    name = _os.path.basename(path.as_py())
-                    pid = int(name[len("part-") : -len(".bin")])
-                    crc_of = {
-                        r["column"]: r["crc32"] for r in mf.read_partition_manifest(enc_dir, pid)
-                    }
-                    # every decoded chunk validates — including eq-delete
-                    # key columns that ride along beyond the selection
-                    # (want_here): a bit-flipped key chunk would delete
-                    # the wrong rows, the exact class this flag catches
-                    for c in sorted(want_here & set(blobs)):
-                        if c not in crc_of:
-                            raise ValueError(
-                                f"manifest for {name} has no CRC row for column {c}: "
-                                "cannot validate (truncated or partial manifest)"
-                            )
-                        got = _zlib.crc32(blobs[c])
-                        if got != crc_of[c]:
-                            raise ValueError(
-                                f"crc mismatch for column {c} in {name}: "
-                                f"{got:#x} != manifest {crc_of[c]:#x}"
-                            )
-                batch = decode_blobs_to_batch(
-                    blobs,
-                    cols,
-                    nested_cols,
-                    logicals,
-                    prune,
-                    arrow_types=arrow_types,
-                    fallback_rows=fallback,
-                    delete_pos=dpos,
-                    eq_deletes=eq_specs,
-                )
+                pid = int(os.path.basename(path.as_py())[len("part-") : -len(".bin")])
+                batch = decode_partition(enc_dir, pid, binary_value_view(content, i), plan)
                 if batch is not None:
                     yield batch
 
-    return files.mapInArrow(decode_partition, schema=out_ddl)
+    return files.mapInArrow(decode, schema=plan.ddl)
 
 
 def read_changes(
@@ -582,14 +604,9 @@ def read_changes(
         if not snaps:
             raise ValueError(f"no snapshots at {enc_dir}: nothing to diff")
         to_seq = snaps[-1]["seq"]
-    if from_seq == to_seq:
-        new_pids: set[int] = set()
-    else:
-        if from_seq > to_seq:
-            raise ValueError(f"from_seq={from_seq} is after to_seq={to_seq}")
-        new_pids = mf.snapshot_partitions(enc_dir, to_seq) - mf.snapshot_partitions(
-            enc_dir, from_seq
-        )
+    if from_seq > to_seq:
+        raise ValueError(f"from_seq={from_seq} is after to_seq={to_seq}")
+    new_pids = mf.snapshot_partitions(enc_dir, to_seq) - mf.snapshot_partitions(enc_dir, from_seq)
     return decode_table(
         spark, enc_dir, columns=columns, prune=prune, as_of=to_seq, pids=new_pids
     )

@@ -21,12 +21,15 @@ from __future__ import annotations
 import math
 import os
 
+from dataclasses import replace
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import manifest as mf
 from ..core.columns import one_chunk
-from .decode_job import decode_table
-from .encode_job import encode_table
+from .decode_job import ScanPlan, decode_partition, decode_table, plan_scan, surviving_partitions
+from .encode_job import encode_columns_to_partition, encode_table, partition_file_epoch
 
 __all__ = [
     "compact_table",
@@ -43,9 +46,69 @@ __all__ = [
 ]
 
 
+def _local(p: str) -> str:
+    return p[len("file:") :] if p.startswith("file:") else p
+
+
 def _pid_of(p: str) -> int:
-    local = p[len("file:") :] if p.startswith("file:") else p
-    return int(os.path.basename(local)[len("part-") : -len(".bin")])
+    return int(os.path.basename(_local(p))[len("part-") : -len(".bin")])
+
+
+def _paths(enc_dir: str, pids: list[int]) -> list[str]:
+    return [os.path.join(enc_dir, f"part-{pid:05d}.bin") for pid in pids]
+
+
+def _decode_file(enc_dir: str, pid: int, plan: ScanPlan) -> "tuple[pa.RecordBatch | None, int]":
+    """``decode_partition`` over partition ``pid``'s file as it is on
+    disk now, and the rewrite epoch of the bytes it decoded."""
+    with open(os.path.join(enc_dir, f"part-{pid:05d}.bin"), "rb") as fh:
+        payload = fh.read()
+    return decode_partition(enc_dir, pid, payload, plan), partition_file_epoch(payload)
+
+
+def _rewrite_in_place(enc_dir: str, pid: int, table: "pa.Table", epoch: int, encode_kwargs: dict):
+    """Re-encode ``table`` as partition ``pid``, keeping the partition's
+    block codec (entropy-coded chunks record "none" — no double
+    compression — so any real codec wins). The rewrite epoch moves past
+    ``epoch`` (that of the decoded bytes) atomically with the data-file
+    replace: the sidecars folded into ``table`` become provably stale,
+    so a concurrent reader — or one arriving after a crash before the
+    driver's sidecar cleanup — skips them instead of applying old
+    ordinals to the compacted file."""
+    kw = dict(encode_kwargs)
+    codecs = [r["compression"] for r in mf.read_partition_manifest(enc_dir, pid)]
+    kw.setdefault("compression", next((c for c in codecs if c != "none"), "none"))
+    encode_columns_to_partition(table, table.column_names, enc_dir, pid, epoch=epoch + 1, **kw)
+
+
+def _per_partition(spark: SparkSession, enc_dir: str, pids: list[int], fn) -> list:
+    """One Spark task per partition file runs ``fn(pid) -> (rows_deleted,
+    rewritten)``; returns the collected (partition, rows_deleted,
+    rewritten) rows."""
+    files = spark.read.format("binaryFile").load(_paths(enc_dir, pids)).select("path")
+
+    def run(it):
+        import pandas as pd
+
+        for pdf in it:
+            out = []
+            for pid in map(_pid_of, pdf["path"]):
+                deleted, rewrote = fn(pid)
+                out.append({"partition": pid, "rows_deleted": deleted, "rewritten": rewrote})
+            yield pd.DataFrame(out)
+
+    return files.mapInPandas(run, "partition int, rows_deleted long, rewritten boolean").collect()
+
+
+def _retire_rewritten(enc_dir: str, rewritten: set[int]) -> None:
+    """After in-place rewrites: materialized sidecars are dropped (their
+    ordinals refer to the pre-rewrite file), and historical versions
+    pinning a rewritten partition are tombstoned so ``as_of`` raises
+    instead of reading the rewritten bytes under an old seq."""
+    for pid in sorted(rewritten):
+        mf.remove_delete_files(enc_dir, pid)
+    if rewritten:
+        mf.invalidate_snapshots(enc_dir, rewritten)
 
 
 def _collect_keys(src_keys: DataFrame) -> list:
@@ -85,8 +148,6 @@ def delete_keys(
     streaming upsert passes the PRE-batch snapshot's set so the batch's
     own appended rows survive their own delete); ``extra_config`` merges
     into the committed snapshot's config (replay markers)."""
-    from .decode_job import surviving_partitions
-
     vals = list(dict.fromkeys(values))
     if not vals:
         raise ValueError("delete_keys needs at least one value")
@@ -118,15 +179,15 @@ def _scan_key_positions(
 ) -> DataFrame:
     """Distributed projection scan of ONE column: (pid, row ordinal,
     key value) for every base row of the given partitions — existing
-    MOR sidecars deliberately NOT applied, so ordinals match the data
-    file (the positional-delete coordinate system). One task per
-    partition file; only the key column's chunk is decoded."""
-    kf = next(f for f in fields if f["name"] == key)
-    ddl = kf["ddl"]
+    MOR sidecars deliberately NOT applied (the plan's sidecar maps are
+    emptied), so ordinals match the data file (the positional-delete
+    coordinate system). One task per partition file; only the key
+    column's chunk is decoded."""
+    ddl = next(f for f in fields if f["name"] == key)["ddl"]
     if ddl.strip().startswith(("array<", "map<", "struct<")):
         raise ValueError(f"merge key {key!r} must be a scalar column, got {ddl}")
-    paths = [os.path.join(enc_dir, f"part-{pid:05d}.bin") for pid in pids]
-    files = spark.read.format("binaryFile").load(paths).select("path")
+    plan = replace(plan_scan(enc_dir, [key], pids=pids), deletes={}, eq_deletes={})
+    files = spark.read.format("binaryFile").load(_paths(enc_dir, plan.pids)).select("path")
 
     def scan(it):
         import mmap as _mmap
@@ -134,16 +195,9 @@ def _scan_key_positions(
         import numpy as np
         import pandas as pd
 
-        from .decode_job import decode_blobs_to_batch, logical_of_ddl
-        from .encode_job import parse_partition_file
-
-        from .encode_job import partition_file_epoch
-
-        logicals = {key: logical_of_ddl(ddl)}
         for pdf in it:
             for p in pdf["path"]:
                 pid = _pid_of(p)
-                local = p[len("file:") :] if p.startswith("file:") else p
                 # mmap, not read(): a projection scan of ONE column must
                 # not pull the whole partition file through memory — the
                 # header walk and the key chunk fault in a few pages
@@ -151,46 +205,30 @@ def _scan_key_positions(
                 # (the _read_chunk_dict bounded-probe pattern). The
                 # decode materializes to pandas INSIDE the context, so
                 # no view outlives the map.
-                out_pdf = None
-                with open(local, "rb") as fh, _mmap.mmap(
+                with open(_local(p), "rb") as fh, _mmap.mmap(
                     fh.fileno(), 0, access=_mmap.ACCESS_READ
                 ) as mm:
-                    blobs = parse_partition_file(mm, {key})
-                    try:
-                        batch = decode_blobs_to_batch(blobs, [key], set(), logicals, None)
-                        if batch is not None and batch.num_rows:
-                            n = batch.num_rows
-                            out_pdf = pd.DataFrame(
-                                {
-                                    "pid": np.full(n, pid, dtype="int32"),
-                                    "pos": np.arange(n, dtype="int64"),
-                                    # the rewrite epoch of the BYTES
-                                    # these ordinals index — carried
-                                    # through the join so the sidecar is
-                                    # stamped against the scanned
-                                    # coordinate system, not whatever is
-                                    # on disk at write time
-                                    "ep": np.full(
-                                        n, partition_file_epoch(mm), dtype="int64"
-                                    ),
-                                    # to_pandas COPIES, so nothing below
-                                    # outlives the map
-                                    "k": batch.column(0).to_pandas(),
-                                }
-                            )
-                        del batch
-                    finally:
-                        # the zero-copy decode path keeps buffer views
-                        # into the mmap; release them or mm.close()
-                        # raises BufferError('exported pointers exist')
-                        for b in blobs.values():
-                            try:
-                                b.release()
-                            except (AttributeError, BufferError):
-                                pass
-                        del blobs
-                if out_pdf is not None:
-                    yield out_pdf
+                    batch = decode_partition(enc_dir, pid, mm, plan)
+                    if batch is None:
+                        continue
+                    n = batch.num_rows
+                    out_pdf = pd.DataFrame(
+                        {
+                            "pid": np.full(n, pid, dtype="int32"),
+                            "pos": np.arange(n, dtype="int64"),
+                            # the rewrite epoch of the BYTES these
+                            # ordinals index — carried through the join
+                            # so the sidecar is stamped against the
+                            # scanned coordinate system, not whatever is
+                            # on disk at write time
+                            "ep": np.full(n, partition_file_epoch(mm), dtype="int64"),
+                            # to_pandas COPIES, so nothing below
+                            # outlives the map
+                            "k": batch.column(0).to_pandas(),
+                        }
+                    )
+                    del batch
+                yield out_pdf
 
     return files.mapInPandas(scan, schema=f"pid int, pos bigint, ep bigint, k {ddl}")
 
@@ -281,64 +319,22 @@ def materialize_deletes(
     (sidecars applied), re-encodes in place keeping the partition's
     block codec, then sidecars are dropped and history pinning the
     rewritten bytes is tombstoned."""
-    import pyarrow as pa
-
-    from .datasource import _decode_partition_to_batches
-    from .decode_job import arrow_type_of_ddl
-    from .encode_job import encode_columns_to_partition
-
-    have = sorted({int(n[len("del-") : len("del-") + 5]) for n in mf.list_delete_files(enc_dir)})
-    if pids is not None:
-        have = sorted(set(have) & set(pids))
-    if not have:
+    plan = plan_scan(enc_dir, pids=pids)
+    if not plan.deletes:
         return {"rewritten": [], "snapshot": None}
-    fields = mf.read_table_schema(enc_dir)
-    cols = [f["name"] for f in fields]
-    paths = [os.path.join(enc_dir, f"part-{pid:05d}.bin") for pid in have]
-    files = spark.read.format("binaryFile").load(paths).select("path")
 
-    def rewrite(it):
-        import pandas as pd
+    def rewrite(pid: int) -> tuple[int, bool]:
+        batch, epoch = _decode_file(enc_dir, pid, plan)
+        # every row deleted: rewrite an EMPTY typed partition (dropping
+        # the sidecars alone would resurrect rows)
+        schema = pa.schema([(c, plan.arrow_types[c]) for c in plan.cols])
+        table = pa.Table.from_batches([batch]) if batch else schema.empty_table()
+        _rewrite_in_place(enc_dir, pid, table, epoch, encode_kwargs)
+        return 0, True
 
-        for pdf in it:
-            out = []
-            for p in pdf["path"]:
-                pid = _pid_of(p)
-                old_epoch = mf._partition_epoch(enc_dir, pid)
-                batches = list(_decode_partition_to_batches(enc_dir, fields, pid, []))
-                if batches:
-                    # no combine_chunks: from_arrow in the encode path
-                    # unwraps 1-chunk columns zero-copy and concatenates
-                    # multi-chunk ones itself (r5 review batch 4)
-                    table = pa.Table.from_batches(batches)
-                else:
-                    # every row deleted: rewrite an EMPTY typed partition
-                    # (dropping the sidecars alone would resurrect rows)
-                    table = pa.table(
-                        {f["name"]: pa.array([], type=arrow_type_of_ddl(f["ddl"])) for f in fields}
-                    )
-                kw = dict(encode_kwargs)
-                man_rows = mf.read_partition_manifest(enc_dir, pid)
-                if man_rows:
-                    codec = next(
-                        (r["compression"] for r in man_rows if r["compression"] != "none"),
-                        "none",
-                    )
-                    kw.setdefault("compression", codec)
-                # epoch bump makes the applied sidecars provably stale
-                # atomically with the data-file replace: a concurrent
-                # reader (or one arriving after a crash before the
-                # driver's sidecar cleanup below) skips them instead of
-                # applying old ordinals to the compacted file
-                encode_columns_to_partition(table, cols, enc_dir, pid, epoch=old_epoch + 1, **kw)
-                out.append({"partition": pid, "rewritten": True})
-            yield pd.DataFrame(out)
-
-    rows = files.mapInPandas(rewrite, "partition int, rewritten boolean").collect()
+    rows = _per_partition(spark, enc_dir, sorted(plan.deletes), rewrite)
     rewritten = {r["partition"] for r in rows}
-    for pid in sorted(rewritten):
-        mf.remove_delete_files(enc_dir, pid)
-    mf.invalidate_snapshots(enc_dir, rewritten)
+    _retire_rewritten(enc_dir, rewritten)
     snap = mf.commit_snapshot(
         enc_dir, "rewrite", {"op": "materialize_deletes", "partitions": sorted(rewritten)}
     )
@@ -481,12 +477,6 @@ def delete_where(
     — MOR never invalidates history."""
     if mode not in ("cow", "mor"):
         raise ValueError(f"delete_where mode must be 'cow' or 'mor', got {mode!r}")
-    import pyarrow as pa
-
-    from .datasource import _decode_partition_to_batches  # full decode, no prune
-    from .decode_job import surviving_partitions
-    from .encode_job import encode_columns_to_partition
-
     # repair a prior crash between a COW rewrite and its sidecar
     # cleanup before planning: stale sidecars are provably already
     # materialized (metadata-only sweep — manifest + sidecar headers)
@@ -494,120 +484,52 @@ def delete_where(
         mf.remove_stale_delete_files(enc_dir, pid)
 
     cand = surviving_partitions(enc_dir, predicate)
-    fields = mf.read_table_schema(enc_dir)
-    cols = [f["name"] for f in fields]
     if not cand:
         snap = mf.commit_snapshot(
             enc_dir, "delete", {"predicate": repr(predicate), "mode": mode, "rows_deleted": 0}
         )
         return {"candidates": 0, "rows_deleted": 0, "snapshot": snap["seq"]}
-    paths = [os.path.join(enc_dir, f"part-{pid:05d}.bin") for pid in sorted(cand)]
-    files = spark.read.format("binaryFile").load(paths).select("path")
+    if mode == "cow":
+        # a COW rewrite folds existing sidecars in (the decode applies
+        # them), so `kept` is live rows minus the new matches
+        plan = plan_scan(enc_dir, pids=cand)
+    else:
+        # projection decode: ONLY the predicate columns — the point of
+        # MOR is never touching the wide columns — in data-file
+        # ordinals (no sidecars applied)
+        plan = plan_scan(enc_dir, sorted({p[0] for p in predicate}), pids=cand)
+        plan = replace(plan, deletes={}, eq_deletes={})
 
-    def rewrite(it):
-        import pandas as pd
+    def rewrite(pid: int) -> tuple[int, bool]:
+        batch, epoch = _decode_file(enc_dir, pid, plan)
+        if batch is None:
+            return 0, False
+        table = pa.Table.from_batches([batch])
+        kept = table.filter(_not_matching_mask(table, predicate))
+        deleted = table.num_rows - kept.num_rows
+        if not (deleted or plan.deletes.get(pid)):
+            return 0, False
+        _rewrite_in_place(enc_dir, pid, kept, epoch, encode_kwargs)
+        return deleted, True
 
-        for pdf in it:
-            out = []
-            for p in pdf["path"]:
-                pid = _pid_of(p)
-                # a COW rewrite folds existing MOR sidecars in (the
-                # decode below applies them), so `kept` is live rows
-                # minus the new matches
-                batches = list(_decode_partition_to_batches(enc_dir, fields, pid, []))
-                table = pa.Table.from_batches(batches) if batches else None
-                deleted = 0
-                rewrote = False
-                had_sidecars = bool(mf.list_delete_files(enc_dir, pid))
-                if table is not None and table.num_rows:
-                    keep = _not_matching_mask(table, predicate)
-                    kept = table.filter(keep)
-                    deleted = table.num_rows - kept.num_rows
-                    if deleted or had_sidecars:
-                        kw = dict(encode_kwargs)
-                        man_rows = mf.read_partition_manifest(enc_dir, pid)
-                        if man_rows:
-                            # keep the partition's block codec; entropy-
-                            # coded chunks record "none" (no double
-                            # compression), so look for any real codec
-                            codec = next(
-                                (r["compression"] for r in man_rows if r["compression"] != "none"),
-                                "none",
-                            )
-                            kw.setdefault("compression", codec)
-                        # bump the file-embedded rewrite epoch: folded-in
-                        # sidecars become provably stale the instant the
-                        # new bytes land (crash-safe — no reader window
-                        # where old ordinals hit the compacted file)
-                        encode_columns_to_partition(
-                            kept, cols, enc_dir, pid,
-                            epoch=mf._partition_epoch(enc_dir, pid) + 1, **kw,
-                        )
-                        rewrote = True
-                out.append({"partition": pid, "rows_deleted": deleted, "rewritten": rewrote})
-            yield pd.DataFrame(out)
-
-    def mark(it):
+    def mark(pid: int) -> tuple[int, bool]:
         import numpy as np
-        import pandas as pd
         import pyarrow.compute as pc
 
-        from .decode_job import decode_blobs_to_batch, logical_of_ddl
-        from .encode_job import parse_partition_file
+        batch, epoch = _decode_file(enc_dir, pid, plan)
+        if batch is None:
+            return 0, False
+        match = one_chunk(pc.invert(_not_matching_mask(pa.Table.from_batches([batch]), predicate)))
+        pos = np.flatnonzero(match.to_numpy(zero_copy_only=False)).astype(np.int64)
+        already = mf.delete_positions(enc_dir, pid, file_epoch=epoch)
+        new_pos = np.setdiff1d(pos, already, assume_unique=True)
+        if new_pos.size:
+            mf.write_delete_file(enc_dir, pid, new_pos, base_rows=batch.num_rows, epoch=epoch)
+        return int(new_pos.size), False
 
-        pred_cols = sorted({p[0] for p in predicate})
-        pred_fields = [f for f in fields if f["name"] in pred_cols]
-        nested = {
-            f["name"]
-            for f in pred_fields
-            if f["ddl"].strip().startswith(("array<", "map<", "struct<"))
-        }
-        logicals = {f["name"]: logical_of_ddl(f["ddl"]) for f in pred_fields}
-        for pdf in it:
-            out = []
-            for p in pdf["path"]:
-                pid = _pid_of(p)
-                local = p[len("file:") :] if p.startswith("file:") else p
-                with open(local, "rb") as fh:
-                    payload = fh.read()
-                # projection decode: ONLY the predicate columns — the
-                # point of MOR is never touching the wide columns
-                blobs = parse_partition_file(payload, set(pred_cols))
-                batch = decode_blobs_to_batch(blobs, pred_cols, nested, logicals, None)
-                deleted = 0
-                if batch is not None and batch.num_rows:
-                    from .encode_job import partition_file_epoch
-
-                    match = pc.invert(
-                        _not_matching_mask(pa.Table.from_batches([batch]), predicate)
-                    )
-                    match = one_chunk(match)
-                    pos = np.flatnonzero(match.to_numpy(zero_copy_only=False)).astype(np.int64)
-                    fepoch = partition_file_epoch(payload)
-                    already = mf.delete_positions(enc_dir, pid, file_epoch=fepoch)
-                    new_pos = np.setdiff1d(pos, already, assume_unique=True)
-                    if new_pos.size:
-                        mf.write_delete_file(
-                            enc_dir, pid, new_pos, base_rows=batch.num_rows, epoch=fepoch
-                        )
-                        deleted = int(new_pos.size)
-                out.append({"partition": pid, "rows_deleted": deleted, "rewritten": False})
-            yield pd.DataFrame(out)
-
-    fn = mark if mode == "mor" else rewrite
-    rows = files.mapInPandas(
-        fn, schema="partition int, rows_deleted long, rewritten boolean"
-    ).collect()
+    rows = _per_partition(spark, enc_dir, plan.pids, mark if mode == "mor" else rewrite)
     deleted = sum(r["rows_deleted"] for r in rows)
-    rewritten = {r["partition"] for r in rows if r["rewritten"]}
-    if rewritten:
-        # COW only: materialized sidecars are dropped (their ordinals
-        # refer to the pre-rewrite file), and historical versions pinning
-        # a rewritten partition are tombstoned so as_of raises instead of
-        # reading the rewritten bytes under an old seq
-        for pid in sorted(rewritten):
-            mf.remove_delete_files(enc_dir, pid)
-        mf.invalidate_snapshots(enc_dir, rewritten)
+    _retire_rewritten(enc_dir, {r["partition"] for r in rows if r["rewritten"]})
     snap = mf.commit_snapshot(
         enc_dir, "delete", {"predicate": repr(predicate), "mode": mode, "rows_deleted": deleted}
     )
@@ -668,13 +590,9 @@ def rollback_table(out_dir: str, seq: int) -> dict:
     # merge-on-read sidecars committed after the target snapshot are
     # rolled back too: the target pinned its apply set, anything newer
     # (a MOR delete since then) is undone by removing the sidecar
-    pinned_dels = set(mf.snapshot_delete_files(out_dir, seq))
-    for name in mf.list_delete_files(out_dir):
-        if name not in pinned_dels:
-            os.remove(os.path.join(mf.deletes_dir(out_dir), name))
-    pinned_eq = set(mf.snapshot_eq_delete_files(out_dir, seq))
-    for name in mf.list_eq_delete_files(out_dir):
-        if name not in pinned_eq:
+    pinned = {name for names in mf.snapshot_sidecars(out_dir, seq) for name in names}
+    for name in mf.list_delete_files(out_dir) + mf.list_eq_delete_files(out_dir):
+        if name not in pinned:
             os.remove(os.path.join(mf.deletes_dir(out_dir), name))
     import glob as _glob
     import json as _json

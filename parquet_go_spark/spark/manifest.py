@@ -323,11 +323,11 @@ def read_eq_delete_file(out_dir: str, name: str) -> dict:
     }
 
 
-def eq_deletes_by_pid(out_dir: str, names: list[str] | None = None) -> dict:
-    """pid -> [(column, values), ...] for the given equality sidecars
-    (None = all on disk), in commit order — the read-side apply plan."""
+def eq_deletes_by_pid(out_dir: str, names: list[str]) -> dict:
+    """pid -> [(column, values), ...] for the given equality sidecars,
+    in commit order — the read-side apply plan."""
     out: dict[int, list] = {}
-    for name in names if names is not None else list_eq_delete_files(out_dir):
+    for name in names:
         spec = read_eq_delete_file(out_dir, name)
         for pid in spec["applies_to"]:
             out.setdefault(pid, []).append((spec["column"], spec["values"]))
@@ -616,28 +616,19 @@ def snapshot_partitions(out_dir: str, seq: int) -> set[int]:
     return set(ids)
 
 
-def snapshot_delete_files(out_dir: str, seq: int) -> list[str]:
-    """The delete-sidecar apply set pinned by snapshot ``seq`` — time
-    travel applies exactly these positions, so a version BEFORE a
-    merge-on-read delete still reads the rows (MOR deletes never
+def snapshot_sidecars(out_dir: str, seq: int) -> tuple[list[str], list[str]]:
+    """The (positional, equality) delete-sidecar apply sets pinned by
+    snapshot ``seq`` — time travel applies exactly these, so a version
+    BEFORE a merge-on-read delete still reads the rows (MOR deletes never
     invalidate history, unlike in-place rewrites). Snapshots predating
-    delete-file support pin the empty set (no sidecars existed)."""
+    delete-file support pin the empty sets (no sidecars existed)."""
     path = os.path.join(snapshot_dir(out_dir), f"snap-{seq:06d}.json")
     if not os.path.exists(path):
         # same contract (and wording) as snapshot_partitions
         snapshot_partitions(out_dir, seq)
     with open(path) as f:
-        return list(json.load(f).get("delete_files") or [])
-
-
-def snapshot_eq_delete_files(out_dir: str, seq: int) -> list[str]:
-    """The equality-delete apply set pinned by snapshot ``seq`` (same
-    contract as ``snapshot_delete_files``)."""
-    path = os.path.join(snapshot_dir(out_dir), f"snap-{seq:06d}.json")
-    if not os.path.exists(path):
-        snapshot_partitions(out_dir, seq)
-    with open(path) as f:
-        return list(json.load(f).get("eq_delete_files") or [])
+        snap = json.load(f)
+    return list(snap.get("delete_files") or []), list(snap.get("eq_delete_files") or [])
 
 
 def next_partition_base(out_dir: str) -> int:

@@ -113,37 +113,42 @@ def file_prunes(files: list[str], prune: list[tuple]) -> list[str]:
     Footer preads run through a thread pool (IO-bound; order kept)."""
 
     def survives(f: str) -> bool:
-        rgs = file_meta_path(f).get(4) or []
-        return not rgs or not all(_rg_excluded(rg, prune) for rg in rgs)
+        meta = file_meta_path(f)
+        rgs = meta.get(4) or []
+        return not rgs or not all(_rg_excluded(rg, prune, schema=meta.get(2)) for rg in rgs)
 
     return [f for f, ok in zip(files, pz.fan_out(survives, files)) if ok]
 
 
-def _rg_excluded(rg: dict, prune: list[tuple], path: str | None = None) -> bool:
+def _rg_excluded(
+    rg: dict, prune: list[tuple], path: str | None = None, schema: list | None = None
+) -> bool:
     """One row group provably excluded by some predicate: the footer
-    Statistics of every predicate column first; then, given the file
+    Statistics of every predicate column first, read under its
+    ``schema`` element (``core.prune.footer_zone``); then, given the file
     ``path``, each ==/IN probe tries the chunk's parquet BloomFilter
     (BloomFilter.md; probabilistic, no false negatives) and — when
     encoding_stats prove full dictionary encoding — the dictionary page
     itself (parquet-mr DictionaryFilter semantics: the dict IS the exact
     distinct set). One bounded pread per probe, never a data page."""
     preds = [
-        (cc[3], pz.footer_zone(cc[3]), op, v)
+        (cc[3], leaf, pz.footer_zone(cc[3], leaf), op, v)
         for c, op, v in prune
         if (cc := pz.footer_chunk(rg, c)) is not None
+        for leaf in (pz.footer_leaf(schema, c),)
     ]
-    if any(pz.excludes(z, op, v) for _, z, op, v in preds):
+    if any(pz.excludes(z, op, v) for _, _, z, op, v in preds):
         return True
     return path is not None and any(
         pz.point_excluded(
             z,
             op,
             v,
-            PHYSICAL_TYPES.get(md[1]),
+            None if pz.unordered_leaf(leaf) else PHYSICAL_TYPES.get(md[1]),
             lambda k: bloom_probe_file(path, md, k),
             lambda: dict_values_file(path, md),
         )
-        for md, z, op, v in preds
+        for md, leaf, z, op, v in preds
     )
 
 
@@ -158,8 +163,12 @@ def plan_scan_tasks(files: list[str], prune: list[tuple] | None) -> list[tuple[s
     the task list stays deterministic."""
 
     def plan_file(f: str) -> list[tuple[str, int]]:
-        rgs = file_meta_path(f).get(4) or []
-        return [(f, i) for i, rg in enumerate(rgs) if not (prune and _rg_excluded(rg, prune, f))]
+        meta = file_meta_path(f)
+        return [
+            (f, i)
+            for i, rg in enumerate(meta.get(4) or [])
+            if not (prune and _rg_excluded(rg, prune, f, meta.get(2)))
+        ]
 
     return [t for group in pz.fan_out(plan_file, files) for t in group]
 

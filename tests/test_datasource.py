@@ -90,7 +90,7 @@ def test_filter_translation_rules():
     from parquet_go_spark.spark.datasource import _filter_to_prune
 
     assert _filter_to_prune(EqualTo(("url",), "x")) == [("url", "==", "x")]
-    assert _filter_to_prune(GreaterThan(("n",), 5)) == [("n", ">=", 5)]
+    assert _filter_to_prune(GreaterThan(("n",), 5)) == [("n", ">", 5)]
     assert _filter_to_prune(LessThanOrEqual(("n",), 5)) == [("n", "<=", 5)]
     # nested paths and non-literal-friendly values are not pruned
     assert _filter_to_prune(EqualTo(("a", "b"), 1)) == []
@@ -106,7 +106,7 @@ def test_filter_translation_rules():
     ts = dt.datetime(2021, 3, 4, 5, 6, 7, 123456)
     micros = (ts - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
     assert _filter_to_prune(EqualTo(("warc_ts",), ts)) == [("warc_ts", "==", micros)]
-    assert _filter_to_prune(GreaterThan(("d",), dt.date(1970, 1, 11))) == [("d", ">=", 10)]
+    assert _filter_to_prune(GreaterThan(("d",), dt.date(1970, 1, 11))) == [("d", ">", 10)]
 
 
 def test_in_and_startswith_pushdown_correct(spark, enc_dir):

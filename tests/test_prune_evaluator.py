@@ -353,3 +353,62 @@ def test_parquet_units_holding_a_match_survive(tmp_path_factory, case):
             assert all(any(lo <= h < hi for lo, hi in ranges) for h in rg_hits), (ranges, rg_hits)
     if hits:
         assert file_prunes([str(p)], preds) == [str(p)]
+
+
+# ----------------------------------- bounds read under the logical type
+
+
+def _both_tiers_keep(path: str, pred) -> None:
+    """Neither the row-group tier (footer Statistics) nor the ColumnIndex
+    tier excludes the file's one row group."""
+    buf = open(path, "rb").read()
+    meta = file_meta(buf)
+    assert plan_scan_tasks([path], [pred]) == [(path, 0)]
+    ranges = page_prune_ranges(buf, meta, 0, [pred])
+    assert ranges is None or ranges == [(0, int(meta[4][0][3]))]
+
+
+@pytest.mark.parametrize("pred", [("u", "==", 3_000_000_000), ("u", ">=", 2_000_000_000)])
+def test_uint32_bounds_keep_their_row_group(tmp_path, pred):
+    # the stats are the uint32 bits; decoded signed, 3e9 reads as negative
+    p = str(tmp_path / "u.parquet")
+    pq.write_table(
+        pa.table({"u": pa.array([1, 3_000_000_000], pa.uint32())}), p, write_page_index=True
+    )
+    _both_tiers_keep(p, pred)
+
+
+@pytest.mark.parametrize("op", ["==", ">="])
+def test_millisecond_timestamp_bounds_keep_their_row_group(tmp_path, op):
+    # the stats are epoch millis; a pushed-down timestamp is epoch micros
+    import datetime as dt
+
+    from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual
+
+    from parquet_go_spark.spark.datasource import _filter_to_prune
+
+    t0 = dt.datetime(2021, 1, 1)
+    p = str(tmp_path / "ms.parquet")
+    pq.write_table(
+        pa.table({"ts": pa.array([t0, t0 + dt.timedelta(days=1)], pa.timestamp("ms"))}),
+        p,
+        coerce_timestamps="ms",
+        write_page_index=True,
+    )
+    (pred,) = _filter_to_prune({"==": EqualTo, ">=": GreaterThanOrEqual}[op](("ts",), t0))
+    _both_tiers_keep(p, pred)
+
+
+@pytest.mark.spark
+def test_int32_decimal_bounds_keep_their_row_group(spark, tmp_path):
+    # Spark stores decimal(5,2) as INT32 with unscaled stats {150, 225}
+    import decimal
+    import glob
+
+    out = str(tmp_path / "dec")
+    spark.createDataFrame(
+        [(decimal.Decimal("1.50"),), (decimal.Decimal("2.25"),)], "d decimal(5,2)"
+    ).coalesce(1).write.parquet(out)
+    (p,) = glob.glob(f"{out}/*.parquet")
+    assert file_meta_path(p)[4][0][1][0][3][1] == 1  # physical INT32
+    _both_tiers_keep(p, ("d", "==", decimal.Decimal("2.25")))
