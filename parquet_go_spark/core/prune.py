@@ -16,13 +16,25 @@ min/max statistics but never reads them (``README.md:47``).
 from __future__ import annotations
 
 import decimal
+import operator
 import struct as _s
 from collections.abc import Callable
 from typing import NamedTuple
 
 import numpy as np
 
-OPS = frozenset({"==", "in", "<", "<=", ">", ">=", "notnull"})
+# The comparison ops, each with the Python operator of the zone test
+# below and the ``pyarrow.compute`` function of the exact Arrow re-apply
+# (``maintenance.delete_where``): an op the prune tiers accept is one the
+# delete path applies.
+COMPARE = {
+    "==": (operator.eq, "equal"),
+    "<": (operator.lt, "less"),
+    "<=": (operator.le, "less_equal"),
+    ">": (operator.gt, "greater"),
+    ">=": (operator.ge, "greater_equal"),
+}
+OPS = frozenset({*COMPARE, "in", "notnull"})
 POINT_OPS = ("==", "in")
 _NUMBER = (int, float, decimal.Decimal)
 PLAIN_FORMATS = {1: "<i", 2: "<q", 4: "<f", 5: "<d"}  # Parquet physical type id -> struct
@@ -193,10 +205,13 @@ def excludes(zone: Zone, op: str, value) -> bool:
     if op == "==":
         return (lo is not None and v < lo) or (hi is not None and v > hi)
     if op in ("<", "<="):
-        return lo is not None and (lo >= v if op == "<" else lo > v)
-    if hi is None or isinstance(hi, float):
+        bound = lo
+    elif isinstance(hi, float):
         return False
-    return hi <= v if op == ">" else hi < v
+    else:
+        bound = hi
+    # no row can pass when even the unit's most favourable bound fails
+    return bound is not None and not COMPARE[op][0](bound, v)
 
 
 # ------------------------------------------------- point-lookup membership

@@ -26,7 +26,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..kernels import alp, bytearrays, deltabp, dictenc, forbp, hybrid
-from .codecs import DICT_MAX, encode_values
+from .codecs import DICT_MAX, encode_dictionary, encode_values
 from .columns import ColumnData
 
 __all__ = ["choose_encoding", "COST_PENALTY"]
@@ -51,7 +51,9 @@ COST_PENALTY = {
 }
 
 
-def _sample_distinct_ratio(col: ColumnData, k: int = 4096) -> float:
+def _sample_distinct_ratio(col: ColumnData, ends: np.ndarray | None, k: int = 4096) -> float:
+    """Distinct share of the first ``k`` values; ``ends`` is
+    ``np.cumsum(col.lengths)`` for a bytes column."""
     n = col.num_values
     if n == 0:
         return 0.0
@@ -65,19 +67,23 @@ def _sample_distinct_ratio(col: ColumnData, k: int = 4096) -> float:
     if col.ptype == "bytes":
         # hash length + first 8 + last 8 bytes as a cheap distinct proxy;
         # a weak proxy (length+first byte) collides on long near-unique
-        # columns and triggers a pointless full factorize
+        # columns and triggers a pointless full factorize. Bytes past the
+        # k-th value read as 0: a gather with clipped indices, not a
+        # padded copy of every sampled byte; each row of 8 gathered
+        # bytes is read as one little-endian uint64
         lens = col.lengths[:k].astype(np.int64)
-        starts = np.concatenate([[0], np.cumsum(col.lengths)[:-1]])[:k].astype(np.int64)
-        ends = starts + lens
-        hi = int(ends.max()) if k else 0
-        pad = np.concatenate([col.data[:hi], np.zeros(8, np.uint8)])
+        ends = ends[:k].astype(np.int64)
+        starts = ends - lens
+        hi = int(ends[-1])
+        if hi == 0:
+            return 1 / k  # k empty values
         off = np.arange(8)
-        pw = np.array([1 << (8 * i) for i in range(8)], dtype=np.uint64)
-        fidx = starts[:, None] + off
-        fvals = pad[fidx] * (off[None, :] < lens[:, None])
-        h1 = fvals.astype(np.uint64) @ pw
+        fidx = np.minimum(starts[:, None] + off, hi - 1)
+        fvals = col.data[fidx] * (off[None, :] < lens[:, None])
+        h1 = fvals.view("<u8")[:, 0].astype(np.uint64)
         lidx = np.maximum(ends[:, None] - 8 + off, starts[:, None])
-        h2 = pad[lidx].astype(np.uint64) @ pw
+        lvals = np.where(lidx < hi, col.data[np.minimum(lidx, hi - 1)], 0).astype(np.uint8)
+        h2 = lvals.view("<u8")[:, 0].astype(np.uint64)
         h = h1 * np.uint64(0x9E3779B97F4A7C15) ^ h2 ^ lens.astype(np.uint64)
         return len(np.unique(h)) / k
     return len(np.unique(col.values[:k])) / k
@@ -113,7 +119,10 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
     distinct = -1
     dict_size = 0
     est: dict[str, float] = {}
-    sample_ratio = _sample_distinct_ratio(col)
+    # value end offsets of a bytes column: every byte-capped sample below
+    # cuts at a searchsorted into this one prefix sum
+    ends = np.cumsum(col.lengths) if col.ptype == "bytes" else None
+    sample_ratio = _sample_distinct_ratio(col, ends)
     if sample_ratio < 0.9 or n <= 8192:
         codes, uniques, distinct = _factorize(col)
         if distinct <= DICT_MAX:
@@ -136,16 +145,15 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
     if col.ptype == "bytes":
         total = int(col.lengths.sum())
         est["plain"] = total + 4 * n
-        # delta_length: lengths stream is cheap to encode exactly
-        lens_enc = deltabp.encode(col.lengths.astype(np.int32), 32)
-        est["delta_length"] = total + len(lens_enc)
+        # delta_length: the lengths stream's exact size, in closed form
+        est["delta_length"] = total + deltabp.estimate_size(col.lengths, 32)
         # zdict: entropy coding of the value stream under the chunk's
         # one plan (dict, codec, level — probed on the whole column),
         # estimated on a byte-capped prefix sample (the ratio is
         # positionally stable on one column's data)
         if total >= 4096:
             plan = hints["zdict"] = bytearrays.plan_zdict(col.lengths, col.data)
-            zk = min(n, int(np.searchsorted(np.cumsum(col.lengths), SAMPLE_BYTES)) + 1)
+            zk = min(n, int(np.searchsorted(ends, SAMPLE_BYTES)) + 1)
             z_total = int(col.lengths[:zk].sum())
             z_enc = bytearrays.encode_zdict(
                 col.lengths[:zk], col.data[:z_total], plan.zdict, level=plan.level, codec=plan.codec
@@ -165,15 +173,15 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
         if total <= 4 * SAMPLE_BYTES:
             s_k, s_total = n, total
         else:
-            s_k = min(n, int(np.searchsorted(np.cumsum(col.lengths), 4 * SAMPLE_BYTES)) + 1)
+            s_k = min(n, int(np.searchsorted(ends, 4 * SAMPLE_BYTES)) + 1)
             s_total = int(col.lengths[:s_k].sum())
         prefixes = bytearrays.common_prefix_lengths(col.lengths[:s_k], col.data[:s_total])
         saved = int(prefixes.sum() * (total / max(s_total, 1)))
         if saved > total // 20:
-            pfx_enc = deltabp.encode(prefixes.astype(np.int32), 32)
-            sfx_enc = deltabp.encode((col.lengths[:s_k] - prefixes).astype(np.int32), 32)
+            pfx_size = deltabp.estimate_size(prefixes, 32)
+            sfx_size = deltabp.estimate_size(col.lengths[:s_k] - prefixes, 32)
             scale = n / max(s_k, 1)
-            est["delta_bytes"] = (total - saved) + int((len(pfx_enc) + len(sfx_enc)) * scale)
+            est["delta_bytes"] = (total - saved) + int((pfx_size + sfx_size) * scale)
         # fsst: train on one strided string sample, estimate on a DISJOINT
         # strided sample — a prefix estimate overlaps the training strings
         # and overstates the ratio badly on heterogeneous columns.
@@ -199,7 +207,7 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
             sample_bytes = int(min(SAMPLE_BYTES, max(total // 8, 4096)))
             train_bytes = int(min(1 << 16, max(total // 16, 4096)))
             n_strs = len(col.lengths)
-            starts = np.concatenate([[0], np.cumsum(col.lengths)[:-1]])
+            starts = ends - col.lengths
             if total <= 2 * sample_bytes:
                 table = hints["fsst"] = _fsst.train(col.lengths, col.data, sample_bytes=train_bytes)
                 s_enc = _fsst.encode_column(col.lengths, col.data, table)
@@ -229,8 +237,8 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
         if col.ptype in ("int32", "int64"):
             bits = 32 if col.ptype == "int32" else 64
             k = min(n, SAMPLE_VALUES)
-            s_enc = deltabp.encode(col.values[:k], bits)
-            est["delta_bp"] = len(s_enc) / max(k * itemsize, 1) * n * itemsize
+            s_size = deltabp.estimate_size(col.values[:k], bits)
+            est["delta_bp"] = s_size / max(k * itemsize, 1) * n * itemsize
             # frame-of-reference on values: closed-form exact size (one
             # min/max pass over the full column — no sample encode needed)
             est["for_bp"] = forbp.estimate_size(col.values, bits)
@@ -255,7 +263,7 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
                 k = min(n, 8192)
                 if col.ptype == "bytes":
                     # byte-capped sample: 8192 long strings could be tens of MB
-                    k = min(k, int(np.searchsorted(np.cumsum(col.lengths), SAMPLE_BYTES)) + 1)
+                    k = min(k, int(np.searchsorted(ends, SAMPLE_BYTES)) + 1)
                     dhi = int(col.lengths[:k].sum())
                     if e == "zdict" and k == z_sample[0]:
                         enc_s = z_sample[1]  # the same prefix, already encoded above
@@ -271,6 +279,10 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
                     raw_s = k * (4 if col.ptype in ("int32", "float") else 8)
                 comp_s = len(_compress(enc_s, compression))
                 est[e] = comp_s / max(raw_s, 1) * est.get("plain", raw_s)
+                if e == "rle_dict" and uniques is not None and dict_size:
+                    # the sample prices the index stream; the chunk also
+                    # stores its whole dictionary page, compressed the same way
+                    est[e] += len(_compress(encode_dictionary(uniques, col.ptype), compression))
             except Exception:
                 pass
 

@@ -66,13 +66,16 @@ def _zstd_codec():
 
 
 def _sample_stream(raw) -> bytes:
-    """8 disjoint 32 KiB strided slices (or the whole stream if small) —
-    the probe material for every side-by-side codec/level comparison
-    (a head-only probe mischose whole chunks; see encode_zdict)."""
+    """The probe material for every side-by-side codec/level comparison
+    (a head-only probe mischose whole chunks; see encode_zdict): the
+    whole stream up to 256 KiB, 8 disjoint strided 32 KiB slices up to
+    1 MiB, and 4 strided 16 KiB slices (64 KiB) above that, where DEFLATE
+    must win by 10% and a quarter-size sample still separates the
+    codecs."""
     n = len(raw)
     if n <= 1 << 18:
         return bytes(raw)
-    k, w = 8, 1 << 15
+    k, w = (8, 1 << 15) if n <= 1 << 20 else (4, 1 << 14)
     step = n // k
     return b"".join(bytes(raw[i * step : i * step + w]) for i in range(k))
 
@@ -88,10 +91,16 @@ def choose_zdict_codec(
     justify its cost, while on small streams (speed irrelevant, trained
     dict at its most useful) the smaller output simply wins.
 
+    The sample (:func:`_sample_stream`) is the whole stream up to 256 KiB,
+    8 strided 32 KiB slices (256 KiB) up to 1 MiB, and 4 strided 16 KiB
+    slices (64 KiB) above 1 MiB: inside the 10% margin a quarter-size
+    sample decides the same codec at a quarter of the probe's cost.
+
     The probe must NOT hand DEFLATE the trained dict when the stream is
-    strided-sampled: the sample is 8 disjoint 32 KiB window STARTS, and
-    a dict only helps DEFLATE at a window start, so a dicted probe
-    over-represents the dict's benefit ~8x vs the contiguous stream.
+    strided-sampled: every slice of the sample is a window START, and a
+    dict only helps DEFLATE at a window start, so a dicted probe
+    over-represents the dict's benefit once per slice (~8x at 8 slices)
+    vs the contiguous stream.
     That bias sent an 18.7 MB text chunk to DEFLATE-6 at 24 MB/s when
     zstd-3 was 10x faster AND smaller on the full stream (r5 profile).
     When the sample IS the whole stream the dicted probe is exact.
@@ -130,8 +139,9 @@ def choose_deflate_level(data, deflate6: int | None = None) -> int:
     sampled side-by-side picks 6 only when it saves >= 20%. Hoisted to
     ONE probe per chunk by :func:`plan_zdict` (every page inherits via
     ``level=``), the same per-chunk-hint shape as ``choose_zdict_codec``
-    and the ALP (e, rb) search — the probe costs two 256 KiB compress
-    passes, which dominated per-page encode on DEFLATE chunks.
+    and the ALP (e, rb) search — the probe costs two compress passes over
+    :func:`_sample_stream`'s sample, which dominated per-page encode on
+    DEFLATE chunks.
     ``deflate6`` is the strided sample's DEFLATE-6 size when the caller
     already compressed it (the codec probe's undicted pass); the probe
     then runs only the level-1 pass."""
@@ -284,35 +294,62 @@ def decode_delta_length(
     return lengths, data, pos + total
 
 
+_HEAD = 32  # leading bytes of every value compared in one gather
+_HEAD_PAIRS = 1 << 16  # pairs per head gather: bounds its scratch to ~4 MiB
+
+
+def _segmented_prefix(data: np.ndarray, a: np.ndarray, b: np.ndarray, cmp_len: np.ndarray) -> np.ndarray:
+    """Shared prefix of the byte runs ``data[a[i]:]`` and ``data[b[i]:]``
+    over their first ``cmp_len[i] > 0`` bytes: one elementwise compare of
+    every byte, first mismatch per run by ``np.minimum.reduceat``."""
+    seg_starts = np.concatenate([[0], np.cumsum(cmp_len)[:-1]])
+    within = np.arange(int(cmp_len.sum())) - np.repeat(seg_starts, cmp_len)
+    neq = data[np.repeat(a, cmp_len) + within] != data[np.repeat(b, cmp_len) + within]
+    miss = np.where(neq, within, np.iinfo(np.int64).max)
+    return np.minimum(np.minimum.reduceat(miss, seg_starts), cmp_len)
+
+
 def common_prefix_lengths(lengths: np.ndarray, data: np.ndarray) -> np.ndarray:
     """prefix[i] = shared prefix length of value i with value i-1 (prefix[0]=0).
 
-    Segmented compare: value i's first ``min(len[i-1], len[i])`` bytes are
-    compared elementwise with value i-1's; the first mismatch position is
-    found with ``np.minimum.reduceat``.
+    The first 32 bytes of every value (fewer when no pair is that long)
+    are gathered as rows of one sliding-window view of the stream, and
+    each row is compared with the next; the first mismatch, capped at the
+    shorter value's length, is the prefix. Only pairs still equal after
+    32 bytes go on to a segmented compare of their tails, so the cost is
+    per pair, not per shared byte.
     """
     n = len(lengths)
     out = np.zeros(n, dtype=np.int64)
     if n <= 1:
         return out
+    lengths = lengths.astype(np.int64, copy=False)
     starts = np.concatenate([[0], np.cumsum(lengths)[:-1]])
     cmp_len = np.minimum(lengths[:-1], lengths[1:])  # for pairs (i-1, i)
-    total = int(cmp_len.sum())
-    if total == 0:
+    head = min(_HEAD, int(cmp_len.max()))
+    if head == 0:
         return out
-    seg_starts_flat = np.concatenate([[0], np.cumsum(cmp_len)[:-1]])
-    within = np.arange(total) - np.repeat(seg_starts_flat, cmp_len)
-    prev_idx = np.repeat(starts[:-1], cmp_len) + within
-    cur_idx = np.repeat(starts[1:], cmp_len) + within
-    neq = data[prev_idx] != data[cur_idx]
-    # first mismatch index per segment (or cmp_len if none)
-    miss = np.where(neq, within, np.iinfo(np.int64).max)
-    nonempty = cmp_len > 0
-    red = np.minimum.reduceat(miss, seg_starts_flat[nonempty]) if nonempty.any() else miss[:0]
-    pref = cmp_len.copy()
-    pref_ne = np.minimum(red, cmp_len[nonempty])
-    pref[nonempty] = pref_ne
-    out[1:] = pref
+    win = np.lib.stride_tricks.sliding_window_view(data, head)  # no copy
+    pref = out[1:]
+    for lo in range(0, n - 1, _HEAD_PAIRS):
+        hi = min(lo + _HEAD_PAIRS, n - 1)
+        rows = starts[lo : hi + 1]
+        g = win[np.minimum(rows, len(win) - 1)]
+        late = np.flatnonzero(rows >= len(win))
+        if len(late):
+            # values starting within the stream's last ``head`` bytes: gather
+            # with clipped indices (bytes past a value are capped away below)
+            g[late] = data[np.minimum(rows[late, None] + np.arange(head), len(data) - 1)]
+        neq = g[:-1] != g[1:]
+        first = neq.argmax(axis=1)
+        first[~neq[np.arange(hi - lo), first]] = head  # no mismatch in the head
+        pref[lo:hi] = np.minimum(first, cmp_len[lo:hi])
+    tail = np.flatnonzero(pref == head)
+    tail = tail[cmp_len[tail] > head]
+    if len(tail):
+        pref[tail] += _segmented_prefix(
+            data, starts[tail] + head, starts[tail + 1] + head, cmp_len[tail] - head
+        )
     return out
 
 

@@ -27,27 +27,25 @@ from __future__ import annotations
 import numpy as np
 
 from . import bitpack
-from .varint import read_uvarint, read_varint, uvarint, varint, varint_array
+from .varint import read_uvarint, read_varint, uvarint, varint, varint_array, zigzag
 
-__all__ = ["encode", "decode", "BLOCK_SIZE", "MINI_BLOCKS", "MINI_BLOCK_VALUES"]
+__all__ = ["encode", "estimate_size", "decode", "BLOCK_SIZE", "MINI_BLOCKS", "MINI_BLOCK_VALUES"]
 
 BLOCK_SIZE = 128
 MINI_BLOCKS = 4
 MINI_BLOCK_VALUES = BLOCK_SIZE // MINI_BLOCKS  # 32
 _GO_MAXINT32 = 2147483647
+# a single value flushes one empty block: zigzag(MaxInt32) + four zero widths
+_EMPTY_BLOCK = varint(_GO_MAXINT32) + b"\x00" * MINI_BLOCKS
+
+
+_POW2 = np.left_shift(np.uint64(1), np.arange(64, dtype=np.uint64))  # 2^0 .. 2^63
 
 
 def _bit_length_u64(m: np.ndarray) -> np.ndarray:
-    """Exact per-element bit_length of a uint64 array (binary CLZ)."""
-    m = m.copy()
-    bw = np.zeros(m.shape, dtype=np.int64)
-    for shift in (32, 16, 8, 4, 2, 1):
-        t = m >> np.uint64(shift)
-        hit = t > 0
-        bw[hit] += shift
-        m[hit] = t[hit]
-    bw[m > 0] += 1
-    return bw
+    """Exact per-element bit_length of a uint64 array: how many powers of
+    two are <= the value (integer compares, no float rounding)."""
+    return np.searchsorted(_POW2, m, side="right")
 
 
 def _scatter_var(out: np.ndarray, starts: np.ndarray, lengths: np.ndarray, src: np.ndarray):
@@ -59,22 +57,23 @@ def _scatter_var(out: np.ndarray, starts: np.ndarray, lengths: np.ndarray, src: 
     out[idx] = src
 
 
-def encode(values: np.ndarray, bits: int) -> bytes:
-    """Encode int32 (bits=32) or int64 (bits=64) values."""
-    sdt = np.int32 if bits == 32 else np.int64
-    udt = np.uint32 if bits == 32 else np.uint64
-    v = values.astype(sdt, copy=False)
-    n = len(v)
-    first = int(v[0]) if n else 0
-    header = uvarint(BLOCK_SIZE) + uvarint(MINI_BLOCKS) + uvarint(n) + varint(first)
-    if n == 0:
-        return header
-    if n == 1:
-        return header + varint(_GO_MAXINT32) + b"\x00" * MINI_BLOCKS
+def _head(values: np.ndarray, bits: int) -> tuple[np.ndarray, bytes]:
+    """-> (values as the signed type, stream header)."""
+    v = values.astype(np.int32 if bits == 32 else np.int64, copy=False)
+    first = int(v[0]) if len(v) else 0
+    return v, uvarint(BLOCK_SIZE) + uvarint(MINI_BLOCKS) + uvarint(len(v)) + varint(first)
 
+
+def _layout(v: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Block layout of a stream of n >= 2 values -> (mins, mb, bw): each
+    block's minDelta, the (miniblocks x 32) deltas minus their block's
+    minDelta (padding zeroed), and each miniblock's bit width (0 for a
+    miniblock past the last delta). ``encode`` packs from it and
+    ``estimate_size`` counts from it, so the size model is the writer's."""
+    sdt = v.dtype.type
     with np.errstate(over="ignore"):
         deltas = v[1:] - v[:-1]  # wrapping
-    nd = n - 1
+    nd = len(deltas)
     nblocks = -(-nd // BLOCK_SIZE)
     pad = nblocks * BLOCK_SIZE - nd
     if pad:
@@ -84,18 +83,45 @@ def encode(values: np.ndarray, bits: int) -> bytes:
     blocks = deltas.reshape(nblocks, BLOCK_SIZE)
     mins = np.minimum(blocks.min(axis=1), sdt(_GO_MAXINT32))
     with np.errstate(over="ignore"):
-        adj = (blocks - mins[:, None]).view(udt)
-    adj_flat = adj.reshape(-1).astype(np.uint64)
-    adj_flat[nd:] = 0  # zero the padding (reference pads miniblocks with 0)
+        adj = (blocks - mins[:, None]).view(f"u{v.itemsize}").reshape(-1)
+    adj[nd:] = 0  # zero the padding (reference pads miniblocks with 0)
+    mb = adj.reshape(nblocks * MINI_BLOCKS, MINI_BLOCK_VALUES)
+    bw = _bit_length_u64(mb.max(axis=1).astype(np.uint64))
+    bw[np.arange(nblocks * MINI_BLOCKS) * MINI_BLOCK_VALUES >= nd] = 0
+    return mins, mb, bw
 
-    mb = adj_flat.reshape(nblocks * MINI_BLOCKS, MINI_BLOCK_VALUES)
-    present = (np.arange(nblocks * MINI_BLOCKS) * MINI_BLOCK_VALUES) < nd
-    bw = _bit_length_u64(mb.max(axis=1))
-    bw[~present] = 0
 
+def estimate_size(values: np.ndarray, bits: int) -> int:
+    """``len(encode(values, bits))`` from the block minima and miniblock
+    widths alone: nothing is bit-packed."""
+    v, header = _head(values, bits)
+    if len(v) < 2:
+        return len(header) + (len(_EMPTY_BLOCK) if len(v) else 0)
+    mins, _, bw = _layout(v)
+    # a uvarint takes one byte per started 7 bits, and at least one
+    min_lens = np.maximum((_bit_length_u64(zigzag(mins)) + 6) // 7, 1)
+    return (
+        len(header)
+        + int(min_lens.sum())
+        + MINI_BLOCKS * len(mins)
+        + int(bw.sum()) * (MINI_BLOCK_VALUES // 8)
+    )
+
+
+def encode(values: np.ndarray, bits: int) -> bytes:
+    """Encode int32 (bits=32) or int64 (bits=64) values."""
+    v, header = _head(values, bits)
+    n = len(v)
+    if n == 0:
+        return header
+    if n == 1:
+        return header + _EMPTY_BLOCK
+
+    mins, mb, bw = _layout(v)
+    nblocks = len(mins)
     min_bytes, min_lens = varint_array(mins.astype(np.int64))
     bw_u8 = bw.reshape(nblocks, MINI_BLOCKS).astype(np.uint8)
-    mb_sizes = np.where(present, bw * (MINI_BLOCK_VALUES // 8), 0)
+    mb_sizes = bw * (MINI_BLOCK_VALUES // 8)
     blk_data = mb_sizes.reshape(nblocks, MINI_BLOCKS).sum(axis=1)
     blk_total = min_lens + MINI_BLOCKS + blk_data
     blk_start = np.concatenate([[0], np.cumsum(blk_total)[:-1]])
@@ -113,11 +139,11 @@ def encode(values: np.ndarray, bits: int) -> bytes:
     mb_targets = (
         np.repeat(blk_start + min_lens + MINI_BLOCKS, MINI_BLOCKS) + mb_off_in_blk.ravel()
     )
-    for w in np.unique(bw[present]):
+    for w in np.unique(bw):
         w = int(w)
-        sel = present & (bw == w)
         if w == 0:
             continue
+        sel = bw == w
         packed = np.frombuffer(bitpack.pack(mb[sel].ravel(), w), dtype=np.uint8)
         seg = w * (MINI_BLOCK_VALUES // 8)
         tgt = mb_targets[sel]

@@ -79,7 +79,9 @@ def _read_partition(enc_dir: str, part: _PGSPartition):
     import os
 
     from .decode_job import decode_partition
+    from .session import freeze_task_heap
 
+    freeze_task_heap()
     if part.pid < 0:
         return
     with open(os.path.join(enc_dir, f"part-{part.pid:05d}.bin"), "rb") as fh:
@@ -307,7 +309,9 @@ class _PGSWriter(DataSourceArrowWriter):
         from pyspark import TaskContext
 
         from .encode_job import encode_columns_to_partition
+        from .session import freeze_task_heap
 
+        freeze_task_heap()
         pid = self.pid_base + TaskContext.get().partitionId()
         batches = list(iterator)
         table = pa.Table.from_batches(batches) if batches else None
@@ -628,6 +632,9 @@ class _PGSQReaderNoPushdown(DataSourceReader):
         return [_PGSQPartition(f, rg) for f, rg in tasks] or [_PGSQPartition("", -1)]
 
     def read(self, partition: _PGSQPartition):
+        from .session import freeze_task_heap
+
+        freeze_task_heap()
         if not partition.path:
             return
         from .parquet_source import read_row_group

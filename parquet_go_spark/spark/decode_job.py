@@ -28,6 +28,7 @@ from ..core.chunk import chunk_page_index, decode_chunk
 from ..core.columns import one_chunk, to_arrow
 from . import manifest as mf
 from .encode_job import parse_partition_file, partition_file_epoch
+from .session import freeze_task_heap
 
 
 def _read_chunk_dict(enc_dir: str, pid: int, col: str) -> set | None:
@@ -564,6 +565,7 @@ def decode_table(
     files = spark.read.format("binaryFile").load(paths).select("path", "content")
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        freeze_task_heap()
         for b in batches:
             content = b.column("content")
             for i, path in enumerate(b.column("path")):

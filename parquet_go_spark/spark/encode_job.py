@@ -29,6 +29,7 @@ from ..core.chunk import encode_chunk
 from ..core.columns import ColumnData, from_arrow
 from ..kernels.varint import read_uvarint, uvarint
 from . import manifest as mf
+from .session import freeze_task_heap
 
 FILE_MAGIC = b"PGSF"
 
@@ -492,6 +493,7 @@ def encode_table(
         return pa.RecordBatch.from_pydict(cols_out, schema=mf.MANIFEST_SCHEMA)
 
     def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        freeze_task_heap()
         pid = pid_base + TaskContext.get().partitionId()
         fpath = os.path.join(out_dir, f"part-{pid:05d}.bin")
         if resume and os.path.exists(mf.part_manifest_path(out_dir, pid)) and os.path.exists(fpath):

@@ -27,6 +27,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import manifest as mf
+from ..core import prune as pz
 from ..core.columns import one_chunk
 from .decode_job import ScanPlan, decode_partition, decode_table, plan_scan, surviving_partitions
 from .encode_job import encode_columns_to_partition, encode_table, partition_file_epoch
@@ -445,7 +446,7 @@ def delete_where(
 ) -> dict:
     """Delete the rows matching ``predicate`` (a conjunction of the same
     ``(column, op, value)`` triples ``decode_table(prune=...)`` takes,
-    op in {"==", "<=", ">=", "in", "notnull"}) — the take-down/GDPR
+    op in ``core.prune.OPS``) — the take-down/GDPR
     operation a web corpus needs.
 
     Both modes share the plan front: the manifest stats/bloom tiers
@@ -545,12 +546,8 @@ def _not_matching_mask(table, predicate: list[tuple]):
     mask = None
     for col, op, val in predicate:
         c = table.column(col)
-        if op == "==":
-            m = pc.equal(c, val)
-        elif op == "<=":
-            m = pc.less_equal(c, val)
-        elif op == ">=":
-            m = pc.greater_equal(c, val)
+        if op in pz.COMPARE:
+            m = pc.call_function(pz.COMPARE[op][1], [c, val])
         elif op == "in":
             m = pc.is_in(c, value_set=pa.array(list(val)))
         elif op == "notnull":

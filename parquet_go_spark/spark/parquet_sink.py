@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..compat.parquet_writer import write_parquet
 from . import manifest as mf
+from .session import freeze_task_heap
 
 __all__ = ["encode_table_parquet"]
 
@@ -64,6 +65,7 @@ def encode_table_parquet(
         return pa.RecordBatch.from_pydict(out, schema=mf.MANIFEST_SCHEMA)
 
     def sink(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        freeze_task_heap()
         import zlib
 
         pid = TaskContext.get().partitionId()

@@ -44,6 +44,7 @@ from ..compat.parquet_reader import (
 from ..core import prune as pz
 from ..core.columns import one_chunk
 from .decode_job import arrow_type_of_ddl
+from .session import freeze_task_heap
 
 __all__ = ["read_parquet_table", "parquet_scan_schema", "file_prunes"]
 
@@ -221,6 +222,7 @@ def read_parquet_table(
     ).repartition(min(len(tasks), 4096), "path", "rg")
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        freeze_task_heap()
         for b in batches:
             for p, rg in zip(b.column("path"), b.column("rg")):
                 tbl = read_row_group(p.as_py(), rg.as_py(), schema, prune)

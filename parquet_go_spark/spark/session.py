@@ -5,12 +5,26 @@ Arrow-batched Python UDF transfer, shuffle partitions sized to cores, and
 glibc malloc tuned in the Python workers — this sandbox (and container
 fleets generally) fault in fresh pages very slowly, so workers must reuse
 arena memory instead of mmap/munmap-ing every large numpy temporary.
+
+Every engine task body starts with :func:`freeze_task_heap`. PySpark's
+daemon runs a full ``gc.collect()`` in the worker after every task
+(``pyspark/daemon.py``), and the JVM waits on it before the worker takes
+its next task: Spark reports the wait as "time to start Python workers".
+Without a freeze that collection walks every object the worker holds,
+mostly module state from imports: ~76k objects and ~23 ms on a 4-vCPU
+host after one pages encode task. Freezing at task start moves what
+already exists into the permanent generation, so the collection after
+the task walks only what the task allocated. The previous task's
+garbage is already gone by then: the daemon collected it before handing
+over the next task.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
 
 # keep freed pages in the worker's arena: first-touch page faults are the
@@ -20,6 +34,13 @@ WORKER_ENV = {
     "MALLOC_TRIM_THRESHOLD_": "1073741824",
     "ARROW_DEFAULT_MEMORY_POOL": "system",
 }
+
+
+def freeze_task_heap() -> None:
+    """Inside a Spark task, ``gc.freeze()`` the worker's heap (see the
+    module docstring); anywhere else (the driver, a local call) nothing."""
+    if TaskContext.get() is not None:
+        gc.freeze()
 
 
 def get_spark(
@@ -56,10 +77,10 @@ def get_spark(
         # parallelism (the N vs 4N scaling config pins 64m — the classic
         # HDFS/Iceberg block size); the local[32] default keeps bigger
         # splits so the fixed per-task Python cost stays amortized: ~70 ms
-        # of slot time per task on a 4-vCPU host (tools/task_overhead.py),
-        # the pyspark daemon's per-task gc.collect() among it; without
-        # parquet_go_spark/_zipcache.py every task start would also re-read
-        # pyspark.zip's directory (~280 ms)
+        # of slot time per task on a 4-vCPU host (tools/task_overhead.py)
+        # before freeze_task_heap cut the pyspark daemon's per-task
+        # gc.collect(); without parquet_go_spark/_zipcache.py every task
+        # start would also re-read pyspark.zip's directory (~280 ms)
         .config(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "256m"),

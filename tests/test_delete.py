@@ -91,6 +91,30 @@ def test_delete_unknown_op_rejected(spark, tmp_path):
         delete_where(spark, d, [("seq", "!=", 1)])
 
 
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("op", ["<", ">"])
+def test_delete_strict_ops(spark, tmp_path, op, mode):
+    # the strict ops every prune tier accepts delete too, and the bound
+    # itself survives
+    from parquet_go_spark.spark.decode_job import decode_table
+    from parquet_go_spark.spark.encode_job import encode_table
+    from parquet_go_spark.spark.maintenance import delete_where
+
+    df = _seq_pages(spark, 400)
+    d = str(tmp_path / "enc")
+    encode_table(df, d, key_col="seq", layout="range", partitions=4).collect()
+    seqs = sorted(r["seq"] for r in df.select("seq").collect())
+    pivot = seqs[len(seqs) // 2]
+    hit = F.col("seq") < pivot if op == "<" else F.col("seq") > pivot
+    want = df.filter(hit).count()
+    res = delete_where(spark, d, [("seq", op, pivot)], mode=mode)
+    assert res["rows_deleted"] == want > 0
+    got = decode_table(spark, d)
+    assert got.filter(hit).count() == 0
+    assert got.filter(F.col("seq") == pivot).count() == seqs.count(pivot)
+    assert got.count() == 400 - want
+
+
 def test_merge_into_upserts(spark, tmp_path):
     from parquet_go_spark.spark import manifest as mf
     from parquet_go_spark.spark.decode_job import decode_table

@@ -5,8 +5,10 @@ planned."""
 
 from __future__ import annotations
 
+import hashlib
 import zlib
 from collections import Counter
+from types import SimpleNamespace
 
 import numpy as np
 import pyarrow as pa
@@ -15,7 +17,7 @@ import pytest
 from parquet_go_spark.core import chunk, selector
 from parquet_go_spark.core.chunk import decode_chunk, encode_chunk
 from parquet_go_spark.core.columns import from_arrow, to_arrow
-from parquet_go_spark.kernels import bytearrays, fsst
+from parquet_go_spark.kernels import bytearrays, deltabp, fsst
 from parquet_go_spark.kernels.varint import read_uvarint
 
 PROBES = [
@@ -178,3 +180,33 @@ def test_plan_zdict_shape():
     enc = bytearrays.encode_zdict(lens, data, plan.zdict, level=plan.level, codec=plan.codec)
     out_lens, out, _ = bytearrays.decode_zdict(enc, zdict=plan.zdict)
     assert bytes(out) == raw and np.array_equal(out_lens, lens)
+
+
+@pytest.mark.parametrize("compression", ["snappy", "none"])
+def test_rle_dict_estimate_prices_its_dictionary_page(compression):
+    # 100 unique ~19-byte strings: the dictionary page IS the column, so
+    # rle_dict must lose to delta_length under every block codec. The
+    # compressed re-estimate once priced only the index stream and picked
+    # rle_dict under snappy.
+    vals = [hashlib.sha1(str(i).encode()).hexdigest()[:19] for i in range(100)]
+    cd = from_arrow(pa.array(vals))
+    sizes = {
+        e: len(encode_chunk(cd, encoding=e, compression=compression)[0])
+        for e in ("rle_dict", "delta_length")
+    }
+    assert sizes["delta_length"] < sizes["rle_dict"]
+    assert selector.choose_encoding(cd, compression)[0] == "delta_length"
+
+
+def test_raw_size_probes_encode_nothing(pages_sample, monkeypatch):
+    # the delta-BP raw-size probes are closed-form: with no block codec
+    # there is no compressed re-estimate, so the selector itself never
+    # packs a delta-BP stream
+    def packed(*a, **k):
+        raise AssertionError("choose_encoding packed a delta-BP stream")
+
+    monkeypatch.setattr(
+        selector, "deltabp", SimpleNamespace(estimate_size=deltabp.estimate_size, encode=packed)
+    )
+    for name in pages_sample.column_names:
+        selector.choose_encoding(from_arrow(pages_sample.column(name).combine_chunks()), "none")

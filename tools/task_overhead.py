@@ -4,8 +4,9 @@ vectorized UDF pays before its first batch.
     python tools/task_overhead.py [--cores 4] [--reps 3]
 
 Runs drain-only ``mapInArrow`` jobs of 4, 16 and 64 one-row tasks on
-``get_spark`` (the function imports the engine, as every real UDF does,
-then drains its input) and prints each job's best wall plus the ms per
+``get_spark`` (the function starts like every engine task body: it
+imports the engine and calls ``freeze_task_heap``, then drains its
+input) and prints each job's best wall plus the ms per
 task from the 16→64 slope, so the per-job constant cancels out. With
 ``cores`` slots the slope is ``cores × wall / task``: it is the time one
 slot spends per task, not the job's wall per task.
@@ -28,8 +29,9 @@ TASKS = (4, 16, 64)
 def _drain(batches):
     import pyarrow as pa
 
-    import parquet_go_spark  # noqa: F401  (what every engine UDF imports)
+    from parquet_go_spark.spark.session import freeze_task_heap
 
+    freeze_task_heap()  # what every engine task body runs first
     n = sum(b.num_rows for b in batches)
     yield pa.RecordBatch.from_pydict({"n": [n]})
 
