@@ -164,21 +164,17 @@ def cmd_encode(args) -> int:
     return 0
 
 
-_WHERE_OPS = ("==", "<=", ">=", "in", "notnull")
-
-
 def _parse_where(wheres: list[str]) -> list[tuple]:
-    """col:op:value triples -> prune predicates; values parse as
-    int/float when possible. Unknown ops are REJECTED here: the prune
-    tiers would accept them while the exact re-apply silently fell back
-    to lit(True), returning unfiltered extra rows."""
+    """col:op:value triples -> prune predicates over ``core.prune.OPS``;
+    values parse as int/float when possible. Unknown ops are REJECTED
+    here, before any prune tier or exact re-apply sees them."""
+    from .core.prune import OPS
+
     predicate = []
     for w in wheres:
         col, op, raw = w.split(":", 2)
-        if op not in _WHERE_OPS:
-            raise SystemExit(
-                f"--where op {op!r} not supported (use one of {', '.join(_WHERE_OPS)})"
-            )
+        if op not in OPS:
+            raise SystemExit(f"--where op {op!r} not supported (use one of {', '.join(sorted(OPS))})")
         val: object = raw
         try:
             val = int(raw)
@@ -200,6 +196,8 @@ def _load_table(spark, args):
     footer stats/blooms/dictionaries/PageIndex for parquet) and are then
     re-applied exactly."""
     from pyspark.sql import functions as F
+
+    from .core.prune import COMPARE
 
     cols = args.columns.split(",") if args.columns else None
     prune = _parse_where(args.where) if getattr(args, "where", None) else None
@@ -235,20 +233,16 @@ def _load_table(spark, args):
             as_of=as_of,
             prune=prune,
         )
+    # pruning is conservative, the re-apply is the EXACT filter, with
+    # the comparison operators of the prune tiers' own op table
     for col, op, val in prune or []:
         c = F.col(col)
-        cond = {
-            "==": c == val,
-            "<=": c <= val,
-            ">=": c >= val,
-            "in": c.isin(list(val) if isinstance(val, (list, tuple)) else [val]),
-            "notnull": c.isNotNull(),
-        }.get(op)
-        if cond is None:
-            # pruning is conservative, the re-apply is the EXACT filter:
-            # silently skipping it (the old lit(True) fallback) returned
-            # unfiltered extra rows for any op outside the map
-            raise SystemExit(f"--where op {op!r} has no exact re-apply")
+        if op == "in":
+            cond = c.isin(list(val) if isinstance(val, (list, tuple)) else [val])
+        elif op == "notnull":
+            cond = c.isNotNull()
+        else:
+            cond = COMPARE[op][0](c, val)
         df = df.where(cond)
     return df
 

@@ -467,6 +467,52 @@ def _split_slots(starts, ends, rep, r):
     return child_starts, child_ends, counts
 
 
+def wrap_list(starts, ends, rep, deflv, r: int, d_elem: int, d_present: int | None):
+    """One list dimension of Dremel assembly, the only one in the engine:
+    slot windows ``[starts, ends)`` into one leaf's ``rep``/``deflv``
+    level streams -> (child_starts, child_ends, offsets int64[n+1],
+    validity). ``r`` is the list's repetition depth, ``def >= d_elem``
+    means the slot holds elements, ``def >= d_present`` that the list is
+    there at all (``d_present`` None: never null, only empty). The Parquet
+    reader's list and map fields and the PGSL chunk decoder
+    (``core/listchunk.py``, r=1, d_elem=2, d_present=1) all wrap here."""
+    has = deflv[starts] >= d_elem
+    valid = np.ones(len(starts), dtype=bool) if d_present is None else deflv[starts] >= d_present
+    # slots with elements expand; null/empty slots contribute none
+    child_starts, child_ends, counts = _split_slots(starts[has], ends[has], rep, r)
+    sizes = np.zeros(len(starts), dtype=np.int64)
+    sizes[has] = counts
+    offsets = np.zeros(len(starts) + 1, dtype=np.int64)
+    np.cumsum(sizes, out=offsets[1:])
+    return child_starts, child_ends, offsets, valid
+
+
+def list_array(offsets: np.ndarray, valid: np.ndarray, child: pa.Array, is_map: bool = False) -> pa.Array:
+    """Arrow list (or map, over a key/value struct ``child``) from
+    :func:`wrap_list`'s offsets and validity. Past 2^31 entries int32
+    offsets would silently wrap: a list becomes a large_list, and a map
+    (int32 offsets by the Arrow spec) raises instead."""
+    wide = int(offsets[-1]) > 0x7FFFFFFF
+    if is_map:
+        if wide:
+            raise ValueError(
+                f"map chunk has {int(offsets[-1])} entries: exceeds "
+                "Arrow's int32 map offsets; encode with more partitions"
+            )
+        keys = child.field(0)
+        if keys.null_count:
+            raise ValueError("map keys must be non-null")
+        # null map rows via null offsets (MapArray.from_arrays has no mask)
+        off_mask = np.append(~valid, False) if not valid.all() else None
+        return pa.MapArray.from_arrays(
+            pa.array(offsets.astype(np.int32), type=pa.int32(), mask=off_mask), keys, child.field(1)
+        )
+    mask = pa.array(~valid) if not valid.all() else None
+    if wide:
+        return pa.LargeListArray.from_arrays(pa.array(offsets, type=pa.int64()), child, mask=mask)
+    return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32), type=pa.int32()), child, mask=mask)
+
+
 def read_column_arrow(
     buf: bytes,
     column: str,
@@ -479,35 +525,15 @@ def read_column_arrow(
     null propagation. ``column`` may be the top-level field name (its
     single leaf is resolved) or the full dotted leaf path."""
     meta = file_meta(buf)
-    leaves = schema_leaf_info(meta)
-    if column not in leaves:
-        cands = [k for k in leaves if k == column or k.split(".")[0] == column]
+    nodes = {node["path"]: node for node in _node_leaves(schema_tree(meta))}
+    if column not in nodes:
+        cands = [k for k in nodes if k.split(".")[0] == column]
         if len(cands) != 1:
-            raise KeyError(f"{column!r}; leaves: {sorted(leaves)}")
+            raise KeyError(f"{column!r}; leaves: {sorted(nodes)}")
         column = cands[0]
-    rep, deflv, values, info = _leaf_levels(buf, meta, leaves[column], row_groups, row_ranges)
-    # top-level rows: one slot per rep==0 run
-    starts = np.flatnonzero(rep == 0)
-    ends = np.concatenate([starts[1:], [len(rep)]]) if len(starts) else np.empty(0, np.int64)
-
-    def build(starts, ends, list_idx) -> pa.Array:
-        if list_idx == len(info["lists"]):
-            return _leaf_arrow(starts, deflv, values, info)
-        r, d_elem, d_present = info["lists"][list_idx]
-        has_elems = deflv[starts] >= d_elem
-        valid = np.ones(len(starts), dtype=bool) if d_present is None else deflv[starts] >= d_present
-        # slots with elements expand; null/empty slots contribute none
-        e_starts, e_ends, counts = _split_slots(starts[has_elems], ends[has_elems], rep, r)
-        child = build(e_starts, e_ends, list_idx + 1)
-        sizes = np.zeros(len(starts), dtype=np.int64)
-        sizes[has_elems] = counts
-        offsets = np.zeros(len(starts) + 1, dtype=np.int64)
-        np.cumsum(sizes, out=offsets[1:])
-        return pa.ListArray.from_arrays(
-            pa.array(offsets.astype(np.int32)), child, mask=pa.array(~valid)
-        )
-
-    return build(starts, ends, 0)
+    leaves = {path: node["leaf"] for path, node in nodes.items()}
+    # assembling from the leaf's own node wraps only its list dimensions
+    return _field_arrow(buf, meta, leaves, nodes[column], row_groups, row_ranges)
 
 
 def table_fields(meta: dict) -> list[tuple[str, list[str]]]:
@@ -651,6 +677,8 @@ def schema_tree(meta: dict) -> dict:
 
     def walk_one(path: tuple, d: int, r: int, lists: tuple, parent_opt: bool) -> dict:
         nonlocal pos
+        if len(path) >= codecs.MAX_NESTING:
+            raise ValueError(f"schema nesting deeper than {codecs.MAX_NESTING} groups")
         el = elems[pos]
         pos += 1
         rep_t = el.get(3, _REQUIRED)
@@ -723,40 +751,27 @@ def _list_element_node(node: dict) -> dict:
     return rep["children"][0]  # canonical 3-level
 
 
+def _wrap_leaves(node: dict, state: dict, streams: dict, dim: tuple) -> tuple[dict, np.ndarray, np.ndarray]:
+    """Move every leaf of ``node`` one list dimension ``dim`` down ->
+    (new state, offsets, validity); the leaves share the list's shape, so
+    the first one's offsets and validity serve the field."""
+    new_state, shape = {}, None
+    for lf in _node_leaves(node):
+        p = lf["path"]
+        child_starts, child_ends, offsets, valid = wrap_list(*state[p], streams[p][0], streams[p][1], *dim)
+        new_state[p] = (child_starts, child_ends)
+        shape = shape or (offsets, valid)
+    return new_state, *shape
+
+
 def _assemble(node: dict, state: dict, consumed: int, streams: dict) -> pa.Array:
     """Recursive Dremel assembly of a schema subtree into Arrow.
     ``state``: leaf path -> (starts, ends) slot windows into that leaf's
     level streams; ``consumed``: list dims already wrapped above."""
     lists = node["lists"]
     if consumed < len(lists):
-        r, d_elem, d_present = lists[consumed]
-        leaves = _node_leaves(node)
-        rp = leaves[0]["path"]
-        rep0, def0 = streams[rp][0], streams[rp][1]
-        s0, e0 = state[rp]
-        has = def0[s0] >= d_elem
-        valid = (
-            np.ones(len(s0), dtype=bool) if d_present is None else def0[s0] >= d_present
-        )
-        new_state = {}
-        counts = None
-        for lf in leaves:
-            p = lf["path"]
-            repL, defL = streams[p][0], streams[p][1]
-            s, e = state[p]
-            hasL = defL[s] >= d_elem
-            es, ee, cnt = _split_slots(s[hasL], e[hasL], repL, r)
-            new_state[p] = (es, ee)
-            if counts is None:
-                counts = cnt
-        child = _assemble(node, new_state, consumed + 1, streams)
-        sizes = np.zeros(len(s0), dtype=np.int64)
-        sizes[has] = counts
-        offsets = np.zeros(len(s0) + 1, dtype=np.int64)
-        np.cumsum(sizes, out=offsets[1:])
-        return pa.ListArray.from_arrays(
-            pa.array(offsets.astype(np.int32)), child, mask=pa.array(~valid)
-        )
+        new_state, offsets, valid = _wrap_leaves(node, state, streams, lists[consumed])
+        return list_array(offsets, valid, _assemble(node, new_state, consumed + 1, streams))
     if "leaf" in node:
         rep, deflv, values, _info = streams[node["path"]]
         starts, _ = state[node["path"]]
@@ -771,41 +786,10 @@ def _assemble(node: dict, state: dict, consumed: int, streams: dict) -> pa.Array
         and len(node["children"][0].get("children", [])) == 2
     ):
         kv = node["children"][0]
-        # kv's list dim: wrap manually so we can emit a MapArray
-        r, d_elem, d_present = kv["lists"][consumed]
-        leaves = _node_leaves(kv)
-        rp = leaves[0]["path"]
-        rep0, def0 = streams[rp][0], streams[rp][1]
-        s0, _ = state[rp]
-        has = def0[s0] >= d_elem
-        valid = (
-            np.ones(len(s0), dtype=bool) if d_present is None else def0[s0] >= d_present
-        )
-        new_state = {}
-        counts = None
-        for lf in leaves:
-            p = lf["path"]
-            repL, defL = streams[p][0], streams[p][1]
-            s, e = state[p]
-            hasL = defL[s] >= d_elem
-            es, ee, cnt = _split_slots(s[hasL], e[hasL], repL, r)
-            new_state[p] = (es, ee)
-            if counts is None:
-                counts = cnt
+        # kv's list dim wraps here so the entries come back as a MapArray
+        new_state, offsets, valid = _wrap_leaves(kv, state, streams, kv["lists"][consumed])
         entries = _assemble_group_as_struct(kv, new_state, consumed + 1, streams, kv)
-        sizes = np.zeros(len(s0), dtype=np.int64)
-        sizes[has] = counts
-        offsets = np.zeros(len(s0) + 1, dtype=np.int64)
-        np.cumsum(sizes, out=offsets[1:])
-        off_mask = np.append(~valid, False)
-        keys = entries.field(0)
-        if keys.null_count:
-            raise ValueError("map keys must be non-null")
-        return pa.MapArray.from_arrays(
-            pa.array(offsets.astype(np.int32), mask=off_mask),
-            keys,
-            entries.field(1),
-        )
+        return list_array(offsets, valid, entries, is_map=True)
     return _assemble_group_as_struct(node, state, consumed, streams, node)
 
 

@@ -25,7 +25,7 @@ import pyarrow as pa
 
 from ..core import codecs
 from ..core.chunk import _factorize, _page_boundaries, _page_slice_column, column_minmax
-from ..core.columns import ColumnData, from_arrow, one_chunk
+from ..core.columns import ColumnData, from_arrow, is_nested, one_chunk
 from ..kernels import hybrid
 from .thrift_writer import write_struct
 
@@ -327,12 +327,6 @@ def _write_chunk(out: bytearray, col: ColumnData, name: str, enc_name: str | Non
     return w.column_chunk([name], col.num_rows, stats), meta_row
 
 
-def _is_nested(t: pa.DataType) -> bool:
-    return (
-        pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_struct(t) or pa.types.is_map(t)
-    )
-
-
 def _leaf_schema_elem(name: str, t: pa.DataType, optional: bool, as_int96: bool = False) -> dict:
     if as_int96:
         # legacy layout: physical INT96, NO converted/logical type
@@ -508,7 +502,7 @@ def write_parquet(
     n_leaves = 0
     for i, name in enumerate(table.column_names):
         t = table.schema.field(i).type
-        if _is_nested(t):
+        if is_nested(t):
             nested_specs[name] = leaf_specs(name, t)
             schema_elems.extend(_schema_elems_for(name, t))
             n_leaves += len(nested_specs[name])
@@ -520,7 +514,7 @@ def write_parquet(
 
     if int96_columns:
         for name in int96_columns:
-            if name not in table.column_names or _is_nested(table.schema.field(name).type):
+            if name not in table.column_names or is_nested(table.schema.field(name).type):
                 raise ValueError(f"int96_columns must name flat columns, got {name!r}")
             if not pa.types.is_timestamp(table.schema.field(name).type):
                 raise ValueError(f"int96_columns expects timestamp columns, got {name!r}")

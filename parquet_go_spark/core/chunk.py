@@ -510,7 +510,7 @@ def _read_page_stats(mv, pos: int) -> tuple[str | None, str | None, int]:
 
 # ------------------------------------------------------------------ encode
 def encode_chunk(
-    col: ColumnData,
+    col: "ColumnData | pa.Array",
     profile: str = "auto",
     compression: str = "none",
     max_page: int = DEFAULT_PAGE,
@@ -519,7 +519,9 @@ def encode_chunk(
     page_crc: bool = False,
     page_stats: bool = False,
 ) -> tuple[bytes, ChunkMeta]:
-    """Encode one column chunk. ``profile``:
+    """Encode one column chunk; a nested Arrow column (list, map or
+    struct, as ``from_arrow`` leaves it) becomes a PGSL/PGSS container
+    around the chunks of its elements or fields. ``profile``:
     * ``"reference"`` — the exact reference decision (chunk_writer.go:
       174-227): dictionary unless boolean or distinct > 32767, else the
       column's fallback PLAIN; BP-only hybrid streams everywhere.
@@ -538,21 +540,12 @@ def encode_chunk(
     predicate's surviving row ranges touch."""
     from .selector import choose_encoding  # local import to avoid cycle
 
-    if type(col).__name__ == "ListData":
+    if isinstance(col, pa.Array):  # nested: from_arrow keeps it Arrow
         from .listchunk import encode_list_chunk  # local: avoid cycle
+        from .structchunk import encode_struct_chunk
 
-        return encode_list_chunk(
-            col,
-            profile=profile,
-            compression=compression,
-            max_page=max_page,
-            level_mode=level_mode,
-            encoding=encoding,
-        )
-    if type(col).__name__ == "StructData":
-        from .structchunk import encode_struct_chunk  # local: avoid cycle
-
-        return encode_struct_chunk(
+        encode_nested = encode_struct_chunk if pa.types.is_struct(col.type) else encode_list_chunk
+        return encode_nested(
             col,
             profile=profile,
             compression=compression,
@@ -822,8 +815,9 @@ def chunk_page_index(blob) -> list[dict] | None:
     return out
 
 
-def decode_chunk(blob, logical: str = "", row_sel=None):
-    """Decode a chunk container back to ColumnData.
+def decode_chunk(blob, logical: str = "", row_sel=None, depth: int = 0):
+    """Decode a chunk container back to ColumnData, or a nested (PGSL /
+    PGSS) container straight to an Arrow array.
 
     ``row_sel`` = sorted, non-overlapping global row ranges
     ``[(row_lo, row_hi), ...]``: only pages overlapping a range are
@@ -832,20 +826,19 @@ def decode_chunk(blob, logical: str = "", row_sel=None):
     partition decoded with the same ``row_sel`` stay row-aligned even
     though their page boundaries differ.  Nested containers (PGSL/PGSS)
     do not support ``row_sel``; callers fall back to a full decode plus
-    an Arrow-level take."""
+    an Arrow-level take. ``depth`` counts the nested containers around
+    this one, against ``codecs.MAX_NESTING``."""
     mv = memoryview(blob).cast("B")  # normalize signed buffer views
-    if bytes(mv[:4]) == b"PGSL":
+    if bytes(mv[:4]) in (b"PGSL", b"PGSS"):
         from .listchunk import decode_list_chunk  # local: avoid cycle
+        from .structchunk import decode_struct_chunk
 
         if row_sel is not None:
-            raise ValueError("row_sel is unsupported for nested (list) chunks")
-        return decode_list_chunk(blob, logical=logical)
-    if bytes(mv[:4]) == b"PGSS":
-        from .structchunk import decode_struct_chunk  # local: avoid cycle
-
-        if row_sel is not None:
-            raise ValueError("row_sel is unsupported for nested (struct) chunks")
-        return decode_struct_chunk(blob, logical=logical)
+            raise ValueError("row_sel is unsupported for nested chunks")
+        if depth >= codecs.MAX_NESTING:
+            raise ValueError(f"chunk nesting deeper than {codecs.MAX_NESTING} levels")
+        decode_nested = decode_list_chunk if bytes(mv[:4]) == b"PGSL" else decode_struct_chunk
+        return decode_nested(blob, logical=logical, depth=depth)
     if bytes(mv[:4]) != MAGIC:
         raise ValueError("bad chunk magic")
     h = _read_header(mv)

@@ -53,6 +53,7 @@ MAX_CODEC_DICT = 1 << 20  # trained DEFLATE dictionary of a zdict chunk
 MAX_PAGE_STATS_LEN = 1 << 12  # a PGSC page-stats bound: <= 64 chars (<= 260 UTF-8 bytes)
 MAX_TYPE_LENGTH = 1 << 16  # FIXED_LEN_BYTE_ARRAY width
 MAX_DICT_REGION = 1 << 26  # dictionary-page bytes one prune probe reads
+MAX_NESTING = 64  # nested levels of one column: PGSL/PGSS chunks, Parquet schema groups
 DICT_MAX = 32767  # dictionary entries a writer emits: math.MaxInt16, type_dict.go:101
 
 # ----------------------------------------------------- Parquet encoding ids

@@ -1,8 +1,9 @@
 """Column representation bridging Arrow/pandas batches and the codec
-kernels: every column becomes (validity, values) where values are either a
-fixed-width numpy array or a (lengths, data) flat byte pair — the same
-"non-null values + def levels" split the reference's ColumnStore keeps
+kernels: every flat column becomes (validity, values) where values are
+either a fixed-width numpy array or a (lengths, data) flat byte pair — the
+same "non-null values + def levels" split the reference's ColumnStore keeps
 (``data_store.go:96-136``: nulls only append levels, never values).
+Nested columns stay Arrow arrays end to end.
 """
 
 from __future__ import annotations
@@ -14,11 +15,10 @@ import pyarrow as pa
 
 __all__ = [
     "ColumnData",
-    "ListData",
-    "StructData",
     "from_arrow",
     "to_arrow",
-    "entry_validity",
+    "logical_of",
+    "is_nested",
     "split_fields",
     "PHYSICAL",
     "gather_segments",
@@ -111,63 +111,16 @@ class ColumnData:
         return self.num_values * np.dtype(_NUMPY_OF[self.ptype]).itemsize
 
 
-@dataclass
-class ListData:
-    """List column (Dremel max_rep=1 at this level, def levels 0-3 — the
-    ``optional group (LIST) { repeated group list { optional element } }``
-    shape, ``schema.go:585-614`` / SURVEY.md §1.3): per-row validity +
-    lengths over flattened elements. ``elem`` recurses: a ColumnData leaf,
-    another ListData (list<list<...>>), or a StructData (list<struct>,
-    and the map<k,v> = list<struct<key,value>> convention,
-    ``NewMapColumn`` ``schema.go:616-647``)."""
-
-    row_validity: np.ndarray  # bool[n_rows]; True = list present
-    lens: np.ndarray  # int64[n_rows]; elements per row (0 when null)
-    elem: "ColumnData | ListData | StructData"  # flattened non-null rows' contents
-    logical: str = ""  # arrow type string, e.g. "list<item: float>" / "map<string, int64>"
-
-    @property
-    def num_rows(self) -> int:
-        return len(self.row_validity)
-
-    @property
-    def raw_bytes(self) -> int:
-        return self.elem.raw_bytes + len(self.row_validity) // 2
-
-    @property
-    def num_values(self) -> int:
-        return int(self.row_validity.sum())
+def logical_of(col: "ColumnData | pa.Array") -> str:
+    """The ``logical`` tag :func:`~.chunk.decode_chunk` takes to rebuild
+    ``col``: a flat column's own tag, a nested column's Arrow type."""
+    return col.logical if isinstance(col, ColumnData) else str(col.type)
 
 
-@dataclass
-class StructData:
-    """Struct column: its own validity (one def level) over per-field
-    child columns encoded only for the valid parent rows — a null struct
-    contributes no child entries, matching the reference's shredding of
-    nil groups (``recursiveAddColumnNil``, ``schema.go:790-835``)."""
-
-    validity: np.ndarray  # bool[n_rows]; True = struct present
-    fields: list  # [(name, ColumnData | ListData | StructData), ...] over valid rows
-    logical: str = ""  # arrow type string, e.g. "struct<a: int64, b: string>"
-
-    @property
-    def num_rows(self) -> int:
-        return len(self.validity)
-
-    @property
-    def num_values(self) -> int:
-        return int(self.validity.sum())
-
-    @property
-    def raw_bytes(self) -> int:
-        return sum(c.raw_bytes for _, c in self.fields) + len(self.validity) // 8
-
-
-def entry_validity(col: "ColumnData | ListData | StructData") -> np.ndarray:
-    """Per-entry presence of any column kind (the d == max_def test)."""
-    if isinstance(col, ListData):
-        return col.row_validity
-    return col.validity
+def is_nested(t: pa.DataType) -> bool:
+    """List, large list, map or struct: the column kinds the nested chunk
+    containers (PGSL/PGSS) encode straight from Arrow."""
+    return pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_map(t) or pa.types.is_struct(t)
 
 
 def split_fields(s: str) -> list[str]:
@@ -231,58 +184,18 @@ def _offsets_view(barr: pa.Array, odt) -> np.ndarray:
     return np.frombuffer(barr.buffers()[1], dtype=odt, count=n + 1 + barr.offset)[barr.offset :]
 
 
-def from_arrow(arr: pa.Array | pa.ChunkedArray) -> "ColumnData | ListData | StructData":
-    """Arrow array -> ColumnData/ListData/StructData (vectorized,
-    zero-copy where possible; recursive over list/struct/map nesting)."""
+def from_arrow(arr: pa.Array | pa.ChunkedArray) -> "ColumnData | pa.Array":
+    """Arrow array -> ColumnData (vectorized, zero-copy where possible).
+    A nested (list/map/struct) column stays one Arrow array: the PGSL and
+    PGSS chunk encoders shred it themselves (``core/listchunk.py``,
+    ``core/structchunk.py``)."""
     # combine_chunks COPIES every buffer even when there is exactly one
     # chunk (pyarrow concatenates unconditionally) — 0.5 s of pure
     # memcpy+fault on an 80 MB html column, ~45% of single-core chunk
     # encode. A 1-chunk column unwraps zero-copy (one_chunk).
     arr = one_chunk(arr)
-    if pa.types.is_struct(arr.type):
-        n = len(arr)
-        validity = (
-            np.ones(n, dtype=bool) if arr.null_count == 0 else arr.is_valid().to_numpy(zero_copy_only=False)
-        )
-        vmask = None if validity.all() else pa.array(validity)
-        fields = []
-        children = arr.flatten()  # offset-corrected child arrays
-        for i, ch in enumerate(children):
-            if vmask is not None:
-                ch = ch.filter(vmask)  # children carry valid parents only
-            fields.append((arr.type.field(i).name, from_arrow(ch)))
-        return StructData(validity, fields, logical=str(arr.type))
-    if pa.types.is_map(arr.type):
-        # map<k,v> == list<struct<key,value>> (NewMapColumn, schema.go:616-647)
-        entry_t = pa.list_(
-            pa.struct(
-                [
-                    pa.field("key", arr.type.key_type, nullable=False),
-                    pa.field("value", arr.type.item_type),
-                ]
-            )
-        )
-        ld = from_arrow(arr.cast(entry_t))
-        ld.logical = str(arr.type)
-        return ld
-    if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
-        n = len(arr)
-        validity = (
-            np.ones(n, dtype=bool) if arr.null_count == 0 else arr.is_valid().to_numpy(zero_copy_only=False)
-        )
-        if n == 0:
-            # Spark's Java writer may omit the offsets buffer entirely
-            # for a length-0 list (Arrow-legal; pyarrow never builds
-            # this). arr.offsets / arr.flatten() read PAST that buffer —
-            # flatten returns a child slice with a garbage offset — so
-            # take the empty element stream structurally instead.
-            elems = arr.values.slice(0, 0)
-            return ListData(validity, np.zeros(0, np.int64), from_arrow(elems), logical=str(arr.type))
-        offsets = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        lens = np.diff(offsets)
-        lens = np.where(validity, lens, 0).astype(np.int64)
-        elems = arr.flatten()  # concatenation of non-null rows' contents
-        return ListData(validity, lens, from_arrow(elems), logical=str(arr.type))
+    if is_nested(arr.type):
+        return arr
     if pa.types.is_dictionary(arr.type):
         arr = arr.cast(arr.type.value_type)
     ptype = _phys_of(arr.type)
@@ -370,52 +283,11 @@ def from_arrow(arr: pa.Array | pa.ChunkedArray) -> "ColumnData | ListData | Stru
     return ColumnData(ptype, validity, values=values, logical=logical)
 
 
-def to_arrow(col: "ColumnData | ListData | StructData") -> pa.Array:
-    """ColumnData/ListData/StructData -> Arrow array of the original
-    logical type."""
-    if isinstance(col, StructData):
-        validity = col.validity
-        names = [name for name, _ in col.fields]
-        children = [to_arrow(c) for _, c in col.fields]
-        if validity.all():
-            return pa.StructArray.from_arrays(children, names=names)
-        # expand valid-rows-only children back to full length (null at
-        # invalid parent slots) via take-with-null-indices
-        idx = pa.array((np.cumsum(validity) - 1).astype(np.int64), mask=~validity)
-        children = [c.take(idx) for c in children]
-        return pa.StructArray.from_arrays(children, names=names, mask=pa.array(~validity))
-    if isinstance(col, ListData):
-        elem_arr = to_arrow(col.elem)
-        offsets64 = np.concatenate([[0], np.cumsum(col.lens)]).astype(np.int64)
-        mask = ~col.row_validity
-        wide = int(offsets64[-1]) > 0x7FFFFFFF
-        if col.logical.startswith("map<"):
-            if wide:
-                # Arrow maps carry int32 offsets by spec — silently
-                # truncating would corrupt; a >2^31-entry map chunk
-                # must fail loudly (re-partition the write instead)
-                raise ValueError(
-                    f"map chunk has {int(offsets64[-1])} entries: exceeds "
-                    "Arrow's int32 map offsets; encode with more partitions"
-                )
-            # null map rows via null offsets (MapArray.from_arrays has no mask)
-            off_mask = np.concatenate([mask, [False]]) if mask.any() else None
-            off_arr = pa.array(offsets64.astype(np.int32), type=pa.int32(), mask=off_mask)
-            return pa.MapArray.from_arrays(off_arr, elem_arr.field(0), elem_arr.field(1))
-        if wide:
-            # >2^31 elements in one chunk: int32 list offsets would
-            # silently wrap — emit a large_list instead
-            return pa.LargeListArray.from_arrays(
-                pa.array(offsets64, type=pa.int64()),
-                elem_arr,
-                mask=pa.array(mask) if mask.any() else None,
-            )
-        out = pa.ListArray.from_arrays(
-            pa.array(offsets64.astype(np.int32), type=pa.int32()),
-            elem_arr,
-            mask=pa.array(mask) if mask.any() else None,
-        )
-        return out
+def to_arrow(col: "ColumnData | pa.Array") -> pa.Array:
+    """ColumnData -> Arrow array of the original logical type; a nested
+    column (decoded straight to Arrow) passes through."""
+    if not isinstance(col, ColumnData):
+        return col
     n = col.num_rows
     mask = ~col.validity  # pyarrow mask: True = null
     if col.ptype == "flba":

@@ -10,6 +10,12 @@ present; r=0 starts a row, r=1 continues it. Level streams are RLE/BP
 hybrid with bit width ``bits.Len16(max)`` (rep: 1, def: 2) and a 4-byte
 size prefix (``helpers.go:262-292``).
 
+The engine has one Dremel layer, shared with the real-Parquet container:
+the encoder takes its levels from ``compat/shred.py``'s list step over the
+element as one opaque leaf, and its validity and elements from
+``shred._list_parts`` (maps as key/value entries); the decoder rebuilds
+the list with ``compat/parquet_reader.wrap_list`` / ``list_array``.
+
 Container:
   magic "PGSL" | version u8
   | uvarint num_rows | uvarint row_null_count | uvarint n_entries
@@ -23,65 +29,42 @@ from __future__ import annotations
 import zlib
 
 import numpy as np
+import pyarrow as pa
 
+from ..compat.parquet_reader import list_array, wrap_list
+from ..compat.shred import _list_parts, shred_leaf
 from ..kernels import hybrid
 from ..kernels.varint import read_uvarint, uvarint
 from .chunk import ChunkMeta, decode_chunk, encode_chunk
-from .columns import ColumnData, ListData, entry_validity
+from .columns import from_arrow, to_arrow
 
-__all__ = ["encode_list_chunk", "decode_list_chunk", "LIST_MAGIC", "compute_levels", "levels_to_structure"]
+__all__ = ["encode_list_chunk", "decode_list_chunk", "LIST_MAGIC"]
 
 LIST_MAGIC = b"PGSL"
 LIST_VERSION = 1
 
-
-def compute_levels(col: ListData) -> tuple[np.ndarray, np.ndarray]:
-    """-> (rep u64[n_entries], def u64[n_entries]), fully vectorized."""
-    valid = col.row_validity
-    lens = col.lens
-    if len(valid) == 0:
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.uint64)
-    counts = np.where(valid & (lens > 0), lens, 1).astype(np.int64)
-    total = int(counts.sum())
-    starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
-    rep = np.ones(total, dtype=np.uint64)
-    rep[starts] = 0
-    dlev = np.empty(total, dtype=np.uint64)
-    single = ~(valid & (lens > 0))  # null or empty rows: one entry
-    elem_mask = np.ones(total, dtype=bool)
-    elem_mask[starts[single]] = False
-    dlev[starts[single]] = np.where(valid[single], 1, 0)
-    dlev[elem_mask] = np.where(entry_validity(col.elem), 3, 2)
-    return rep, dlev
-
-
-def levels_to_structure(rep: np.ndarray, dlev: np.ndarray, n_rows: int):
-    """-> (row_validity, lens, elem_validity): inverse of compute_levels."""
-    new_row = rep == 0
-    row_id = np.cumsum(new_row) - 1
-    is_elem = dlev >= 2
-    lens = np.bincount(row_id[is_elem], minlength=n_rows).astype(np.int64)
-    first_def = dlev[new_row]
-    row_validity = first_def != 0
-    elem_validity = dlev[is_elem] == 3
-    return row_validity, lens, elem_validity
+# shred steps of one list level whose element is a single opaque leaf
+_LIST_LEVEL = {"steps": [("list", 1, 1), ("leaf", 3, True)]}
 
 
 def encode_list_chunk(
-    col: ListData,
+    arr: pa.Array,
     profile: str = "auto",
     compression: str = "none",
     **kw,
 ) -> tuple[bytes, ChunkMeta]:
-    rep, dlev = compute_levels(col)
+    rep, dlev, _leaf, _counts, _has = shred_leaf(arr, _LIST_LEVEL)
+    valid, _sizes, elems = _list_parts(arr)
     rep_s = hybrid.with_size_prefix(hybrid.encode_auto(rep, 1), 1)
     def_s = hybrid.with_size_prefix(hybrid.encode_auto(dlev, 2), 2)
-    inner, meta = encode_chunk(col.elem, profile=profile, compression=compression, **kw)
+    inner, meta = encode_chunk(from_arrow(elems), profile=profile, compression=compression, **kw)
+    num_rows = len(arr)
+    null_rows = num_rows - int(valid.sum())
     out = bytearray()
     out += LIST_MAGIC
     out += bytes([LIST_VERSION])
-    out += uvarint(col.num_rows)
-    out += uvarint(col.num_rows - int(col.row_validity.sum()))
+    out += uvarint(num_rows)
+    out += uvarint(null_rows)
     out += uvarint(len(rep))
     out += uvarint(len(rep_s))
     out += rep_s
@@ -93,10 +76,10 @@ def encode_list_chunk(
         ptype=f"list<{meta.ptype}>",
         encoding=meta.encoding,
         compression=compression,
-        num_rows=col.num_rows,
-        null_count=col.num_rows - int(col.row_validity.sum()),
+        num_rows=num_rows,
+        null_count=null_rows,
         distinct=meta.distinct,
-        raw_bytes=col.raw_bytes,
+        raw_bytes=meta.raw_bytes + num_rows // 2,
         encoded_bytes=len(blob),
         num_pages=meta.num_pages,
         crc32=zlib.crc32(blob),
@@ -106,7 +89,7 @@ def encode_list_chunk(
     return blob, meta
 
 
-def decode_list_chunk(blob, logical: str = "") -> ListData:
+def decode_list_chunk(blob, logical: str = "", depth: int = 0) -> pa.Array:
     mv = memoryview(blob).cast("B")  # normalize signed buffer views
     if bytes(mv[:4]) != LIST_MAGIC:
         raise ValueError("bad list chunk magic")
@@ -129,20 +112,17 @@ def decode_list_chunk(blob, logical: str = "") -> ListData:
         elem_logical = logical.split("<", 1)[1].rsplit(">", 1)[0]
         if elem_logical.startswith("item:") or elem_logical.startswith("element:"):
             elem_logical = elem_logical.split(":", 1)[1].strip()
-    elem = decode_chunk(mv[pos:], logical=elem_logical)
-    row_validity, lens, elem_validity = levels_to_structure(
-        np.asarray(rep), np.asarray(dlev), num_rows
-    )
-    if isinstance(elem, ColumnData):
-        # leaf: entry validity is carried by this level's def stream
-        elem = ColumnData(
-            elem.ptype,
-            elem_validity,
-            values=elem.values,
-            lengths=elem.lengths,
-            data=elem.data,
-            logical=elem.logical,
-            type_length=elem.type_length,
-        )
-    # nested list/struct elems carry their own (identical) validity stream
-    return ListData(row_validity, lens, elem, logical=logical or "list")
+    elem = to_arrow(decode_chunk(mv[pos:], logical=elem_logical, depth=depth + 1))
+    rep, dlev = np.asarray(rep, np.int64), np.asarray(dlev, np.int64)
+    starts = np.flatnonzero(rep == 0)
+    if len(starts) != num_rows or (n_entries and rep[0] != 0):
+        raise ValueError(f"list levels hold {len(starts)} rows, header says {num_rows}")
+    ends = np.append(starts[1:], n_entries)
+    elem_starts, _, offsets, valid = wrap_list(starts, ends, rep, dlev, 1, 2, 1)
+    if (
+        len(elem_starts) != len(elem)
+        or int((dlev >= 2).sum()) != len(elem)
+        or not np.array_equal(dlev[elem_starts] == 3, np.asarray(elem.is_valid()))
+    ):
+        raise ValueError(f"list levels hold {len(elem_starts)} entries, element chunk {len(elem)}")
+    return list_array(offsets, valid, elem, is_map=logical.startswith("map<"))

@@ -24,9 +24,10 @@ from typing import NamedTuple
 import numpy as np
 
 # The comparison ops, each with the Python operator of the zone test
-# below and the ``pyarrow.compute`` function of the exact Arrow re-apply
+# below (and of the CLI's ``--where`` re-apply on Spark columns) and the
+# ``pyarrow.compute`` function of the exact Arrow re-apply
 # (``maintenance.delete_where``): an op the prune tiers accept is one the
-# delete path applies.
+# delete path and the CLI apply.
 COMPARE = {
     "==": (operator.eq, "equal"),
     "<": (operator.lt, "less"),

@@ -12,6 +12,13 @@ maps, or structs — any depth nests through the same three containers
 reference tests (``data_store_test.go:104-390``, ``readwrite_test.go:
 144-533``).
 
+The column stays Arrow end to end. The encoder filters each field to the
+valid parents (the counterpart of ``compat/shred.py``'s ``field`` step,
+which drops the values under a null struct); list and map fields go
+through ``core/listchunk.py``, whose levels come from ``compat/shred.py``
+and whose lists ``compat/parquet_reader.wrap_list`` rebuilds. The decoder
+checks that every field holds exactly the valid parents.
+
 Container:
   magic "PGSS" | version u8
   | uvarint num_rows | uvarint null_count
@@ -27,11 +34,12 @@ from __future__ import annotations
 import zlib
 
 import numpy as np
+import pyarrow as pa
 
 from ..kernels import levels
 from ..kernels.varint import read_uvarint, uvarint
 from .chunk import ChunkMeta, decode_chunk, encode_chunk
-from .columns import StructData
+from .columns import from_arrow, logical_of, to_arrow
 
 __all__ = ["encode_struct_chunk", "decode_struct_chunk", "STRUCT_MAGIC"]
 
@@ -40,26 +48,33 @@ STRUCT_VERSION = 1
 
 
 def encode_struct_chunk(
-    col: StructData,
+    arr: pa.Array,
     profile: str = "auto",
     compression: str = "none",
     **kw,
 ) -> tuple[bytes, ChunkMeta]:
-    def_s = levels.encode_def_levels(col.validity, mode="auto")
+    num_rows = len(arr)
+    validity = np.ones(num_rows, dtype=bool) if arr.null_count == 0 else arr.is_valid().to_numpy(zero_copy_only=False)
+    vmask = None if validity.all() else pa.array(validity)
+    def_s = levels.encode_def_levels(validity, mode="auto")
+    null_count = num_rows - int(validity.sum())
     out = bytearray()
     out += STRUCT_MAGIC
     out += bytes([STRUCT_VERSION])
-    out += uvarint(col.num_rows)
-    out += uvarint(col.num_rows - col.num_values)
+    out += uvarint(num_rows)
+    out += uvarint(null_count)
     out += uvarint(len(def_s))
     out += def_s
-    out += uvarint(len(col.fields))
+    out += uvarint(arr.type.num_fields)
     total_raw = 0
     n_pages = 0
-    for name, child in col.fields:
-        blob, cmeta = encode_chunk(child, profile=profile, compression=compression, **kw)
-        nb = name.encode()
-        lb = getattr(child, "logical", "").encode()
+    # flatten() corrects for the struct's offset; children carry the
+    # valid parents only
+    for field, child in zip(arr.type, arr.flatten()):
+        col = from_arrow(child if vmask is None else child.filter(vmask))
+        blob, cmeta = encode_chunk(col, profile=profile, compression=compression, **kw)
+        nb = field.name.encode()
+        lb = logical_of(col).encode()
         out += uvarint(len(nb))
         out += nb
         out += uvarint(len(lb))
@@ -73,10 +88,10 @@ def encode_struct_chunk(
         ptype="struct",
         encoding="struct",
         compression=compression,
-        num_rows=col.num_rows,
-        null_count=col.num_rows - col.num_values,
+        num_rows=num_rows,
+        null_count=null_count,
         distinct=-1,
-        raw_bytes=col.raw_bytes,
+        raw_bytes=total_raw + num_rows // 8,
         encoded_bytes=len(blob),
         num_pages=n_pages,
         crc32=zlib.crc32(blob),
@@ -84,7 +99,7 @@ def encode_struct_chunk(
     return blob, meta
 
 
-def decode_struct_chunk(blob, logical: str = "") -> StructData:
+def decode_struct_chunk(blob, logical: str = "", depth: int = 0) -> pa.Array:
     mv = memoryview(blob).cast("B")  # normalize signed buffer views
     if bytes(mv[:4]) != STRUCT_MAGIC:
         raise ValueError("bad struct chunk magic")
@@ -97,11 +112,15 @@ def decode_struct_chunk(blob, logical: str = "") -> StructData:
         raise ValueError("implausible struct header")
     def_len, pos = read_uvarint(mv, pos)
     validity, _ = levels.decode_def_levels(mv[pos : pos + def_len], num_rows, 0)
+    validity = np.asarray(validity, dtype=bool)
     pos += def_len
+    n_valid = int(validity.sum())
+    if n_valid != num_rows - null_count:
+        raise ValueError(f"struct def levels hold {n_valid} valid rows, header says {num_rows - null_count}")
     n_fields, pos = read_uvarint(mv, pos)
     if n_fields > len(mv):
         raise ValueError("implausible field count")
-    fields = []
+    names, children = [], []
     for _ in range(n_fields):
         nl, pos = read_uvarint(mv, pos)
         name = bytes(mv[pos : pos + nl]).decode()
@@ -110,7 +129,16 @@ def decode_struct_chunk(blob, logical: str = "") -> StructData:
         child_logical = bytes(mv[pos : pos + ll]).decode()
         pos += ll
         bl, pos = read_uvarint(mv, pos)
-        child = decode_chunk(mv[pos : pos + bl], logical=child_logical)
+        child = to_arrow(decode_chunk(mv[pos : pos + bl], logical=child_logical, depth=depth + 1))
         pos += bl
-        fields.append((name, child))
-    return StructData(np.asarray(validity, dtype=bool), fields, logical=logical or "struct")
+        if len(child) != n_valid:
+            raise ValueError(f"struct field {name!r} holds {len(child)} rows, def levels {n_valid} valid parents")
+        names.append(name)
+        children.append(child)
+    if n_valid == num_rows:
+        return pa.StructArray.from_arrays(children, names=names)
+    # expand valid-rows-only children back to full length (null at
+    # invalid parent slots) via take-with-null-indices
+    idx = pa.array((np.cumsum(validity) - 1).astype(np.int64), mask=~validity)
+    children = [c.take(idx) for c in children]
+    return pa.StructArray.from_arrays(children, names=names, mask=pa.array(~validity))

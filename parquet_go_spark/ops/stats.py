@@ -114,10 +114,11 @@ def table_column_stats(
         for b in batches:
             seen = True
             for name in cols:
-                cd = from_arrow(b.column(b.schema.get_field_index(name)))
+                arr = b.column(b.schema.get_field_index(name))
+                cd = from_arrow(arr)
                 a = acc[name]
-                a[0] += cd.num_rows
-                nulls = cd.num_rows - cd.num_values
+                a[0] += len(arr)
+                nulls = arr.null_count
                 # NaN-as-null (the op's documented semantics, pinned):
                 # the pre-Arrow pandas hop used to fold NaN into null as
                 # a side effect; mapInArrow keeps NaN a value, so fold

@@ -256,11 +256,11 @@ class _PGSStreamReader(DataSourceStreamReader):
     atomic tmp+rename contract the resume path relies on), so each
     micro-batch reads exactly the partitions that committed since the
     last batch, one Spark task per partition. Pairs with the streaming
-    encode sink (``streaming/encode_stream.py``) for an end-to-end
-    encode->tail pipeline. Overwriting the directory mid-stream is not
-    supported (offsets only grow). Each micro-batch is planned by
-    ``decode_job.plan_scan`` and read by ``decode_partition``, like the
-    batch reader."""
+    write (``writeStream.format("pgs")``, :class:`_PGSStreamWriter`) for
+    an end-to-end encode->tail pipeline. Overwriting the directory
+    mid-stream is not supported (offsets only grow). Each micro-batch is
+    planned by ``decode_job.plan_scan`` and read by ``decode_partition``,
+    like the batch reader."""
 
     def __init__(self, enc_dir: str):
         self.enc_dir = enc_dir
@@ -389,7 +389,9 @@ class _PGSStreamWriter(DataSourceStreamArrowWriter):
         import pyarrow as pa
 
         from .encode_job import encode_columns_to_partition
+        from .session import freeze_task_heap
 
+        freeze_task_heap()
         batches = list(iterator)
         table = pa.Table.from_batches(batches) if batches else None
         # the .tmp suffix keeps staged files OUT of the reader's

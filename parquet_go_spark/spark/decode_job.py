@@ -198,16 +198,12 @@ def decode_blobs_to_batch(
         if row_sel is not None and c in nested_cols:
             # nested containers can't seek pages; decode fully and
             # row-align with an Arrow-level take
-            cd = decode_chunk(blobs[c], logical=logical)
             idx = np.concatenate([np.arange(lo, hi, dtype=np.int64) for lo, hi in row_sel])
-            arr = to_arrow(cd)
-            arr = one_chunk(arr)
-            decoded[c] = arr.take(pa.array(idx))
+            decoded[c] = decode_chunk(blobs[c], logical=logical).take(pa.array(idx))
             n_rows = len(idx)
         else:
-            cd = decode_chunk(blobs[c], logical=logical, row_sel=row_sel)
-            decoded[c] = to_arrow(cd)
-            n_rows = cd.num_rows
+            decoded[c] = to_arrow(decode_chunk(blobs[c], logical=logical, row_sel=row_sel))
+            n_rows = len(decoded[c])
     if n_rows is None:  # projection selected only evolved-away columns
         if row_sel is not None:
             n_rows = sum(hi - lo for lo, hi in row_sel)

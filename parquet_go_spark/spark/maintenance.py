@@ -1,14 +1,14 @@
 """Table maintenance: compaction (the Iceberg rewrite-data-files
 analogue).
 
-Continuous ingestion produces small files — the streaming sink writes one
-encoded directory per micro-batch (``streaming/encode_stream.py``), and a
-high-parallelism backfill can leave a table over-partitioned. Small
-partitions hurt at scale twice: per-partition fixed costs (task
-handshake, manifest row, dictionary/codec training) stop amortizing, and
-the codec selector's sampled statistics get noisier. The reference has no
-maintenance story (a Go library writes one file per call); this is the
-idiomatic-Spark table-service analogue.
+Continuous ingestion produces small files — every micro-batch of the
+streaming sink (``writeStream.format("pgs")``, ``spark/datasource.py``)
+appends its own partitions, and a high-parallelism backfill can leave a
+table over-partitioned. Small partitions hurt at scale twice:
+per-partition fixed costs (task handshake, manifest row, dictionary/codec
+training) stop amortizing, and the codec selector's sampled statistics
+get noisier. The reference has no maintenance story (a Go library writes
+one file per call); this is the idiomatic-Spark table-service analogue.
 
 ``compact_table`` decodes the source(s), re-encodes into right-sized
 partitions — the count is chosen from the MANIFEST byte totals, so
@@ -35,7 +35,6 @@ from .encode_job import encode_columns_to_partition, encode_table, partition_fil
 __all__ = [
     "compact_table",
     "compact_parquet_dir",
-    "compact_stream_output",
     "table_bytes",
     "rollback_table",
     "remove_orphan_files",
@@ -786,18 +785,3 @@ def compact_parquet_dir(
         },
     )
     return spark.createDataFrame(man_rows, schema=mf.MANIFEST_DDL)
-
-
-def compact_stream_output(
-    spark: SparkSession, stream_dir: str, dst_dir: str, **kwargs
-) -> DataFrame:
-    """Compact every committed micro-batch directory of a streaming
-    encode sink (``streaming/encode_stream.py``) into one table."""
-    from ..streaming.encode_stream import batch_dirs
-
-    dirs = [
-        d for d in batch_dirs(stream_dir) if os.path.exists(os.path.join(d, "_schema.json"))
-    ]
-    if not dirs:
-        raise ValueError(f"no committed batch dirs under {stream_dir}")
-    return compact_table(spark, dirs, dst_dir, **kwargs)

@@ -18,7 +18,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..core.chunk import decode_chunk, encode_chunk
-from ..core.columns import from_arrow, one_chunk, to_arrow
+from ..core.columns import from_arrow, logical_of, one_chunk, to_arrow
 
 __all__ = ["roundtrip_df"]
 
@@ -48,7 +48,7 @@ def roundtrip_df(
             for name in cols:
                 cd = from_arrow(b.column(name))
                 blob, _meta = encode_chunk(cd, **kwargs)
-                dec = decode_chunk(blob, logical=cd.logical)
+                dec = decode_chunk(blob, logical=logical_of(cd))
                 arr = to_arrow(dec)
                 arr = one_chunk(arr)
                 out.append(arr)

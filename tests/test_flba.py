@@ -12,13 +12,13 @@ import pyarrow as pa
 import pytest
 
 from parquet_go_spark.core.chunk import column_minmax, decode_chunk, encode_chunk
-from parquet_go_spark.core.columns import ColumnData, decimal_width, from_arrow, to_arrow
+from parquet_go_spark.core.columns import ColumnData, decimal_width, from_arrow, logical_of, to_arrow
 
 
 def _rt(arr: pa.Array, **kw) -> tuple[pa.Array, object]:
     cd = from_arrow(arr)
     blob, meta = encode_chunk(cd, **kw)
-    out = to_arrow(decode_chunk(blob, logical=cd.logical))
+    out = to_arrow(decode_chunk(blob, logical=logical_of(cd)))
     return out, meta
 
 

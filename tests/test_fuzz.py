@@ -12,7 +12,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from parquet_go_spark.core.chunk import MAGIC, decode_chunk, encode_chunk
-from parquet_go_spark.core.columns import ColumnData
+from parquet_go_spark.core.columns import ColumnData, to_arrow
 from parquet_go_spark.kernels import deltabp, forbp, fsst, hybrid
 
 ACCEPTABLE = (ValueError, IndexError, KeyError, OverflowError, EOFError, MemoryError)
@@ -31,7 +31,7 @@ def test_fuzz_chunk_decoder(buf):
 @given(st.binary(min_size=0, max_size=256))
 def test_fuzz_list_chunk_decoder(buf):
     try:
-        decode_chunk(b"PGSL" + buf)
+        to_arrow(decode_chunk(b"PGSL" + buf, logical="list<int64>"))
     except ACCEPTABLE:
         pass
 
@@ -143,7 +143,7 @@ def test_fuzz_struct_chunk_decoder(buf):
     except ACCEPTABLE:
         pass
     try:
-        decode_chunk(STRUCT_MAGIC + b"\x01" + buf)
+        to_arrow(decode_chunk(STRUCT_MAGIC + b"\x01" + buf, logical="struct"))
     except ACCEPTABLE:
         pass
 

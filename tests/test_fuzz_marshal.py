@@ -4,10 +4,12 @@ The round-5 layout campaign showed the real hazard class is Arrow
 LAYOUTS, not values: Spark's Java writer emits buffer shapes pyarrow's
 constructors never produce (empty offsets buffers on length-0 arrays),
 and sliced views shift every buffer read. This fuzz drives
-from_arrow -> to_arrow over randomized nested data with randomized
+from_arrow -> chunk -> to_arrow over randomized nested data with randomized
 layout transforms — slicing, validity, empty rows, and a Java-style
 "strip the offsets buffer of every length-0 varlen array" rebuild —
 and checks value equality against pyarrow's own reading of the array.
+Each column goes through a whole chunk round trip: nested columns stay
+Arrow in from_arrow, so their layouts meet the PGSL/PGSS encoders.
 
 Complements tests/test_fuzz.py (byte-level decoder fuzzing, the
 reference's go-fuzz layer) with structure-level fuzzing the reference
@@ -24,7 +26,14 @@ import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from parquet_go_spark.core.columns import from_arrow, to_arrow
+from parquet_go_spark.core.chunk import decode_chunk, encode_chunk
+from parquet_go_spark.core.columns import from_arrow, logical_of, to_arrow
+
+
+def _roundtrip(arr: pa.Array) -> pa.Array:
+    col = from_arrow(arr)
+    blob, _ = encode_chunk(col)
+    return to_arrow(decode_chunk(blob, logical=logical_of(col)))
 
 # ---------------------------------------------------------------- strategies
 
@@ -118,7 +127,7 @@ def test_marshal_roundtrip_random_layouts(data):
         arr = arr.slice(start, length)
 
     want = arr.to_pylist()
-    got = to_arrow(from_arrow(arr)).to_pylist()
+    got = _roundtrip(arr).to_pylist()
     assert got == want
 
 
@@ -134,11 +143,11 @@ def test_marshal_roundtrip_java_stripped_layouts(data):
     )
     arr = pa.array(vals, type=pa.list_(elem_t))
     stripped = _strip_empty_offsets(arr)
-    assert to_arrow(from_arrow(stripped)).to_pylist() == arr.to_pylist()
+    assert _roundtrip(stripped).to_pylist() == arr.to_pylist()
 
     # and nested one level deeper, all-empty
     ll = pa.array([[] for _ in range(len(vals))], type=pa.list_(pa.list_(elem_t)))
-    got = to_arrow(from_arrow(_strip_empty_offsets(ll))).to_pylist()
+    got = _roundtrip(_strip_empty_offsets(ll)).to_pylist()
     assert got == ll.to_pylist()
 
 
@@ -158,7 +167,7 @@ def test_marshal_roundtrip_map_columns(data):
     if len(arr) and data.draw(st.booleans()):
         start = data.draw(st.integers(0, len(arr)))
         arr = arr.slice(start, data.draw(st.integers(0, len(arr) - start)))
-    got = to_arrow(from_arrow(arr)).to_pylist()
+    got = _roundtrip(arr).to_pylist()
     want = arr.to_pylist()
     norm = lambda r: None if r is None else sorted(r)
     assert [norm(dict(r) if r is not None else None) for r in got] == [

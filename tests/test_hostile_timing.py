@@ -294,3 +294,44 @@ def test_forbp_page_count_is_bounded_by_the_page():
     blob = _pgsc_chunk(2, 10, 3, forged)  # int64, for_bp
     assert len(blob) == 28
     assert "count" in str(_bounded(decode_chunk, blob).value)
+
+
+def _raises_value_error_fast(fn, *args, budget_s: float = 2.0):
+    t = time.time()
+    with pytest.raises(ValueError, match="nesting"):
+        fn(*args)
+    wall = time.time() - t
+    assert wall < budget_s, f"{fn.__name__} took {wall:.1f}s on hostile input"
+
+
+def test_stacked_list_headers_hit_the_nesting_cap():
+    """500 zero-row PGSL headers stacked around one leaf chunk (9 KB):
+    every header recursed into decode_chunk until Python's
+    RecursionError; the nesting cap turns it into a ValueError."""
+    import pyarrow as pa
+
+    from parquet_go_spark.core.chunk import decode_chunk, encode_chunk
+    from parquet_go_spark.core.columns import from_arrow
+
+    blob, _ = encode_chunk(from_arrow(pa.array([], type=pa.list_(pa.int64()))))
+    inner, _ = encode_chunk(from_arrow(pa.array([], type=pa.int64())))
+    header = blob[: len(blob) - len(inner)]
+    assert blob.endswith(inner) and header.startswith(b"PGSL")
+    forged = header * 500 + inner
+    assert len(forged) < 10_000
+    _raises_value_error_fast(decode_chunk, forged)
+
+
+def test_parquet_footer_group_chain_hits_the_nesting_cap():
+    """A 16 KB Parquet file whose footer chains 2000 single-child groups
+    above one leaf: schema_tree recursed once per group into Python's
+    RecursionError; the nesting cap turns it into a ValueError."""
+    from parquet_go_spark.compat.parquet_reader import read_table_arrow
+    from parquet_go_spark.compat.thrift_writer import write_struct
+
+    groups = [{3: ("i32", 1), 4: ("binary", "g"), 5: ("i32", 1)} for _ in range(2000)]
+    schema = [{4: ("binary", "schema"), 5: ("i32", 1)}, *groups, {1: ("i32", 1), 3: ("i32", 1), 4: ("binary", "x")}]
+    footer = write_struct({1: ("i32", 1), 2: ("list", ("struct", schema)), 3: ("i64", 0), 4: ("list", ("struct", []))})
+    buf = b"PAR1" + footer + struct.pack("<I", len(footer)) + b"PAR1"
+    assert len(buf) < 20_000
+    _raises_value_error_fast(read_table_arrow, buf)

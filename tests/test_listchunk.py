@@ -11,7 +11,8 @@ import pytest
 
 from parquet_go_spark.core.chunk import decode_chunk, encode_chunk
 from parquet_go_spark.core.columns import from_arrow, to_arrow
-from parquet_go_spark.core.listchunk import compute_levels, levels_to_structure
+from parquet_go_spark.kernels import hybrid
+from parquet_go_spark.kernels.varint import read_uvarint
 
 CASES = {
     "floats": pa.array([[1.0, 2.5], [], None, [3.25], [None, 4.5, 5.0]], type=pa.list_(pa.float32())),
@@ -49,14 +50,23 @@ def test_levels_exact():
     # [[a, null], null, [], [b]] ->
     # entries: (r0,d3)(r1,d2) | (r0,d0) | (r0,d1) | (r0,d3)
     arr = pa.array([[1, None], None, [], [2]], type=pa.list_(pa.int64()))
-    cd = from_arrow(arr)
-    rep, dlev = compute_levels(cd)
-    assert rep.tolist() == [0, 1, 0, 0, 0]
-    assert dlev.tolist() == [3, 2, 0, 1, 3]
-    row_validity, lens, elem_validity = levels_to_structure(rep, dlev, 4)
-    assert row_validity.tolist() == [True, False, True, True]
-    assert lens.tolist() == [2, 0, 0, 1]
-    assert elem_validity.tolist() == [True, False, True]
+    blob, _ = encode_chunk(from_arrow(arr))
+    mv = memoryview(blob)
+    pos = 5
+    num_rows, pos = read_uvarint(mv, pos)
+    null_rows, pos = read_uvarint(mv, pos)
+    n_entries, pos = read_uvarint(mv, pos)
+    assert (num_rows, null_rows, n_entries) == (4, 1, 5)
+    rep_len, pos = read_uvarint(mv, pos)
+    rep, _ = hybrid.decode_sized(mv[pos : pos + rep_len], 1, n_entries, 0)
+    def_len, pos = read_uvarint(mv, pos + rep_len)
+    dlev, _ = hybrid.decode_sized(mv[pos : pos + def_len], 2, n_entries, 0)
+    assert np.asarray(rep).tolist() == [0, 1, 0, 0, 0]
+    assert np.asarray(dlev).tolist() == [3, 2, 0, 1, 3]
+    out = decode_chunk(blob, logical=str(arr.type))
+    assert out.is_valid().to_pylist() == [True, False, True, True]
+    assert out.value_lengths().fill_null(0).to_pylist() == [2, 0, 0, 1]
+    assert out.flatten().is_valid().to_pylist() == [True, False, True]
 
 
 def test_large_list_roundtrip():

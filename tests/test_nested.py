@@ -14,13 +14,14 @@ import pyarrow as pa
 import pytest
 
 from parquet_go_spark.core.chunk import decode_chunk, encode_chunk
-from parquet_go_spark.core.columns import StructData, from_arrow, to_arrow
+from parquet_go_spark.core.columns import from_arrow, logical_of, to_arrow
+from parquet_go_spark.kernels.varint import read_uvarint
 
 
 def _rt(arr: pa.Array, **kw) -> pa.Array:
     cd = from_arrow(arr)
     blob, meta = encode_chunk(cd, **kw)
-    dec = decode_chunk(blob, logical=cd.logical)
+    dec = decode_chunk(blob, logical=logical_of(cd))
     out = to_arrow(dec)
     if out.type != arr.type:
         out = out.cast(arr.type)
@@ -95,9 +96,31 @@ def test_struct_children_strip_null_parents():
     # a null struct must contribute no child entries (Dremel: nil group
     # appends levels only, schema.go:790-835)
     arr = pa.array([{"a": 1}, None, {"a": 3}], type=pa.struct([("a", pa.int64())]))
-    cd = from_arrow(arr)
-    assert isinstance(cd, StructData)
-    assert cd.fields[0][1].num_rows == 2  # only valid parents
+    blob, meta = encode_chunk(from_arrow(arr))
+    assert meta.num_rows == 3 and meta.null_count == 1
+    ((name, logical, child),) = _struct_fields(blob)
+    assert (name, logical) == ("a", "int64")
+    assert decode_chunk(child).num_rows == 2  # only valid parents
+    assert decode_chunk(child).values.tolist() == [1, 3]
+
+
+def _struct_fields(blob: bytes) -> list[tuple[str, str, bytes]]:
+    """(name, logical, child chunk) of each field of a PGSS container."""
+    mv = memoryview(blob)
+    pos = 5
+    for _ in range(2):  # num_rows, null_count
+        _, pos = read_uvarint(mv, pos)
+    def_len, pos = read_uvarint(mv, pos)
+    n_fields, pos = read_uvarint(mv, pos + def_len)
+    out = []
+    for _ in range(n_fields):
+        parts = []
+        for _ in range(3):
+            n, pos = read_uvarint(mv, pos)
+            parts.append(bytes(mv[pos : pos + n]))
+            pos += n
+        out.append((parts[0].decode(), parts[1].decode(), parts[2]))
+    return out
 
 
 def test_struct_multipage_children():
@@ -107,7 +130,7 @@ def test_struct_multipage_children():
     cd = from_arrow(arr)
     blob, meta = encode_chunk(cd, max_page=4096)
     assert meta.num_pages > 2  # children actually page
-    assert to_arrow(decode_chunk(blob, logical=cd.logical)).equals(arr)
+    assert to_arrow(decode_chunk(blob, logical=logical_of(cd))).equals(arr)
 
 
 def test_sliced_struct_offset_correct():
@@ -122,3 +145,45 @@ def test_sliced_map_offset_correct():
     base = pa.array([{f"k{i}": i} for i in range(100)], type=pa.map_(pa.string(), pa.int64()))
     sl = base.slice(10, 30)
     assert _rt(sl).equals(sl)
+
+
+def _pgss(validity: list[bool], child: pa.Array) -> bytes:
+    """A PGSS container with one int64 field ``a`` holding ``child``."""
+    from parquet_go_spark.kernels import levels
+    from parquet_go_spark.kernels.varint import uvarint
+
+    blob, _ = encode_chunk(from_arrow(child))
+    def_s = levels.encode_def_levels(np.array(validity), mode="auto")
+    out = b"PGSS\x01" + uvarint(len(validity)) + uvarint(validity.count(False))
+    out += uvarint(len(def_s)) + def_s + uvarint(1)
+    for part in (b"a", b"int64", blob):
+        out += uvarint(len(part)) + part
+    return out
+
+
+@pytest.mark.parametrize(
+    "validity, n_child",
+    [([True] * 3, 1), ([True] * 3, 5), ([True, False, True], 3)],
+    ids=["short-child", "long-child", "null-parent-extra-child"],
+)
+def test_forged_struct_child_count_raises(validity, n_child):
+    # the def levels say how many parents are valid; a child holding
+    # any other count is corrupt (it decoded to 1 or 5 rows, or lost
+    # its third value, without an error)
+    forged = _pgss(validity, pa.array(range(n_child), type=pa.int64()))
+    with pytest.raises(ValueError, match="valid parents"):
+        decode_chunk(forged, logical="struct")
+    good = _pgss(validity, pa.array(range(validity.count(True)), type=pa.int64()))
+    assert len(decode_chunk(good, logical="struct")) == 3
+
+
+def test_forged_list_entry_count_raises():
+    # list<struct> levels of 3 entries over the 6-entry element chunk of
+    # another list: the extra entries used to be cut off silently
+    t = pa.list_(pa.struct([("a", pa.int64())]))
+    three, _ = encode_chunk(from_arrow(pa.array([[{"a": i} for i in range(3)]], type=t)))
+    six, _ = encode_chunk(from_arrow(pa.array([[{"a": i} for i in range(6)]], type=t)))
+    forged = three[: three.index(b"PGSS")] + six[six.index(b"PGSS") :]
+    with pytest.raises(ValueError, match="entries"):
+        decode_chunk(forged, logical=str(t))
+    assert decode_chunk(three, logical=str(t)).to_pylist() == [[{"a": 0}, {"a": 1}, {"a": 2}]]

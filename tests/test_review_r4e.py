@@ -67,8 +67,9 @@ def test_dict_probe_numeric_value_on_string_column_keeps_chunk(tmp_path):
 
 def test_cli_where_on_curate_and_unknown_op(spark, tmp_path, capsys):
     """curate --where must accept repeatable col:op:value flags (a
-    non-append default crashed parsing char-by-char), and unknown ops
-    must be rejected up front rather than pruning without re-applying."""
+    non-append default crashed parsing char-by-char), unknown ops must be
+    rejected up front rather than pruning without re-applying, and every
+    op of core.prune (strict '<' too) must return the exact rows."""
     import json
     import subprocess
     import sys
@@ -96,11 +97,22 @@ def test_cli_where_on_curate_and_unknown_op(spark, tmp_path, capsys):
     # unknown op: clean rejection, not silent extra rows
     r2 = subprocess.run(
         [sys.executable, "-m", "parquet_go_spark", "--cpus", "4", "decode",
-         "--enc", src, "--out", str(tmp_path / "x"), "--where", "doc_id:<:5"],
+         "--enc", src, "--out", str(tmp_path / "x"), "--where", "doc_id:~:5"],
         capture_output=True, text=True, cwd="/root/repo", timeout=300,
     )
     assert r2.returncode != 0
     assert "not supported" in (r2.stderr + r2.stdout)
+    # strict '<' is one of core.prune's ops: pruned, then re-applied exactly
+    lt = str(tmp_path / "lt")
+    r3 = subprocess.run(
+        [sys.executable, "-m", "parquet_go_spark", "--cpus", "4", "decode",
+         "--enc", src, "--out", lt, "--where", "doc_id:<:5"],
+        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+    )
+    assert r3.returncode == 0, r3.stderr[-2000:]
+    import pyarrow.parquet as pq
+
+    assert sorted(pq.read_table(lt).column("doc_id").to_pylist()) == [0, 1, 2, 3, 4]
 
 
 def test_forged_column_index_bound_is_unknown_not_crash():

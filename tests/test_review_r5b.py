@@ -152,8 +152,10 @@ def test_from_arrow_empty_offsets_buffer_java_layout():
     lst = pa.Array.from_buffers(
         pa.list_(pa.string()), 1, [None, offs], children=[empty_str]
     )
-    ld = from_arrow(lst)
-    assert ld.lens.tolist() == [0]
+    from parquet_go_spark.core.chunk import decode_chunk, encode_chunk
+
+    blob, _ = encode_chunk(from_arrow(lst))
+    assert decode_chunk(blob, logical=str(lst.type)).to_pylist() == [[]]
 
     # length-0 decimal / fixed_size_binary may omit the data buffer
     empty_dec = pa.Array.from_buffers(pa.decimal128(7, 2), 0, [None, None])

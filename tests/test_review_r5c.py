@@ -155,43 +155,38 @@ def test_decode_entry_points_accept_pa_buffer(tmp_path):
     assert (l_b == l_p).all() and (np.asarray(d_b) == np.asarray(d_p)).all()
 
 
-def test_to_arrow_list_offsets_never_wrap_int32(monkeypatch):
-    """to_arrow's list path cast offsets to int32 unconditionally — a
-    chunk with >2^31 flattened elements would silently WRAP and corrupt
-    every row boundary. Wide lists now emit large_list (exact), and
-    wide maps (whose Arrow offsets are int32 by spec) raise instead of
-    truncating. Exercised with a synthetic lens vector — materializing
-    2^31 real elements is not testable — by spot-checking the offsets
-    dtype decision boundary."""
-    from parquet_go_spark.core.columns import ListData, ColumnData, to_arrow
+def test_to_arrow_list_offsets_never_wrap_int32():
+    """The list wrap cast offsets to int32 unconditionally — a chunk
+    with >2^31 flattened elements would silently WRAP and corrupt every
+    row boundary. Wide lists now emit large_list (exact), and wide maps
+    (whose Arrow offsets are int32 by spec) raise instead of truncating.
+    The PGSL decoder and the Parquet reader build every list through
+    ``list_array``; materializing 2^31 real elements is not testable, so
+    the offsets-width decision is driven with synthetic offsets."""
+    from parquet_go_spark.compat.parquet_reader import list_array
+    from parquet_go_spark.core.chunk import decode_chunk, encode_chunk
+    from parquet_go_spark.core.columns import from_arrow
 
-    # small list: int32 offsets (the common path)
-    elem = ColumnData(
-        "int64", np.ones(3, bool), values=np.arange(3, dtype=np.int64), logical="int64"
-    )
-    small = ListData(np.ones(2, bool), np.array([1, 2], np.int64), elem, logical="list<int64>")
-    arr = to_arrow(small)
+    # small list: int32 offsets (the common path), through a real chunk
+    src = pa.array([[0], [1, 2]], type=pa.list_(pa.int64()))
+    blob, _ = encode_chunk(from_arrow(src))
+    arr = decode_chunk(blob, logical=str(src.type))
     assert pa.types.is_list(arr.type)
     assert arr.to_pylist() == [[0], [1, 2]]
 
-    # wide list: patch the overflow check boundary via a fake lens sum
-    # by monkeypatching numpy cumsum is fragile — instead drive the
-    # decision function directly with a crafted ListData whose element
-    # column LIES about its length (to_arrow only reads lens for
-    # offsets; elem array length is validated by Arrow at from_arrays,
-    # so use a tiny elem and expect Arrow's own length error AFTER the
-    # large_list branch was chosen — proving no silent int32 wrap).
-    big_lens = np.array([0x7FFFFFFF, 10], dtype=np.int64)
-    wide = ListData(np.ones(2, bool), big_lens, elem, logical="list<int64>")
+    # wide list: the offsets LIE about a tiny child, so Arrow's own
+    # length validation fails AFTER the large_list branch was chosen —
+    # proving no silent int32 wrap
+    elem = pa.array([0, 1, 2], type=pa.int64())
+    valid = np.ones(2, bool)
+    wide = np.array([0, 0x7FFFFFFF, 0x7FFFFFFF + 10], np.int64)
     with pytest.raises(Exception) as ei:
-        to_arrow(wide)
+        list_array(wide, valid, elem)
     # the failure must come from Arrow's length validation on the
     # LARGE_LIST constructor (or our explicit guard) — never a numpy
     # int32 cast (which would succeed silently with wrapped offsets)
     assert "Length" in str(ei.value) or "exceeds" in str(ei.value) or "length" in str(ei.value)
 
-    wide_map = ListData(
-        np.ones(2, bool), big_lens, elem, logical="map<string,int64>"
-    )
+    entries = pa.StructArray.from_arrays([pa.array(["k"] * 3), elem], names=["key", "value"])
     with pytest.raises(ValueError, match="int32 map offsets"):
-        to_arrow(wide_map)
+        list_array(wide, valid, entries, is_map=True)

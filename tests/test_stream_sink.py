@@ -104,9 +104,10 @@ def test_stream_sink_txn_scopes_batch_ids(tmp_path):
 @pytest.mark.spark
 def test_stream_sink_end_to_end(spark, tmp_path):
     """readStream(parquet) -> writeStream.format('pgs') with
-    availableNow: multi-batch ingest, table decodes to the full input,
-    snapshot log carries one marker per batch, streamWriter bootstraps
-    the table schema."""
+    availableNow: multi-batch ingest of pages-shaped rows (timestamp and
+    binary columns), table decodes to the full input with every url
+    unique across batches, snapshot log carries one marker per batch,
+    streamWriter bootstraps the table schema."""
     from parquet_go_spark.spark.datasource import PGSDataSource
     from parquet_go_spark.spark.decode_job import decode_table
 
@@ -114,11 +115,14 @@ def test_stream_sink_end_to_end(spark, tmp_path):
     src = str(tmp_path / "src")
     for i in range(3):  # three files -> three micro-batches
         spark.range(i * 100, (i + 1) * 100).selectExpr(
-            "concat('u', id) as url", "id as n"
+            "concat('u', id) as url",
+            "id as n",
+            "timestamp_seconds(id) as warc_ts",
+            "encode(concat('<html>', id), 'utf-8') as html",
         ).coalesce(1).write.mode("append").parquet(src)
     out = str(tmp_path / "enc")
     q = (
-        spark.readStream.schema("url string, n bigint")
+        spark.readStream.schema("url string, n bigint, warc_ts timestamp, html binary")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .writeStream.format("pgs")
@@ -130,8 +134,15 @@ def test_stream_sink_end_to_end(spark, tmp_path):
     )
     q.awaitTermination(120)
     got = decode_table(spark, out)
+    assert got.columns == ["url", "n", "warc_ts", "html"]
     assert got.count() == 300
+    assert got.select("url").distinct().count() == 300
     assert got.agg({"n": "sum"}).first()[0] == sum(range(300))
+    checks = got.selectExpr(
+        "sum(cast(unix_seconds(warc_ts) = n as int)) as ts_ok",
+        "sum(cast(cast(html as string) = concat('<html>', n) as int)) as html_ok",
+    ).first()
+    assert (checks["ts_ok"], checks["html_ok"]) == (300, 300)
     bids = sorted(
         s["config"]["stream_batch_id"]
         for s in mf.read_snapshots(out)

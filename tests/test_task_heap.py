@@ -42,3 +42,36 @@ def test_freeze_task_heap_freezes_inside_a_task_only(spark):
     assert len(rows) == 2
     for r in rows:
         assert r["after"] >= r["before"] + r["kept"]
+
+
+def test_stream_writer_freezes_before_reading_its_batches(spark, tmp_path):
+    """``writeStream.format("pgs")``'s task body freezes the heap before
+    it touches a batch, like every other engine task body."""
+    from parquet_go_spark.spark import manifest as mf
+
+    enc = str(tmp_path / "enc")
+    mf.write_table_schema(enc, [{"name": "url", "ddl": "string"}, {"name": "n", "ddl": "bigint"}])
+
+    def write_probe(batches):
+        import gc
+
+        import pyarrow as pa
+
+        from parquet_go_spark.spark.datasource import _PGSStreamWriter
+
+        for _ in batches:
+            pass
+        keep = [[] for _ in range(100)]  # tracked objects the freeze must take
+        before = gc.get_freeze_count()
+        at_read = []
+
+        def rows():
+            at_read.append(gc.get_freeze_count())
+            yield pa.record_batch({"url": pa.array(["u0"]), "n": pa.array([0], pa.int64())})
+
+        _PGSStreamWriter(enc, ["url", "n"], {}, txn="heap").write(rows())
+        yield pa.RecordBatch.from_pydict({"before": [before], "at_read": at_read, "kept": [len(keep)]})
+
+    rows = spark.range(1, numPartitions=1).mapInArrow(write_probe, "before long, at_read long, kept long").collect()
+    assert len(rows) == 1
+    assert rows[0]["at_read"] >= rows[0]["before"] + rows[0]["kept"]

@@ -28,6 +28,7 @@ import pyarrow as pa
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parquet_go_spark.core import from_arrow, to_arrow  # noqa: E402
+from parquet_go_spark.core.columns import logical_of  # noqa: E402
 from parquet_go_spark.core.chunk import decode_chunk, encode_chunk  # noqa: E402
 
 ENCODINGS = {
@@ -205,7 +206,7 @@ def soak_nested(iters: int, seed: int) -> int:
                 compression=str(rng.choice(COMPRESSIONS)),
                 max_page=int(rng.choice(PAGES)),
             )
-            back = to_arrow(decode_chunk(blob, logical=col.logical))
+            back = to_arrow(decode_chunk(blob, logical=logical_of(col)))
             combined = pa.chunked_array([arr]).combine_chunks()
             # NaN-safe structural compare: to_pylist equality is False
             # for any NaN leaf (nan != nan) — normalize floats to their
