@@ -3,7 +3,11 @@ type safety, CLI --where robustness, forged-ColumnIndex bounds."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
+
+REPO_ROOT = str(Path(__file__).resolve().parents[1])
 
 pytestmark = pytest.mark.spark
 
@@ -89,7 +93,7 @@ def test_cli_where_on_curate_and_unknown_op(spark, tmp_path, capsys):
         [sys.executable, "-m", "parquet_go_spark", "--cpus", "4", "curate",
          "--enc", src, "--out", out, "--min-ttr", "0.0", "--max-punct", "1.0",
          "--where", "lang:==:en"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=300,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     info = json.loads(r.stdout.strip().splitlines()[-1])
@@ -98,7 +102,7 @@ def test_cli_where_on_curate_and_unknown_op(spark, tmp_path, capsys):
     r2 = subprocess.run(
         [sys.executable, "-m", "parquet_go_spark", "--cpus", "4", "decode",
          "--enc", src, "--out", str(tmp_path / "x"), "--where", "doc_id:~:5"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=300,
     )
     assert r2.returncode != 0
     assert "not supported" in (r2.stderr + r2.stdout)
@@ -107,7 +111,7 @@ def test_cli_where_on_curate_and_unknown_op(spark, tmp_path, capsys):
     r3 = subprocess.run(
         [sys.executable, "-m", "parquet_go_spark", "--cpus", "4", "decode",
          "--enc", src, "--out", lt, "--where", "doc_id:<:5"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=300,
     )
     assert r3.returncode == 0, r3.stderr[-2000:]
     import pyarrow.parquet as pq
