@@ -446,8 +446,11 @@ def _split_slots(starts, ends, rep, r):
     additionally starts new ancestors). Returns (child_starts, child_ends,
     counts_per_slot)."""
     bounds = np.flatnonzero(rep <= r)
-    lo = np.searchsorted(bounds, starts, side="left")
-    hi = np.searchsorted(bounds, ends, side="left")
+    if len(bounds) == len(rep):
+        lo, hi = starts, ends  # innermost list: every position is an element
+    else:
+        lo = np.searchsorted(bounds, starts, side="left")
+        hi = np.searchsorted(bounds, ends, side="left")
     counts = (hi - lo).astype(np.int64)
     total = int(counts.sum())
     if total == 0:
@@ -465,6 +468,18 @@ def _split_slots(starts, ends, rep, r):
     nonempty = counts > 0
     child_ends[np.cumsum(counts)[nonempty] - 1] = np.asarray(ends, dtype=np.int64)[nonempty]
     return child_starts, child_ends, counts
+
+
+def row_slots(rep: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Top-level slot windows ``[starts, ends)`` of a level stream: one
+    per record, each starting at ``rep == 0``. No levels, no slots."""
+    starts = np.flatnonzero(rep == 0)
+    ends = (
+        np.concatenate([starts[1:], [len(rep)]])
+        if len(starts)
+        else np.empty(0, np.int64)
+    )
+    return starts, ends
 
 
 def wrap_list(starts, ends, rep, deflv, r: int, d_elem: int, d_present: int | None):
@@ -840,13 +855,7 @@ def _field_arrow(buf, meta: dict, leaves: dict, node: dict, row_groups, row_rang
     for lf in _node_leaves(node):
         rep, deflv, values, info = _leaf_levels(buf, meta, leaves[lf["path"]], row_groups, row_ranges)
         streams[lf["path"]] = (rep, deflv, values, info)
-        starts = np.flatnonzero(rep == 0)
-        ends = (
-            np.concatenate([starts[1:], [len(rep)]])
-            if len(starts)
-            else np.empty(0, np.int64)
-        )
-        state[lf["path"]] = (starts, ends)
+        state[lf["path"]] = row_slots(rep)
     return _assemble(node, state, 0, streams)
 
 

@@ -24,7 +24,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-__all__ = ["leaf_specs", "shred_leaf"]
+__all__ = ["leaf_specs", "shred_leaf", "shred_list"]
 
 
 def leaf_specs(name: str, typ: pa.DataType, nullable: bool = True):
@@ -147,6 +147,55 @@ def _list_parts(arr: pa.Array):
     return valid, sizes, arr.flatten()
 
 
+def _leaf_levels(arr: pa.Array, d_leaf: int, optional: bool):
+    """Levels of a leaf step -> (def_, rep, counts, valid)."""
+    n = len(arr)
+    valid = _valid_mask(arr)
+    if not optional and not valid.all():
+        raise ValueError("nulls in a required leaf (map key)")
+    def_ = np.where(valid, d_leaf, d_leaf - 1).astype(np.int64) if optional else np.full(
+        n, d_leaf, dtype=np.int64
+    )
+    return def_, np.zeros(n, dtype=np.int64), np.ones(n, dtype=np.int64), valid
+
+
+def _wrap_levels(valid, sizes, cdef, crep, ccounts, chas, d_group: int, r_child: int):
+    """One list step over its elements' levels -> (def_, rep, counts, has)."""
+    # per-slot element ranges
+    k0 = np.zeros(len(sizes) + 1, dtype=np.int64)
+    np.cumsum(sizes, out=k0[1:])
+    # mark every element start with this list's rep depth (slot firsts
+    # get overwritten by the caller) and find the child-position offset
+    # at each slot boundary; every slot spans >= 1 position, so equal
+    # lengths mean one position per element
+    if len(ccounts) == len(cdef):
+        crep[:] = r_child
+        slot_pos = k0
+    else:
+        # element position ranges (contiguous): starts from ccounts
+        cstarts = np.zeros(len(ccounts) + 1, dtype=np.int64)
+        np.cumsum(ccounts, out=cstarts[1:])
+        crep[cstarts[:-1]] = r_child
+        slot_pos = cstarts[k0]
+    pos_counts = np.diff(slot_pos)
+    empty = sizes == 0
+    # insert one placeholder position per empty/null slot (np.insert's
+    # placement, with the index arithmetic done once for all three)
+    ins_at = slot_pos[:-1][empty]
+    ins_pos = ins_at + np.arange(len(ins_at))
+    at_child = np.ones(len(cdef) + len(ins_pos), dtype=bool)
+    at_child[ins_pos] = False
+    def_ = np.empty(len(at_child), dtype=np.int64)
+    def_[at_child] = cdef
+    def_[ins_pos] = np.where(valid[empty], d_group, d_group - 1)
+    rep = np.zeros(len(at_child), dtype=np.int64)
+    rep[at_child] = crep
+    has = np.zeros(len(at_child), dtype=bool)
+    has[at_child] = chas
+    counts = np.where(empty, 1, pos_counts).astype(np.int64)
+    return def_, rep, counts, has
+
+
 def _shred(arr: pa.Array, steps, d: int, r: int):
     """-> (def_, rep, counts, has_value, leaf)
 
@@ -157,50 +206,18 @@ def _shred(arr: pa.Array, steps, d: int, r: int):
 
     if step[0] == "leaf":
         _, d_leaf, optional = step
-        n = len(arr)
-        valid = _valid_mask(arr)
-        if not optional and not valid.all():
-            raise ValueError("nulls in a required leaf (map key)")
-        def_ = np.where(valid, d_leaf, d_leaf - 1).astype(np.int64) if optional else np.full(
-            n, d_leaf, dtype=np.int64
-        )
-        rep = np.zeros(n, dtype=np.int64)
-        counts = np.ones(n, dtype=np.int64)
-        leaf = arr.drop_null() if optional else arr
-        return def_, rep, counts, valid, leaf
+        def_, rep, counts, valid = _leaf_levels(arr, d_leaf, optional)
+        return def_, rep, counts, valid, arr.drop_null() if optional else arr
 
     if step[0] in ("list", "map"):
+        valid, sizes, flat = _list_parts(arr)
         if step[0] == "map":
             _, d_group, r_child, which = step
-            valid, sizes, flat_struct = _list_parts(arr)
-            child = flat_struct.field(which)
-            cdef, crep, ccounts, chas, leaf = _shred(child, steps[1:], d_group + 1, r_child)
+            flat = flat.field(which)
         else:
             _, d_group, r_child = step
-            valid, sizes, flat = _list_parts(arr)
-            cdef, crep, ccounts, chas, leaf = _shred(flat, steps[1:], d_group + 1, r_child)
-
-        # element position ranges (contiguous): starts from ccounts
-        cstarts = np.zeros(len(ccounts) + 1, dtype=np.int64)
-        np.cumsum(ccounts, out=cstarts[1:])
-        # mark every element start with this list's rep depth; slot firsts
-        # get overwritten by the caller
-        if len(ccounts):
-            crep[cstarts[:-1]] = r_child
-        # per-slot element ranges
-        k0 = np.zeros(len(sizes) + 1, dtype=np.int64)
-        np.cumsum(sizes, out=k0[1:])
-        slot_pos = cstarts[k0]  # child-position offset at each slot boundary
-        pos_counts = np.diff(slot_pos)
-        empty = sizes == 0
-        # insert one placeholder position per empty/null slot
-        ins_at = slot_pos[:-1][empty]
-        ins_def = np.where(valid[empty], d_group, d_group - 1).astype(np.int64)
-        def_ = np.insert(cdef, ins_at, ins_def)
-        rep = np.insert(crep, ins_at, 0)
-        has = np.insert(chas, ins_at, False)
-        counts = np.where(empty, 1, pos_counts).astype(np.int64)
-        return def_, rep, counts, has, leaf
+        cdef, crep, ccounts, chas, leaf = _shred(flat, steps[1:], d_group + 1, r_child)
+        return (*_wrap_levels(valid, sizes, cdef, crep, ccounts, chas, d_group, r_child), leaf)
 
     if step[0] == "field":
         _, idx, d_struct = step
@@ -240,10 +257,25 @@ def shred_leaf(arr: pa.Array, spec: dict):
     (page cuts must respect these boundaries) and has marks positions
     carrying a leaf value (def == max_def)."""
     def_, rep, counts, has, leaf = _shred(arr, spec["steps"], 0, 0)
-    # top-level slot firsts start new records
+    _start_rows(rep, counts)
+    assert has.sum() == len(leaf)
+    return rep, def_, leaf, counts, has
+
+
+def shred_list(arr: pa.Array):
+    """One list level over its elements as a single opaque optional leaf
+    (steps ``("list", 1, 1), ("leaf", 3, True)``: max rep 1, max def 3)
+    -> (rep, def_, validity, elements). The elements (a map's key/value
+    entries) come back whole, nulls kept, for an inner chunk to encode."""
+    valid, sizes, elems = _list_parts(arr)
+    def_, rep, counts, _has = _wrap_levels(valid, sizes, *_leaf_levels(elems, 3, True), 1, 1)
+    _start_rows(rep, counts)
+    return rep, def_, valid, elems
+
+
+def _start_rows(rep: np.ndarray, counts: np.ndarray) -> None:
+    """Top-level slot firsts start new records (rep 0)."""
     starts = np.zeros(len(counts) + 1, dtype=np.int64)
     np.cumsum(counts, out=starts[1:])
     if len(counts):
         rep[starts[:-1]] = 0
-    assert has.sum() == len(leaf)
-    return rep, def_, leaf, counts, has

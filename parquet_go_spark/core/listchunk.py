@@ -11,10 +11,10 @@ hybrid with bit width ``bits.Len16(max)`` (rep: 1, def: 2) and a 4-byte
 size prefix (``helpers.go:262-292``).
 
 The engine has one Dremel layer, shared with the real-Parquet container:
-the encoder takes its levels from ``compat/shred.py``'s list step over the
-element as one opaque leaf, and its validity and elements from
-``shred._list_parts`` (maps as key/value entries); the decoder rebuilds
-the list with ``compat/parquet_reader.wrap_list`` / ``list_array``.
+the encoder takes its levels, validity and elements from
+``compat/shred.shred_list`` (shred's list step over the element as one
+opaque leaf; maps as key/value entries); the decoder rebuilds the list
+with ``compat/parquet_reader.row_slots`` / ``wrap_list`` / ``list_array``.
 
 Container:
   magic "PGSL" | version u8
@@ -31,8 +31,8 @@ import zlib
 import numpy as np
 import pyarrow as pa
 
-from ..compat.parquet_reader import list_array, wrap_list
-from ..compat.shred import _list_parts, shred_leaf
+from ..compat.parquet_reader import list_array, row_slots, wrap_list
+from ..compat.shred import shred_list
 from ..kernels import hybrid
 from ..kernels.varint import read_uvarint, uvarint
 from .chunk import ChunkMeta, decode_chunk, encode_chunk
@@ -43,9 +43,6 @@ __all__ = ["encode_list_chunk", "decode_list_chunk", "LIST_MAGIC"]
 LIST_MAGIC = b"PGSL"
 LIST_VERSION = 1
 
-# shred steps of one list level whose element is a single opaque leaf
-_LIST_LEVEL = {"steps": [("list", 1, 1), ("leaf", 3, True)]}
-
 
 def encode_list_chunk(
     arr: pa.Array,
@@ -53,8 +50,7 @@ def encode_list_chunk(
     compression: str = "none",
     **kw,
 ) -> tuple[bytes, ChunkMeta]:
-    rep, dlev, _leaf, _counts, _has = shred_leaf(arr, _LIST_LEVEL)
-    valid, _sizes, elems = _list_parts(arr)
+    rep, dlev, valid, elems = shred_list(arr)
     rep_s = hybrid.with_size_prefix(hybrid.encode_auto(rep, 1), 1)
     def_s = hybrid.with_size_prefix(hybrid.encode_auto(dlev, 2), 2)
     inner, meta = encode_chunk(from_arrow(elems), profile=profile, compression=compression, **kw)
@@ -114,10 +110,9 @@ def decode_list_chunk(blob, logical: str = "", depth: int = 0) -> pa.Array:
             elem_logical = elem_logical.split(":", 1)[1].strip()
     elem = to_arrow(decode_chunk(mv[pos:], logical=elem_logical, depth=depth + 1))
     rep, dlev = np.asarray(rep, np.int64), np.asarray(dlev, np.int64)
-    starts = np.flatnonzero(rep == 0)
+    starts, ends = row_slots(rep)
     if len(starts) != num_rows or (n_entries and rep[0] != 0):
         raise ValueError(f"list levels hold {len(starts)} rows, header says {num_rows}")
-    ends = np.append(starts[1:], n_entries)
     elem_starts, _, offsets, valid = wrap_list(starts, ends, rep, dlev, 1, 2, 1)
     if (
         len(elem_starts) != len(elem)

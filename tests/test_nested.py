@@ -187,3 +187,31 @@ def test_forged_list_entry_count_raises():
     with pytest.raises(ValueError, match="entries"):
         decode_chunk(forged, logical=str(t))
     assert decode_chunk(three, logical=str(t)).to_pylist() == [[{"a": 0}, {"a": 1}, {"a": 2}]]
+
+
+def test_row_slots_of_no_levels_is_empty():
+    # a chunk with no rows has no slot windows at all: one empty end per
+    # empty start, never a stray window ending at 0
+    from parquet_go_spark.compat.parquet_reader import row_slots
+
+    starts, ends = row_slots(np.empty(0, np.int64))
+    assert len(starts) == len(ends) == 0
+    starts, ends = row_slots(np.array([0, 1, 0, 0, 1]))
+    assert starts.tolist() == [0, 2, 3] and ends.tolist() == [2, 3, 5]
+
+
+@pytest.mark.parametrize(
+    "arr",
+    [
+        pa.array([], type=pa.list_(pa.int64())),
+        pa.array([], type=pa.map_(pa.string(), pa.int64())),
+        pa.StructArray.from_arrays(
+            [pa.array([[1], [2, 3]], type=pa.list_(pa.int64()))], names=["l"], mask=pa.array([True, True])
+        ),
+        pa.array([[], None, []], type=pa.list_(pa.list_(pa.string()))),
+    ],
+    ids=["zero-row-list", "zero-row-map", "list-under-all-null-struct", "list-list-no-inner-rows"],
+)
+def test_zero_row_inner_lists_roundtrip(arr):
+    # every one of these holds a PGSL chunk with no rows
+    assert _rt(arr).equals(arr)
