@@ -537,7 +537,8 @@ def encode_chunk(
     reads them; parquet-format's PageIndex.md is the public design this
     follows). ``chunk_page_index`` reads them back without decompressing
     any page, and ``decode_chunk(row_sel=...)`` decodes only the pages a
-    predicate's surviving row ranges touch."""
+    predicate's surviving row ranges touch. A nested column's element
+    chunks carry ``page_crc``, never ``page_stats`` (nobody seeks them)."""
     from .selector import choose_encoding  # local import to avoid cycle
 
     if isinstance(col, pa.Array):  # nested: from_arrow keeps it Arrow
@@ -552,6 +553,7 @@ def encode_chunk(
             max_page=max_page,
             level_mode=level_mode,
             encoding=encoding,
+            page_crc=page_crc,
         )
 
     if level_mode is None:

@@ -5,6 +5,8 @@ and stream readers, and the maintenance scans — shares one plan and one
 decode: ``plan_scan`` resolves the read on the driver (committed
 partitions, snapshot pin, prune, delete sidecars, column types) and
 ``decode_partition`` turns one partition file into one Arrow batch.
+``scan_units`` runs every engine scan, this module's and
+``parquet_source``'s, as byte-packed tasks with no exchange.
 
 Column projection mirrors the reference's read-side SELECT
 (``file_reader.go:112-130`` / ``skipChunk``): unselected chunks are seeked
@@ -33,24 +35,14 @@ from .session import freeze_task_heap
 
 def _read_chunk_dict(enc_dir: str, pid: int, col: str) -> set | None:
     """The chunk's complete dictionary, via one bounded read: the
-    partition file is mmapped so the header walk and the dict payload
-    fault in a few pages while every data page stays untouched (the
-    parquet side's bounded-pread bloom/dict probes, same idea)."""
-    import mmap
-
+    partition file is memory-mapped so the header walk and the dict
+    payload fault in a few pages while every data page stays untouched
+    (the parquet side's bounded-pread bloom/dict probes, same idea)."""
     from ..core.chunk import chunk_dict_values
 
-    path = os.path.join(enc_dir, f"part-{pid:05d}.bin")
     try:
-        with open(path, "rb") as f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
-            blob = parse_partition_file(mm, {col}).pop(col, None)
-            try:
-                return chunk_dict_values(blob) if blob is not None else None
-            finally:
-                # the view points into the mmap; release it before the
-                # mmap context closes (else BufferError)
-                if blob is not None:
-                    blob.release()
+        blob = parse_partition_file(open_partition(enc_dir, pid), {col}).get(col)
+        return chunk_dict_values(blob) if blob is not None else None
     except (OSError, ValueError):
         return None  # unreadable/forged: no proof, no prune
 
@@ -342,21 +334,6 @@ def logical_of_ddl(ddl: str) -> str:
     return _DDL_LOGICAL.get(ddl, "binary")
 
 
-def binary_value_view(arr: "pa.Array", i: int) -> "pa.Buffer":
-    """Zero-copy ``pa.Buffer`` view of ``arr[i]`` for a (large_)binary
-    array. ``arr[i].as_buffer()`` (and ``.as_py()``) materialize a COPY
-    of the value in this pyarrow — a full extra memcpy of every
-    partition file per decode task, doubling peak task RSS on
-    production-sized partitions. Slicing the data buffer through the
-    offsets buffer views the batch's own memory; the buffer's parent
-    refcount keeps it alive for every chunk view decode hands out."""
-    off_buf, data_buf = arr.buffers()[1], arr.buffers()[2]
-    dt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    width = np.dtype(dt).itemsize
-    offs = np.frombuffer(off_buf, dt, len(arr) + 1, arr.offset * width)
-    return data_buf.slice(int(offs[i]), int(offs[i + 1] - offs[i]))
-
-
 @dataclass
 class ScanPlan:
     """What every task of one read of a PGSC table needs, resolved once
@@ -505,6 +482,64 @@ def decode_partition(enc_dir: str, pid: int, payload, plan: ScanPlan) -> "pa.Rec
     )
 
 
+def partition_path(enc_dir: str, pid: int) -> str:
+    return os.path.join(enc_dir, f"part-{pid:05d}.bin")
+
+
+def open_partition(enc_dir: str, pid: int) -> "pa.Buffer":
+    """Partition ``pid``'s file as a memory-mapped ``pa.Buffer``: it owns
+    the mapping, so a zero-copy chunk view outlives the task's yield."""
+    return pa.memory_map(partition_path(enc_dir, pid)).read_buffer()
+
+
+def pack_scan_units(
+    sizes: list[int], max_partition_bytes: int, open_cost: int, parallelism: int
+) -> list[range]:
+    """Contiguous index ranges of scan units under Spark's own rule
+    (``FilePartition.maxSplitBytes``/``getFilePartitions``): split size
+    ``min(maxPartitionBytes, max(openCost, sum(size + openCost) /
+    parallelism))``; a group closes before the unit that would pass it."""
+    per_slot = sum(size + open_cost for size in sizes) // parallelism
+    split = min(max_partition_bytes, max(open_cost, per_slot))
+    groups, lo, cur = [], 0, 0
+    for i, size in enumerate(sizes):
+        if i > lo and cur + size > split:
+            groups.append(range(lo, i))
+            lo, cur = i, 0
+        cur += size + open_cost
+    return groups + [range(lo, len(sizes))] if sizes else groups
+
+
+def scan_units(spark: SparkSession, units: list, sizes: list[int], run, ddl: str) -> DataFrame:
+    """``run(unit)`` -> the Arrow batches of every planned unit, the
+    units packed by ``sizes`` under the session's ``spark.sql.files.*``
+    settings (``pack_scan_units``), one ``mapInArrow`` task per group
+    over ``spark.range``. Rows come back in plan order."""
+    if not units:
+        return spark.createDataFrame([], schema=ddl)
+    js = spark._jsparkSession
+    conf = js.sessionState().conf()
+    min_parts = conf.filesMinPartitionNum()
+    n = min_parts.get() if min_parts.isDefined() else js.leafNodeDefaultParallelism()
+    bounds = pack_scan_units(sizes, conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes(), n)
+    groups = [units[g.start : g.stop] for g in bounds]
+
+    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        freeze_task_heap()
+        for b in batches:
+            for g in b.column(0).to_pylist():
+                for unit in groups[g]:
+                    yield from run(unit)
+
+    return spark.range(0, len(groups), 1, len(groups)).mapInArrow(task, ddl)
+
+
+def scan_partitions(spark, enc_dir: str, pids: list[int], run, ddl: str) -> DataFrame:
+    """``scan_units`` over partition ids, each weighing its file's bytes."""
+    sizes = [os.path.getsize(partition_path(enc_dir, p)) for p in pids]
+    return scan_units(spark, pids, sizes, run, ddl)
+
+
 def decode_table(
     spark: SparkSession,
     enc_dir: str,
@@ -515,9 +550,10 @@ def decode_table(
     pids: set[int] | None = None,
 ) -> DataFrame:
     """Decode an encoded table directory back into a DataFrame:
-    ``plan_scan`` on the driver, then one ``decode_partition`` per
-    committed partition file inside a ``mapInArrow`` over the
-    ``binaryFile`` scan.
+    ``plan_scan`` on the driver, then ``decode_partition`` on each
+    planned partition file, memory-mapped by the task that reads it
+    (``scan_partitions``: partitions packed by file bytes into as few
+    tasks as Spark's split size asks for, no shuffle).
 
     ``as_of`` time-travels: read only the partitions pinned by snapshot
     ``seq`` (``manifest.snapshot_partitions``) — the table exactly as it
@@ -554,23 +590,13 @@ def decode_table(
     bounds + no-false-negative blooms); the caller still applies the
     exact filter."""
     plan = plan_scan(enc_dir, columns, prune, as_of, pids, validate_crc)
-    if not plan.pids:
-        # empty input (zero-task encode) or everything pruned
-        return spark.createDataFrame([], schema=plan.ddl)
-    paths = [os.path.join(enc_dir, f"part-{pid:05d}.bin") for pid in plan.pids]
-    files = spark.read.format("binaryFile").load(paths).select("path", "content")
 
-    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        freeze_task_heap()
-        for b in batches:
-            content = b.column("content")
-            for i, path in enumerate(b.column("path")):
-                pid = int(os.path.basename(path.as_py())[len("part-") : -len(".bin")])
-                batch = decode_partition(enc_dir, pid, binary_value_view(content, i), plan)
-                if batch is not None:
-                    yield batch
+    def decode(pid: int) -> Iterator[pa.RecordBatch]:
+        batch = decode_partition(enc_dir, pid, open_partition(enc_dir, pid), plan)
+        if batch is not None:
+            yield batch
 
-    return files.mapInArrow(decode, schema=plan.ddl)
+    return scan_partitions(spark, enc_dir, plan.pids, decode, plan.ddl)
 
 
 def read_changes(

@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import manifest as mf
 from ..core import prune as pz
 from ..core.columns import one_chunk
-from .decode_job import ScanPlan, decode_partition, decode_table, plan_scan, surviving_partitions
+from .decode_job import ScanPlan, decode_partition, decode_table, open_partition, partition_path
+from .decode_job import plan_scan, scan_partitions, surviving_partitions
 from .encode_job import encode_columns_to_partition, encode_table, partition_file_epoch
 
 __all__ = [
@@ -46,22 +47,10 @@ __all__ = [
 ]
 
 
-def _local(p: str) -> str:
-    return p[len("file:") :] if p.startswith("file:") else p
-
-
-def _pid_of(p: str) -> int:
-    return int(os.path.basename(_local(p))[len("part-") : -len(".bin")])
-
-
-def _paths(enc_dir: str, pids: list[int]) -> list[str]:
-    return [os.path.join(enc_dir, f"part-{pid:05d}.bin") for pid in pids]
-
-
 def _decode_file(enc_dir: str, pid: int, plan: ScanPlan) -> "tuple[pa.RecordBatch | None, int]":
     """``decode_partition`` over partition ``pid``'s file as it is on
     disk now, and the rewrite epoch of the bytes it decoded."""
-    with open(os.path.join(enc_dir, f"part-{pid:05d}.bin"), "rb") as fh:
+    with open(partition_path(enc_dir, pid), "rb") as fh:
         payload = fh.read()
     return decode_partition(enc_dir, pid, payload, plan), partition_file_epoch(payload)
 
@@ -82,22 +71,22 @@ def _rewrite_in_place(enc_dir: str, pid: int, table: "pa.Table", epoch: int, enc
 
 
 def _per_partition(spark: SparkSession, enc_dir: str, pids: list[int], fn) -> list:
-    """One Spark task per partition file runs ``fn(pid) -> (rows_deleted,
-    rewritten)``; returns the collected (partition, rows_deleted,
-    rewritten) rows."""
-    files = spark.read.format("binaryFile").load(_paths(enc_dir, pids)).select("path")
+    """``fn(pid) -> (rows_deleted, rewritten)`` for every partition, in
+    the packed scan tasks of ``scan_partitions``; returns the collected
+    (partition, rows_deleted, rewritten) rows."""
 
-    def run(it):
-        import pandas as pd
+    def run(pid: int):
+        deleted, rewrote = fn(pid)
+        yield pa.record_batch(
+            {
+                "partition": pa.array([pid], pa.int32()),
+                "rows_deleted": [deleted],
+                "rewritten": [rewrote],
+            }
+        )
 
-        for pdf in it:
-            out = []
-            for pid in map(_pid_of, pdf["path"]):
-                deleted, rewrote = fn(pid)
-                out.append({"partition": pid, "rows_deleted": deleted, "rewritten": rewrote})
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, "partition int, rows_deleted long, rewritten boolean").collect()
+    ddl = "partition int, rows_deleted long, rewritten boolean"
+    return scan_partitions(spark, enc_dir, pids, run, ddl).collect()
 
 
 def _retire_rewritten(enc_dir: str, rewritten: set[int]) -> None:
@@ -181,56 +170,33 @@ def _scan_key_positions(
     key value) for every base row of the given partitions — existing
     MOR sidecars deliberately NOT applied (the plan's sidecar maps are
     emptied), so ordinals match the data file (the positional-delete
-    coordinate system). One task per partition file; only the key
-    column's chunk is decoded."""
+    coordinate system). Partitions pack into scan tasks by file bytes
+    (``scan_partitions``); only the key column's chunk is decoded."""
     ddl = next(f for f in fields if f["name"] == key)["ddl"]
     if ddl.strip().startswith(("array<", "map<", "struct<")):
         raise ValueError(f"merge key {key!r} must be a scalar column, got {ddl}")
     plan = replace(plan_scan(enc_dir, [key], pids=pids), deletes={}, eq_deletes={})
-    files = spark.read.format("binaryFile").load(_paths(enc_dir, plan.pids)).select("path")
 
-    def scan(it):
-        import mmap as _mmap
-
+    def scan(pid: int):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            for p in pdf["path"]:
-                pid = _pid_of(p)
-                # mmap, not read(): a projection scan of ONE column must
-                # not pull the whole partition file through memory — the
-                # header walk and the key chunk fault in a few pages
-                # while a wide html column's data pages never leave disk
-                # (the _read_chunk_dict bounded-probe pattern). The
-                # decode materializes to pandas INSIDE the context, so
-                # no view outlives the map.
-                with open(_local(p), "rb") as fh, _mmap.mmap(
-                    fh.fileno(), 0, access=_mmap.ACCESS_READ
-                ) as mm:
-                    batch = decode_partition(enc_dir, pid, mm, plan)
-                    if batch is None:
-                        continue
-                    n = batch.num_rows
-                    out_pdf = pd.DataFrame(
-                        {
-                            "pid": np.full(n, pid, dtype="int32"),
-                            "pos": np.arange(n, dtype="int64"),
-                            # the rewrite epoch of the BYTES these
-                            # ordinals index — carried through the join
-                            # so the sidecar is stamped against the
-                            # scanned coordinate system, not whatever is
-                            # on disk at write time
-                            "ep": np.full(n, partition_file_epoch(mm), dtype="int64"),
-                            # to_pandas COPIES, so nothing below
-                            # outlives the map
-                            "k": batch.column(0).to_pandas(),
-                        }
-                    )
-                    del batch
-                yield out_pdf
+        # memory-mapped: a projection scan of ONE column must not pull
+        # the whole partition file through memory — the header walk and
+        # the key chunk fault in a few pages while a wide html column's
+        # data pages never leave disk
+        payload = open_partition(enc_dir, pid)
+        batch = decode_partition(enc_dir, pid, payload, plan)
+        if batch is None:
+            return
+        # ep: the rewrite epoch of the BYTES these ordinals index —
+        # carried through the join so the sidecar is stamped against the
+        # scanned coordinate system, not whatever is on disk at write time
+        n, ep = batch.num_rows, partition_file_epoch(payload)
+        cols = [np.full(n, pid, np.int32), np.arange(n, dtype=np.int64), np.full(n, ep, np.int64)]
+        yield pa.record_batch([*map(pa.array, cols), batch.column(0)], ["pid", "pos", "ep", "k"])
 
-    return files.mapInPandas(scan, schema=f"pid int, pos bigint, ep bigint, k {ddl}")
+    out_ddl = f"pid int, pos bigint, ep bigint, k {ddl}"
+    return scan_partitions(spark, enc_dir, plan.pids, scan, out_ddl)
 
 
 def mark_matching_keys(
@@ -315,10 +281,10 @@ def materialize_deletes(
     (optionally restricted to ``pids``) so the deletes are materialized
     into the data files — the Iceberg rewrite-position-delete-files /
     minor-compaction analogue, and the second half of a large-source
-    COW merge. One task per affected partition decodes live rows
-    (sidecars applied), re-encodes in place keeping the partition's
-    block codec, then sidecars are dropped and history pinning the
-    rewritten bytes is tombstoned."""
+    COW merge. Each affected partition, in the packed scan tasks of
+    ``scan_partitions``, decodes its live rows (sidecars applied) and
+    re-encodes in place keeping its block codec; then sidecars are
+    dropped and history pinning the rewritten bytes is tombstoned."""
     plan = plan_scan(enc_dir, pids=pids)
     if not plan.deletes:
         return {"rewritten": [], "snapshot": None}
@@ -450,9 +416,10 @@ def delete_where(
 
     Both modes share the plan front: the manifest stats/bloom tiers
     first prove which partitions MAY contain a match
-    (``surviving_partitions``); one Spark task per candidate partition,
-    every other partition untouched. A trailing ``delete`` snapshot pins
-    the result. Returns {"candidates", "rows_deleted", "snapshot"}.
+    (``surviving_partitions``); the candidates are packed into scan
+    tasks by file bytes, every other partition untouched. A trailing
+    ``delete`` snapshot pins the result. Returns {"candidates",
+    "rows_deleted", "snapshot"}.
 
     ``mode="cow"`` (copy-on-write): candidates are decoded, filtered,
     and re-encoded in place. Rewritten partitions keep their block

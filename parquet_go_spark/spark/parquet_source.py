@@ -12,18 +12,19 @@ mmap of the file — column projection means unselected chunks are never
 decoded and their pages never fault in (reference ``skipChunk``,
 ``file_reader.go:112-130``).
 
-Scale shape: one task per row group, no shuffle, no driver data
-movement — a 100 TB table fans out to its row-group count whatever the
-file sizes, so one multi-gigabyte file cannot pin a single executor.
-Row-group pruning plugs in ahead of the scan via the footers'
-Statistics (``plan_scan_tasks`` below), the same conservative min/max
-contract as the engine's own manifest pruning.
+Scale shape: the scan unit is a ROW GROUP, packed by compressed bytes
+into contiguous tasks under Spark's own split size
+(``decode_job.scan_units``) — no shuffle, no driver data movement. One
+multi-gigabyte file fans out over its row groups instead of pinning a
+single executor, and many small row groups share a task instead of
+each paying one. Row-group pruning plugs in ahead of the scan via the
+footers' Statistics (``plan_scan_tasks`` below), the same conservative
+min/max contract as the engine's own manifest pruning.
 """
 
 from __future__ import annotations
 
 import glob
-import mmap
 import os
 from collections.abc import Iterator
 
@@ -43,8 +44,7 @@ from ..compat.parquet_reader import (
 )
 from ..core import prune as pz
 from ..core.columns import one_chunk
-from .decode_job import arrow_type_of_ddl
-from .session import freeze_task_heap
+from .decode_job import arrow_type_of_ddl, scan_units
 
 __all__ = ["read_parquet_table", "parquet_scan_schema", "file_prunes"]
 
@@ -153,7 +153,14 @@ def _rg_excluded(
     )
 
 
-def plan_scan_tasks(files: list[str], prune: list[tuple] | None) -> list[tuple[str, int]]:
+class ScanTasks(list):
+    """``(path, row_group)`` list; ``nbytes[i]`` is task i's compressed
+    row-group bytes, from the footer the planner read."""
+
+    nbytes: list[int]
+
+
+def plan_scan_tasks(files: list[str], prune: list[tuple] | None) -> ScanTasks:
     """(path, row_group) task list from footers alone: the scan unit is
     a ROW GROUP, not a file, so one multi-gigabyte file fans out across
     executors instead of pinning one task (reference
@@ -163,15 +170,18 @@ def plan_scan_tasks(files: list[str], prune: list[tuple] | None) -> list[tuple[s
     Files plan through a thread pool; results keep the files' order, so
     the task list stays deterministic."""
 
-    def plan_file(f: str) -> list[tuple[str, int]]:
+    def plan_file(f: str) -> list[tuple[str, int, int]]:
         meta = file_meta_path(f)
         return [
-            (f, i)
+            (f, i, rg.get(6) or sum(cc.get(3, {}).get(7, 0) for cc in rg.get(1) or ()))
             for i, rg in enumerate(meta.get(4) or [])
             if not (prune and _rg_excluded(rg, prune, f, meta.get(2)))
         ]
 
-    return [t for group in pz.fan_out(plan_file, files) for t in group]
+    planned = [t for group in pz.fan_out(plan_file, files) for t in group]
+    tasks = ScanTasks((f, i) for f, i, _ in planned)
+    tasks.nbytes = [n for _, _, n in planned]
+    return tasks
 
 
 def read_row_group(path: str, rg: int, schema: list[tuple], prune: list[tuple] | None) -> pa.Table:
@@ -181,10 +191,10 @@ def read_row_group(path: str, rg: int, schema: list[tuple], prune: list[tuple] |
     surviving PAGES — excluded pages' bytes never decompress or fault
     in; a file without an index is read whole."""
     cols = [n for n, _, _ in schema]
-    with open(path, "rb") as fh, mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ) as mm:
-        ranges = page_prune_ranges(mm, file_meta(mm), rg, prune) if prune else None
-        tbl = read_table_arrow(mm, columns=cols, row_groups=[rg], row_ranges=ranges)
-        arrays = [one_chunk(tbl.column(n)).cast(arrow_type_of_ddl(ddl)) for n, _, ddl in schema]
+    buf = pa.memory_map(path).read_buffer()
+    ranges = page_prune_ranges(buf, file_meta(buf), rg, prune) if prune else None
+    tbl = read_table_arrow(buf, columns=cols, row_groups=[rg], row_ranges=ranges)
+    arrays = [one_chunk(tbl.column(n)).cast(arrow_type_of_ddl(ddl)) for n, _, ddl in schema]
     return pa.table(dict(zip(cols, arrays)))
 
 
@@ -195,12 +205,14 @@ def read_parquet_table(
     prune: list[tuple] | None = None,
 ) -> DataFrame:
     """Read a directory/glob/file of real Parquet into a DataFrame via
-    this engine's kernels — one task per ROW GROUP, projection inside
-    the task (unselected column chunks never decoded; the mmap-backed
-    buffer never faults their pages in), optional footer-stats
-    row-group pruning (``prune`` uses the same ``[(col, op, value)]``
-    contract as ``decode_table``; conservative, re-apply the exact
-    filter)."""
+    this engine's kernels — planned row groups packed by compressed
+    bytes into as few tasks as Spark's split size asks for
+    (``decode_job.scan_units``; no shuffle, rows in ``(file, row
+    group)`` order), projection inside the task (unselected column
+    chunks never decoded; the mmap-backed buffer never faults their
+    pages in), optional footer-stats row-group pruning (``prune`` uses
+    the same ``[(col, op, value)]`` contract as ``decode_table``;
+    conservative, re-apply the exact filter)."""
     files = _list_files(path)
     schema = parquet_scan_schema(files[0])
     if columns is not None:
@@ -212,21 +224,10 @@ def read_parquet_table(
             (s for s in schema if s[0] in set(columns)),
             key=lambda s: columns.index(s[0]),
         )
-    cols = [n for n, _, _ in schema]
     out_ddl = ", ".join(f"`{n}` {ddl}" for n, _, ddl in schema)
     tasks = plan_scan_tasks(files, prune)
-    if not tasks:
-        return spark.createDataFrame([], schema=out_ddl)
-    fdf = spark.createDataFrame(
-        [(f, rg) for f, rg in tasks], "path string, rg int"
-    ).repartition(min(len(tasks), 4096), "path", "rg")
 
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        freeze_task_heap()
-        for b in batches:
-            for p, rg in zip(b.column("path"), b.column("rg")):
-                tbl = read_row_group(p.as_py(), rg.as_py(), schema, prune)
-                yield from tbl.to_batches(max_chunksize=1 << 16)
+    def scan(task: tuple[str, int]) -> Iterator[pa.RecordBatch]:
+        yield from read_row_group(*task, schema, prune).to_batches(max_chunksize=1 << 16)
 
-    return fdf.mapInArrow(scan, schema=out_ddl)
-
+    return scan_units(spark, tasks, tasks.nbytes, scan, out_ddl)

@@ -79,3 +79,18 @@ def test_large_list_roundtrip():
     assert out.cast(arr.type).equals(arr)
     # level streams must be tiny: rep is RLE-friendly, def is constant
     assert meta.encoded_bytes < 3000 * 64 * 4 * 1.05
+
+
+def test_page_crc_reaches_the_element_chunk():
+    """``page_crc`` reaches a list's element chunk: its flags byte has
+    bit 2 set, and one flipped byte of an element page fails the decode."""
+    arr = pa.array([[1, 2], [3]], type=pa.list_(pa.int64()))
+    blob, _ = encode_chunk(from_arrow(arr), page_crc=True)
+    inner = blob.index(b"PGSC")
+    # magic, version, ptype, encoding, compression, then the flags byte
+    assert blob[inner + 8] & 4
+    assert decode_chunk(blob, logical="list<int64>").to_pylist() == [[1, 2], [3]]
+    bad = bytearray(blob)
+    bad[-1] ^= 0xFF  # the last byte of the element chunk's last page
+    with pytest.raises(ValueError, match="CRC mismatch"):
+        decode_chunk(bytes(bad), logical="list<int64>")

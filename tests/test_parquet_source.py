@@ -1,8 +1,8 @@
 """Distributed real-Parquet source (spark/parquet_source.py): files
-written by pyarrow/Spark decode through our kernels at one task per
-file, with footer-only planning and footer-stats file pruning
-(reference read side ``file_reader.go`` / ``file_meta.go:14-74`` at
-cluster scale)."""
+written by pyarrow/Spark decode through our kernels, row groups packed
+by bytes into shuffle-free tasks, with footer-only planning and
+footer-stats file pruning (reference read side ``file_reader.go`` /
+``file_meta.go:14-74`` at cluster scale)."""
 
 from __future__ import annotations
 
@@ -189,3 +189,24 @@ def test_row_group_granular_tasks_and_pruning(spark, tmp_path):
     df = read_parquet_table(spark, str(f), prune=[("i", ">=", 950)])
     got = df.where("i >= 950").agg({"i": "sum"}).collect()[0][0]
     assert got == sum(range(950, 1000))
+
+
+def test_scan_packs_row_groups_in_plan_order_without_exchange(spark, tmp_path):
+    from parquet_go_spark.spark.parquet_source import plan_scan_tasks
+
+    for k in range(2):  # 2 files x 16 row groups of 50 rows
+        t = pa.table({"i": pa.array(range(k * 800, (k + 1) * 800), type=pa.int64())})
+        pq.write_table(t, tmp_path / f"part-{k}.parquet", row_group_size=50)
+    tasks = plan_scan_tasks(sorted(glob.glob(str(tmp_path / "*.parquet"))), None)
+    assert len(tasks) == len(tasks.nbytes) == 32 and min(tasks.nbytes) > 0
+    df = read_parquet_table(spark, str(tmp_path))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    # 32 small row groups share the slots' tasks instead of one task each
+    assert df.rdd.getNumPartitions() < len(tasks)
+    # rows come back in (file, row group) order
+    assert [r.i for r in df.collect()] == list(range(1600))
+    # a lookup whose prune leaves one row group runs one task
+    one = read_parquet_table(spark, str(tmp_path), prune=[("i", "==", 1234)])
+    assert one.rdd.getNumPartitions() == 1
+    assert [r.i for r in one.where("i = 1234").collect()] == [1234]

@@ -1,13 +1,13 @@
 """Round-5 review batch 9 pins.
 
-Finding 1: ``decode_table``'s task loop called ``content.as_py()`` on
-each binaryFile row — a full memcpy of every partition file per task
-(doubling peak task RSS on production-sized partitions). The decode
-path must accept a zero-copy ``pa.Buffer`` view of the batch column
-instead; these tests pin that the whole non-Spark decode stack
-(``parse_partition_file`` → ``partition_file_epoch`` →
-``decode_blobs_to_batch``) works over a ``pa.Buffer`` payload and that
-the scalar view really is zero-copy.
+Finding 1: ``decode_table``'s task loop once copied every partition
+file into a Python ``bytes`` object per task (doubling peak task RSS on
+production-sized partitions). The decode path takes a zero-copy
+``pa.Buffer`` instead — today a memory map of the partition file
+(``decode_job.open_partition``); these tests pin that the whole
+non-Spark decode stack (``parse_partition_file`` →
+``partition_file_epoch`` → ``decode_blobs_to_batch``) works over a
+``pa.Buffer`` payload.
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from parquet_go_spark.spark.decode_job import binary_value_view, decode_blobs_to_batch
+from parquet_go_spark.spark.decode_job import decode_blobs_to_batch
 from parquet_go_spark.spark.encode_job import (
     encode_columns_to_partition,
     parse_partition_file,
@@ -38,31 +38,9 @@ def _encode_fixture(tmp_path, epoch=0):
         return t, f.read()
 
 
-def test_binary_value_view_is_zero_copy():
-    """The optimization's premise: the view addresses the array's own
-    data buffer (scalar ``.as_buffer()``/``.as_py()`` both COPY in this
-    pyarrow — that copy is exactly what the decode change removes).
-    Sliced arrays (nonzero offset) must honor the slice too."""
-    payload = b"\x07" * 4096
-    arr = pa.array([b"aa", payload, b"zz"], type=pa.binary()).slice(1, 2)
-    buf = binary_value_view(arr, 0)
-    data_buf = arr.buffers()[2]
-    lo, hi = data_buf.address, data_buf.address + data_buf.size
-    assert lo <= buf.address and buf.address + buf.size <= hi
-    assert bytes(memoryview(buf)) == payload
-    assert bytes(memoryview(binary_value_view(arr, 1))) == b"zz"
-    # large_binary layout too (64-bit offsets)
-    larr = pa.array([payload], type=pa.large_binary())
-    lbuf = binary_value_view(larr, 0)
-    ldata = larr.buffers()[2]
-    assert ldata.address <= lbuf.address
-    assert bytes(memoryview(lbuf)) == payload
-
-
 def test_decode_stack_accepts_buffer_payload(tmp_path):
     t, raw = _encode_fixture(tmp_path, epoch=3)
-    # the exact shape decode_partition sees: a Buffer view of the
-    # binaryFile batch column, never bytes
+    # decode_partition sees a pa.Buffer, never bytes
     batch = pa.record_batch({"content": pa.array([raw], type=pa.binary())})
     payload = batch.column("content")[0].as_buffer()
     assert isinstance(payload, pa.Buffer)

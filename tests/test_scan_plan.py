@@ -3,7 +3,10 @@
 table: ``decode_table``, ``read_changes``, the ``pgs`` batch reader with
 and without pushdown, the ``pgs`` stream reader and the maintenance
 scans. Every reader lists only committed partitions and applies the
-same delete sidecars, null fill and CRC check."""
+same delete sidecars, null fill and CRC check. The engine's own scans
+(``decode_table``, the maintenance scans, ``read_parquet_table``) share
+one task shape too, ``decode_job.scan_units``: units packed by bytes
+under Spark's split rule, one task per group, no shuffle."""
 
 from __future__ import annotations
 
@@ -15,9 +18,9 @@ import pyspark.sql.functions as F
 
 from parquet_go_spark.spark import manifest as mf
 from parquet_go_spark.spark.datasource import PGSDataSource
-from parquet_go_spark.spark.decode_job import decode_table, read_changes
+from parquet_go_spark.spark.decode_job import decode_table, pack_scan_units, read_changes
 from parquet_go_spark.spark.encode_job import encode_table
-from parquet_go_spark.spark.maintenance import delete_keys, delete_where
+from parquet_go_spark.spark.maintenance import _scan_key_positions, delete_keys, delete_where
 from parquet_go_spark.spark.pages_table import pages_df
 
 pytestmark = pytest.mark.spark
@@ -130,3 +133,52 @@ def test_every_reader_serves_the_same_rows(spark, tmp_path):
     )
     q.awaitTermination(120)
     assert _rows(spark.read.parquet(sink)) == current
+
+
+def test_pack_scan_units_follows_sparks_split_rule():
+    mb = 1 << 20
+    # split = min(256 MB, max(4 MB, 8 * (3 + 4) MB / 4)) = 14 MB: pairs
+    assert pack_scan_units([3 * mb] * 8, 256 * mb, 4 * mb, 4) == [
+        range(0, 2), range(2, 4), range(4, 6), range(6, 8)
+    ]
+    assert pack_scan_units([3 * mb], 256 * mb, 4 * mb, 4) == [range(0, 1)]
+    assert pack_scan_units([], 256 * mb, 4 * mb, 4) == []
+    # maxPartitionBytes caps the split: each 100 MB unit is its own task
+    assert pack_scan_units([100 * mb] * 3, 128 * mb, 4 * mb, 1) == [
+        range(0, 1), range(1, 2), range(2, 3)
+    ]
+    # a unit larger than the split is never cut, and never shares
+    assert pack_scan_units([mb, 50 * mb, mb], 16 * mb, 4 * mb, 4) == [
+        range(0, 1), range(1, 2), range(2, 3)
+    ]
+
+
+def test_engine_scans_run_without_exchange_or_file_scan(spark, tmp_path):
+    d = str(tmp_path / "enc")
+    encode_table(pages_df(spark, 400, partitions=1), d, key_col="url", partitions=4).collect()
+    mf.commit_snapshot(d, "encode")
+    fields = mf.read_table_schema(d)
+    for df in (
+        decode_table(spark, d),
+        decode_table(spark, d, prune=[("lang", "notnull", None)]),
+        _scan_key_positions(spark, d, fields, "url", sorted(mf.committed_partitions(d))),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan and "binaryfile" not in plan.lower(), plan
+        assert "Range" in plan, plan
+    assert decode_table(spark, d).count() == 400
+
+
+def test_decode_table_returns_rows_in_partition_order(spark, tmp_path):
+    d = str(tmp_path / "enc")
+    df = spark.range(0, 600, 1, 3).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+    encode_table(df, d, key_col="k", layout="range", sort_within="k", partitions=6).collect()
+    mf.commit_snapshot(d, "encode")
+    lows = [
+        int(r["min_str"])
+        for pid in sorted(mf.committed_partitions(d))
+        for r in mf.read_partition_manifest(d, pid)
+        if r["column"] == "k"
+    ]
+    assert lows == sorted(lows)  # ascending pid = ascending key range
+    assert [r.k for r in decode_table(spark, d).collect()] == list(range(600))
