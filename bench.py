@@ -24,6 +24,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.canary import probe_ms, wait_clean  # noqa: E402
+
+# clean-window gate: the DEFLATE canary runs at ~0.7-1.2 ms on a quiet
+# host; co-tenant contention (CPU preemption, memory bandwidth, frequency)
+# slows it
+CANARY_THRESHOLD_MS = 2.0
+LEG_WAIT_S = 90.0  # longest wait for a clean window before a leg's first rep
+DIRTY_REP_WAIT_S = 45.0  # and before a rep that follows a dirty reading
+
 OP_QUERIES = [
     "roundtrip_lineitem",
     "enc_fsst_documents",
@@ -52,43 +61,6 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _steal_jiffies() -> tuple[int, int]:
-    """(steal, total) jiffies from /proc/stat — measures hypervisor CPU
-    theft across a bench interval. This multi-tenant VM shows minute-long
-    bursts that inflate any single wall-clock sample 2-10x; reporting the
-    interval's steal fraction makes a dirty sample self-explaining."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        vals = [int(x) for x in parts[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        return steal, sum(vals)
-    except Exception:
-        return 0, 0
-
-
-def _steal_pct(interval_s: float = 1.5) -> float:
-    """Steal fraction (%) over a short sampling interval."""
-    s0, t0 = _steal_jiffies()
-    time.sleep(interval_s)
-    s1, t1 = _steal_jiffies()
-    return 100.0 * (s1 - s0) / max(t1 - t0, 1)
-
-
-def _wait_clean_window(max_wait_s: float = 90.0, threshold: float = 1.0) -> float:
-    """Block (bounded) until a sampling interval shows steal below
-    ``threshold`` %, so the timed reps START inside a clean window
-    (VERDICT r2 #3: the r2 encode number was a 13.3%-steal sample).
-    Returns the last observed steal pct — the caller records it either
-    way; a dirty return means the host never went quiet in budget."""
-    deadline = time.monotonic() + max_wait_s
-    pct = _steal_pct()
-    while pct >= threshold and time.monotonic() < deadline:
-        time.sleep(3.0)
-        pct = _steal_pct()
-    return pct
-
-
 def _timed_reps(
     run,
     tol: float,
@@ -96,30 +68,38 @@ def _timed_reps(
     budget_s: float | None = None,
     min_reps: int = 2,
 ) -> tuple[list[float], list[float]]:
-    """Best-of-N timing harness shared by every non-headline leg (the
-    headline encode loop keeps its own clean-window/floor machinery).
-    Calls ``run(rep_index)`` until the two best walls agree within
-    ``tol`` (steady state: the first rep pays one-time codegen/exchange
-    setup), capped at ``max_reps`` or ``budget_s`` total seconds. Each
-    rep carries its own /proc/stat steal interval so a dirty best-of is
-    self-explaining — one methodology, one place to fix it
-    (r5 review: three diverged copies of this loop)."""
+    """Best-of-N timing harness shared by every timed leg. Calls
+    ``run(rep_index)`` until the two best walls agree within ``tol``
+    (steady state: the first rep pays one-time codegen/exchange setup),
+    capped at ``max_reps`` or ``budget_s`` total seconds. A leg starts
+    only inside a clean window (``wait_clean``), and a rep that follows
+    a dirty canary reading waits for one again. Each rep's wall carries
+    the canary reading taken right after it, so a dirty best-of is
+    self-explaining. Returns (walls, canary_ms)."""
     walls: list[float] = []
-    steals: list[float] = []
+    canary: list[float] = []
     while True:
-        rs0, rt0 = _steal_jiffies()
+        if not canary:
+            wait_clean(CANARY_THRESHOLD_MS, LEG_WAIT_S)
+        elif canary[-1] >= CANARY_THRESHOLD_MS:
+            wait_clean(CANARY_THRESHOLD_MS, DIRTY_REP_WAIT_S)
         t0 = time.perf_counter()
         run(len(walls))
         walls.append(time.perf_counter() - t0)
-        rs1, rt1 = _steal_jiffies()
-        steals.append(round(100 * (rs1 - rs0) / max(rt1 - rt0, 1), 2))
+        canary.append(round(probe_ms(), 2))
         if len(walls) >= max_reps:
             break
         if len(walls) >= min_reps:
             a, b = sorted(walls)[:2]
             if b <= a * tol or (budget_s is not None and sum(walls) > budget_s):
                 break
-    return walls, steals
+    return walls, canary
+
+
+def _best(walls: list[float], canary: list[float]) -> tuple[float, float]:
+    """(best wall, the canary reading of that rep)."""
+    i = walls.index(min(walls))
+    return walls[i], canary[i]
 
 
 def main() -> None:
@@ -166,71 +146,21 @@ def main() -> None:
         enc_parts = int(os.environ.get("SPARK_GRAFT_BENCH_PARTITIONS", 2 * cpus))
         # best-of-N for the headline throughput numbers: the first
         # full-size encode pays one-time JIT/codegen + allocator growth,
-        # and this host shows multi-tenant CPU-steal bursts (vmstat st>0,
-        # host loadavg spikes with guest idle) — a single sample can be
-        # 2-10x off through no fault of the job. Up to 5 reps; stop early
-        # once two samples agree within 25% (a stable window was hit).
-        # Per-rep walls + the interval's steal fraction are reported so a
-        # dirty best-of is self-explaining.
-        max_reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
-        bench_profile = os.environ.get("SPARK_GRAFT_BENCH_PROFILE", "auto")
-        # the timed block STARTS inside a probe-verified clean window, and
-        # each rep carries its own steal interval — the best rep's steal,
-        # not the whole block's, is the quality stamp for the quoted number
-        extras["encode_probe_steal_pct"] = round(_wait_clean_window(), 2)
-        rep_walls: list[float] = []
-        rep_steals: list[float] = []
-        st0, tot0 = _steal_jiffies()
-        while True:
-            if rep_steals and rep_steals[-1] >= 2.0:
-                # last rep ran through a steal burst: wait it out before
-                # burning another rep on a dirty interval
-                _wait_clean_window(max_wait_s=45.0)
-            r = len(rep_walls)
-            enc_dir = f"{tmp}/enc{r}"
-            rs0, rt0 = _steal_jiffies()
-            t0 = time.perf_counter()
-            man = encode_table(
-                src,
-                enc_dir,
-                key_col="url",
-                partitions=enc_parts,
-                compression="snappy",
-                profile=bench_profile,
+        # and co-tenant contention can put a single sample 2-10x off
+        # through no fault of the job. The quoted number is the best rep
+        # and its own canary reading is the quality stamp.
+        man: list = []
+
+        def _run_encode(r: int) -> None:
+            man[:] = encode_table(
+                src, f"{tmp}/enc{r}", key_col="url", partitions=enc_parts, compression="snappy"
             ).collect()
-            rep_walls.append(time.perf_counter() - t0)
-            rs1, rt1 = _steal_jiffies()
-            rep_steals.append(round(100 * (rs1 - rs0) / max(rt1 - rt0, 1), 2))
-            best_i = rep_walls.index(min(rep_walls))
-            # cleanliness is relative to the OBSERVED steal floor: a
-            # 32-wide run on this host pays a sustained ~10-20% co-tenant
-            # tax (every vCPU busy ⇒ the hypervisor visibly preempts), so
-            # "clean" means "no burst beyond the floor", not an absolute
-            # 2% that full-width runs can never meet. Narrow runs (floor
-            # ≈ 0) keep the strict 2% bar.
-            floor = min(rep_steals)
-            clean_thr = max(2.0, floor + 1.5)
-            tol = 1.12 if floor < 5.0 else 1.25
-            stable = (
-                len(rep_walls) >= 2 and sorted(rep_walls)[1] <= sorted(rep_walls)[0] * tol
-            )
-            # quoted number = best rep; done once it is BOTH stable
-            # (another rep within tolerance) AND a clean sample (its own
-            # steal interval at the floor). Two bonus reps past max_reps
-            # may chase a clean window; a sustained-dirty phase exhausts
-            # the budget and the per-rep steal list makes the quote
-            # self-explaining.
-            if stable and rep_steals[best_i] < clean_thr:
-                break
-            if sum(rep_walls) > 270 or len(rep_walls) >= max_reps + 2:
-                break
-        st1, tot1 = _steal_jiffies()
-        q["encode_pages"] = round(min(rep_walls), 3)
+
+        rep_walls, rep_canary = _timed_reps(_run_encode, tol=1.12, max_reps=7, budget_s=270)
+        best_wall, extras["encode_best_rep_canary_ms"] = _best(rep_walls, rep_canary)
+        q["encode_pages"] = round(best_wall, 3)
         extras["encode_rep_walls"] = [round(w, 2) for w in rep_walls]
-        extras["encode_rep_steal_pct"] = rep_steals
-        extras["encode_best_rep_steal_pct"] = rep_steals[rep_walls.index(min(rep_walls))]
-        if tot1 > tot0:
-            extras["encode_steal_pct"] = round(100 * (st1 - st0) / (tot1 - tot0), 1)
+        extras["encode_rep_canary_ms"] = rep_canary
         enc_dir = f"{tmp}/enc{len(rep_walls) - 1}"
         raw = sum(r["raw_bytes"] for r in man)
         enc_b = sum(r["encoded_bytes"] for r in man)
@@ -242,23 +172,23 @@ def main() -> None:
         if os.environ.get("SPARK_GRAFT_BENCH_ONLY") != "encode":
             # scaling runs (BENCH_ONLY=encode) only consume encode_gbps +
             # compression_ratio; skip the decode and size-gate passes there
-            dec_walls, dec_steals = _timed_reps(
+            dec_walls, dec_canary = _timed_reps(
                 lambda r: _force(decode_table(spark, enc_dir)), tol=1.12, max_reps=4
             )
-            q["decode_pages"] = round(min(dec_walls), 3)
+            best_wall, extras["decode_best_rep_canary_ms"] = _best(dec_walls, dec_canary)
+            q["decode_pages"] = round(best_wall, 3)
             extras["decode_rep_walls"] = [round(w, 2) for w in dec_walls]
-            extras["decode_best_rep_steal_pct"] = dec_steals[dec_walls.index(min(dec_walls))]
             extras["decode_gbps"] = round(raw / 1e9 / q["decode_pages"], 4)
 
             # size gate: identical data through the reference's exact
             # encoding decision (dict-or-plain, chunk_writer.go:174-227) —
             # our auto selector must come in at or under it. Best-of-2
-            # with per-rep steal stamps (VERDICT r4 #2: the single-shot
+            # with per-rep canary stamps (VERDICT r4 #2: the single-shot
             # leg manufactured a phantom 1.81->3.33 s regression)
-            man_ref_box: list = []
+            man_ref: list = []
 
             def _run_ref(r: int) -> None:
-                man_ref_box[:] = encode_table(
+                man_ref[:] = encode_table(
                     src,
                     f"{tmp}/enc_ref{r}",
                     key_col="url",
@@ -267,11 +197,10 @@ def main() -> None:
                     compression="snappy",
                 ).collect()
 
-            ref_walls, ref_steals = _timed_reps(_run_ref, tol=1.12, max_reps=2)
-            man_ref = man_ref_box
-            q["encode_pages_reference"] = round(min(ref_walls), 3)
+            ref_walls, ref_canary = _timed_reps(_run_ref, tol=1.12, max_reps=2)
+            best_wall, extras["encode_ref_best_canary_ms"] = _best(ref_walls, ref_canary)
+            q["encode_pages_reference"] = round(best_wall, 3)
             extras["encode_ref_rep_walls"] = [round(w, 2) for w in ref_walls]
-            extras["encode_ref_best_steal_pct"] = ref_steals[ref_walls.index(min(ref_walls))]
             ref_b = sum(r["encoded_bytes"] for r in man_ref)
             extras["bytes_auto"] = enc_b
             extras["bytes_reference_profile"] = ref_b
@@ -281,31 +210,30 @@ def main() -> None:
 
     if os.environ.get("SPARK_GRAFT_BENCH_ONLY") != "encode":
         queries = entry_mod.queries()
-        q_steal: dict[str, float] = {}
+        q_canary: dict[str, float] = {}
         q_reps: dict[str, list[float]] = {}
         for name in OP_QUERIES:
             # best-of-2 (the first run pays one-time whole-stage-codegen
             # + exchange setup; steady-state is what a long job sees),
             # escalating to 4 reps while the two best disagree >25% —
-            # and every rep carries its own steal interval so BENCH
+            # and every rep carries its own canary reading so BENCH
             # deltas distinguish plan changes from window noise
             # (VERDICT r4 #2: a phantom +15-40% band across unchanged
             # plans was unprovable from single-shot legs)
-            walls, steals = _timed_reps(
+            walls, canary = _timed_reps(
                 lambda r, _q=queries[name]: _force(_q(spark, sf_dir)),
                 tol=1.25,
                 max_reps=4,
                 budget_s=60,
             )
-            best_i = walls.index(min(walls))
-            q[name] = round(walls[best_i], 3)
-            q_steal[name] = steals[best_i]
+            best_wall, q_canary[name] = _best(walls, canary)
+            q[name] = round(best_wall, 3)
             q_reps[name] = [round(w, 2) for w in walls]
         # bulky per-rep walls ride an EARLIER stdout line (tail-budget
         # discipline, see the scaling/envelope emit below); the final
-        # line keeps the compact best-rep steal stamps
-        print(json.dumps({"detail": "op_query_reps", "walls": q_reps, "steals": q_steal}))
-        extras["q_steal"] = q_steal
+        # line keeps the compact best-rep canary stamps
+        print(json.dumps({"detail": "op_query_reps", "walls": q_reps, "canary_ms": q_canary}))
+        extras["q_canary_ms"] = q_canary
 
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))

@@ -17,40 +17,9 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 
 
-def _noise_probe() -> float:
-    """Single-thread ms for a fixed DEFLATE workload: a host-steal
-    canary recorded next to every rep (this multi-tenant VM shows
-    minute-long bursts where the same probe runs 5-50x slower)."""
-    import time
-    import zlib
-
-    buf = (b"the quick brown fox jumps over the lazy dog " * 4096)[: 1 << 18]
-    t0 = time.perf_counter()
-    zlib.compress(buf, 6)
-    return round((time.perf_counter() - t0) * 1000, 2)
-
-
-def _wait_clean_canary(max_wait_s: float = 150.0, threshold_ms: float = 2.0) -> float:
-    """Block (bounded) until the single-thread canary runs at clean
-    speed. Steal jiffies miss a whole class of co-tenant contention
-    (memory-bandwidth / frequency pressure shows up as a 2-8x slower
-    canary with 0% steal), so the actual-work probe gates the reps:
-    each timed leg STARTS only when a fixed DEFLATE workload runs at
-    its clean-floor speed (~0.7-1.2 ms here; threshold 2 ms). Returns
-    the last observation."""
-    import time
-
-    deadline = time.monotonic() + max_wait_s
-    p = _noise_probe()
-    while p >= threshold_ms and time.monotonic() < deadline:
-        time.sleep(4.0)
-        p = _noise_probe()
-    return p
-
-
 def run_once(cpus: int, rows: int) -> dict:
-    """One fresh-process bench run at ``cpus`` cores."""
-    _wait_clean_canary()
+    """One fresh-process bench run at ``cpus`` cores (bench.py gates its
+    own encode reps on the clean-window canary)."""
     env = dict(os.environ)
     env.update(
         {
@@ -77,17 +46,16 @@ def run_once(cpus: int, rows: int) -> dict:
             f"--- stdout tail:\n{out.stdout[-2000:]}\n--- stderr tail:\n{out.stderr[-4000:]}\n"
         )
         raise RuntimeError(f"bench run at {cpus} cores failed")
-    r = json.loads(lines[-1])
-    r["noise_probe_ms"] = _noise_probe()
-    return r
+    return json.loads(lines[-1])
 
 
 def run_levels(n: int, rows: int, repeats: int = 4) -> tuple[dict, dict, list]:
     """INTERLEAVED best-of-N: (N-core run, 4N-core run) pairs
-    back-to-back, so a multi-minute host-steal burst degrades both
+    back-to-back, so a multi-minute co-tenant burst degrades both
     levels rather than silently sinking one phase (phase-ordered runs
     measured 0.41 'efficiency' purely from a burst that covered the
-    whole 4N phase)."""
+    whole 4N phase). Each leg's canary reading is the one its best
+    encode rep reported."""
     lo = hi = None
     trace = []
     for i in range(repeats):
@@ -98,8 +66,8 @@ def run_levels(n: int, rows: int, repeats: int = 4) -> tuple[dict, dict, list]:
                 "rep": i,
                 "gbps_n": a["encode_gbps"],
                 "gbps_4n": b["encode_gbps"],
-                "probe_ms_n": a["noise_probe_ms"],
-                "probe_ms_4n": b["noise_probe_ms"],
+                "probe_ms_n": a["encode_best_rep_canary_ms"],
+                "probe_ms_4n": b["encode_best_rep_canary_ms"],
             }
         )
         if lo is None or a["encode_gbps"] > lo["encode_gbps"]:

@@ -2,9 +2,10 @@
 Common-Crawl-style pages table (url, warc_ts, html, text, lang) flows
 through HTML extraction, quality/repetition gating, exact + near-dup
 deduplication, language ID, deterministic train/val/test splits, and
-lands in an encoded table (auto codec selection, bloom filters,
-mergeable KMV distinct sketches) whose statistics answer from metadata
-alone — then similarity search runs over a companion embedding table.
+lands, through the exactly-once streaming sink, in an encoded table
+(auto codec selection, bloom filters, mergeable KMV distinct sketches)
+whose statistics answer from metadata alone — then similarity search
+runs over a companion embedding table.
 
 Run:  python examples/north_star_pipeline.py [n_pages] [cores]
 
@@ -36,8 +37,9 @@ from parquet_go_spark.ops.html import extract_text  # noqa: E402
 from parquet_go_spark.ops.similarity import cosine_topk, ivf_topk  # noqa: E402
 from parquet_go_spark.ops.stats import table_stats_from_manifest  # noqa: E402
 from parquet_go_spark.ops.text import langid_ngram, repetition_signals, text_quality  # noqa: E402
+from parquet_go_spark.spark import manifest as mf  # noqa: E402
+from parquet_go_spark.spark.datasource import PGSDataSource  # noqa: E402
 from parquet_go_spark.spark.decode_job import decode_table  # noqa: E402
-from parquet_go_spark.spark.encode_job import encode_table  # noqa: E402
 from parquet_go_spark.spark.pages_table import pages_df  # noqa: E402
 from parquet_go_spark.spark.session import get_spark  # noqa: E402
 
@@ -110,23 +112,44 @@ def main(n_pages: int = 20_000, cores: int = 8) -> None:
     splits = hash_split(corpus).groupBy("split").count().collect()
     print("splits:", {r["split"]: r["count"] for r in splits})
 
-    # 7) encode: auto codec selection per chunk (dict/RLE/FSST/delta/ALP/
-    #    zdict...), salted hash layout on the key, bloom filters for point
-    #    prune, KMV sketches so stats never touch data pages again
+    # 7) encode through the Catalyst streaming sink: stage the split
+    #    corpus as Parquet, tail it with readStream and append it with
+    #    writeStream.format("pgs") — auto codec selection per chunk
+    #    (dict/RLE/FSST/delta/ALP/zdict...), bloom filters for point
+    #    prune, KMV sketches so stats never touch data pages again. Each
+    #    micro-batch commits exactly once: one snapshot per batch id.
+    staging = f"{root}/staging"
+    hash_split(corpus).repartition(max(8, cores), F.xxhash64("url")).write.parquet(staging)
     out = f"{root}/corpus"
-    man = encode_table(
-        hash_split(corpus),
-        out,
-        key_col="url",
-        partitions=max(8, cores),
-        bloom_columns=["url"],
-        kmv_columns=["url", "lang"],
-        page_stats=True,
-    ).collect()
+    spark.dataSource.register(PGSDataSource)
+
+    def ingest() -> None:
+        (
+            spark.readStream.schema(spark.read.parquet(staging).schema)
+            .parquet(staging)
+            .writeStream.format("pgs")
+            .option("path", out)
+            .option("checkpointLocation", f"{root}/checkpoint")
+            .option("bloom_columns", "url")
+            .option("kmv_columns", "url,lang")
+            .option("page_stats", "true")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+
+    ingest()
+    man = mf.read_manifest(spark, out).collect()
     raw = sum(r["raw_bytes"] for r in man)
     enc = sum(r["encoded_bytes"] for r in man)
     by_enc = sorted({r["encoding"] for r in man if r["num_rows"]})
     print(f"encoded {raw >> 10} KiB -> {enc >> 10} KiB ({raw / max(enc, 1):.1f}x); codecs {by_enc}")
+    # restarting the same query on the same checkpoint finds nothing new:
+    # no snapshot and no row is added
+    n_snaps, n_rows = len(mf.read_snapshots(out)), decode_table(spark, out).count()
+    ingest()
+    assert (len(mf.read_snapshots(out)), decode_table(spark, out).count()) == (n_snaps, n_rows)
+    print(f"sink restart on the same checkpoint: still {n_snaps} snapshot(s), {n_rows} rows")
 
     # 8) metadata-only statistics (the Iceberg-stats shape): distinct
     #    counts from the manifest's mergeable KMV sketches, zero data reads

@@ -487,8 +487,9 @@ def _parse_writer_options(options: dict) -> dict:
             opts[flag] = str(options[flag]).lower() in ("true", "1", "yes")
     if "max_page" in options:
         opts["max_page"] = int(options["max_page"])
-    if "bloom_columns" in options:
-        opts["bloom_columns"] = [c.strip() for c in options["bloom_columns"].split(",") if c.strip()]
+    for key in ("bloom_columns", "kmv_columns"):
+        if key in options:
+            opts[key] = [c.strip() for c in options[key].split(",") if c.strip()]
     if "bloom_bits" in options:
         opts["bloom_bits"] = int(options["bloom_bits"])
     if "encodings" in options:

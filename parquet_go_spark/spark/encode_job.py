@@ -488,10 +488,6 @@ def encode_table(
         cols_sw = [sort_within] if isinstance(sort_within, str) else list(sort_within)
         df = df.sortWithinPartitions(*cols_sw)
 
-    def _manifest_batch(rows: list[dict]) -> pa.RecordBatch:
-        cols_out = {f.name: [r.get(f.name) for r in rows] for f in mf.MANIFEST_SCHEMA}
-        return pa.RecordBatch.from_pydict(cols_out, schema=mf.MANIFEST_SCHEMA)
-
     def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         freeze_task_heap()
         pid = pid_base + TaskContext.get().partitionId()
@@ -501,7 +497,7 @@ def encode_table(
             for _ in batches:  # drain
                 pass
             if rows:
-                yield _manifest_batch(rows)
+                yield mf.manifest_batch(rows)
             return
         recs = list(batches)
         if recs:
@@ -532,7 +528,7 @@ def encode_table(
             kmv_k=kmv_k,
         )
         if rows:
-            yield _manifest_batch(rows)
+            yield mf.manifest_batch(rows)
 
     # mapInArrow, not mapInPandas: pandas conversion would box every
     # string/binary value into a Python object; Arrow batches feed the

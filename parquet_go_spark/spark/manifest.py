@@ -58,14 +58,18 @@ def part_manifest_path(out_dir: str, pid: int) -> str:
     return os.path.join(manifest_dir(out_dir), f"part-{pid:05d}.parquet")
 
 
+def manifest_batch(rows: list[dict]) -> pa.RecordBatch:
+    """Manifest rows (dicts; missing keys are NULL) as one Arrow batch."""
+    cols = {f.name: [r.get(f.name) for r in rows] for f in MANIFEST_SCHEMA}
+    return pa.RecordBatch.from_pydict(cols, schema=MANIFEST_SCHEMA)
+
+
 def commit_partition(out_dir: str, pid: int, rows: list[dict]):
     """Atomically write one partition's manifest rows (tmp + rename)."""
     os.makedirs(manifest_dir(out_dir), exist_ok=True)
     path = part_manifest_path(out_dir, pid)
     tmp = path + f".tmp.{os.getpid()}"
-    cols = {f.name: [r.get(f.name) for r in rows] for f in MANIFEST_SCHEMA}
-    table = pa.Table.from_pydict(cols, schema=MANIFEST_SCHEMA)
-    pq.write_table(table, tmp)
+    pq.write_table(pa.Table.from_batches([manifest_batch(rows)]), tmp)
     os.replace(tmp, path)
 
 

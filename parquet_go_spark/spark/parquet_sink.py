@@ -60,10 +60,6 @@ def encode_table_parquet(
     else:
         df = df.repartition(partitions)
 
-    def _manifest_batch(rows: list[dict]) -> pa.RecordBatch:
-        out = {f.name: [r.get(f.name) for r in rows] for f in mf.MANIFEST_SCHEMA}
-        return pa.RecordBatch.from_pydict(out, schema=mf.MANIFEST_SCHEMA)
-
     def sink(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         freeze_task_heap()
         import zlib
@@ -75,7 +71,7 @@ def encode_table_parquet(
             for _ in batches:
                 pass
             if rows:
-                yield _manifest_batch(rows)
+                yield mf.manifest_batch(rows)
             return
         recs = list(batches)
         rows = []
@@ -122,6 +118,6 @@ def encode_table_parquet(
                 )
         mf.commit_partition(out_dir, pid, rows)
         if rows:
-            yield _manifest_batch(rows)
+            yield mf.manifest_batch(rows)
 
     return df.mapInArrow(sink, schema=mf.MANIFEST_DDL)

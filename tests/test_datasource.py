@@ -131,6 +131,7 @@ def test_in_and_startswith_pushdown_correct(spark, enc_dir):
 def test_write_format_pgs_roundtrip(spark, tmp_path):
     import pyspark.sql.functions as F
 
+    from parquet_go_spark.ops.stats import table_stats_from_manifest
     from parquet_go_spark.spark.datasource import PGSDataSource
     from parquet_go_spark.spark.decode_job import decode_table
     from parquet_go_spark.spark.pages_table import pages_df
@@ -148,6 +149,7 @@ def test_write_format_pgs_roundtrip(spark, tmp_path):
         .option("compression", "snappy")
         .option("page_stats", "true")
         .option("bloom_columns", "url")
+        .option("kmv_columns", "url")
         .save(out)
     )
     back = decode_table(spark, out)
@@ -159,6 +161,10 @@ def test_write_format_pgs_roundtrip(spark, tmp_path):
     man = mf.read_manifest(spark, out).toPandas()
     assert set(man["column"]) == set(df.columns)
     assert man[man["column"] == "url"]["bloom"].notna().all()
+    # kmv_columns reaches the writer: distincts answer from manifests alone
+    stats = {r["col_name"]: r["n_distinct"] for r in table_stats_from_manifest(spark, out).collect()}
+    assert stats["url"] is not None
+    assert stats["url"] == df.select("url").distinct().count()
     # job-level snapshot committed
     snaps = mf.read_snapshots(out)
     assert snaps and snaps[-1]["operation"] == "write.format(pgs)"

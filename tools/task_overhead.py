@@ -9,7 +9,9 @@ imports the engine and calls ``freeze_task_heap``, then drains its
 input) and prints each job's best wall plus the ms per
 task from the 16→64 slope, so the per-job constant cancels out. With
 ``cores`` slots the slope is ``cores × wall / task``: it is the time one
-slot spends per task, not the job's wall per task.
+slot spends per task, not the job's wall per task. The timed jobs start
+once the clean-window canary (``perfbench/canary.py``, the gate of
+``bench.py``) reads clean; its reading is printed with the result.
 """
 
 from __future__ import annotations
@@ -53,12 +55,15 @@ def main(argv: list[str] | None = None) -> int:
     # workers must import the engine from this checkout, wherever we run from
     pp = os.environ.get("PYTHONPATH")
     os.environ["PYTHONPATH"] = ROOT + (os.pathsep + pp if pp else "")
+    from bench import CANARY_THRESHOLD_MS, LEG_WAIT_S
     from parquet_go_spark.spark.session import get_spark
+    from perfbench.canary import wait_clean
 
     spark = get_spark(app="task-overhead", cores=args.cores)
     cores = spark.sparkContext.defaultParallelism
     try:
         job_wall_s(spark, 2 * cores)  # start the workers
+        canary_ms = wait_clean(CANARY_THRESHOLD_MS, LEG_WAIT_S)
         walls = {n: min(job_wall_s(spark, n) for _ in range(args.reps)) for n in TASKS}
     finally:
         spark.stop()
@@ -68,6 +73,7 @@ def main(argv: list[str] | None = None) -> int:
         "cores": cores,
         "job_wall_s": {str(n): round(w, 3) for n, w in walls.items()},
         "ms_per_task": round(slot_ms, 1),
+        "canary_ms": round(canary_ms, 2),
     }))
     return 0
 
