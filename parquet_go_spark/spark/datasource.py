@@ -148,7 +148,7 @@ def _pushdown_enabled() -> bool | None:
 
 def _choose_reader(opt: str | None, with_pushdown: type, without: type) -> type:
     if opt is not None:
-        return with_pushdown if str(opt).lower() in ("true", "1", "yes") else without
+        return with_pushdown if _flag(opt) else without
     enabled = _pushdown_enabled()
     return with_pushdown if enabled else without
 
@@ -284,139 +284,59 @@ class _PGSStreamReader(DataSourceStreamReader):
 
 
 @dataclass
-class _PGSCommit(WriterCommitMessage):
-    pid: int
-    n_rows: int
-    encoded_bytes: int
-
-
-class _PGSWriter(DataSourceArrowWriter):
-    """``df.write.format("pgs")``: each task encodes its partition's
-    Arrow batches through the same kernel path as ``encode_table`` (one
-    ``part-NNNNN.bin`` + atomic manifest commit per task). Partitioning,
-    salting and within-partition sort stay with the caller — idiomatic
-    Spark: ``df.repartition(n, F.xxhash64("url")).sortWithinPartitions(
-    "warc_ts").write.format("pgs").save(dir)``."""
-
-    def __init__(self, enc_dir: str, cols: list[str], opts: dict, pid_base: int = 0):
-        self.enc_dir = enc_dir
-        self.cols = cols
-        self.opts = opts
-        self.pid_base = pid_base
-
-    def write(self, iterator) -> _PGSCommit:
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        from .encode_job import encode_columns_to_partition
-        from .session import freeze_task_heap
-
-        freeze_task_heap()
-        pid = self.pid_base + TaskContext.get().partitionId()
-        batches = list(iterator)
-        table = pa.Table.from_batches(batches) if batches else None
-        rows = encode_columns_to_partition(table, self.cols, self.enc_dir, pid, **self.opts)
-        return _PGSCommit(
-            pid=pid,
-            n_rows=rows[0]["num_rows"] if rows else 0,
-            encoded_bytes=sum(r["encoded_bytes"] for r in rows),
-        )
-
-    def commit(self, messages) -> None:
-        from . import manifest as mf
-
-        mf.commit_snapshot(
-            self.enc_dir,
-            "write.format(pgs)",
-            {"tasks": len(messages), **{k: str(v) for k, v in self.opts.items()}},
-        )
-
-    def abort(self, messages) -> None:
-        # per-partition manifests are atomic (tmp+rename): uncommitted
-        # tasks left no manifest, so the directory stays readable; the
-        # next write with mode("overwrite") clears stragglers
-        return None
-
-
-@dataclass
-class _PGSStreamCommit(WriterCommitMessage):
+class _PGSStagedCommit(WriterCommitMessage):
     stage_name: str
     rows: list  # manifest row dicts (file/partition patched at commit)
 
 
-class _PGSStreamWriter(DataSourceStreamArrowWriter):
-    """``df.writeStream.format("pgs")``: the Catalyst-native streaming
-    encode sink — every micro-batch appends encoded partitions to ONE
-    table directory with exactly-once semantics, replacing the
-    ``foreachBatch`` helper for the common append case.
+class _PGSStagedWriter:
+    """The staged commit both ``format("pgs")`` writers share. ``write``
+    (executor) runs ``encode_job.write_task`` into a staged file with no
+    manifest, unreadable, and ships its manifest rows back. ``_commit``
+    (driver) claims an id range (``manifest.claim_append_base`` keyed by
+    ``job_id``: a replay gets the SAME ids, concurrent writers disjoint
+    ones), renames the staged files onto ``part-<pid>.bin``, commits
+    their manifests, sweeps the claim's unused tail and seals a snapshot
+    carrying ``marker`` — a job whose marker is sealed already only
+    drops its staged files. ``abort`` drops them; nothing was visible."""
 
-    Two-phase commit (the Python DataSource stream-writer contract:
-    ``write`` on executors has no batch id; ``commit(messages,
-    batchId)`` runs on the driver):
-
-    * ``write`` encodes its partition into a STAGED data file
-      (``part-stage-<uuid>.bin``, no manifest — unreadable by
-      construction) and ships the manifest rows back in the commit
-      message.
-    * ``commit`` claims the batch's partition-id range atomically
-      (``manifest.claim_append_base`` keyed by batch id, so a replayed
-      batch gets the SAME ids), renames each staged file onto its
-      ``part-<pid>.bin``, commits the per-partition manifests, and
-      seals a snapshot carrying ``stream_batch_id`` — the replay
-      guard: a re-delivered batch id only re-executes idempotent
-      renames/manifest writes (same ids, same bytes) and never
-      double-commits a snapshot.
-    * ``abort`` deletes the staged files; nothing was visible.
-
-    Partitioning stays with the caller (repartition/sort before the
-    sink), mirroring the batch writer's contract."""
-
-    def __init__(self, enc_dir: str, cols: list[str], opts: dict, txn: str):
+    def __init__(self, enc_dir: str, cols: list[str], opts: dict, arrow_schema=None):
         self.enc_dir = enc_dir
         self.cols = cols
         self.opts = opts
-        # scopes batch-id numbering to ONE streaming query (Delta's
-        # txnAppId pattern): without it, two queries writing the same
-        # table would both start at batch 0 and read each other's
-        # batches as replays. The default keeps the single-query-per-
-        # table contract; set .option("stream_txn", <query id>) to run
-        # several.
-        self.txn = txn
+        self.arrow_schema = arrow_schema  # empty tasks encode its zero-row table
 
-    def write(self, iterator) -> _PGSStreamCommit:
+    def write(self, iterator) -> _PGSStagedCommit:
         import uuid
 
-        import pyarrow as pa
+        from .encode_job import write_task
 
-        from .encode_job import encode_columns_to_partition
-        from .session import freeze_task_heap
-
-        freeze_task_heap()
-        batches = list(iterator)
-        table = pa.Table.from_batches(batches) if batches else None
         # the .tmp suffix keeps staged files OUT of the reader's
         # part-*.bin glob (invisible mid-flight) and IN the orphan
-        # sweep's *.tmp* pattern (crashed batches get cleaned up)
+        # sweep's *.tmp* pattern (crashed writes get cleaned up)
         stage = f"stage-{uuid.uuid4().hex}.bin.tmp"
-        rows = encode_columns_to_partition(
-            table, self.cols, self.enc_dir, -1, stage_name=stage, **self.opts
+        rows = write_task(
+            iterator, self.enc_dir, self.cols, self.arrow_schema, stage_name=stage, **self.opts
         )
-        return _PGSStreamCommit(stage_name=stage, rows=rows)
+        return _PGSStagedCommit(stage_name=stage, rows=rows)
 
-    def commit(self, messages, batchId: int) -> None:
+    def _commit(self, messages, job_id, marker, operation, config, reset=None) -> None:
+        """``reset`` (an overwrite's table fields) truncates the old table
+        here, once every task has succeeded."""
         import os
 
         from . import manifest as mf
+        from .encode_job import reset_table
 
         msgs = [m for m in messages if m is not None]
-        job_id = f"stream-{self.txn}-batch-{int(batchId)}"
-        marker = {"stream_batch_id": int(batchId), "stream_txn": self.txn}
-        already = any(
-            snap.get("config", {}).get("stream_batch_id") == int(batchId)
-            and snap.get("config", {}).get("stream_txn") == self.txn
+        if any(
+            all(snap.get("config", {}).get(k) == v for k, v in marker.items())
             for snap in mf.read_snapshots(self.enc_dir)
-        )
-        if msgs and not already:
+        ):
+            return self.abort(msgs)  # replayed job: its staged files are surplus
+        if reset is not None:
+            reset_table(self.enc_dir, reset, truncate=True)
+        if msgs:
             base = mf.claim_append_base(self.enc_dir, job_id, len(msgs))
             for i, m in enumerate(sorted(msgs, key=lambda m: m.stage_name)):
                 pid = base + i
@@ -424,13 +344,9 @@ class _PGSStreamWriter(DataSourceStreamArrowWriter):
                 dst = os.path.join(self.enc_dir, f"part-{pid:05d}.bin")
                 if os.path.exists(src):
                     os.replace(src, dst)  # atomic; replay lands same pid
-                rows = []
-                for r in m.rows:
-                    r = dict(r)
-                    r["partition"] = pid
-                    r["file"] = dst
-                    rows.append(r)
-                mf.commit_partition(self.enc_dir, pid, rows)
+                mf.commit_partition(
+                    self.enc_dir, pid, [{**r, "partition": pid, "file": dst} for r in m.rows]
+                )
             # defensive: a mid-commit crash followed by a replay with
             # FEWER tasks would leave the crashed attempt's tail pids
             # committed (duplicate rows); sweep every claimed id this
@@ -439,65 +355,92 @@ class _PGSStreamWriter(DataSourceStreamArrowWriter):
                 (c["n"] for c in mf.read_claims(self.enc_dir) if c["job_id"] == job_id),
                 len(msgs),
             )
-            for pid in range(base + len(msgs), base + claim_n):
-                for path in (
-                    os.path.join(self.enc_dir, f"part-{pid:05d}.bin"),
-                    mf.part_manifest_path(self.enc_dir, pid),
-                ):
-                    try:
-                        os.remove(path)
-                    except OSError:
-                        pass
-        elif already:
-            # replayed batch: this attempt's staged files are surplus
-            for m in msgs:
-                try:
-                    os.remove(os.path.join(self.enc_dir, m.stage_name))
-                except OSError:
-                    pass
-            return
-        mf.commit_snapshot(
-            self.enc_dir,
-            "stream-append",
-            {**marker, "tasks": len(msgs)},
-        )
+            mf.drop_partitions(self.enc_dir, range(base + len(msgs), base + claim_n))
+        mf.commit_snapshot(self.enc_dir, operation, {**config, **marker, "tasks": len(msgs)})
 
-    def abort(self, messages, batchId: int) -> None:
+    def abort(self, messages, batchId: int | None = None) -> None:
+        import contextlib
         import os
 
-        for m in messages:
-            if m is None:
-                continue
-            try:
+        for m in filter(None, messages):
+            with contextlib.suppress(OSError):
                 os.remove(os.path.join(self.enc_dir, m.stage_name))
-            except OSError:
-                pass
+
+
+class _PGSWriter(_PGSStagedWriter, DataSourceArrowWriter):
+    """``df.write.format("pgs")``: the staged commit keyed by a uuid made
+    in ``writer()``, so concurrent appends to one table claim disjoint
+    ids; ``commit`` seals one ``write.format(pgs)`` snapshot. An
+    overwrite clears the old table in ``commit``, after every task
+    succeeded, so a failed overwrite keeps it. Partitioning, salting and
+    within-partition sort stay with the caller — idiomatic Spark:
+    ``df.repartition(n, F.xxhash64("url")).sortWithinPartitions(
+    "warc_ts").write.format("pgs").save(dir)``."""
+
+    def __init__(self, enc_dir, cols, opts, arrow_schema=None, reset=None):
+        import uuid
+
+        super().__init__(enc_dir, cols, opts, arrow_schema)
+        self.reset = reset  # overwrite: the new table's fields
+        self.write_id = uuid.uuid4().hex
+
+    def commit(self, messages) -> None:
+        marker = {"write_id": self.write_id}
+        config = {k: str(v) for k, v in self.opts.items()}
+        self._commit(
+            messages, f"write-{self.write_id}", marker, "write.format(pgs)", config, self.reset
+        )
+
+
+class _PGSStreamWriter(_PGSStagedWriter, DataSourceStreamArrowWriter):
+    """``df.writeStream.format("pgs")``: the Catalyst-native streaming
+    encode sink — every micro-batch appends encoded partitions to ONE
+    table directory with exactly-once semantics. ``write`` runs on
+    executors without a batch id and ``commit(messages, batchId)`` on
+    the driver: the staged commit keyed by the batch id, so a replayed
+    batch claims the SAME ids, and the ``stream_batch_id`` snapshot
+    marker keeps a re-delivered batch from committing twice.
+    Partitioning stays with the caller, as for the batch writer."""
+
+    def __init__(self, enc_dir: str, cols: list[str], opts: dict, txn: str, arrow_schema=None):
+        super().__init__(enc_dir, cols, opts, arrow_schema)
+        # scopes batch ids to ONE streaming query (Delta's txnAppId):
+        # two queries on one table would otherwise read each other's
+        # batches as replays; .option("stream_txn", id) runs several
+        self.txn = txn
+
+    def commit(self, messages, batchId: int) -> None:
+        marker = {"stream_batch_id": int(batchId), "stream_txn": self.txn}
+        job_id = f"stream-{self.txn}-batch-{int(batchId)}"
+        self._commit(messages, job_id, marker, "stream-append", {})
+
+
+def _flag(value) -> bool:
+    return str(value).lower() in ("true", "1", "yes")
+
+
+def _names(value: str) -> list[str]:
+    return [c.strip() for c in value.split(",") if c.strip()]
+
+
+# DataFrameWriter .option(...) strings -> write_task's PGSF options (same
+# knobs as encode_table); "encodings" is "col:codec,col2:codec2", the
+# per-column pinning the CLI exposes
+_WRITER_OPTIONS = {
+    "profile": str,
+    "compression": str,
+    "page_stats": _flag,
+    "page_crc": _flag,
+    "max_page": int,
+    "bloom_bits": int,
+    "bloom_columns": _names,
+    "kmv_columns": _names,
+    "encodings": lambda v: dict(pair.split(":", 1) for pair in v.split(",") if ":" in pair),
+}
 
 
 def _parse_writer_options(options: dict) -> dict:
-    """DataFrameWriter .option(...) strings -> encode_columns_to_partition
-    kwargs (same knobs as ``encode_table``)."""
-    opts: dict = {}
-    if "profile" in options:
-        opts["profile"] = options["profile"]
-    if "compression" in options:
-        opts["compression"] = options["compression"]
-    for flag in ("page_stats", "page_crc"):
-        if flag in options:
-            opts[flag] = str(options[flag]).lower() in ("true", "1", "yes")
-    if "max_page" in options:
-        opts["max_page"] = int(options["max_page"])
-    for key in ("bloom_columns", "kmv_columns"):
-        if key in options:
-            opts[key] = [c.strip() for c in options[key].split(",") if c.strip()]
-    if "bloom_bits" in options:
-        opts["bloom_bits"] = int(options["bloom_bits"])
-    if "encodings" in options:
-        # "col:codec,col2:codec2" — the per-column pinning the CLI exposes
-        opts["encodings"] = dict(
-            pair.split(":", 1) for pair in options["encodings"].split(",") if ":" in pair
-        )
-    return opts
+    return {k: parse(options[k]) for k, parse in _WRITER_OPTIONS.items() if k in options}
 
 
 class PGSDataSource(DataSource):
@@ -533,81 +476,31 @@ class PGSDataSource(DataSource):
     def streamReader(self, schema) -> _PGSStreamReader:
         return _PGSStreamReader(self._dir())
 
-    def streamWriter(self, schema, overwrite: bool) -> _PGSStreamWriter:
-        import os
+    def _writer(self, cls, schema, append: bool, **kw):
+        """``cls`` over ``encode_job.prepare_write``'s checks; an
+        overwrite hands the new table's fields to its commit."""
+        from .encode_job import prepare_write
 
-        from . import manifest as mf
-
-        enc_dir = self._dir()
-        new_fields = [
-            {"name": f.name, "ddl": f.dataType.simpleString()} for f in schema.fields
-        ]
-        schema_path = os.path.join(enc_dir, "_schema.json")
-        if os.path.exists(schema_path):
-            old_fields = mf.read_table_schema(enc_dir)
-            if old_fields != new_fields:
-                raise ValueError(
-                    f"pgs stream-append schema mismatch at {enc_dir}: "
-                    f"table has {old_fields}, appending {new_fields}"
-                )
-        else:
-            # bootstrap: first batch creates the table (atomic replace,
-            # idempotent across the driver/worker instantiations)
-            os.makedirs(enc_dir, exist_ok=True)
-            mf.write_table_schema(enc_dir, new_fields)
-        return _PGSStreamWriter(
-            enc_dir,
-            [f.name for f in schema.fields],
-            _parse_writer_options(self.options),
-            txn=str(self.options.get("stream_txn", "default")),
+        opts = _parse_writer_options(self.options)
+        fields, arrow_schema = prepare_write(
+            self._dir(),
+            schema,
+            append=append,
+            create=True,
+            evolve_schema=_flag(self.options.get("evolve_schema", "")),
+            encodings=opts.get("encodings"),
         )
+        if not append:
+            kw["reset"] = fields
+        cols = [f.name for f in schema.fields]
+        return cls(self._dir(), cols, opts, arrow_schema=arrow_schema, **kw)
+
+    def streamWriter(self, schema, overwrite: bool) -> _PGSStreamWriter:
+        txn = str(self.options.get("stream_txn", "default"))
+        return self._writer(_PGSStreamWriter, schema, True, txn=txn)
 
     def writer(self, schema, overwrite: bool) -> _PGSWriter:
-        import glob as _glob
-        import os
-
-        from . import manifest as mf
-
-        enc_dir = self._dir()
-        existing = _glob.glob(os.path.join(enc_dir, "part-*.bin"))
-        new_fields = [{"name": f.name, "ddl": f.dataType.simpleString()} for f in schema.fields]
-        pid_base = 0
-        if existing and not overwrite:
-            # append: ids start past the latest snapshot's range (the
-            # same contract as encode_table(append=True)); schemas must
-            # match exactly unless .option("evolve_schema", "true")
-            old_fields = mf.read_table_schema(enc_dir)
-            if str(self.options.get("evolve_schema", "")).lower() in ("true", "1", "yes"):
-                merged = mf.evolve_table_schema(old_fields, new_fields)
-                if merged != old_fields:
-                    mf.write_table_schema(enc_dir, merged)
-            elif old_fields != new_fields:
-                raise ValueError(
-                    f"pgs append schema mismatch at {enc_dir}: "
-                    f"table has {old_fields}, appending {new_fields} "
-                    '(set .option("evolve_schema", "true") to add columns)'
-                )
-            pid_base = mf.next_partition_base(enc_dir)
-        else:
-            # overwrite truncates history: snapshots pinning the deleted
-            # partition ids must go too, or as_of would silently read
-            # rewritten data under the old ids
-            for p in (
-                existing
-                + _glob.glob(os.path.join(mf.manifest_dir(enc_dir), "part-*.parquet"))
-                + _glob.glob(os.path.join(mf.snapshot_dir(enc_dir), "snap-*.json"))
-                + _glob.glob(os.path.join(mf.deletes_dir(enc_dir), "*.parquet"))
-                + _glob.glob(os.path.join(mf.claims_dir(enc_dir), "claim-*.json"))
-            ):
-                os.remove(p)
-            os.makedirs(enc_dir, exist_ok=True)
-            mf.write_table_schema(enc_dir, new_fields)
-        return _PGSWriter(
-            enc_dir,
-            [f.name for f in schema.fields],
-            _parse_writer_options(self.options),
-            pid_base=pid_base,
-        )
+        return self._writer(_PGSWriter, schema, not overwrite)
 
 
 @dataclass

@@ -1,11 +1,16 @@
 """Distributed encode job: the engine's write path.
 
 Dataflow (SURVEY.md §2.3): scan -> salted repartition on the key hash
-(defuses domain skew; explicit per the north star) -> ``mapInPandas``
+(defuses domain skew; explicit per the north star) -> ``mapInArrow``
 encode (vectorized kernels over Arrow batches, zero per-row Python) ->
-one partition file + atomic manifest commit per task -> manifest rows as
-the job output. Resume: committed partitions (manifest present) skip the
-encode+write and replay their manifest rows.
+one partition file per task -> manifest rows as the job output.
+
+Every writer runs ``prepare_write`` on the driver, then the one task
+body ``write_task``, then one of two commit modes: task-side at the
+deterministic id ``pid_base + partitionId`` (``encode_table``,
+``parquet_sink.encode_table_parquet``; resume replays committed ids), or
+staged for a driver commit under a claimed id range (the
+``format("pgs")`` writers, ``datasource._PGSStagedWriter``).
 
 Partition file layout:
   magic "PGSF" | uvarint n_chunks
@@ -17,15 +22,17 @@ on read seeks past unselected chunks without decoding (reference O7,
 
 from __future__ import annotations
 
+import glob
 import os
+import zlib
 from collections.abc import Iterator
 
-import numpy as np
 import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
 
-from ..core.chunk import encode_chunk
+from ..compat.parquet_writer import write_parquet
+from ..core.chunk import ENCODINGS, encode_chunk
 from ..core.columns import ColumnData, from_arrow
 from ..kernels.varint import read_uvarint, uvarint
 from . import manifest as mf
@@ -43,21 +50,28 @@ FILE_MAGIC = b"PGSF"
 EPOCH_KEY = "__pgs_epoch__"
 
 
-def write_partition_file(path: str, named_blobs: list[tuple[str, bytes]], epoch: int = 0):
+def _write_atomic(path: str, parts) -> None:
+    """Write the byte strings ``parts`` to ``path`` via tmp + os.replace."""
     tmp = path + f".tmp.{os.getpid()}"
     with open(tmp, "wb") as f:
-        f.write(FILE_MAGIC)
-        entries = list(named_blobs)
-        if epoch:
-            entries = [(EPOCH_KEY, bytes(uvarint(int(epoch))))] + entries
-        f.write(uvarint(len(entries)))
+        for part in parts:
+            f.write(part)
+    os.replace(tmp, path)
+
+
+def write_partition_file(path: str, named_blobs: list[tuple[str, bytes]], epoch: int = 0):
+    entries = list(named_blobs)
+    if epoch:
+        entries = [(EPOCH_KEY, bytes(uvarint(int(epoch))))] + entries
+
+    def parts():
+        yield FILE_MAGIC
+        yield uvarint(len(entries))
         for name, blob in entries:
             nb = name.encode()
-            f.write(uvarint(len(nb)))
-            f.write(nb)
-            f.write(uvarint(len(blob)))
-            f.write(blob)
-    os.replace(tmp, path)
+            yield from (uvarint(len(nb)), nb, uvarint(len(blob)), blob)
+
+    _write_atomic(path, parts())
 
 
 def parse_partition_file(buf, columns: set[str] | None = None) -> dict[str, memoryview]:
@@ -117,7 +131,7 @@ def partition_file_epoch_path(path: str) -> int:
 
 
 def encode_columns_to_partition(
-    table: "pa.Table | None",
+    table: pa.Table,
     cols: list[str],
     out_dir: str,
     pid: int,
@@ -137,20 +151,13 @@ def encode_columns_to_partition(
     stage_name: str | None = None,
 ) -> list[dict]:
     """Encode one partition's Arrow table into ``part-<pid>.bin`` +
-    atomic manifest commit; returns the manifest rows. Shared by the
-    mapInArrow job (``encode_table``) and the ``format("pgs")`` writer
-    (``spark/datasource.py``). In-place REWRITES (delete
-    materialization, COW deletes) pass ``epoch`` = old epoch + 1 so
-    positional sidecars stamped against the old row ordinals become
-    provably stale the instant the new data file lands — readers skip
-    them even before the manifest/sidecar cleanup commits.
-
-    ``stage_name`` (streaming sink two-phase commit): write the data
-    file under this name instead of ``part-<pid>.bin`` and DO NOT
-    commit a manifest — the driver's epoch-level ``commit`` renames the
-    staged file into its claimed partition id and commits the manifest
-    rows itself, so a failed/aborted micro-batch leaves only unreadable
-    staging files (no manifest ⇒ not committed ⇒ invisible to readers)."""
+    atomic manifest commit -> the manifest rows, one per column. The
+    PGSF leg of ``write_task``; in-place REWRITES (delete
+    materialization, COW deletes) call it directly with ``epoch`` = old
+    epoch + 1, so positional sidecars stamped against the old row
+    ordinals are provably stale the instant the new data file lands.
+    ``stage_name``: write the file under this name and commit no
+    manifest (unreadable until the driver's staged commit claims it)."""
     fpath = os.path.join(out_dir, stage_name or f"part-{pid:05d}.bin")
     # the __pgs_ prefix is reserved for in-file metadata entries (the
     # rewrite epoch): readers silently skip such names, and one landing
@@ -164,60 +171,192 @@ def encode_columns_to_partition(
         )
     named_blobs: list[tuple[str, bytes]] = []
     rows: list[dict] = []
-    if table is not None:
-        for name in cols:
-            col = from_arrow(table.column(name))
-            kw = {} if max_page is None else {"max_page": max_page}
-            blob, meta = encode_chunk(
-                col,
-                profile=profile,
-                compression=compression,
-                page_crc=page_crc,
-                page_stats=page_stats,
-                encoding=(encodings or {}).get(name),
-                **kw,
-            )
-            named_blobs.append((name, blob))
-            bloom = None
-            if bloom_columns and name in bloom_columns:
-                from ..kernels.bloom import bloom_build, hash_column
+    for name in cols:
+        col = from_arrow(table.column(name))
+        kw = {} if max_page is None else {"max_page": max_page}
+        blob, meta = encode_chunk(
+            col,
+            profile=profile,
+            compression=compression,
+            page_crc=page_crc,
+            page_stats=page_stats,
+            encoding=(encodings or {}).get(name),
+            **kw,
+        )
+        named_blobs.append((name, blob))
+        bloom = None
+        if bloom_columns and name in bloom_columns:
+            from ..kernels.bloom import bloom_build, hash_column
 
-                hashes = hash_column(col)
-                if hashes is not None:
-                    d = meta.as_dict()["distinct"]
-                    ndv = d if d and d > 0 else len(hashes)
-                    bloom = bloom_build(hashes, ndv, bloom_bits, bloom_cap)
-            kmv = None
-            if (
-                kmv_columns
-                and name in kmv_columns
-                and isinstance(col, ColumnData)  # flat leaves only
-                and col.num_values
-            ):
-                # mergeable distinct sketch per chunk (stats.go:9-225
-                # records exact per-chunk distinct, which cannot sum
-                # across chunks; the KMV union can — ops/stats.py
-                # table_stats_from_manifest answers table-level distinct
-                # from manifests alone, no data scan)
-                from ..kernels.kmv import hash_column_values, kmv_from_hashes, kmv_serialize
+            hashes = hash_column(col)
+            if hashes is not None:
+                d = meta.as_dict()["distinct"]
+                ndv = d if d and d > 0 else len(hashes)
+                bloom = bloom_build(hashes, ndv, bloom_bits, bloom_cap)
+        kmv = None
+        if (
+            kmv_columns
+            and name in kmv_columns
+            and isinstance(col, ColumnData)  # flat leaves only
+            and col.num_values
+        ):
+            # mergeable distinct sketch per chunk (stats.go:9-225
+            # records exact per-chunk distinct, which cannot sum
+            # across chunks; the KMV union can — ops/stats.py
+            # table_stats_from_manifest answers table-level distinct
+            # from manifests alone, no data scan)
+            from ..kernels.kmv import hash_column_values, kmv_from_hashes, kmv_serialize
 
-                kmv = kmv_serialize(*kmv_from_hashes(hash_column_values(col), kmv_k))
-            rows.append(
-                {
-                    "partition": pid,
-                    "column": name,
-                    **meta.as_dict(),
-                    "bloom": bloom,
-                    "kmv": kmv,
-                    "file": fpath,
-                    "offset": -1,
-                    "length": len(blob),
-                }
-            )
+            kmv = kmv_serialize(*kmv_from_hashes(hash_column_values(col), kmv_k))
+        rows.append(
+            {
+                "partition": pid,
+                "column": name,
+                **meta.as_dict(),
+                "bloom": bloom,
+                "kmv": kmv,
+                "file": fpath,
+                "offset": -1,
+                "length": len(blob),
+            }
+        )
     write_partition_file(fpath, named_blobs, epoch=epoch)
     if stage_name is None:
         mf.commit_partition(out_dir, pid, rows)
     return rows
+
+
+def write_task(
+    batches: Iterator[pa.RecordBatch],
+    out_dir: str,
+    cols: list[str],
+    arrow_schema: pa.Schema,
+    *,
+    pid_base: int = 0,
+    stage_name: str | None = None,
+    resume: bool = False,
+    container: str = "pgsf",
+    **opts,
+) -> list[dict]:
+    """The one task body of every writer -> the partition's manifest rows.
+
+    Freezes the task heap; at id ``pid_base + partitionId`` a ``resume``
+    replays a partition whose manifest and file both exist. Otherwise
+    the partition (an empty one as ``arrow_schema``'s zero-row table) is
+    encoded to ``container`` — ``"pgsf"`` or ``"parquet"``, ``opts``
+    being their options — and written atomically, then its manifest
+    commits at the id, or the file stays staged as ``stage_name``."""
+    freeze_task_heap()
+    pid = -1 if stage_name else pid_base + TaskContext.get().partitionId()
+    ext = "parquet" if container == "parquet" else "bin"
+    fpath = os.path.join(out_dir, stage_name or f"part-{pid:05d}.{ext}")
+    committed = stage_name is None and os.path.exists(mf.part_manifest_path(out_dir, pid))
+    if resume and committed and os.path.exists(fpath):
+        for _ in batches:  # drain
+            pass
+        return mf.read_partition_manifest(out_dir, pid)
+    recs = list(batches)
+    table = pa.Table.from_batches(recs) if recs else arrow_schema.empty_table()
+    del recs
+    if container == "pgsf":
+        return encode_columns_to_partition(table, cols, out_dir, pid, stage_name=stage_name, **opts)
+    payload, metas = write_parquet(table, return_meta=True, **opts)
+    _write_atomic(fpath, [payload])
+    keep = ("column", "ptype", "encoding", "num_rows", "null_count", "raw_bytes", "encoded_bytes")
+    shared = {
+        "partition": pid,
+        "compression": opts.get("compression", "none"),
+        "distinct": -1,
+        "num_pages": -1,
+        "crc32": zlib.crc32(payload),
+        "file": fpath,
+        "offset": -1,
+    }
+    rows = [{**{k: m[k] for k in keep}, **shared, "length": m["encoded_bytes"]} for m in metas]
+    if stage_name is None:
+        mf.commit_partition(out_dir, pid, rows)
+    return rows
+
+
+def prepare_write(
+    out_dir: str,
+    schema,
+    *,
+    append: bool,
+    evolve_schema: bool = False,
+    create: bool = False,
+    encodings: dict[str, str] | None = None,
+    codec_ids=ENCODINGS,
+) -> tuple[list[dict], pa.Schema]:
+    """Every writer's driver prep, before any task runs or table file
+    changes -> (table fields, the batch's Arrow schema). ``encodings``
+    must name columns and ``codec_ids`` codecs; an append must match the
+    table schema or, with ``evolve_schema``, merge into it, and raises on
+    a missing table unless ``create``. A non-append write leaves the
+    table to ``reset_table``, which a ``format("pgs")`` overwrite defers
+    to its driver commit."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fields = [{"name": f.name, "ddl": f.dataType.simpleString()} for f in schema.fields]
+    if encodings:
+        unknown = set(encodings) - {f["name"] for f in fields}
+        bad = {e for e in encodings.values() if e not in codec_ids}
+        if unknown or bad:
+            raise ValueError(f"encodings: unknown columns {unknown or '{}'} / codecs {bad or '{}'}")
+    os.makedirs(out_dir, exist_ok=True)
+    if append and os.path.exists(os.path.join(out_dir, "_schema.json")):
+        existing = mf.read_table_schema(out_dir)
+        if evolve_schema:
+            merged = mf.evolve_table_schema(existing, fields)
+            if merged != existing:
+                mf.write_table_schema(out_dir, merged)
+        elif existing != fields:
+            raise ValueError(
+                f"append schema mismatch at {out_dir}: table has {existing}, appending "
+                f'{fields} (evolve_schema=True / .option("evolve_schema", "true") adds columns)'
+            )
+    elif append and create:
+        mf.write_table_schema(out_dir, fields)
+    elif append:
+        raise ValueError(f"append=True but {out_dir} has no table schema to append to")
+    return fields, to_arrow_schema(schema)
+
+
+def reset_table(out_dir: str, fields: list[dict], *, truncate: bool = False) -> None:
+    """Start a fresh table with schema ``fields``: drop the old table's
+    delete sidecars and append claims (its row ordinals and id space).
+    ``truncate`` (overwrite) also drops its data files, manifests and
+    snapshots, so ``as_of`` can never read new data under old ids;
+    without it the manifests stay for ``encode_table``'s resume."""
+    patterns = [
+        os.path.join(mf.deletes_dir(out_dir), "*.parquet"),
+        os.path.join(mf.claims_dir(out_dir), "claim-*.json"),
+    ]
+    if truncate:
+        patterns += [
+            os.path.join(out_dir, "part-*.bin"),
+            os.path.join(mf.manifest_dir(out_dir), "part-*.parquet"),
+            os.path.join(mf.snapshot_dir(out_dir), "snap-*.json"),
+        ]
+    for p in [p for pattern in patterns for p in glob.glob(pattern)]:
+        os.remove(p)
+    mf.write_table_schema(out_dir, fields)
+
+
+def manifest_job(df: DataFrame, out_dir: str, arrow_schema: pa.Schema, **task_kw) -> DataFrame:
+    """``write_task`` over every partition of ``df``, committing at
+    deterministic ids -> the lazy manifest DataFrame."""
+    cols = df.columns
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rows = write_task(batches, out_dir, cols, arrow_schema, **task_kw)
+        if rows:
+            yield mf.manifest_batch(rows)
+
+    # mapInArrow, not mapInPandas: pandas conversion would box every
+    # string/binary value into a Python object; Arrow batches feed the
+    # numpy kernels zero-copy
+    return df.mapInArrow(run, schema=mf.MANIFEST_DDL)
 
 
 def _zorder_expr(df: DataFrame, keys: list[str]):
@@ -326,14 +465,12 @@ def encode_table(
 
     ``append=True`` adds new partitions to an EXISTING table (schemas
     must match exactly): partition ids start one past the latest
-    snapshot's range (``manifest.next_partition_base``), so successive
-    jobs never collide and each ``commit_snapshot`` afterwards pins a
-    readable table version — ``decode_table(as_of=seq)`` time-travels
-    between them and ``maintenance.rollback_table`` undoes appends.
-    With ``evolve_schema=True`` the appended batch may ADD columns (the
-    table schema becomes the union; partitions that predate a column
-    decode it as nulls) or OMIT existing ones (the appended partitions
-    decode those as nulls); shared columns must keep their type.
+    snapshot's range (``manifest.next_partition_base``), so each
+    ``commit_snapshot`` afterwards pins a readable table version for
+    ``decode_table(as_of=seq)`` and ``maintenance.rollback_table``.
+    With ``evolve_schema=True`` the batch may ADD columns or OMIT
+    existing ones (decoded as nulls where absent); shared columns keep
+    their type (``manifest.evolve_table_schema``).
 
     ``bloom_columns`` builds a split-block bloom filter per (partition,
     column) into the manifest (``kernels/bloom.py``) so equality probes
@@ -353,13 +490,10 @@ def encode_table(
     The returned DataFrame is the job: nothing runs until it is acted on
     (``.count()`` / ``.write`` / ``collect``).
     """
-    if encodings:
-        from ..core.chunk import ENCODINGS as _ENC_IDS
-
-        unknown = set(encodings) - set(cols_ := columns or df.columns)
-        bad = {e for e in encodings.values() if e not in _ENC_IDS}
-        if unknown or bad:
-            raise ValueError(f"encodings: unknown columns {unknown or '{}'} / codecs {bad or '{}'}")
+    if layout not in ("hash", "range", "zorder"):
+        raise ValueError(f"layout must be 'hash', 'range', or 'zorder', got {layout!r}")
+    if job_id is not None and not append:
+        raise ValueError("job_id is only meaningful with append=True")
     if message_schema is not None:
         from ..schematext import parse_message
 
@@ -370,67 +504,20 @@ def encode_table(
         df = df.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
         )
-    spark = df.sparkSession
-    cols = columns or df.columns
-    df = df.select(*cols)
-    os.makedirs(out_dir, exist_ok=True)
-    new_fields = [{"name": f.name, "ddl": f.dataType.simpleString()} for f in df.schema.fields]
+    df = df.select(*(columns or df.columns))
+    fields, arrow_schema = prepare_write(
+        out_dir, df.schema, append=append, evolve_schema=evolve_schema, encodings=encodings
+    )
     pid_base = 0
-    if append:
-        # append = new partitions above the latest snapshot's id range;
-        # the base comes from the snapshot (not the committed set) so a
-        # crashed append attempt resumes at the same base and its
-        # committed partitions are replayed rather than orphaned
-        if not os.path.exists(os.path.join(out_dir, "_schema.json")):
-            raise ValueError(f"append=True but {out_dir} has no table schema to append to")
-        existing_fields = mf.read_table_schema(out_dir)
-        if evolve_schema:
-            # Iceberg-style add-column: the batch may introduce new
-            # columns (table schema becomes the union; older partitions
-            # decode them as nulls) or omit existing ones (the appended
-            # partitions decode those as nulls). Columns present on both
-            # sides must keep their type.
-            merged = mf.evolve_table_schema(existing_fields, new_fields)
-            if merged != existing_fields:
-                mf.write_table_schema(out_dir, merged)
-        elif existing_fields != new_fields:
-            raise ValueError(
-                f"append schema mismatch: table has {existing_fields}, "
-                f"appending {new_fields} (pass evolve_schema=True to add columns)"
-            )
-        # job_id defers the base to an atomic range CLAIM (taken below,
-        # once the output partition count is known): concurrent append
-        # jobs with distinct job_ids get disjoint id ranges instead of
-        # both computing the same next_partition_base and clobbering
-        # each other's partition files. Without job_id the table keeps
-        # its single-append-writer contract (crash resume at the same
-        # base).
-        if job_id is None:
-            pid_base = mf.next_partition_base(out_dir)
-    else:
-        if job_id is not None:
-            raise ValueError("job_id is only meaningful with append=True")
-        # fresh (non-append) write into a reused directory: leftover
-        # merge-on-read sidecars / append claims belong to the OLD
-        # table's row ordinals and id space — clear them or they poison
-        # the new one (snapshots/manifests are handled by overwrite
-        # semantics at the datasource layer; resume relies on them)
-        import glob as _glob
-
-        for p in _glob.glob(os.path.join(mf.deletes_dir(out_dir), "*.parquet")) + _glob.glob(
-            os.path.join(mf.claims_dir(out_dir), "claim-*.json")
-        ):
-            os.remove(p)
-        mf.write_table_schema(out_dir, new_fields)
-    try:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(df.schema)
-    except Exception:  # pragma: no cover - fallback for API drift
-        arrow_schema = None
-    sc_parallelism = spark.sparkContext.defaultParallelism
-    if layout not in ("hash", "range", "zorder"):
-        raise ValueError(f"layout must be 'hash', 'range', or 'zorder', got {layout!r}")
+    if not append:
+        reset_table(out_dir, fields)
+    elif job_id is None:
+        # the base comes from the latest snapshot (not the committed
+        # set), so a crashed append resumes at the same base and replays
+        # its committed partitions; a job_id instead claims its range
+        # below, once the partition count is known
+        pid_base = mf.next_partition_base(out_dir)
+    sc_parallelism = df.sparkSession.sparkContext.defaultParallelism
     if layout == "zorder":
         # multi-dimensional clustering (Delta OPTIMIZE ZORDER analogue):
         # interleave the bits of each key column scaled to a fixed-width
@@ -487,50 +574,21 @@ def encode_table(
         # RLE-dict, delta-BP, and DELTA_BYTE_ARRAY see longer runs
         cols_sw = [sort_within] if isinstance(sort_within, str) else list(sort_within)
         df = df.sortWithinPartitions(*cols_sw)
-
-    def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        freeze_task_heap()
-        pid = pid_base + TaskContext.get().partitionId()
-        fpath = os.path.join(out_dir, f"part-{pid:05d}.bin")
-        if resume and os.path.exists(mf.part_manifest_path(out_dir, pid)) and os.path.exists(fpath):
-            rows = mf.read_partition_manifest(out_dir, pid)
-            for _ in batches:  # drain
-                pass
-            if rows:
-                yield mf.manifest_batch(rows)
-            return
-        recs = list(batches)
-        if recs:
-            table = pa.Table.from_batches(recs)
-        elif arrow_schema is not None:
-            # empty partition: encode zero-row chunks so lineage stays
-            # complete (one manifest row per column per partition) and the
-            # empty-chunk edge case stays on the main code path
-            table = arrow_schema.empty_table()
-        else:
-            table = None
-        del recs
-        rows = encode_columns_to_partition(
-            table,
-            cols,
-            out_dir,
-            pid,
-            profile=profile,
-            compression=compression,
-            page_crc=page_crc,
-            page_stats=page_stats,
-            max_page=max_page,
-            encodings=encodings,
-            bloom_columns=bloom_columns,
-            bloom_bits=bloom_bits,
-            bloom_cap=bloom_cap,
-            kmv_columns=kmv_columns,
-            kmv_k=kmv_k,
-        )
-        if rows:
-            yield mf.manifest_batch(rows)
-
-    # mapInArrow, not mapInPandas: pandas conversion would box every
-    # string/binary value into a Python object; Arrow batches feed the
-    # numpy kernels zero-copy
-    return df.mapInArrow(encode_partition, schema=mf.MANIFEST_DDL)
+    return manifest_job(
+        df,
+        out_dir,
+        arrow_schema,
+        pid_base=pid_base,
+        resume=resume,
+        profile=profile,
+        compression=compression,
+        page_crc=page_crc,
+        page_stats=page_stats,
+        max_page=max_page,
+        encodings=encodings,
+        bloom_columns=bloom_columns,
+        bloom_bits=bloom_bits,
+        bloom_cap=bloom_cap,
+        kmv_columns=kmv_columns,
+        kmv_k=kmv_k,
+    )

@@ -542,13 +542,8 @@ def rollback_table(out_dir: str, seq: int) -> dict:
             f"cannot roll back to seq={seq}: partitions {sorted(missing)} "
             "are no longer committed (already rewritten or expired)"
         )
+    mf.drop_partitions(out_dir, current - target)
     for pid in sorted(current - target):
-        for path in (
-            os.path.join(out_dir, f"part-{pid:05d}.bin"),
-            mf.part_manifest_path(out_dir, pid),
-        ):
-            if os.path.exists(path):
-                os.remove(path)
         mf.remove_delete_files(out_dir, pid)
     # merge-on-read sidecars committed after the target snapshot are
     # rolled back too: the target pinned its apply set, anything newer
@@ -730,7 +725,7 @@ def compact_parquet_dir(
             total_raw += int(rg[2])  # total_byte_size (uncompressed)
     if partitions is None:
         partitions = max(1, math.ceil(total_raw / max(target_partition_bytes, 1)))
-    man = encode_table_parquet(
+    man_rows = encode_table_parquet(
         read_parquet_table(spark, src_path),
         dst_dir,
         key_col=key_col,
@@ -738,8 +733,7 @@ def compact_parquet_dir(
         compression=compression,
         page_index=page_index,
         bloom_columns=bloom_columns,
-    )
-    man_rows = man.collect()
+    ).collect()
     mf.commit_snapshot(
         dst_dir,
         "compact",

@@ -73,6 +73,17 @@ def commit_partition(out_dir: str, pid: int, rows: list[dict]):
     os.replace(tmp, path)
 
 
+def drop_partitions(out_dir: str, pids) -> None:
+    """Delete partitions' data files and manifests (missing ones skipped)."""
+    import contextlib
+
+    for pid in pids:
+        data = os.path.join(out_dir, f"part-{pid:05d}.bin")
+        for path in (data, part_manifest_path(out_dir, pid)):
+            with contextlib.suppress(OSError):
+                os.remove(path)
+
+
 def committed_partitions(out_dir: str) -> set[int]:
     out = set()
     for p in glob.glob(os.path.join(manifest_dir(out_dir), "part-*.parquet")):
@@ -699,9 +710,7 @@ def claim_append_base(out_dir: str, job_id: str, n_partitions: int) -> int:
                         "new job_id for a differently-shaped job"
                     )
                 return c["base"]
-        base = next_partition_base(out_dir)
-        for c in read_claims(out_dir):
-            base = max(base, c["base"] + c["n"])
+        base = next_partition_base(out_dir)  # already past every claim
         path = os.path.join(claims_dir(out_dir), f"claim-{base:06d}.json")
         tmp = path + f".tmp.{os.getpid()}"
         with open(tmp, "w") as f:

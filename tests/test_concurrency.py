@@ -148,3 +148,52 @@ def test_concurrent_property_setters_never_lose_keys(tmp_path):
     assert not errs
     props = mf.table_properties(d)
     assert props == {f"k{i}": f"v{i}" for i in range(8)}
+
+
+def test_format_pgs_appends_claim_disjoint_ids(tmp_path):
+    """Two ``format("pgs")`` append writers opened on one table before
+    either writes both land whole: each write's driver commit claims its
+    own id range, so neither overwrites the other's partition files."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from parquet_go_spark.core.chunk import decode_chunk
+    from parquet_go_spark.core.columns import to_arrow
+    from parquet_go_spark.spark import manifest as mf
+    from parquet_go_spark.spark.datasource import PGSDataSource
+    from parquet_go_spark.spark.encode_job import parse_partition_file
+
+    d = str(tmp_path / "enc")
+    schema = StructType([StructField("url", StringType()), StructField("n", LongType())])
+
+    def batch(lo, hi):
+        return pa.record_batch(
+            {
+                "url": pa.array([f"u{i}" for i in range(lo, hi)]),
+                "n": pa.array(np.arange(lo, hi, dtype=np.int64)),
+            }
+        )
+
+    def writer():
+        return PGSDataSource({"path": d}).writer(schema, False)
+
+    first = writer()
+    first.commit([first.write(iter([batch(0, 20)])), first.write(iter([batch(20, 40)]))])
+    wa, wb = writer(), writer()  # both opened before either writes
+    ma = [wa.write(iter([batch(100, 150)])), wa.write(iter([batch(150, 200)]))]
+    mb = [wb.write(iter([batch(200, 230)]))]
+    wa.commit(ma)
+    wb.commit(mb)
+
+    pids = sorted(mf.committed_partitions(d))
+    assert len(pids) == 5 == len(set(pids))
+    ns = []
+    for pid in pids:
+        assert {r["partition"] for r in mf.read_partition_manifest(d, pid)} == {pid}
+        with open(os.path.join(d, f"part-{pid:05d}.bin"), "rb") as f:
+            ns += to_arrow(decode_chunk(parse_partition_file(f.read())["n"])).to_pylist()
+    assert sorted(ns) == list(range(40)) + list(range(100, 230))
+    snaps = mf.read_snapshots(d)
+    assert [s["operation"] for s in snaps] == ["write.format(pgs)"] * 3
+    assert snaps[-1]["partition_ids"] == pids

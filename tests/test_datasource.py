@@ -4,6 +4,8 @@ manifest/bloom/page pruning."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 pytestmark = pytest.mark.spark
@@ -174,6 +176,42 @@ def test_write_format_pgs_roundtrip(spark, tmp_path):
     assert decode_table(spark, out).count() == 910
     df.limit(10).repartition(1).write.format("pgs").mode("overwrite").save(out)
     assert decode_table(spark, out).count() == 10
+    # empty tasks commit one zero-row manifest row per column, as
+    # encode_table's do: 3 rows hashed into 6 tasks leave some empty
+    df.limit(3).repartition(6, "url").write.format("pgs").mode("overwrite").save(out)
+    man = mf.read_manifest(spark, out).toPandas()
+    assert man["partition"].nunique() == 6
+    assert (man.groupby("partition")["column"].nunique() == len(df.columns)).all()
+    assert (man.groupby("partition").size() == len(df.columns)).all()
+    assert (man["num_rows"] == 0).any()
+    assert man[man["column"] == "url"]["num_rows"].sum() == 3
+    assert decode_table(spark, out).count() == 3
+
+
+def test_failed_overwrite_keeps_the_table(spark, tmp_path):
+    """An overwrite clears the old table only in its driver commit: a bad
+    option is refused on the driver before any file is touched, and a
+    task that dies aborts the write — either way the old table still
+    reads all its rows."""
+    from parquet_go_spark.spark import manifest as mf
+    from parquet_go_spark.spark.datasource import PGSDataSource
+    from parquet_go_spark.spark.decode_job import decode_table
+    from parquet_go_spark.spark.pages_table import pages_df
+
+    spark.dataSource.register(PGSDataSource)
+    out = str(tmp_path / "ds_kept")
+    df = pages_df(spark, 200, partitions=2)
+    df.write.format("pgs").mode("append").save(out)
+    before = sorted(os.listdir(out)), mf.read_snapshots(out)
+    with pytest.raises(Exception, match=r"(?s)ValueError.*bogus"):
+        df.write.format("pgs").mode("overwrite").option("encodings", "url:bogus").save(out)
+    assert (sorted(os.listdir(out)), mf.read_snapshots(out)) == before
+    # the reserved '__pgs_' prefix fails inside the tasks
+    with pytest.raises(Exception, match="reserved"):
+        df.withColumnRenamed("lang", "__pgs_lang").write.format("pgs").mode("overwrite").save(out)
+    assert spark.read.format("pgs").load(out).count() == 200
+    assert decode_table(spark, out).count() == 200
+    assert mf.read_snapshots(out) == before[1]
 
 
 def test_stream_read_format_pgs_tails_new_partitions(spark, tmp_path):
