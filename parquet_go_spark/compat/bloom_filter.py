@@ -24,6 +24,7 @@ import struct as _s
 
 import numpy as np
 
+from ..core.codecs import MAX_BLOOM_BYTES
 from ..core.prune import PLAIN_FORMATS, point_key
 from ..kernels.bloom import BLOOM_BLOCK_BYTES, bloom_build, bloom_might_contain
 from ..kernels.xxhash64 import _xxh64_fixed, xxh64, xxh64_column
@@ -43,8 +44,6 @@ __all__ = [
 # ColumnMetaData thrift field ids (parquet.thrift)
 CM_BLOOM_OFFSET = 14
 CM_BLOOM_LENGTH = 15
-
-_MAX_BLOOM_BYTES = 1 << 26  # governor: 64 MiB bitset cap on read
 
 
 def bits_per_value_for_fpp(fpp: float) -> int:
@@ -124,7 +123,7 @@ def read_bloom_bitset(buf, cmeta: dict) -> bytes | None:
     ):
         return None
     if not (
-        0 < nbytes <= _MAX_BLOOM_BYTES
+        0 < nbytes <= MAX_BLOOM_BYTES
         and nbytes % BLOOM_BLOCK_BYTES == 0
         and pos + nbytes <= len(mv)
     ):
@@ -163,7 +162,7 @@ def bloom_probe_file(path: str, cmeta: dict, value) -> bool:
         return True  # malformed offset: keep (scan will surface errors)
     with open(path, "rb") as fh:
         fh.seek(off)
-        region = fh.read(min(ln or (_MAX_BLOOM_BYTES + 64), size - off))
+        region = fh.read(min(ln or (MAX_BLOOM_BYTES + 64), size - off))
     try:
         bits = read_bloom_bitset(region, {CM_BLOOM_OFFSET: 0, 1: cmeta[1]})
     except ValueError:

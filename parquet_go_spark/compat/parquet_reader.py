@@ -123,7 +123,7 @@ def _levels(stream, max_level: int, nv: int) -> np.ndarray:
     """One rep or def level stream; none exists when the max level is 0."""
     if max_level == 0:
         return np.zeros(nv, dtype=np.int64)
-    return np.asarray(hybrid.decode(stream, max_level.bit_length(), nv), np.int64)
+    return hybrid.decode(stream, max_level.bit_length(), nv).view(np.int64)
 
 
 def _levels_v1(payload, nv: int, max_rep: int, max_def: int):
@@ -233,6 +233,13 @@ def _chunk_pages(buf, mv, rg: dict, cc: dict, info: dict, row_ranges) -> tuple[l
     return pages, rows
 
 
+def _concat(parts: list, empty_dtype) -> np.ndarray:
+    """The pages' arrays end to end: a one-page chunk's own array."""
+    if len(parts) == 1:
+        return parts[0]
+    return np.concatenate(parts) if parts else np.empty(0, empty_dtype)
+
+
 def _leaf_levels(buf, meta: dict, info: dict, row_groups=None, row_ranges=None):
     """:func:`read_leaf_levels` over an already parsed footer."""
     if row_ranges is not None and (row_groups is None or len(row_groups) != 1):
@@ -250,30 +257,40 @@ def _leaf_levels(buf, meta: dict, info: dict, row_groups=None, row_ranges=None):
                 if [p.decode() for p in cc[3][3]] == info["path"]:
                     chunk_pages, page_rows = _chunk_pages(buf, mv, rg, cc, info, row_ranges)
                     pages += chunk_pages
-    rep = np.concatenate([p[0] for p in pages]) if pages else np.empty(0, np.int64)
-    deflv = np.concatenate([p[1] for p in pages]) if pages else np.empty(0, np.int64)
+    rep = _concat([p[0] for p in pages], np.int64)
+    deflv = _concat([p[1] for p in pages], np.int64)
     if ptype in ("bytes", "flba"):
-        lens = np.concatenate([p[2][0] for p in pages]) if pages else np.empty(0, np.int64)
-        data = np.concatenate([p[2][1] for p in pages]) if pages else np.empty(0, np.uint8)
+        lens = _concat([p[2][0] for p in pages], np.int64)
+        data = _concat([p[2][1] for p in pages], np.uint8)
         values = (lens, data)
     else:
-        values = np.concatenate([p[2] for p in pages]) if pages else np.empty(0)
+        values = _concat([p[2] for p in pages], np.float64)
     if row_ranges is not None:
         from ..core.prune import rows_in_ranges
 
         if page_rows is not None:
             rows = np.concatenate(page_rows) if page_rows else np.empty(0, np.int64)
+        elif info["max_rep"] == 0:
+            rows = np.arange(len(rep))
         else:
             # every level position belongs to the row opened by the last
             # rep == 0 position at or before it
             rows = np.cumsum(rep == 0) - 1
         keep_pos = rows_in_ranges(rows, row_ranges)
-        vmask = keep_pos[deflv == max_def]
+        # dense (every position holds a value): the values are in
+        # position order, so the kept rows' bytes are whole spans
+        dense = len(values[0] if ptype in ("bytes", "flba") else values) == len(deflv)
+        vmask = keep_pos if dense else keep_pos[deflv == max_def]
         rep, deflv = rep[keep_pos], deflv[keep_pos]
         if ptype in ("bytes", "flba"):
-            starts_v = np.zeros(len(lens), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts_v[1:])
-            values = (lens[vmask], gather_segments(data, starts_v[vmask], lens[vmask]))
+            starts_v = np.zeros(len(lens) + 1, dtype=np.int64)
+            np.cumsum(lens, out=starts_v[1:])
+            if dense:
+                edge = np.diff(vmask.astype(np.int8), prepend=np.int8(0), append=np.int8(0))
+                lo, hi = starts_v[edge == 1], starts_v[edge == -1]
+                values = (lens[vmask], gather_segments(data, lo, hi - lo))
+            else:
+                values = (lens[vmask], gather_segments(data, starts_v[:-1][vmask], lens[vmask]))
         else:
             values = values[vmask]
     return rep, deflv, values, info
@@ -323,37 +340,44 @@ _CT_INTS = {15: pa.int8(), 16: pa.int16(), 17: pa.int32(), 18: pa.int64()}
 _CT_UINTS = {11: pa.uint8(), 12: pa.uint16(), 13: pa.uint32(), 14: pa.uint64()}
 
 
+def _validity(mask) -> tuple:
+    """(validity buffer, null count) of a slot mask; None: no nulls."""
+    if mask is None:
+        return None, 0
+    return pa.py_buffer(np.packbits(mask, bitorder="little").tobytes()), int((~mask).sum())
+
+
 def _unscaled_to_decimal128(ints: np.ndarray, precision: int, scale: int, mask) -> pa.Array:
     """int64 unscaled values -> decimal128 (16-byte LE two's complement)."""
     n = len(ints)
     buf = np.zeros((n, 2), dtype="<i8")
     buf[:, 0] = ints
     buf[:, 1] = ints >> 63  # sign extension
+    validity, nulls = _validity(mask)
     return pa.Array.from_buffers(
-        pa.decimal128(precision, scale),
-        n,
-        [pa.py_buffer(np.packbits(mask, bitorder="little").tobytes()), pa.py_buffer(buf.tobytes())],
-        null_count=int((~mask).sum()),
+        pa.decimal128(precision, scale), n, [validity, pa.py_buffer(buf.tobytes())], null_count=nulls
     )
 
 
-def _flba_to_decimal128(data: np.ndarray, w: int, n_present: int, precision, scale, positions, value_idx, mask) -> pa.Array:
-    """width-w big-endian two's complement bytes -> decimal128."""
-    vals = data.reshape(n_present, w) if n_present else data.reshape(0, max(w, 1))
-    n = len(positions)
+def _flba_to_decimal128(data: np.ndarray, w: int, n: int, precision, scale, sel, mask) -> pa.Array:
+    """width-w big-endian two's complement bytes -> decimal128: the rows
+    ``sel`` (all when None) fill the ``mask`` slots (all when None)."""
+    vals = data.reshape(-1, w) if len(data) else data.reshape(0, max(w, 1))
+    rows = vals if sel is None else vals[sel]
     be = np.zeros((n, 16), dtype=np.uint8)
-    if n_present:
-        sel = vals[value_idx[positions][mask]]
-        be_rows = be[mask]
-        be_rows[:, 16 - w :] = sel
-        be_rows[:, : 16 - w] = np.where(sel[:, :1] >= 128, 0xFF, 0)
-        be[mask] = be_rows
+    if len(rows):
+        be_rows = be if mask is None else be[mask]
+        be_rows[:, 16 - w :] = rows
+        be_rows[:, : 16 - w] = np.where(rows[:, :1] >= 128, 0xFF, 0)
+        if mask is not None:
+            be[mask] = be_rows
     le = be[:, ::-1]
+    validity, nulls = _validity(mask)
     return pa.Array.from_buffers(
         pa.decimal128(precision, scale),
         n,
-        [pa.py_buffer(np.packbits(mask, bitorder="little").tobytes()), pa.py_buffer(np.ascontiguousarray(le).tobytes())],
-        null_count=int((~mask).sum()),
+        [validity, pa.py_buffer(np.ascontiguousarray(le).tobytes())],
+        null_count=nulls,
     )
 
 
@@ -362,65 +386,67 @@ def _leaf_arrow(positions, deflv, values, info) -> pa.Array:
     typed by the leaf's logical annotation (DATE, TIMESTAMP, DECIMAL,
     sized ints) when one is declared."""
     ptype = PHYSICAL_TYPES[info["type"]]
-    d_leaf = info["d_leaf"]
     ct = info.get("converted")
-    full = deflv == d_leaf  # global mask: positions carrying a value
-    value_idx = np.cumsum(full) - 1  # value index at each position
-    mask = full[positions]
+    n = len(positions)
+    n_vals = len(values[0] if ptype in ("bytes", "flba") else values)
+    if n and n == len(deflv) == n_vals:
+        # dense: every level position is a slot holding a value (a flat
+        # leaf with no nulls), so the values are already in slot order
+        mask = sel = None
+    else:
+        full = deflv == info["d_leaf"]  # global mask: positions carrying a value
+        mask = full[positions]
+        sel = (np.cumsum(full) - 1)[positions][mask]  # value index of each present slot
     if ptype == "flba" and ct == _CT_DECIMAL and info["type_length"] <= 16:
-        lens, data = values
         return _flba_to_decimal128(
-            np.asarray(data, np.uint8),
-            info["type_length"],
-            int(full.sum()),
-            info["precision"],
-            info["scale"],
-            positions,
-            value_idx,
-            mask,
+            np.asarray(values[1], np.uint8), info["type_length"], n, info["precision"], info["scale"], sel, mask
         )
     if ptype in ("bytes", "flba"):
         lens, data = values
-        starts = np.zeros(len(lens) + 1, dtype=np.int64)
-        np.cumsum(lens, out=starts[1:])
-        out_lens = np.where(mask, lens[value_idx[positions]], 0)
-        offsets = np.zeros(len(positions) + 1, dtype=np.int64)
-        np.cumsum(out_lens, out=offsets[1:])
-        if mask.all():
-            # contiguous fast path: values already in slot order
-            buf_data = data
+        if sel is None:
+            out_lens, buf_data = lens, data
         else:
-            sel = value_idx[positions][mask]
-            buf_data = gather_segments(data, starts[sel], lens[sel])
+            starts = np.zeros(len(lens) + 1, dtype=np.int64)
+            np.cumsum(lens, out=starts[1:])
+            out_lens = np.zeros(n, dtype=np.int64)
+            out_lens[mask] = lens[sel]
+            # all slots present: values already in slot order
+            buf_data = data if mask.all() else gather_segments(data, starts[sel], lens[sel])
+        offsets = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(out_lens, out=offsets[1:])
+        validity, nulls = _validity(mask)
         cls = pa.utf8() if info["utf8"] else pa.binary()
         return pa.Array.from_buffers(
             cls,
-            len(positions),
+            n,
             [
-                pa.py_buffer(np.packbits(mask, bitorder="little").tobytes()),
+                validity,
                 pa.py_buffer(offsets.astype(np.int32).tobytes()),
                 pa.py_buffer(np.asarray(buf_data, np.uint8).tobytes()),
             ],
-            null_count=int((~mask).sum()),
+            null_count=nulls,
         )
     np_vals = np.asarray(values)
-    # all-null leaf: the placeholder dtype must remain castable to the
-    # logical type (pyarrow rejects double->date32/timestamp); int64
-    # covers every temporal/int converted type, float64 the rest
-    if np_vals.size:
-        empty_dt = np_vals.dtype
-    elif ptype == "int96" or ct in (_CT_DATE, _CT_TS_MICROS, _CT_TS_MILLIS) or ct in _CT_INTS or ct in _CT_UINTS:
-        empty_dt = np.int64 if ptype != "int32" else np.int32
+    if sel is None:
+        out = np_vals
     else:
-        empty_dt = np.float64
-    out = np.zeros(len(positions), dtype=empty_dt)
-    if np_vals.size:
-        out[mask] = np_vals[value_idx[positions][mask]]
+        # all-null leaf: the placeholder dtype must remain castable to the
+        # logical type (pyarrow rejects double->date32/timestamp); int64
+        # covers every temporal/int converted type, float64 the rest
+        if np_vals.size:
+            empty_dt = np_vals.dtype
+        elif ptype == "int96" or ct in (_CT_DATE, _CT_TS_MICROS, _CT_TS_MILLIS) or ct in _CT_INTS or ct in _CT_UINTS:
+            empty_dt = np.int64 if ptype != "int32" else np.int32
+        else:
+            empty_dt = np.float64
+        out = np.zeros(n, dtype=empty_dt)
+        if np_vals.size:
+            out[mask] = np_vals[sel]
     if ct == _CT_DECIMAL and ptype in ("int32", "int64"):
         return _unscaled_to_decimal128(
             out.astype(np.int64), info["precision"], info["scale"], mask
         )
-    arr = pa.array(out, mask=~mask)
+    arr = pa.array(out) if mask is None else pa.array(out, mask=~mask)
     if ptype == "int96":
         return arr.cast(pa.timestamp("ns"))
     if ct == _CT_DATE and ptype == "int32":
@@ -855,7 +881,11 @@ def _field_arrow(buf, meta: dict, leaves: dict, node: dict, row_groups, row_rang
     for lf in _node_leaves(node):
         rep, deflv, values, info = _leaf_levels(buf, meta, leaves[lf["path"]], row_groups, row_ranges)
         streams[lf["path"]] = (rep, deflv, values, info)
-        state[lf["path"]] = row_slots(rep)
+        if info["max_rep"] == 0:  # flat: every level position opens a row
+            slots = np.arange(len(rep))
+            state[lf["path"]] = (slots, slots + 1)
+        else:
+            state[lf["path"]] = row_slots(rep)
     return _assemble(node, state, 0, streams)
 
 

@@ -7,6 +7,8 @@ ULEB128, strings length-prefixed, lists (size << 4 | elem type).
 
 from __future__ import annotations
 
+from ..core.codecs import MAX_THRIFT_DEPTH
+
 __all__ = ["read_struct", "read_uvarint"]
 
 T_STOP = 0
@@ -63,7 +65,7 @@ def _read_value(buf, pos: int, vtype: int, depth: int = 0):
         # a collection nests like a struct: its elements read one level
         # deeper, so forged list-of-list chains hit the same governor
         depth += 1
-        if depth > _MAX_DEPTH:
+        if depth > MAX_THRIFT_DEPTH:
             raise ValueError("thrift compact: implausible nesting depth")
     if vtype in (T_LIST, T_SET):
         hdr = buf[pos]
@@ -122,15 +124,13 @@ def _read_elem(buf, pos: int, etype: int, depth: int = 0):
     return _read_value(buf, pos, etype, depth)
 
 
-_MAX_DEPTH = 100  # parquet metadata nests ~10 deep; a forged buffer of
-# 0x1C bytes would otherwise recurse once per byte into Python's
-# RecursionError — an uncontrolled failure, unlike the governor's
-# ValueError
-
-
 def read_struct(buf, pos: int, depth: int = 0) -> tuple[dict, int]:
-    """-> ({field_id: value}, new_pos). Nested structs become dicts."""
-    if depth > _MAX_DEPTH:
+    """-> ({field_id: value}, new_pos). Nested structs become dicts.
+    Nesting is capped at ``MAX_THRIFT_DEPTH``: a forged buffer of 0x1C
+    bytes would otherwise recurse once per byte into Python's
+    RecursionError, an uncontrolled failure, unlike the governor's
+    ValueError."""
+    if depth > MAX_THRIFT_DEPTH:
         raise ValueError("thrift compact: implausible nesting depth")
     out: dict = {}
     fid = 0

@@ -46,7 +46,7 @@ __all__ = [
 ]
 
 # ------------------------------------------------------------- governors
-MAX_ROWS = 1 << 28  # rows in one PGSC chunk (the kernels' own count cap)
+MAX_ROWS = 1 << 28  # rows in one PGSC chunk, values one delta_bp / for_bp stream declares
 MAX_PAGE_VALUES = 1 << 27  # level positions in one Parquet page
 MAX_RAW_PAGE = 1 << 30  # decompressed bytes of one page or dictionary page
 MAX_CODEC_DICT = 1 << 20  # trained DEFLATE dictionary of a zdict chunk
@@ -54,6 +54,8 @@ MAX_PAGE_STATS_LEN = 1 << 12  # a PGSC page-stats bound: <= 64 chars (<= 260 UTF
 MAX_TYPE_LENGTH = 1 << 16  # FIXED_LEN_BYTE_ARRAY width
 MAX_DICT_REGION = 1 << 26  # dictionary-page bytes one prune probe reads
 MAX_NESTING = 64  # nested levels of one column: PGSL/PGSS chunks, Parquet schema groups
+MAX_THRIFT_DEPTH = 100  # nested structs/collections of one thrift value (footers ~10 deep)
+MAX_BLOOM_BYTES = 1 << 26  # one Parquet bloom filter's bitset
 DICT_MAX = 32767  # dictionary entries a writer emits: math.MaxInt16, type_dict.go:101
 
 # ----------------------------------------------------- Parquet encoding ids

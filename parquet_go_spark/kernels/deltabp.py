@@ -183,8 +183,11 @@ def decode(buf, pos: int, bits: int, max_count: int | None = None) -> tuple[np.n
         raise ValueError("delta-bp: miniblock values not multiple of 8")
     count, pos = read_uvarint(mv, pos)
     # count governor: zero-width blocks cost ~2 bytes per block_size
-    # values, so a 67-byte forged stream declared 30M values
-    if count > 1 << 28 or (max_count is not None and count > max_count):
+    # values, so a 67-byte forged stream declared 30M values. (Imported
+    # here: core.codecs imports this module at its top.)
+    from ..core.codecs import MAX_ROWS
+
+    if count > MAX_ROWS or (max_count is not None and count > max_count):
         raise ValueError(f"delta-bp: implausible count {count}")
     first, pos = read_varint(mv, pos)
     if count == 0:

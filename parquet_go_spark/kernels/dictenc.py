@@ -41,8 +41,9 @@ def decode_indices(buf, count: int, pos: int = 0) -> tuple[np.ndarray, int]:
     if bw > 32:
         raise ValueError(f"invalid dict index bit width {bw}")
     pos += 1
-    vals = hybrid.decode(bytes(memoryview(buf)[pos:]), bw, count)
+    vals = hybrid.decode(memoryview(buf)[pos:], bw, count)
     # consumed size is not framed here; callers must frame the stream (our
     # chunk container length-prefixes each page payload, like thrift
-    # page headers do for the reference).
-    return vals.astype(np.int32), pos
+    # page headers do for the reference). Indices of <= 32 bits view as
+    # int64, numpy's index type, so the dictionary gather converts nothing
+    return vals.view(np.int64), pos

@@ -64,7 +64,9 @@ def decode(buf, pos: int, bits: int, max_count: int | None = None) -> tuple[np.n
     sdt, _udt = _dtypes(bits)
     mv = memoryview(buf).cast("B")  # normalize signed buffer views
     n, pos = read_uvarint(mv, pos)
-    if n > 1 << 28 or (max_count is not None and n > max_count):
+    from ..core.codecs import MAX_ROWS  # here: core.codecs imports this module at its top
+
+    if n > MAX_ROWS or (max_count is not None and n > max_count):
         # allocation governor: a width-0 stream stores no packed bytes,
         # so a forged count would otherwise allocate unbounded zeros
         raise ValueError(f"for_bp: implausible count {n}")

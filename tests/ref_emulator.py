@@ -170,3 +170,54 @@ def delta_byte_array(byte_values) -> bytes:
 def dict_indices(indices, dict_size: int) -> bytes:
     bw = dict_size.bit_length()
     return bytes([bw]) + hybrid_encode_bp(indices, bw)
+
+
+def hybrid_decode(buf: bytes, width: int, count: int) -> list:
+    """hybrid_decoder.go: one run per loop step. A uvarint header ``h``;
+    ``h & 1`` opens a bit-packed run of ``h >> 1`` groups of 8 values
+    (``(h >> 1) * width`` bytes, all of which must be present), else an
+    RLE run of ``h >> 1`` copies of one ``ceil(width/8)``-byte LE value.
+    Empty runs, a value wider than ``width`` and a stream that ends before
+    ``count`` values raise; bytes after the ``count``-th value are never
+    read."""
+    if width == 0 or count == 0:
+        return [0] * count
+    out: list = []
+    pos = 0
+    while len(out) < count:
+        h = shift = 0
+        while True:
+            if pos >= len(buf):
+                raise ValueError("truncated uvarint")
+            byte = buf[pos]
+            pos += 1
+            h |= (byte & 0x7F) << shift
+            if byte < 0x80:
+                break
+            shift += 7
+            if shift >= 70:
+                raise ValueError("uvarint too long")
+        h &= 2**64 - 1
+        if h & 1:
+            groups = h >> 1
+            if groups == 0:
+                raise ValueError("empty bit-packed run")
+            if pos + groups * width > len(buf):
+                raise ValueError("bit-packed run truncated")
+            for g in range(groups):
+                bits = int.from_bytes(buf[pos : pos + width], "little")
+                pos += width
+                out += [(bits >> (i * width)) & ((1 << width) - 1) for i in range(8)]
+        else:
+            run = h >> 1
+            if run == 0:
+                raise ValueError("empty RLE run")
+            vsize = (width + 7) // 8
+            if pos + vsize > len(buf):
+                raise ValueError("RLE run value truncated")
+            v = int.from_bytes(buf[pos : pos + vsize], "little")
+            pos += vsize
+            if width < 64 and v >= 1 << width:
+                raise ValueError("RLE run value too large for bit width")
+            out += [v] * min(run, count - len(out))
+    return out[:count]

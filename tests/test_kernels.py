@@ -106,6 +106,97 @@ def test_hybrid_rle_size_header_edges():
             assert hybrid.rle_size(vals, width) == len(hybrid.encode_rle(vals, width)), (n, width)
 
 
+def _hybrid_run(kind: str, width: int, n: int, value: int) -> bytes:
+    """One hand-built run: ``n`` groups of random-ish bytes (bp) or ``n``
+    copies of ``value`` (rle); n may be 0, value may overflow ``width``."""
+    if kind == "bp":
+        return ref.put_uvarint((n << 1) | 1) + bytes((value + i) & 0xFF for i in range(n * width))
+    return ref.put_uvarint(n << 1) + (value & ((1 << 64) - 1)).to_bytes(8, "little")[: (width + 7) // 8]
+
+
+@given(
+    width=st.integers(0, 64),
+    runs=st.lists(
+        st.tuples(
+            st.sampled_from(["bp", "rle"]),
+            st.one_of(st.sampled_from(_HEADER_EDGES[:5]), st.integers(0, 40)),
+            st.integers(0, (1 << 64) - 1),
+            st.booleans(),
+        ),
+        min_size=0,
+        max_size=40,
+    ),
+    count_slack=st.integers(-300, 40),
+    cut=st.one_of(st.none(), st.integers(0, 8)),
+)
+@settings(max_examples=400, deadline=None)
+def test_hybrid_decode_matches_reference_decoder(width, runs, count_slack, cut):
+    # mixed bit-packed / RLE streams as other writers emit them, with
+    # zero-length runs, oversized RLE values, counts ending mid-run and
+    # truncated tails
+    mask = (1 << width) - 1
+    buf = b"".join(
+        _hybrid_run(kind, width, n, v if wide else v & mask) for kind, n, v, wide in runs
+    )
+    if cut is not None:
+        buf = buf[: max(0, len(buf) - cut)]
+    total = sum(8 * n if kind == "bp" else n for kind, n, _v, _w in runs)
+    _assert_decodes_like_reference(buf, width, max(0, total + count_slack))
+
+
+def test_hybrid_decode_long_and_non_minimal_headers():
+    # headers of 5-10 bytes, non-minimal encodings, 11-byte overruns and
+    # streams of 1-3 bytes
+    prefix = b"\x02\x01" * 4
+    cases = [
+        prefix + b"\x82\x80\x80\x80\x80\x00\x01" + b"\x03\xff",  # 6-byte header: RLE run 1
+        prefix + b"\x83\x80\x80\x80\x80\x80\x80\x80\x80\x00\x55",  # 10-byte header: BP 1 group
+        prefix + b"\x80" * 10 + b"\x00\x01",  # 11 bytes: too long
+        prefix + b"\x80\x80\x80\x80\x80\x80",  # cut off mid-header
+        prefix + b"\xfe\xff\xff\xff\xff\xff\xff\xff\xff\x01\x01",  # RLE run 2**63 - 1
+        prefix + b"\xff\xff\xff\xff\xff\xff\xff\xff\xff\x01\x01",  # BP 2**63 - 1 groups
+        prefix + b"\x82" + b"\x80" * 8 + b"\x01\x01",  # 10th byte: RLE run 2**62 + 1
+        prefix + b"\x83" + b"\x80" * 8 + b"\x01\x55",  # 10th byte: BP 2**62 + 1 groups
+        prefix + b"\x82" + b"\x80" * 9 + b"\x00\x01",  # 11 bytes, else an RLE run 1
+        prefix + b"\x02\x01" * 3 + b"\xff\xff",  # trailing garbage after the count
+        prefix + b"\x00\x01",  # an empty run right after the count
+        prefix + b"\x02\xff",  # a too-wide value right after the count
+        b"\x02",
+        b"\x81\x80",
+        b"\x03\x01\x02",
+        b"\x04\x01",
+        b"\x03\x55",
+    ]
+    for buf in cases:
+        for count in (1, 2, 4, 5, 6, 8, 9, 12, 20):
+            _assert_decodes_like_reference(buf, 1, count)
+
+
+def _assert_decodes_like_reference(buf: bytes, width: int, count: int):
+    """hybrid.decode, and its vectorized walk over the whole stream (from
+    an offset into a larger buffer), return what the per-run reference
+    decoder returns, or raise ValueError where it raises."""
+
+    def whole_stream_vectorized():
+        out = np.empty(count, np.uint64)
+        hybrid._decode_rest(memoryview(b"\xff" * 3 + buf), 3, width, out)
+        return out
+
+    walks = [lambda: hybrid.decode(buf, width, count)]
+    if width and count:  # decode never walks a stream of no values
+        walks.append(whole_stream_vectorized)
+    try:
+        want = ref.hybrid_decode(buf, width, count)
+    except ValueError:
+        want = None
+    for walk in walks:
+        if want is None:
+            with pytest.raises(ValueError):
+                walk()
+        else:
+            assert walk().tolist() == want, (walk, buf, count)
+
+
 def test_hybrid_rle_value_too_large_rejected():
     # hybrid_decoder.go:126-128
     bad = bytes([2 << 1]) + bytes([0xFF])  # RLE run of 2, value 255, width 3

@@ -373,3 +373,29 @@ class TestDistributedScan:
 
         df = read_parquet_table(spark, str(d), prune=[("k", "<=", 100)])
         assert df.where("k <= 100").count() == 101
+
+
+@pytest.mark.parametrize("nulls", [False, True])
+@pytest.mark.parametrize("foreign", [False, True])
+@pytest.mark.parametrize("page_index", [False, True])
+def test_disjoint_row_ranges_match_the_table(nulls, foreign, page_index):
+    # ranges that cut through pages, read page-seeked (OffsetIndex) or
+    # trimmed from whole pages; flat columns without nulls keep the
+    # kept rows' bytes as whole spans, columns with nulls gather them
+    rng = np.random.default_rng(11)
+    n = 3000
+    missing = rng.random(n) < (0.2 if nulls else 0.0)
+    t = pa.table(
+        {
+            "s": pa.array([None if m else f"v{i % 97}" * (i % 4) for i, m in enumerate(missing)]),
+            "i": pa.array(rng.integers(0, 50, n), mask=missing),
+        }
+    )
+    if foreign:
+        buf = io.BytesIO()
+        pq.write_table(t, buf, write_page_index=page_index, data_page_size=512)
+        b = buf.getvalue()
+    else:
+        b = write_parquet(t, page_index=page_index, max_page=512)
+    ranges = [(0, 1), (40, 700), (701, 702), (1500, 2100), (2999, 3000)]
+    assert read_table_arrow(b, None, [0], ranges).equals(_expect(t, n, ranges))

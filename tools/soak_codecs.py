@@ -11,8 +11,9 @@ crc/stats flags, then runs encode_chunk → decode_chunk and compares
 IEEE-BIT-exact (Arrow equals treats NaN != NaN — the first soak run's
 false alarms). Nested iterations compose random list/map/struct trees
 to depth 3 (null parents, empty lists, random SLICES for nonzero
-offsets) through the native containers. Exits nonzero on the first
-mismatch with a reproducer line.
+offsets) through the native containers. Parquet iterations write with
+this engine and read with pyarrow, then write with pyarrow and read with
+this engine. Exits nonzero on the first mismatch with a reproducer line.
 """
 
 from __future__ import annotations
@@ -276,6 +277,53 @@ def soak_parquet(iters: int, seed: int) -> int:
     return fails
 
 
+def soak_parquet_foreign(iters: int, seed: int) -> int:
+    """The reverse interop leg: PYARROW writes random flat tables whose
+    columns repeat each value 1-20 times (dictionary pages whose index
+    streams mix bit-packed and RLE runs, which this engine's writer never
+    emits), with nulls, V1 and V2 data pages and small pages; this
+    engine's ``read_table_arrow`` reads them back, compared NaN-safe."""
+    import io
+
+    import pyarrow.parquet as pq
+
+    from parquet_go_spark.compat.parquet_reader import read_table_arrow
+
+    rng = np.random.default_rng(seed + 4242)
+    fails = 0
+    for it in range(iters):
+        n = int(rng.choice([1, 7, 200, 1500, 5000]))
+        cols = {}
+        for c in range(int(rng.integers(1, 4))):
+            ptype = str(rng.choice(["int32", "int64", "float32", "float64", "bytes"]))
+            runs = rng.integers(1, 21, n)
+            distinct = _rand_values(rng, ptype, len(runs))
+            arr = distinct.take(pa.array(np.repeat(np.arange(len(runs)), runs)[:n]))
+            cols[f"c{c}"] = _with_nulls(rng, arr, float(rng.choice(NULL_DENSITIES)))
+        tbl = pa.table(cols)
+        kw = dict(
+            compression=str(rng.choice(["none", "snappy", "zstd", "gzip"])),
+            data_page_version=str(rng.choice(["1.0", "2.0"])),
+            data_page_size=int(rng.choice([256, 4096, 1 << 20])),
+            row_group_size=int(rng.choice([100, 1000, 1 << 20])),
+        )
+        try:
+            sink = io.BytesIO()
+            pq.write_table(tbl, sink, use_dictionary=True, **kw)
+            back = read_table_arrow(sink.getvalue())
+            ok = _norm(back.to_pylist()) == _norm(tbl.to_pylist())
+        except Exception as e:  # noqa: BLE001
+            print(json.dumps({"pqf_it": it, "n": n, "kw": kw, "err": repr(e)}))
+            fails += 1
+            continue
+        if not ok:
+            print(json.dumps({"pqf_it": it, "n": n, "kw": kw, "err": "MISMATCH"}))
+            fails += 1
+        if (it + 1) % 200 == 0:
+            print(f"# parquet-foreign {it + 1}/{iters} fails={fails}", flush=True)
+    return fails
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--iters", type=int, default=2000)
@@ -286,6 +334,7 @@ def main() -> int:
     f1 = soak_flat(args.iters, args.seed)
     f2 = soak_nested(args.nested_iters, args.seed)
     f3 = soak_parquet(args.parquet_iters, args.seed)
+    f3 += soak_parquet_foreign(args.parquet_iters, args.seed)
     print(
         json.dumps(
             {
