@@ -24,10 +24,10 @@ import struct as _s
 
 import numpy as np
 
-from ..core.codecs import MAX_BLOOM_BYTES
 from ..core.prune import PLAIN_FORMATS, point_key
 from ..kernels.bloom import BLOOM_BLOCK_BYTES, bloom_build, bloom_might_contain
 from ..kernels.xxhash64 import _xxh64_fixed, xxh64, xxh64_column
+from ..limits import MAX_BLOOM_BYTES
 from .parquet_reader import PHYSICAL_TYPES
 from .thrift_compact import read_struct
 from .thrift_writer import write_struct

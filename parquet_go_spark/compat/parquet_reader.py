@@ -270,27 +270,21 @@ def _leaf_levels(buf, meta: dict, info: dict, row_groups=None, row_ranges=None):
 
         if page_rows is not None:
             rows = np.concatenate(page_rows) if page_rows else np.empty(0, np.int64)
-        elif info["max_rep"] == 0:
-            rows = np.arange(len(rep))
         else:
             # every level position belongs to the row opened by the last
             # rep == 0 position at or before it
             rows = np.cumsum(rep == 0) - 1
         keep_pos = rows_in_ranges(rows, row_ranges)
-        # dense (every position holds a value): the values are in
-        # position order, so the kept rows' bytes are whole spans
-        dense = len(values[0] if ptype in ("bytes", "flba") else values) == len(deflv)
-        vmask = keep_pos if dense else keep_pos[deflv == max_def]
+        vmask = keep_pos[deflv == max_def]
         rep, deflv = rep[keep_pos], deflv[keep_pos]
         if ptype in ("bytes", "flba"):
+            # the kept values stay in value order, so each run of them is
+            # one contiguous byte span
             starts_v = np.zeros(len(lens) + 1, dtype=np.int64)
             np.cumsum(lens, out=starts_v[1:])
-            if dense:
-                edge = np.diff(vmask.astype(np.int8), prepend=np.int8(0), append=np.int8(0))
-                lo, hi = starts_v[edge == 1], starts_v[edge == -1]
-                values = (lens[vmask], gather_segments(data, lo, hi - lo))
-            else:
-                values = (lens[vmask], gather_segments(data, starts_v[:-1][vmask], lens[vmask]))
+            edge = np.diff(vmask.astype(np.int8), prepend=np.int8(0), append=np.int8(0))
+            lo, hi = starts_v[edge == 1], starts_v[edge == -1]
+            values = (lens[vmask], gather_segments(data, lo, hi - lo))
         else:
             values = values[vmask]
     return rep, deflv, values, info
@@ -881,11 +875,7 @@ def _field_arrow(buf, meta: dict, leaves: dict, node: dict, row_groups, row_rang
     for lf in _node_leaves(node):
         rep, deflv, values, info = _leaf_levels(buf, meta, leaves[lf["path"]], row_groups, row_ranges)
         streams[lf["path"]] = (rep, deflv, values, info)
-        if info["max_rep"] == 0:  # flat: every level position opens a row
-            slots = np.arange(len(rep))
-            state[lf["path"]] = (slots, slots + 1)
-        else:
-            state[lf["path"]] = row_slots(rep)
+        state[lf["path"]] = row_slots(rep)
     return _assemble(node, state, 0, streams)
 
 

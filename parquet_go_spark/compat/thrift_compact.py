@@ -7,7 +7,7 @@ ULEB128, strings length-prefixed, lists (size << 4 | elem type).
 
 from __future__ import annotations
 
-from ..core.codecs import MAX_THRIFT_DEPTH
+from ..limits import MAX_THRIFT_DEPTH
 
 __all__ = ["read_struct", "read_uvarint"]
 

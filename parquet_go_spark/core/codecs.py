@@ -18,9 +18,9 @@ Untrusted-bytes contract, applied at this boundary for every page of both
 containers: count-declaring kernels get ``max_count=nvals``; the decoded
 value count must equal ``nvals``; byte lengths must be >= 0 and sum to
 the data length; and kernel-level failures surface as ``ValueError``.
-The governors (allocation caps) below are the only ones the chunk and
-page decoders of either container use; kernels keep their own caps on
-stream structure.
+The governors (allocation caps, defined in ``limits`` and re-exported
+here) are the only ones the chunk and page decoders of either container
+use; kernels keep their own caps on stream structure.
 """
 
 from __future__ import annotations
@@ -31,6 +31,18 @@ from contextlib import contextmanager
 import numpy as np
 
 from ..kernels import alp, bytearrays, bytestreamsplit, deltabp, dictenc, forbp, fsst, hybrid, int96, plain
+from ..limits import (  # noqa: F401  (the governors, re-exported)
+    MAX_BLOOM_BYTES,
+    MAX_CODEC_DICT,
+    MAX_DICT_REGION,
+    MAX_NESTING,
+    MAX_PAGE_STATS_LEN,
+    MAX_PAGE_VALUES,
+    MAX_RAW_PAGE,
+    MAX_ROWS,
+    MAX_THRIFT_DEPTH,
+    MAX_TYPE_LENGTH,
+)
 from .columns import ColumnData, gather_segments
 
 __all__ = [
@@ -45,17 +57,6 @@ __all__ = [
     "PARQUET_IDS",
 ]
 
-# ------------------------------------------------------------- governors
-MAX_ROWS = 1 << 28  # rows in one PGSC chunk, values one delta_bp / for_bp stream declares
-MAX_PAGE_VALUES = 1 << 27  # level positions in one Parquet page
-MAX_RAW_PAGE = 1 << 30  # decompressed bytes of one page or dictionary page
-MAX_CODEC_DICT = 1 << 20  # trained DEFLATE dictionary of a zdict chunk
-MAX_PAGE_STATS_LEN = 1 << 12  # a PGSC page-stats bound: <= 64 chars (<= 260 UTF-8 bytes)
-MAX_TYPE_LENGTH = 1 << 16  # FIXED_LEN_BYTE_ARRAY width
-MAX_DICT_REGION = 1 << 26  # dictionary-page bytes one prune probe reads
-MAX_NESTING = 64  # nested levels of one column: PGSL/PGSS chunks, Parquet schema groups
-MAX_THRIFT_DEPTH = 100  # nested structs/collections of one thrift value (footers ~10 deep)
-MAX_BLOOM_BYTES = 1 << 26  # one Parquet bloom filter's bitset
 DICT_MAX = 32767  # dictionary entries a writer emits: math.MaxInt16, type_dict.go:101
 
 # ----------------------------------------------------- Parquet encoding ids

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..limits import MAX_ROWS
 from . import bitpack
 from .varint import read_uvarint, read_varint, uvarint, varint, varint_array, zigzag
 
@@ -183,10 +184,7 @@ def decode(buf, pos: int, bits: int, max_count: int | None = None) -> tuple[np.n
         raise ValueError("delta-bp: miniblock values not multiple of 8")
     count, pos = read_uvarint(mv, pos)
     # count governor: zero-width blocks cost ~2 bytes per block_size
-    # values, so a 67-byte forged stream declared 30M values. (Imported
-    # here: core.codecs imports this module at its top.)
-    from ..core.codecs import MAX_ROWS
-
+    # values, so a 67-byte forged stream declared 30M values
     if count > MAX_ROWS or (max_count is not None and count > max_count):
         raise ValueError(f"delta-bp: implausible count {count}")
     first, pos = read_varint(mv, pos)

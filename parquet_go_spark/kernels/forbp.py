@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..limits import MAX_ROWS
 from . import bitpack
 from .varint import read_uvarint, read_varint, uvarint, varint
 
@@ -64,8 +65,6 @@ def decode(buf, pos: int, bits: int, max_count: int | None = None) -> tuple[np.n
     sdt, _udt = _dtypes(bits)
     mv = memoryview(buf).cast("B")  # normalize signed buffer views
     n, pos = read_uvarint(mv, pos)
-    from ..core.codecs import MAX_ROWS  # here: core.codecs imports this module at its top
-
     if n > MAX_ROWS or (max_count is not None and n > max_count):
         # allocation governor: a width-0 stream stores no packed bytes,
         # so a forged count would otherwise allocate unbounded zeros

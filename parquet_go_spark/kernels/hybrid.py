@@ -22,7 +22,9 @@ to hold 128 more, one at a time as the reference does, so the writers'
 single bit-packed run and a level stream of a few runs pay no setup.
 Past that scalar prefix it takes no Python step per run: O(stream bytes) numpy work, plus O(stream bytes) per level
 of the pointer-doubling walk of the run chain (log2 of the run count
-levels), plus the values written. Foreign writers (pyarrow) mix short
+levels), plus the values written. It reads only the bytes the count can
+reach, at most ``(10 + ceil(width/8))`` per value plus one last run, so
+bytes past the count's end (a dictionary page's rest) cost nothing. Foreign writers (pyarrow) mix short
 RLE and bit-packed runs, and a dictionary column of 1-7-value runs has
 one run per ~4 values. So the cost of a hostile stream is bounded by its
 length: 2 MiB of one-group bit-packed runs (8M values) decodes in ~0.6 s
@@ -155,6 +157,7 @@ def with_size_prefix(stream: bytes, width: int) -> bytes:
 # is worth ~100 short runs walked one at a time.
 _PREFIX_RUNS = 16
 _TAIL_RUNS = 128
+_NONE = np.empty(0, np.uint64)  # an out of no values: _run checks a run, writes nothing
 
 
 def decode(buf, width: int, count: int) -> np.ndarray:
@@ -213,9 +216,20 @@ def _decode_rest(mv, base: int, width: int, out: np.ndarray) -> None:
     :func:`bitpack.unpack` over their concatenated (group-aligned)
     payloads. Raises what :func:`_run` would raise on the first bad run
     the count reaches."""
-    b = np.frombuffer(mv, np.uint8)[base:]
-    n, need = len(b), len(out)
+    need = len(out)
     vsize = (width + 7) // 8
+    # only the bytes the count can reach are read: the runs that leave
+    # the count short hold at most need - 1 values, each in at most
+    # 10 + vsize bytes (a one-value RLE run; a bit-packed group of 8 takes
+    # at most 10 + width), so the run that completes the count starts
+    # within (10 + vsize) * (need - 1) bytes and reads at most a header and
+    # an RLE value or ceil(need / 8) groups more. A bit-packed run that
+    # ends past this window can only be that last run, and is checked
+    # against the whole stream below
+    full = len(mv) - base
+    n = min(full, (10 + vsize) * (need - 1) + 10 + max(vsize, (need + 7) // 8 * width))
+    cut = n < full
+    b = np.frombuffer(mv, np.uint8, n, base)
     # a header's run length is capped at lim: past it a bit-packed run
     # overruns the stream and an RLE run fills the count, so lim * width
     # and every position stay inside the index type
@@ -254,12 +268,16 @@ def _decode_rest(mv, base: int, width: int, out: np.ndarray) -> None:
     bp = (b & np.uint8(1)).view(bool)  # h & 1 is the first byte's low bit
     nxt = (arg * width - vsize) * bp + (np.arange(n, dtype=it) + vsize)
     nxt += hlen
-    ok = (hlen <= 10) & (nxt <= n)
+    fits = nxt <= n
+    ok = hlen <= 10
+    if not cut:
+        ok &= fits
     # jump[i]: the next run's header after a header at i; a bad header
-    # and the stream's end go to the sink n. Pointer doubling gathers
-    # jump by itself once per level, so it holds numpy's index type
+    # and the stream's (or window's) end go to the sink n. Pointer
+    # doubling gathers jump by itself once per level, so it holds numpy's
+    # index type
     jump = np.empty(n + 1, np.intp)
-    jump[:n] = (nxt - n) * ok
+    jump[:n] = (nxt - n) * (ok & fits)
     jump[n] = 0
     jump += n
     del more, run, low, h, nxt
@@ -288,10 +306,13 @@ def _decode_rest(mv, base: int, width: int, out: np.ndarray) -> None:
     if width < 64:
         err[~is_bp] |= (v >> np.uint64(width)) != 0
     if err.any():
-        _run(mv, base + int(heads[int(np.argmax(err))]), width, vsize, np.empty(need, np.uint64), 0)
+        _run(mv, base + int(heads[int(np.argmax(err))]), width, vsize, _NONE, 0)
     if not kept or cum[kept - 1] < need:
-        _run(mv, base + int(bad), width, vsize, np.empty(need, np.uint64), 0)
+        _run(mv, base + int(bad), width, vsize, _NONE, 0)
         raise ValueError("hybrid stream ended early")  # _run raised already
+    last = int(heads[-1])
+    if cut and is_bp[-1] and last + int(hlen[last]) + int(arg[-1]) * width > n:
+        _run(mv, base + last, width, vsize, _NONE, 0)  # its payload's end, exact
     take = cnt.copy()
     take[-1] -= cum[kept - 1] - need
     n_bp = int(take[is_bp].sum())
@@ -299,7 +320,8 @@ def _decode_rest(mv, base: int, width: int, out: np.ndarray) -> None:
         seg = np.zeros(n + 1, np.int8)  # +1 / -1 at each payload's ends
         starts = heads[is_bp] + hlen[heads[is_bp]]
         seg[starts] = 1
-        seg[starts + arg[is_bp] * width] = -1
+        # the groups the count takes: a last run may hold more
+        seg[starts + (take[is_bp] + 7) // 8 * width] = -1
         payload = b[np.cumsum(seg[:n], dtype=np.int8).view(bool)]
         vals = bitpack.unpack(payload, width, n_bp)
     if n_bp == need:

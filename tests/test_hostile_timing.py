@@ -141,30 +141,67 @@ def test_deltabp_hostile_battery():
         _fast(deltabp.decode, buf, 0, 64)
 
 
+def _hybrid_calls(stream: bytes, count: int):
+    """Every entry point over one width-1 hybrid stream."""
+    from parquet_go_spark.kernels import dictenc, hybrid
+
+    return [
+        (hybrid.decode, stream, 1, count),
+        (lambda b, c: dictenc.decode_indices(b, c)[0], b"\x01" + stream, count),
+        (lambda b, c: hybrid.decode_sized(b, 1, c)[0], struct.pack("<I", len(stream)) + stream, count),
+    ]
+
+
 def test_hybrid_hostile_battery():
     """2 MiB of one-group bit-packed runs (1M runs, 8M values) and of
     one-value RLE runs: the run-at-a-time decode took 67 s and 2.4 s.
     Every entry point over the hybrid stream must walk them in bounded
-    time."""
-    import numpy as np
+    time. A small count followed by a 4 MiB tail of valid-looking runs
+    (a dictionary page's index stream runs to the page's end) must read
+    only the bytes the count reaches: bounded time and bounded memory,
+    and a last bit-packed run reaching into the tail is still checked
+    against the whole stream."""
+    import tracemalloc
 
-    from parquet_go_spark.kernels import dictenc, hybrid
+    import numpy as np
 
     streams = [
         (b"\x03\x55" * (1 << 20), 8 << 20, [1, 0]),  # width 1: 0x55 = 1,0,1,0,...
         (b"\x02\x01" * (1 << 20), 1 << 20, [1]),
     ]
     for stream, count, pattern in streams:
-        calls = [
-            (hybrid.decode, stream, 1, count),
-            (lambda b, c: dictenc.decode_indices(b, c)[0], b"\x01" + stream, count),
-            (lambda b, c: hybrid.decode_sized(b, 1, c)[0], struct.pack("<I", len(stream)) + stream, count),
-        ]
-        for fn, *args in calls:
+        for fn, *args in _hybrid_calls(stream, count):
             t = time.time()
             out = fn(*args)
             assert time.time() - t < 2.0, f"{len(stream)}-byte stream took {time.time() - t:.1f}s"
             assert np.array_equal(out, np.resize(np.array(pattern, out.dtype), count))
+
+    runs = b"\x02\x01" * 200  # 200 one-value RLE runs, past the scalar prefix
+    tail = b"\x03\x55" * (2 << 20)
+    big_bp = bytes([0x81, 0x80, 0x80, 0x04])  # uvarint (1 << 22) << 1 | 1: 4 MiB of width-1 groups
+    cases = [
+        (runs + tail, 200, [1] * 200),
+        (runs + tail, 205, [1] * 200 + [1, 0, 1, 0, 1]),  # ends inside the first tail run
+        (runs + big_bp + b"\x55" * (1 << 22), 203, [1] * 200 + [1, 0, 1]),
+        (runs + big_bp + b"\x55" * ((1 << 22) - 1), 203, None),  # that run truncated by one byte
+    ]
+    for stream, count, want in cases:
+        for fn, *args in _hybrid_calls(stream, count):
+            tracemalloc.start()
+            t = time.time()
+            try:
+                out = fn(*args)
+            except ValueError as e:
+                out = e
+            wall = time.time() - t
+            peak = tracemalloc.get_traced_memory()[1]
+            tracemalloc.stop()
+            assert wall < 2.0, f"count {count} over {len(stream)} bytes took {wall:.1f}s"
+            assert peak < 1 << 20, f"count {count} over {len(stream)} bytes peaked at {peak} bytes"
+            if want is None:
+                assert isinstance(out, ValueError) and "bit-packed run truncated" in str(out)
+            else:
+                assert np.array_equal(out, want)
 
 
 def test_forbp_width0_large_count_is_fast_and_constant():

@@ -172,29 +172,53 @@ def test_hybrid_decode_long_and_non_minimal_headers():
             _assert_decodes_like_reference(buf, 1, count)
 
 
+def test_hybrid_decode_longest_runs_the_count_reaches():
+    # the vectorized walk reads only the bytes a count can reach: the
+    # longest such streams use 10-byte headers throughout, for RLE runs of
+    # one value each, for one bit-packed run, and for both
+    def long_uvarint(h):
+        return bytes(((h >> (7 * i)) & 0x7F) | (0x80 if i < 9 else 0) for i in range(10))
+
+    rng = np.random.default_rng(7)
+    for width in (1, 9, 64):
+        vsize = (width + 7) // 8
+        one = long_uvarint(2) + (1).to_bytes(vsize, "little")
+        for count in (1, 5, 17, 40):
+            groups = (count + 7) // 8
+            bp = long_uvarint(groups << 1 | 1) + rng.integers(0, 256, groups * width, np.uint8).tobytes()
+            last = long_uvarint(3) + rng.integers(0, 256, width, np.uint8).tobytes()
+            for buf in (one * count, bp, one * (count - 1) + last):
+                _assert_decodes_like_reference(buf, width, count)
+
+
 def _assert_decodes_like_reference(buf: bytes, width: int, count: int):
     """hybrid.decode, and its vectorized walk over the whole stream (from
     an offset into a larger buffer), return what the per-run reference
-    decoder returns, or raise ValueError where it raises."""
+    decoder returns, or raise ValueError where it raises. The walk also
+    runs with a tail of one-group bit-packed runs after the stream, long
+    enough that it reads only the bytes the count can reach."""
 
-    def whole_stream_vectorized():
+    def whole_stream_vectorized(stream):
         out = np.empty(count, np.uint64)
-        hybrid._decode_rest(memoryview(b"\xff" * 3 + buf), 3, width, out)
+        hybrid._decode_rest(memoryview(b"\xff" * 3 + stream), 3, width, out)
         return out
 
-    walks = [lambda: hybrid.decode(buf, width, count)]
+    variants = [(buf, [lambda: hybrid.decode(buf, width, count)])]
     if width and count:  # decode never walks a stream of no values
-        walks.append(whole_stream_vectorized)
-    try:
-        want = ref.hybrid_decode(buf, width, count)
-    except ValueError:
-        want = None
-    for walk in walks:
-        if want is None:
-            with pytest.raises(ValueError):
-                walk()
-        else:
-            assert walk().tolist() == want, (walk, buf, count)
+        variants[0][1].append(lambda: whole_stream_vectorized(buf))
+        tailed = buf + (b"\x03" + b"\xa5" * width) * (20 * count + 8)
+        variants.append((tailed, [lambda: whole_stream_vectorized(tailed)]))
+    for stream, walks in variants:
+        try:
+            want = ref.hybrid_decode(stream, width, count)
+        except ValueError:
+            want = None
+        for walk in walks:
+            if want is None:
+                with pytest.raises(ValueError):
+                    walk()
+            else:
+                assert walk().tolist() == want, (walk, stream, count)
 
 
 def test_hybrid_rle_value_too_large_rejected():
