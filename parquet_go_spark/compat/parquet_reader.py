@@ -571,25 +571,12 @@ def read_column_arrow(
     return _field_arrow(buf, meta, leaves, nodes[column], row_groups, row_ranges)
 
 
-def table_fields(meta: dict) -> list[tuple[str, list[str]]]:
-    """Top-level field name -> its leaf paths, in schema order."""
-    leaves = schema_leaf_info(meta)
-    order: list[str] = []
-    by_top: dict[str, list[str]] = {}
-    for path in leaves:
-        top = path.split(".")[0]
-        if top not in by_top:
-            by_top[top] = []
-            order.append(top)
-        by_top[top].append(path)
-    return [(t, by_top[t]) for t in order]
-
-
 def read_table_arrow(
     buf: bytes,
     columns: list[str] | None = None,
     row_groups: list[int] | None = None,
     row_ranges: list[tuple[int, int]] | None = None,
+    meta: dict | None = None,
 ) -> pa.Table:
     """Decode a whole Parquet file into an Arrow table through this
     engine's kernels (reference ``file_reader.go`` NextRow loop, but
@@ -600,24 +587,21 @@ def read_table_arrow(
 
     ``row_ranges`` (with exactly one row group selected) materializes
     only those rows, page-seeking flat columns through the OffsetIndex
-    when the writer emitted one — the PageIndex read path."""
-    meta = file_meta(buf)
-    fields = table_fields(meta)
-    leaves = schema_leaf_info(meta)
-    nodes = {c["name"]: c for c in schema_tree(meta)["children"]}
+    when the writer emitted one — the PageIndex read path. ``meta`` is
+    the file's parsed footer when the caller has it already."""
+    meta = file_meta(buf) if meta is None else meta
+    tree = schema_tree(meta)
+    leaves = {node["path"]: node["leaf"] for node in _node_leaves(tree)}
+    nodes = {c["name"]: c for c in tree["children"] if _node_leaves(c)}
+    names = list(nodes)
     if columns is not None:
-        known = {t for t, _ in fields}
-        missing = [c for c in columns if c not in known]
+        missing = [c for c in columns if c not in nodes]
         if missing:
-            raise KeyError(f"columns not in file: {missing}; have {sorted(known)}")
-        fields = [(t, ls) for t, ls in fields if t in set(columns)]
-        fields.sort(key=lambda f: columns.index(f[0]))
-    names, arrays = [], []
-    for top, _leaf_paths in fields:
-        # read_field_arrow serves every shape, including the single-leaf
-        # struct that read_column_arrow would fold down to its leaf
-        names.append(top)
-        arrays.append(_field_arrow(buf, meta, leaves, nodes[top], row_groups, row_ranges))
+            raise KeyError(f"columns not in file: {missing}; have {sorted(nodes)}")
+        names = list(dict.fromkeys(columns))
+    # _field_arrow serves every shape, including the single-leaf struct
+    # that read_column_arrow would fold down to its leaf
+    arrays = [_field_arrow(buf, meta, leaves, nodes[n], row_groups, row_ranges) for n in names]
     if row_ranges is not None:
         rg_rows = int(meta[4][row_groups[0]][3])
         n_rows = sum(min(hi, rg_rows) - lo for lo, hi in row_ranges if lo < rg_rows)

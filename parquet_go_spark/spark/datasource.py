@@ -75,18 +75,15 @@ def _split(plan) -> list[_PGSPartition]:
 
 def _read_partition(enc_dir: str, part: _PGSPartition):
     """One planned partition -> its decoded batch (``decode_partition``
-    over the file's bytes); shared by the batch and stream readers."""
-    import os
-
-    from .decode_job import decode_partition
+    over the memory-mapped file); shared by the batch and stream
+    readers."""
+    from .decode_job import decode_partition, open_partition
     from .session import freeze_task_heap
 
     freeze_task_heap()
     if part.pid < 0:
         return
-    with open(os.path.join(enc_dir, f"part-{part.pid:05d}.bin"), "rb") as fh:
-        payload = fh.read()
-    batch = decode_partition(enc_dir, part.pid, payload, part.plan)
+    batch = decode_partition(enc_dir, part.pid, open_partition(enc_dir, part.pid), part.plan)
     if batch is not None:
         yield batch
 
@@ -287,6 +284,7 @@ class _PGSStreamReader(DataSourceStreamReader):
 class _PGSStagedCommit(WriterCommitMessage):
     stage_name: str
     rows: list  # manifest row dicts (file/partition patched at commit)
+    eq_stage: "str | None" = None  # an upsert task's staged key sidecar
 
 
 class _PGSStagedWriter:
@@ -298,13 +296,21 @@ class _PGSStagedWriter:
     ones), renames the staged files onto ``part-<pid>.bin``, commits
     their manifests, sweeps the claim's unused tail and seals a snapshot
     carrying ``marker`` — a job whose marker is sealed already only
-    drops its staged files. ``abort`` drops them; nothing was visible."""
+    drops its staged files. ``abort`` drops them; nothing was visible.
 
-    def __init__(self, enc_dir: str, cols: list[str], opts: dict, arrow_schema=None):
+    With ``upsert_key`` (the stream writer's) each task also keeps one
+    row per key and stages an equality sidecar of its keys, which
+    ``_commit`` publishes before the snapshot: the batch's rows replace
+    the older versions of its keys in one snapshot."""
+
+    def __init__(
+        self, enc_dir: str, cols: list[str], opts: dict, arrow_schema=None, upsert_key=None
+    ):
         self.enc_dir = enc_dir
         self.cols = cols
         self.opts = opts
         self.arrow_schema = arrow_schema  # empty tasks encode its zero-row table
+        self.upsert_key = upsert_key
 
     def write(self, iterator) -> _PGSStagedCommit:
         import uuid
@@ -312,13 +318,54 @@ class _PGSStagedWriter:
         from .encode_job import write_task
 
         # the .tmp suffix keeps staged files OUT of the reader's
-        # part-*.bin glob (invisible mid-flight) and IN the orphan
-        # sweep's *.tmp* pattern (crashed writes get cleaned up)
-        stage = f"stage-{uuid.uuid4().hex}.bin.tmp"
+        # part-*.bin / eq-*.parquet globs (invisible mid-flight) and IN
+        # the orphan sweep's *.tmp* pattern (crashed writes get cleaned up)
+        tag = uuid.uuid4().hex
+        eq_stage = None
+        if self.upsert_key is not None:
+            iterator, eq_stage = self._stage_upsert(iterator, f"stage-{tag}.eq.tmp")
+        stage = f"stage-{tag}.bin.tmp"
         rows = write_task(
             iterator, self.enc_dir, self.cols, self.arrow_schema, stage_name=stage, **self.opts
         )
-        return _PGSStagedCommit(stage_name=stage, rows=rows)
+        return _PGSStagedCommit(stage_name=stage, rows=rows, eq_stage=eq_stage)
+
+    def _stage_upsert(self, batches, stage_name: str):
+        """(this task's rows with the last row of each key, NULL keys kept
+        as inserts; the staged sidecar of its keys or None). The sidecar
+        applies to the latest snapshot's partitions that may hold a key
+        (``maintenance.eq_delete_scope``): the batch's own rows, still
+        staged, survive it, and a replay scopes exactly as the first
+        attempt. Keys repeated across tasks are the caller's to avoid,
+        by repartitioning on the key."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from . import manifest as mf
+        from .maintenance import eq_delete_scope
+        from .session import freeze_task_heap
+
+        freeze_task_heap()  # before the batches arrive, as in write_task
+        recs = list(batches)
+        table = pa.Table.from_batches(recs) if recs else self.arrow_schema.empty_table()
+        valid = pc.is_valid(table.column(self.upsert_key)).to_numpy()
+        idx = np.arange(table.num_rows)
+        keyed = pa.table({"k": table.column(self.upsert_key), "i": idx}).filter(valid)
+        last = keyed.group_by("k", use_threads=False).aggregate([("i", "max")])
+        if last.num_rows < keyed.num_rows:
+            keep = np.concatenate([last.column("i_max").to_numpy(), idx[~valid]])
+            table = table.take(np.sort(keep))
+        keys = last.column("k").to_pylist()
+        snap = mf.latest_snapshot(self.enc_dir)
+        within = set(snap["partition_ids"]) if snap else set()
+        applies = eq_delete_scope(self.enc_dir, self.upsert_key, keys, within) if keys else []
+        staged = (
+            mf.stage_eq_delete_file(self.enc_dir, self.upsert_key, keys, applies, stage_name)
+            if applies
+            else None
+        )
+        return table.to_batches(), staged
 
     def _commit(self, messages, job_id, marker, operation, config, reset=None) -> None:
         """``reset`` (an overwrite's table fields) truncates the old table
@@ -356,6 +403,9 @@ class _PGSStagedWriter:
                 len(msgs),
             )
             mf.drop_partitions(self.enc_dir, range(base + len(msgs), base + claim_n))
+        sidecars = [mf.publish_eq_delete_file(self.enc_dir, m.eq_stage) for m in msgs if m.eq_stage]
+        if sidecars:
+            config = {**config, "eq_sidecars": sidecars}
         mf.commit_snapshot(self.enc_dir, operation, {**config, **marker, "tasks": len(msgs)})
 
     def abort(self, messages, batchId: int | None = None) -> None:
@@ -363,8 +413,10 @@ class _PGSStagedWriter:
         import os
 
         for m in filter(None, messages):
-            with contextlib.suppress(OSError):
-                os.remove(os.path.join(self.enc_dir, m.stage_name))
+            for path in (os.path.join(self.enc_dir, m.stage_name), m.eq_stage):
+                if path:
+                    with contextlib.suppress(OSError):
+                        os.remove(path)
 
 
 class _PGSWriter(_PGSStagedWriter, DataSourceArrowWriter):
@@ -400,19 +452,30 @@ class _PGSStreamWriter(_PGSStagedWriter, DataSourceStreamArrowWriter):
     the driver: the staged commit keyed by the batch id, so a replayed
     batch claims the SAME ids, and the ``stream_batch_id`` snapshot
     marker keeps a re-delivered batch from committing twice.
-    Partitioning stays with the caller, as for the batch writer."""
+    Partitioning stays with the caller, as for the batch writer.
 
-    def __init__(self, enc_dir: str, cols: list[str], opts: dict, txn: str, arrow_schema=None):
-        super().__init__(enc_dir, cols, opts, arrow_schema)
+    ``.option("upsert_key", col)`` makes it the CDC upsert sink (the
+    Iceberg upsert mode, Delta's merge in ``foreachBatch``): each batch
+    replaces the older versions of its keys through equality sidecars,
+    reading no table data, in one ``stream-upsert`` snapshot. A reader
+    between the data commit and the sidecar publish may see both
+    versions of a key; one pinned ``as_of`` a snapshot never does."""
+
+    def __init__(self, enc_dir, cols, opts, txn: str, arrow_schema=None, upsert_key=None):
+        super().__init__(enc_dir, cols, opts, arrow_schema, upsert_key)
         # scopes batch ids to ONE streaming query (Delta's txnAppId):
         # two queries on one table would otherwise read each other's
-        # batches as replays; .option("stream_txn", id) runs several
+        # batches as replays
         self.txn = txn
 
     def commit(self, messages, batchId: int) -> None:
         marker = {"stream_batch_id": int(batchId), "stream_txn": self.txn}
         job_id = f"stream-{self.txn}-batch-{int(batchId)}"
-        self._commit(messages, job_id, marker, "stream-append", {})
+        if self.upsert_key is None:
+            op, config = "stream-append", {}
+        else:
+            op, config = "stream-upsert", {"upsert_key": self.upsert_key}
+        self._commit(messages, job_id, marker, op, config)
 
 
 def _flag(value) -> bool:
@@ -496,8 +559,39 @@ class PGSDataSource(DataSource):
         return cls(self._dir(), cols, opts, arrow_schema=arrow_schema, **kw)
 
     def streamWriter(self, schema, overwrite: bool) -> _PGSStreamWriter:
-        txn = str(self.options.get("stream_txn", "default"))
-        return self._writer(_PGSStreamWriter, schema, True, txn=txn)
+        key = self.options.get("upsert_key")
+        if key is not None:
+            field = next((f for f in schema.fields if f.name == key), None)
+            if field is None or field.dataType.typeName() in ("array", "map", "struct"):
+                raise ValueError(f"upsert_key {key!r} must name a scalar column of the stream")
+        return self._writer(_PGSStreamWriter, schema, True, txn=self._query_txn(), upsert_key=key)
+
+    def _query_txn(self) -> str:
+        """The replay guard's scope: ``.option("stream_txn", id)`` when
+        given, else the query id Spark writes to ``<checkpointLocation>/
+        metadata`` at query start. A recreated checkpoint gets a new id
+        and restarts batch ids at 0, so its batches are never taken for
+        another run's replays. Spark hands the sink no checkpoint set
+        only through ``spark.sql.streaming.checkpointLocation``, so such a
+        query must name one of the two options."""
+        import json
+        import os
+        from urllib.parse import urlparse
+
+        if self.options.get("stream_txn") is not None:
+            return str(self.options["stream_txn"])
+        ckpt = self.options.get("checkpointlocation")
+        if not ckpt:
+            raise ValueError(
+                'writeStream.format("pgs") needs .option("checkpointLocation", dir) '
+                'or .option("stream_txn", id)'
+            )
+        url = urlparse(ckpt)
+        try:
+            with open(os.path.join(url.path if url.scheme == "file" else ckpt, "metadata")) as f:
+                return str(json.load(f)["id"])
+        except (OSError, ValueError, KeyError):
+            return ckpt
 
     def writer(self, schema, overwrite: bool) -> _PGSWriter:
         return self._writer(_PGSWriter, schema, not overwrite)

@@ -108,21 +108,31 @@ def _collect_keys(src_keys: DataFrame) -> list:
     return [r[0] for r in src_keys.collect()]
 
 
-def delete_keys(
-    enc_dir: str,
-    column: str,
-    values,
-    within: "set[int] | None" = None,
-    extra_config: dict | None = None,
-) -> dict:
+def eq_delete_scope(
+    enc_dir: str, column: str, values: list, within: "set[int] | None" = None
+) -> list[int]:
+    """The partitions an equality delete of ``values`` applies to: those
+    committed (and in ``within``, when given) that the manifest
+    stats/bloom tiers cannot prove free of them — an ``in`` probe for up
+    to 1024 values, else one min/max range check (per-value bloom
+    probing is O(values × partitions))."""
+    if len(values) <= 1024:
+        predicate = [(column, "in", tuple(values))]
+    else:
+        predicate = [(column, ">=", min(values)), (column, "<=", max(values))]
+    return surviving_partitions(enc_dir, predicate, within=within)
+
+
+def delete_keys(enc_dir: str, column: str, values) -> dict:
     """Equality delete (Iceberg v2 equality delete file): drop every row
     whose ``column`` value is in ``values`` — O(metadata), NO data scan
     and no Spark job at all. The write is one sidecar whose apply set is
-    scoped two ways: (1) by the manifest stats/bloom tiers to partitions
-    that MAY hold a match, and (2) to partitions committed SO FAR, so a
-    key re-inserted by a later append survives (Iceberg sequence-number
-    semantics). Value-based filters are idempotent under in-place
-    rewrites — equality sidecars never go stale, unlike positional ones.
+    scoped two ways (``eq_delete_scope``): (1) by the manifest
+    stats/bloom tiers to partitions that MAY hold a match, and (2) to
+    partitions committed SO FAR, so a key re-inserted by a later append
+    survives (Iceberg sequence-number semantics). Value-based filters
+    are idempotent under in-place rewrites — equality sidecars never go
+    stale, unlike positional ones.
 
     The read-side trade: every decode of an applies-to partition also
     decodes the key column and filters by value until compaction (or a
@@ -130,23 +140,12 @@ def delete_keys(
     without a scan (``rows_deleted`` is not returned; snapshot num_rows
     ignores equality deletes, as Iceberg's summaries do) — use
     ``delete_where(mode="mor"/"cow")`` when exact accounting matters.
-    This is the delete a streaming CDC upsert needs: the hot path writes
-    KBs and reads nothing.
-
-    ``within`` restricts the apply universe to those partition ids (the
-    streaming upsert passes the PRE-batch snapshot's set so the batch's
-    own appended rows survive their own delete); ``extra_config`` merges
-    into the committed snapshot's config (replay markers)."""
+    The ``upsert_key`` stream sink stages the same sidecars from its
+    tasks (``datasource._PGSStagedWriter``)."""
     vals = list(dict.fromkeys(values))
     if not vals:
         raise ValueError("delete_keys needs at least one value")
-    if len(vals) <= 1024:
-        predicate = [(column, "in", tuple(vals))]
-    else:
-        # large CDC batches: per-value bloom probing is O(values ×
-        # partitions) on the driver — fall back to one range check
-        predicate = [(column, ">=", min(vals)), (column, "<=", max(vals))]
-    applies = surviving_partitions(enc_dir, predicate, within=within)
+    applies = eq_delete_scope(enc_dir, column, vals)
     name = mf.write_eq_delete_file(enc_dir, column, vals, applies) if applies else None
     snap = mf.commit_snapshot(
         enc_dir,
@@ -157,7 +156,6 @@ def delete_keys(
             "n_values": len(vals),
             "applies_to": len(applies),
             "file": name,
-            **(extra_config or {}),
         },
     )
     return {"candidates": len(applies), "file": name, "snapshot": snap["seq"]}
@@ -218,9 +216,9 @@ def mark_matching_keys(
     one sidecar per touched partition (group-per-pid ⇒ no write races),
     deduplicated against sidecars already on disk so a replayed batch
     is a no-op. Only the bounded per-partition totals return to the
-    driver. ``within`` restricts the scan universe (the streaming
-    upsert passes the pre-batch snapshot's partitions so appended rows
-    survive their own delete)."""
+    driver. ``within`` restricts the scan universe: pass the partitions
+    committed before an append of the same keys and the appended rows
+    survive their own delete."""
     fields = mf.read_table_schema(enc_dir)
     committed = mf.committed_partitions(enc_dir)
     pids = sorted(committed & set(within)) if within is not None else sorted(committed)

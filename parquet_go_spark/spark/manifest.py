@@ -301,35 +301,52 @@ def write_eq_delete_file(out_dir: str, column: str, values, applies_to) -> str:
     before it). Unlike positional sidecars these are value-based, so an
     in-place rewrite never makes them stale (re-filtering by value is
     idempotent). Returns the basename."""
+    return publish_eq_delete_file(
+        out_dir, stage_eq_delete_file(out_dir, column, values, applies_to, f".eq.tmp.{os.getpid()}")
+    )
+
+
+def stage_eq_delete_file(out_dir: str, column: str, values, applies_to, stage_name: str) -> str:
+    """Write an equality sidecar as ``deletes/<stage_name>``, invisible to
+    readers until :func:`publish_eq_delete_file`; a ``.tmp`` in the name
+    keeps a crashed stage in ``remove_orphan_files``' sweep. Returns the
+    staged path."""
     vals = list(values)
     if not vals:
         raise ValueError("refusing to write an empty equality delete")
     os.makedirs(deletes_dir(out_dir), exist_ok=True)
-    existing = list_eq_delete_files(out_dir)
-    k = int(existing[-1][len("eq-") : -len(".parquet")]) + 1 if existing else 0
     table = pa.table({"value": pa.array(vals)}).replace_schema_metadata(
         {"column": column, "applies_to": json.dumps(sorted(int(p) for p in applies_to))}
     )
-    # same os.link CAS as write_delete_file: concurrent committers must
-    # never clobber each other's sidecar by claiming the same index
-    tmp = os.path.join(deletes_dir(out_dir), f".eq.tmp.{os.getpid()}")
-    pq.write_table(table, tmp)
+    path = os.path.join(deletes_dir(out_dir), stage_name)
+    pq.write_table(table, path)
+    return path
+
+
+def publish_eq_delete_file(out_dir: str, staged: str) -> str:
+    """Link a staged sidecar onto the next free ``eq-NNNN.parquet`` and
+    drop the stage; returns the basename. Same ``os.link`` CAS as
+    ``write_delete_file``: concurrent committers never clobber each
+    other's sidecar by claiming the same index."""
+    existing = list_eq_delete_files(out_dir)
+    k = int(existing[-1][len("eq-") : -len(".parquet")]) + 1 if existing else 0
     try:
         while True:
             name = f"eq-{k:04d}.parquet"
-            path = os.path.join(deletes_dir(out_dir), name)
             try:
-                os.link(tmp, path)
+                os.link(staged, os.path.join(deletes_dir(out_dir), name))
                 return name
             except FileExistsError:
                 k += 1
     finally:
-        os.unlink(tmp)
+        os.unlink(staged)
 
 
 def read_eq_delete_file(out_dir: str, name: str) -> dict:
     """{"column", "values", "applies_to"} for one equality sidecar."""
-    t = pq.read_table(os.path.join(deletes_dir(out_dir), name))
+    # ParquetFile, not read_table: the dataset machinery costs several
+    # times the read of a small file, and plan_scan reads every sidecar
+    t = pq.ParquetFile(os.path.join(deletes_dir(out_dir), name)).read()
     meta = t.schema.metadata or {}
     return {
         "column": meta[b"column"].decode(),
@@ -514,6 +531,15 @@ def read_snapshots(out_dir: str) -> list[dict]:
     return out
 
 
+def latest_snapshot(out_dir: str) -> dict | None:
+    """The newest snapshot (one file read, not the whole log)."""
+    paths = sorted(glob.glob(os.path.join(snapshot_dir(out_dir), "snap-*.json")))
+    if not paths:
+        return None
+    with open(paths[-1]) as f:
+        return json.load(f)
+
+
 def table_properties(out_dir: str, as_of: int | str | None = None) -> dict[str, str]:
     """Effective table properties at a version (Iceberg table-properties
     analogue): the ``properties`` map of the nearest at-or-before
@@ -653,9 +679,9 @@ def next_partition_base(out_dir: str) -> int:
     snapshot — resumes at the same base and its per-partition manifest
     commits are replayed, not orphaned. Falls back to the committed set
     when the table has no snapshots yet."""
-    snaps = read_snapshots(out_dir)
-    if snaps and snaps[-1].get("partition_ids") is not None:
-        ids = snaps[-1]["partition_ids"]
+    snap = latest_snapshot(out_dir)
+    if snap and snap.get("partition_ids") is not None:
+        ids = snap["partition_ids"]
         base = (max(ids) + 1) if ids else 0
     else:
         pids = committed_partitions(out_dir)

@@ -192,8 +192,9 @@ def read_row_group(path: str, rg: int, schema: list[tuple], prune: list[tuple] |
     in; a file without an index is read whole."""
     cols = [n for n, _, _ in schema]
     buf = pa.memory_map(path).read_buffer()
-    ranges = page_prune_ranges(buf, file_meta(buf), rg, prune) if prune else None
-    tbl = read_table_arrow(buf, columns=cols, row_groups=[rg], row_ranges=ranges)
+    meta = file_meta(buf)
+    ranges = page_prune_ranges(buf, meta, rg, prune) if prune else None
+    tbl = read_table_arrow(buf, columns=cols, row_groups=[rg], row_ranges=ranges, meta=meta)
     arrays = [one_chunk(tbl.column(n)).cast(arrow_type_of_ddl(ddl)) for n, _, ddl in schema]
     return pa.table(dict(zip(cols, arrays)))
 

@@ -129,9 +129,9 @@ def test_materialize_deletes_fully_deleted_partition_stays_empty(spark, tmp_path
 
 
 def test_mark_within_scope_spares_appended_rows(spark, tmp_path):
-    """The streaming-upsert composition above the guard: append the
-    batch, then mark ONLY pre-batch partitions — the batch's own rows
-    must survive their own delete (sequence-number semantics)."""
+    """Append the batch, then mark ONLY pre-batch partitions — the
+    batch's own rows must survive their own delete (sequence-number
+    semantics)."""
     from parquet_go_spark.spark import manifest as mf
     from parquet_go_spark.spark.decode_job import decode_table
     from parquet_go_spark.spark.encode_job import encode_table

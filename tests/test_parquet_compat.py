@@ -216,5 +216,28 @@ def test_read_table_parses_the_footer_once(monkeypatch):
     calls = []
     real = parquet_reader.file_meta
     monkeypatch.setattr(parquet_reader, "file_meta", lambda b: calls.append(1) or real(b))
+    trees = []
+    real_tree = parquet_reader.schema_tree
+    monkeypatch.setattr(parquet_reader, "schema_tree", lambda m: trees.append(1) or real_tree(m))
     assert parquet_reader.read_table_arrow(buf).equals(tbl)
+    assert len(calls) == 1 and len(trees) == 1
+
+
+def test_pruned_row_group_read_parses_the_footer_once(monkeypatch, tmp_path):
+    """A pruned ``read_row_group`` parses the footer once and hands it to
+    both the page-index prune and the decode."""
+    from parquet_go_spark.compat import parquet_reader
+    from parquet_go_spark.spark import parquet_source
+
+    path = str(tmp_path / "f.parquet")
+    tbl = pa.table({"a": pa.array(range(4000)), "s": pa.array([str(i) for i in range(4000)])})
+    pq.write_table(tbl, path, write_page_index=True, data_page_size=1024)
+    schema = parquet_source.parquet_scan_schema(path)
+    calls = []
+    real = parquet_reader.file_meta
+    counted = lambda b: calls.append(1) or real(b)  # noqa: E731
+    monkeypatch.setattr(parquet_reader, "file_meta", counted)
+    monkeypatch.setattr(parquet_source, "file_meta", counted)
+    got = parquet_source.read_row_group(path, 0, schema, [("a", ">=", 3990)])
     assert len(calls) == 1
+    assert 3990 in got.column("a").to_pylist() and got.num_rows < 4000

@@ -1,6 +1,6 @@
 """Round-4 fourth review batch: decimal carrier widths, PEP 604 unions,
-bridge-vertex clustering, NULL-doc pass-through, streaming replay
-identity, late-event sessions, group field ids."""
+bridge-vertex clustering, NULL-doc pass-through, late-event sessions,
+group field ids."""
 
 from __future__ import annotations
 
@@ -96,27 +96,6 @@ def test_exact_dedup_null_texts_stay_singletons(spark):
     nulls = sorted(r.keep_id for r in got if r.fp is None)
     assert nulls == [3, 4, 5]
     assert all(r.n_dups == 1 for r in got if r.fp is None)
-
-
-def test_upsert_replay_guard_scoped_to_query_identity(spark, tmp_path):
-    """Batch ids restart at 0 when a checkpoint is recreated; the replay
-    guard must be scoped per query identity (stream_txn), not a
-    table-global max — previously a restarted query's batches 0..N were
-    silently discarded."""
-    from parquet_go_spark.spark import manifest as mf
-    from parquet_go_spark.streaming.upsert_stream import last_upsert_batch
-
-    d = str(tmp_path / "enc")
-    import os
-
-    os.makedirs(mf.snapshot_dir(d), exist_ok=True)
-    mf.commit_snapshot(d, "merge", {"stream_batch_id": 500, "stream_txn": "query-A"})
-    # old query A saw batch 500; a NEW query B starts numbering at 0
-    assert last_upsert_batch(d, "query-A") == 500
-    assert last_upsert_batch(d, "query-B") == -1  # B's batch 0 applies
-    # legacy snapshots without txn still guard any query
-    mf.commit_snapshot(d, "merge", {"stream_batch_id": 600})
-    assert last_upsert_batch(d, "query-B") == 600
 
 
 def test_sessionize_late_event_never_inverts_session_bounds(spark, tmp_path):

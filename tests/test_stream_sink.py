@@ -152,18 +152,11 @@ def test_stream_sink_end_to_end(spark, tmp_path):
     assert not glob.glob(os.path.join(out, "stage-*.tmp"))
 
 
-def test_stream_sink_mid_commit_crash_replay_with_fewer_tasks(tmp_path):
-    """Crash window: attempt 1 renamed+manifested 2 partitions then died
-    before its snapshot; the replay delivers the batch in ONE task. The
-    replay's commit must sweep the claimed-but-unfilled tail ids, or the
-    crashed attempt's second partition would double-count its rows."""
-    w, d = _mk_writer(tmp_path)
-    m0 = w.write(iter([_batch(0, 100)]))
-    m1 = w.write(iter([_batch(100, 250)]))
-    # simulate attempt 1 crashing AFTER the renames/manifests but BEFORE
-    # the snapshot: run the rename/manifest phase by hand
-    base = mf.claim_append_base(d, "stream-q1-batch-0", 2)
-    for i, m in enumerate(sorted([m0, m1], key=lambda m: m.stage_name)):
+def _crash_mid_commit(d: str, job_id: str, msgs) -> None:
+    """What an attempt that died after its renames, manifests and sidecar
+    publishes but BEFORE its snapshot leaves behind."""
+    base = mf.claim_append_base(d, job_id, len(msgs))
+    for i, m in enumerate(sorted(msgs, key=lambda m: m.stage_name)):
         pid = base + i
         os.replace(
             os.path.join(d, m.stage_name), os.path.join(d, f"part-{pid:05d}.bin")
@@ -173,6 +166,31 @@ def test_stream_sink_mid_commit_crash_replay_with_fewer_tasks(tmp_path):
             for r in m.rows
         ]
         mf.commit_partition(d, pid, rows)
+        if m.eq_stage:
+            mf.publish_eq_delete_file(d, m.eq_stage)
+
+
+def _table_rows(d: str) -> list[tuple]:
+    from parquet_go_spark.spark.decode_job import decode_partition, open_partition, plan_scan
+
+    plan, out = plan_scan(d), []
+    for pid in plan.pids:
+        b = decode_partition(d, pid, open_partition(d, pid), plan)
+        if b is not None:
+            out += zip(b.column("url").to_pylist(), b.column("n").to_pylist())
+    return sorted(out)
+
+
+def test_stream_sink_mid_commit_crash_replay_with_fewer_tasks(tmp_path):
+    """Crash window: attempt 1 renamed+manifested 2 partitions then died
+    before its snapshot; the replay delivers the batch in ONE task. The
+    replay's commit must sweep the claimed-but-unfilled tail ids, or the
+    crashed attempt's second partition would double-count its rows.
+    The upsert case ends exact too: the crashed attempt's published
+    sidecars are scoped like the replay's, to the pre-batch snapshot."""
+    w, d = _mk_writer(tmp_path)
+    attempt = [w.write(iter([_batch(0, 100)])), w.write(iter([_batch(100, 250)]))]
+    _crash_mid_commit(d, "stream-q1-batch-0", attempt)
     assert len(mf.committed_partitions(d)) == 2
     # replay arrives as ONE task carrying the whole batch
     r = w.write(iter([_batch(0, 250)]))
@@ -183,3 +201,42 @@ def test_stream_sink_mid_commit_crash_replay_with_fewer_tasks(tmp_path):
         max(x["num_rows"] for x in mf.read_partition_manifest(d, pid)) for pid in pids
     )
     assert rows == 250
+
+    d = str(tmp_path / "upsert")
+    mf.write_table_schema(d, [{"name": "url", "ddl": "string"}, {"name": "n", "ddl": "bigint"}])
+    u = _PGSStreamWriter(d, ["url", "n"], {"bloom_columns": ["url"]}, txn="q1", upsert_key="url")
+    u.commit([u.write(iter([_batch(0, 50)])), u.write(iter([_batch(50, 100)]))], batchId=0)
+    changed = [
+        pa.record_batch({"url": b["url"], "n": pa.array(np.full(len(b), -1))})
+        for b in (_batch(0, 25), _batch(25, 60))
+    ]
+    _crash_mid_commit(d, "stream-q1-batch-1", [u.write(iter([b])) for b in changed])
+    u.commit([u.write(iter(changed))], batchId=1)
+    want = sorted([(f"u{i}", -1) for i in range(60)] + [(f"u{i}", i) for i in range(60, 100)])
+    assert _table_rows(d) == want
+    assert not glob.glob(os.path.join(mf.deletes_dir(d), "*.tmp"))
+
+
+def test_stream_sink_txn_defaults_to_the_query_id(tmp_path):
+    """Two queries on one table, each with a fresh checkpoint (Spark
+    writes a new query id to its ``metadata``), both commit batch 0:
+    neither is dropped as the other's replay. Spark hands the sink its
+    checkpoint as the lower-cased ``checkpointlocation`` option."""
+    import json
+
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from parquet_go_spark.spark.datasource import PGSDataSource
+
+    d = str(tmp_path / "enc")
+    schema = StructType([StructField("url", StringType()), StructField("n", LongType())])
+    for i, (lo, hi) in enumerate([(0, 10), (10, 30)]):
+        ckpt = tmp_path / f"ckpt{i}"
+        ckpt.mkdir()
+        (ckpt / "metadata").write_text(json.dumps({"id": f"query-{i}"}))
+        w = PGSDataSource({"path": d, "checkpointlocation": str(ckpt)}).streamWriter(schema, False)
+        w.commit([w.write(iter([_batch(lo, hi)]))], batchId=0)
+    assert _table_rows(d) == sorted((f"u{i}", i) for i in range(30))
+    assert {s["config"]["stream_txn"] for s in mf.read_snapshots(d)} == {"query-0", "query-1"}
+    with pytest.raises(ValueError, match="checkpointLocation"):  # no query identity to scope by
+        PGSDataSource({"path": d}).streamWriter(schema, False)

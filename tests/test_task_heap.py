@@ -69,9 +69,10 @@ def test_stream_writer_freezes_before_reading_its_batches(spark, tmp_path):
             at_read.append(gc.get_freeze_count())
             yield pa.record_batch({"url": pa.array(["u0"]), "n": pa.array([0], pa.int64())})
 
-        _PGSStreamWriter(enc, ["url", "n"], {}, txn="heap").write(rows())
-        yield pa.RecordBatch.from_pydict({"before": [before], "at_read": at_read, "kept": [len(keep)]})
+        for key in (None, "url"):  # the upsert path reads its batches first
+            _PGSStreamWriter(enc, ["url", "n"], {}, txn="heap", upsert_key=key).write(rows())
+        yield pa.RecordBatch.from_pydict({"before": [before] * 2, "at_read": at_read, "kept": [len(keep)] * 2})
 
     rows = spark.range(1, numPartitions=1).mapInArrow(write_probe, "before long, at_read long, kept long").collect()
-    assert len(rows) == 1
-    assert rows[0]["at_read"] >= rows[0]["before"] + rows[0]["kept"]
+    assert len(rows) == 2
+    assert all(r["at_read"] >= r["before"] + r["kept"] for r in rows)
