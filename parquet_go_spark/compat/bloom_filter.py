@@ -5,8 +5,9 @@ writer's filters during scan planning.
 The spec mandates XXH64 (seed 0) over plain-encoded values feeding a
 split-block filter (SBBF) of 256-bit blocks. The SBBF block math is
 shared with the engine's manifest blooms (``kernels/bloom.py`` — same
-salt constants, same block selection); this module supplies the
-spec-mandated hash (``kernels/xxhash64.py``) and the file plumbing:
+salt constants, same block selection); the spec-mandated column hash
+is the KMV sketch's (``kernels/kmv.hash_column_values``) and this
+module supplies the file plumbing:
 ``BloomFilterHeader`` thrift (numBytes + SplitBlock/XxHash/Uncompressed
 unions) at ``ColumnMetaData.bloom_filter_offset`` (field 14, length in
 field 15), bitset following the header.
@@ -26,7 +27,8 @@ import numpy as np
 
 from ..core.prune import PLAIN_FORMATS, point_key
 from ..kernels.bloom import BLOOM_BLOCK_BYTES, bloom_build, bloom_might_contain
-from ..kernels.xxhash64 import _xxh64_fixed, xxh64, xxh64_column
+from ..kernels.kmv import hash_column_values
+from ..kernels.xxhash64 import xxh64
 from ..limits import MAX_BLOOM_BYTES
 from .parquet_reader import PHYSICAL_TYPES
 from .thrift_compact import read_struct
@@ -55,33 +57,14 @@ def bits_per_value_for_fpp(fpp: float) -> int:
     return max(1, int(math.ceil(-8.0 / math.log(1.0 - fpp ** (1.0 / 8.0)))))
 
 
-def _value_hashes(col) -> np.ndarray | None:
-    """XXH64 (seed 0, spec) of a flat ColumnData's non-null values over
-    their PLAIN encodings; None when the type has no bloom semantics."""
-    if col.num_values == 0:
-        return np.empty(0, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        if col.ptype == "bytes":
-            return xxh64_column(col.lengths, col.data)
-        if col.ptype == "flba":
-            w = col.type_length
-            return _xxh64_fixed(col.data.reshape(col.num_values, w), 0)
-        if col.ptype in ("int32", "int64", "float", "double"):
-            le = col.values.astype(col.values.dtype.newbyteorder("<"), copy=False)
-            m = np.ascontiguousarray(le).view(np.uint8).reshape(
-                col.num_values, col.values.dtype.itemsize
-            )
-            return _xxh64_fixed(m, 0)
-    return None
-
-
 def bloom_bytes_for_column(col, fpp: float = 0.01) -> bytes | None:
     """SBBF bitset over a chunk's distinct values, sized from the
-    observed distinct-hash count at ``fpp``."""
-    hashes = _value_hashes(col)
-    if hashes is None:
+    observed distinct-hash count at ``fpp``; None for ``bool``, which
+    has no bloom semantics. The hashes are the spec's XXH64 (seed 0) over
+    each non-null value's PLAIN encoding."""
+    if col.ptype == "bool":
         return None
-    distinct = np.unique(hashes)
+    distinct = np.unique(hash_column_values(col))
     return bloom_build(
         distinct,
         ndv=max(len(distinct), 1),

@@ -440,6 +440,20 @@ def _write_chunk_nested(
     return w.column_chunk(spec["path"], n_positions, {3: ("i64", n_positions - len(leaf))}), meta_row
 
 
+def check_writable(schema: pa.Schema) -> None:
+    """Raise ValueError naming the first column with a FIXED_LEN_BYTE_ARRAY
+    leaf (decimals, ``fixed_size_binary``): this writer has no FLBA path."""
+    from .shred import leaf_specs
+
+    for field in schema:
+        for spec in leaf_specs(field.name, field.type):
+            if from_arrow(pa.array([], type=spec["leaf_type"])).ptype == "flba":
+                raise ValueError(
+                    f"column {field.name!r}: Parquet writes of {spec['leaf_type']} "
+                    "(FIXED_LEN_BYTE_ARRAY) are unsupported"
+                )
+
+
 def write_parquet(
     table: pa.Table,
     compression: str = "none",
@@ -494,6 +508,7 @@ def write_parquet(
     from .page_index import column_index_struct, offset_index_struct
     from .shred import leaf_specs
 
+    check_writable(table.schema)
     metas: list[dict] = []
     out = bytearray(MAGIC)
     codec = _CODEC[compression]

@@ -39,6 +39,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..kernels import bitpack  # noqa: F401  (re-exported for selectors)
 from ..kernels import levels
@@ -179,115 +180,10 @@ def _increment_str(p: str) -> str | None:
     return None
 
 
-def _extreme_bytes(
-    data: np.ndarray,
-    starts: np.ndarray,
-    lens: np.ndarray,
-    cand: np.ndarray,
-    want_min: bool,
-    cap: int = 280,
-) -> bytes:
-    """Lexicographic min/max over candidate byte strings that tie on
-    their first 8 bytes: compare successive 8-byte big-endian keys,
-    narrowing the candidate set each round.
-
-    Exact up to ``cap`` prefix bytes. Past the cap (boilerplate columns
-    where thousands of multi-KB values share hundreds of bytes) the
-    result degrades to a prune-safe BOUND instead of an exact value:
-    min -> the shortest surviving candidate truncated to the tied prefix
-    (a prefix of the true min, hence a valid lower bound); max -> the
-    tied prefix with its last non-0xFF byte incremented (Parquet's
-    truncate-and-increment: a strict upper bound for every string
-    sharing the prefix). Every consumer (manifest ``as_dict`` truncates
-    to 64 chars anyway; the Parquet footer writes bounds, not values)
-    needs only bound semantics, and ``cap`` = 280 > 4 bytes/char * 64
-    chars + 8 keeps the 64-char manifest strings byte-identical to the
-    exact computation. Exactness beyond the cap was pure waste: ~66% of
-    html-column encode time went to resolving KB-deep ties."""
-    if len(cand) > 1:
-        offj = np.arange(8)
-        pw = np.array([1 << (8 * (7 - i)) for i in range(8)], dtype=np.uint64)
-        off = 8  # first 8 bytes already tied
-        limit = len(data)
-        skip = 64  # fast-skip width, doubles while prefixes stay shared
-        mode_skip = False
-        while len(cand) > 1:
-            if off >= cap:
-                if want_min:
-                    i = int(cand[np.argmin(lens[cand])])
-                    return bytes(data[starts[i] : starts[i] + min(int(lens[i]), off)])
-                i = int(cand[np.argmax(lens[cand])])
-                p = bytearray(data[starts[i] : starts[i] + min(int(lens[i]), off)])
-                while p and p[-1] == 0xFF:
-                    p.pop()
-                if p:
-                    p[-1] += 1
-                    return bytes(p)
-                cap = 1 << 62  # all-0xFF prefix: no increment exists, go exact
-            rem = lens[cand] - off
-            exhausted = rem <= 0
-            if exhausted.all():
-                break
-            if exhausted.any():
-                # an exhausted candidate is byte-equal to the survivors up
-                # to its own end ⇒ it is a strict PREFIX of every longer
-                # tied value. For min the shortest prefix IS the minimum
-                # (resolve by the length tie-break below); for max the
-                # prefixes are strictly smaller — drop them, which also
-                # unblocks fast-skip (a short candidate otherwise gates
-                # `(rem >= skip).all()` forever, forcing 8-byte rounds
-                # through kilobyte boilerplate prefixes)
-                if want_min:
-                    cand = cand[exhausted]
-                    break
-                cand = cand[~exhausted]
-                rem = rem[~exhausted]
-                if len(cand) == 1:
-                    break
-            # fast-skip: boilerplate columns (html headers, url scheme)
-            # share prefixes for hundreds of bytes; once a key round fails
-            # to narrow (identical window everywhere), leap whole blocks
-            # with one vectorized compare, doubling the block width
-            if mode_skip and (rem >= skip).all():
-                p0 = int(starts[cand[0]] + off)
-                ref = data[p0 : p0 + skip]
-                # rem >= skip for every candidate ⇒ the window is inside
-                # each value ⇒ indices stay in bounds without padding
-                blk = data[(starts[cand] + off)[:, None] + np.arange(skip)]
-                if (blk == ref[None, :]).all():
-                    off += skip
-                    skip = min(skip * 2, 1 << 16)
-                    continue
-                mode_skip = False
-                skip = 64
-            # masked lanes (offj >= rem) may index past the value into a
-            # neighbor or past the buffer end: clamp in-bounds and zero
-            # them — no whole-buffer pad copy (this ran 3x per chunk on a
-            # 268 MB html column before)
-            pos = np.minimum((starts[cand] + off)[:, None] + offj, limit - 1)
-            b = data[pos].astype(np.uint64)
-            b *= offj[None, :] < rem[:, None]
-            keys = b @ pw
-            sel = keys.min() if want_min else keys.max()
-            new = cand[keys == sel]
-            mode_skip = len(new) == len(cand)  # no narrowing: shared window
-            cand = new
-            off += 8
-        if len(cand) > 1:
-            # byte-equal up to the shorter length: length breaks the tie
-            ln = lens[cand]
-            cand = cand[ln == (ln.min() if want_min else ln.max())]
-    i = int(cand[0])
-    return bytes(data[starts[i] : starts[i] + lens[i]])
-
-
 def column_minmax(col: ColumnData) -> tuple[object, object]:
     """Typed chunk min/max (reference O13, ``stats.go:9-225``),
-    vectorized. Bytes: big-endian first-8-byte keys narrow the
-    candidates, ties resolved by progressive 8-byte key comparison with
-    no candidate-count cap (shared-prefix columns like urls stay
-    correct); ties deeper than ~280 prefix bytes return prune-safe
-    truncated bounds instead of exact values (see ``_extreme_bytes``).
+    vectorized. Bytes: exact lexicographic bounds from Arrow's C++
+    ``min_max`` over a zero-copy view of the chunk.
     FLBA decimals compare as signed integers: widths <= 8 via one
     vectorized signed key, widths 9-16 (decimal128 carriers) via a
     signed-high/unsigned-low two-limb compare; only widths > 16 report
@@ -350,43 +246,19 @@ def column_minmax(col: ColumnData) -> tuple[object, object]:
         return v.min().item(), v.max().item()
     # bytes: Arrow's C++ lexicographic min_max over a ZERO-COPY
     # large_binary view (offsets from the cumulative lengths, data
-    # buffer as-is) — exact at memcmp speed, 5-50x the numpy
-    # key-narrowing below, which survives only as the fallback. The
-    # old 280-byte exactness cap is gone: C++ comparisons short-circuit
-    # at the first differing byte, so KB-deep shared prefixes cost one
-    # prefix walk per comparison, not per-round Python work.
-    try:
-        import pyarrow.compute as pc
-
-        n = col.num_values
-        offsets = np.zeros(n + 1, np.int64)
-        np.cumsum(col.lengths, out=offsets[1:])
-        arr = pa.Array.from_buffers(
-            pa.large_binary(),
-            n,
-            [None, pa.py_buffer(offsets), pa.py_buffer(np.ascontiguousarray(col.data))],
-        )
-        mm = pc.min_max(arr)
-        return mm["min"].as_py(), mm["max"].as_py()
-    except Exception:
-        pass
-    lens = col.lengths
-    starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-    data = col.data
-    off = np.arange(8)
-    if len(data) == 0:
-        keys = np.zeros(len(lens), dtype=np.uint64)
-    else:
-        # clamped gather + mask instead of padding a copy of the whole
-        # value buffer (268 MB/chunk on html columns)
-        pos = np.minimum(starts[:, None] + off, len(data) - 1)
-        vals = data[pos] * (off[None, :] < lens[:, None])
-        pw = np.array([1 << (8 * (7 - i)) for i in range(8)], dtype=np.uint64)  # big-endian
-        keys = vals.astype(np.uint64) @ pw
-    lo_key, hi_key = keys.min(), keys.max()
-    lo = _extreme_bytes(col.data, starts, lens, np.flatnonzero(keys == lo_key), True)
-    hi = _extreme_bytes(col.data, starts, lens, np.flatnonzero(keys == hi_key), False)
-    return lo, hi
+    # buffer as-is). C++ comparisons short-circuit at the first
+    # differing byte, so KB-deep shared prefixes cost one prefix walk
+    # per comparison.
+    n = col.num_values
+    offsets = np.zeros(n + 1, np.int64)
+    np.cumsum(col.lengths, out=offsets[1:])
+    arr = pa.Array.from_buffers(
+        pa.large_binary(),
+        n,
+        [None, pa.py_buffer(offsets), pa.py_buffer(np.ascontiguousarray(col.data))],
+    )
+    mm = pc.min_max(arr)
+    return mm["min"].as_py(), mm["max"].as_py()
 
 
 # --------------------------------------------------------------- factorize

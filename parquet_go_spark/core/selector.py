@@ -258,33 +258,28 @@ def choose_encoding(col: ColumnData, compression: str = "none"):
         ranked = sorted(est, key=est.get)[:3]
         if "bss" not in ranked and "bss" in est:
             ranked.append("bss")
+        k = min(n, 8192)
+        if col.ptype == "bytes":
+            # byte-capped sample: 8192 long strings could be tens of MB
+            k = min(k, int(np.searchsorted(ends, SAMPLE_BYTES)) + 1)
+            dhi = int(col.lengths[:k].sum())
+            raw_s = dhi + 4 * k
+        elif col.ptype == "flba":
+            dhi = raw_s = k * col.type_length
+        else:
+            dhi = 0
+            raw_s = k * (4 if col.ptype in ("int32", "float") else 8)
         for e in ranked:
-            try:
-                k = min(n, 8192)
-                if col.ptype == "bytes":
-                    # byte-capped sample: 8192 long strings could be tens of MB
-                    k = min(k, int(np.searchsorted(ends, SAMPLE_BYTES)) + 1)
-                    dhi = int(col.lengths[:k].sum())
-                    if e == "zdict" and k == z_sample[0]:
-                        enc_s = z_sample[1]  # the same prefix, already encoded above
-                    else:
-                        enc_s = encode_values(e, col, 0, k, 0, dhi, codes, dict_size, "auto", hints.get(e))
-                    raw_s = dhi + 4 * k
-                elif col.ptype == "flba":
-                    dhi = k * col.type_length
-                    enc_s = encode_values(e, col, 0, k, 0, dhi, codes, dict_size, "auto", hints.get(e))
-                    raw_s = dhi
-                else:
-                    enc_s = encode_values(e, col, 0, k, 0, 0, codes, dict_size, "auto", hints.get(e))
-                    raw_s = k * (4 if col.ptype in ("int32", "float") else 8)
-                comp_s = len(_compress(enc_s, compression))
-                est[e] = comp_s / max(raw_s, 1) * est.get("plain", raw_s)
-                if e == "rle_dict" and uniques is not None and dict_size:
-                    # the sample prices the index stream; the chunk also
-                    # stores its whole dictionary page, compressed the same way
-                    est[e] += len(_compress(encode_dictionary(uniques, col.ptype), compression))
-            except Exception:
-                pass
+            if e == "zdict" and k == z_sample[0]:
+                enc_s = z_sample[1]  # the same prefix, already encoded above
+            else:
+                enc_s = encode_values(e, col, 0, k, 0, dhi, codes, dict_size, "auto", hints.get(e))
+            comp_s = len(_compress(enc_s, compression))
+            est[e] = comp_s / max(raw_s, 1) * est.get("plain", raw_s)
+            if e == "rle_dict" and uniques is not None and dict_size:
+                # the sample prices the index stream; the chunk also
+                # stores its whole dictionary page, compressed the same way
+                est[e] += len(_compress(encode_dictionary(uniques, col.ptype), compression))
 
     penalty = dict(COST_PENALTY, zdict=zdict_penalty)
     best = min(est, key=lambda e: est[e] * (1.0 + penalty[e]))

@@ -19,6 +19,7 @@ from __future__ import annotations
 from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
 
 from . import deltabp
 
@@ -53,16 +54,7 @@ def train_zdict(lengths: np.ndarray, data: np.ndarray, cap: int = 1 << 13) -> by
     return b"".join(bytes(data[s : s + 512]) for s in starts)
 
 
-_ZSTD_LEVEL = 3
-
-
-def _zstd_codec():
-    try:  # pyarrow ships a zstd codec; guard anyway (import-try policy)
-        import pyarrow as _pa
-
-        return _pa.Codec("zstd", compression_level=_ZSTD_LEVEL)
-    except Exception:  # pragma: no cover - zstd-less build
-        return None
+_ZSTD = pa.Codec("zstd", compression_level=3)
 
 
 def _sample_stream(raw) -> bytes:
@@ -112,9 +104,6 @@ def choose_zdict_codec(
     compressed size, which :func:`choose_deflate_level` reuses."""
     import zlib as _z
 
-    z = _zstd_codec()
-    if z is None:
-        return 0
     raw = np.ascontiguousarray(data, dtype=np.uint8)
     s = _sample_stream(raw)
     lvl = 6 if len(data) <= 1 << 25 else 1
@@ -127,7 +116,7 @@ def choose_zdict_codec(
     d_len = len(co.compress(s) + co.flush())
     if probe is not None and lvl == 6 and not probe_dict:
         probe["deflate6"] = d_len
-    z_len = len(z.compress(s, asbytes=True))
+    z_len = len(_ZSTD.compress(s, asbytes=True))
     margin = 0.9 if len(data) > 1 << 20 else 1.0
     return 0 if d_len <= margin * z_len else 1
 
@@ -224,7 +213,7 @@ def encode_zdict(
     if codec is None:
         codec = choose_zdict_codec(lengths, data, zdict)
     if codec == 1:
-        comp = _zstd_codec().compress(memoryview(raw), asbytes=True)
+        comp = _ZSTD.compress(memoryview(raw), asbytes=True)
     else:
         if level is None:
             level = choose_deflate_level(raw)
@@ -254,11 +243,8 @@ def decode_zdict(
         raise ValueError(f"zdict stream has unknown codec {codec}")
     comp = bytes(mv[pos : pos + comp_len])
     if codec == 1:
-        z = _zstd_codec()
-        if z is None:  # pragma: no cover - zstd-less build
-            raise ValueError("zdict stream needs zstd but no codec is available")
         try:
-            raw = z.decompress(comp, raw_len, asbytes=True)
+            raw = _ZSTD.decompress(comp, raw_len, asbytes=True)
         except Exception as e:  # pyarrow raises OSError on corrupt frames
             raise ValueError(f"zdict zstd stream corrupt: {e}") from e
     else:

@@ -109,13 +109,15 @@ def decode_byte_array(buf, count: int, pos: int = 0) -> tuple[np.ndarray, np.nda
     """-> (lengths, data, new_pos).
 
     The header chain (start_{i+1} = start_i + 4 + len(start_i)) is
-    inherently sequential; it is resolved with the same pointer-doubling
-    orbit as the FSST parse (kernels/fsst.py): one vectorized pass builds
-    a 1-step jump table from unaligned u32 reads at every byte offset,
-    then O(log2 count) gather passes mark all header positions — no
-    per-value Python on the hot path (high-cardinality text/html columns
-    fall back from dict to PLAIN past 32767 distinct, chunk_writer.go:
-    185-209, so this path must stay vectorized)."""
+    sequential. From 64 values up, :func:`_fast_header_scan` tries two
+    vectorized resolutions: a uniform stride (every value as long as the
+    first, verified with one gather), then a scan for zero bytes 2-3 that
+    every header of a value under 64 KiB carries, with the candidate
+    chain verified in one vector op. When neither fits (fewer than 64
+    values, values of 64 KiB or more, NUL-dense payloads),
+    :func:`_walk_headers` reads the headers one value at a time in
+    Python. The headers are then dropped with one boolean mask over the
+    contiguous region."""
     if count == 0:
         return np.empty(0, np.int64), np.empty(0, np.uint8), pos
     mv = np.frombuffer(buf, np.uint8)

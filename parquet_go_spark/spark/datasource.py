@@ -185,17 +185,15 @@ def _filter_to_prune(f: Filter) -> list[tuple]:
             return []
         return [(col, "in", vals)]
     if isinstance(f, StringStartsWith):
+        from ..core.chunk import _increment_str
+
         p = f.value
         if not isinstance(p, str) or not p:
             return []
-        triples = [(col, ">=", p)]
-        # conservative upper bound: increment the last non-maxed char
-        # (Parquet's truncate-and-increment); all-maxed prefix -> no bound
-        for i in range(len(p) - 1, -1, -1):
-            if ord(p[i]) < 0x10FFFF:
-                triples.append((col, "<=", p[:i] + chr(ord(p[i]) + 1)))
-                break
-        return triples
+        # conservative upper bound (Parquet's truncate-and-increment);
+        # all-maxed prefix -> no bound
+        hi = _increment_str(p)
+        return [(col, ">=", p)] + ([] if hi is None else [(col, "<=", hi)])
     op = _COMPARISONS.get(type(f))
     value = _prune_value(f.value) if op else None
     return [] if value is None else [(col, op, value)]
@@ -300,8 +298,9 @@ class _PGSStagedWriter:
 
     With ``upsert_key`` (the stream writer's) each task also keeps one
     row per key and stages an equality sidecar of its keys, which
-    ``_commit`` publishes before the snapshot: the batch's rows replace
-    the older versions of its keys in one snapshot."""
+    ``_commit`` publishes before the snapshot under names taken from
+    ``job_id`` (a replay replaces its crashed attempt's sidecars): the
+    batch's rows replace the older versions of its keys in one snapshot."""
 
     def __init__(
         self, enc_dir: str, cols: list[str], opts: dict, arrow_schema=None, upsert_key=None
@@ -403,7 +402,8 @@ class _PGSStagedWriter:
                 len(msgs),
             )
             mf.drop_partitions(self.enc_dir, range(base + len(msgs), base + claim_n))
-        sidecars = [mf.publish_eq_delete_file(self.enc_dir, m.eq_stage) for m in msgs if m.eq_stage]
+        staged = [m.eq_stage for m in sorted(msgs, key=lambda m: m.stage_name) if m.eq_stage]
+        sidecars = mf.publish_job_eq_delete_files(self.enc_dir, job_id, staged)
         if sidecars:
             config = {**config, "eq_sidecars": sidecars}
         mf.commit_snapshot(self.enc_dir, operation, {**config, **marker, "tasks": len(msgs)})

@@ -9,6 +9,8 @@ row-group skipping, ``chunk_reader.go:271-297``).
 from __future__ import annotations
 
 import glob
+import hashlib
+import itertools
 import json
 import os
 
@@ -300,15 +302,29 @@ def write_eq_delete_file(out_dir: str, column: str, values, applies_to) -> str:
     (sequence-number semantics: the delete applies to data committed
     before it). Unlike positional sidecars these are value-based, so an
     in-place rewrite never makes them stale (re-filtering by value is
-    idempotent). Returns the basename."""
-    return publish_eq_delete_file(
-        out_dir, stage_eq_delete_file(out_dir, column, values, applies_to, f".eq.tmp.{os.getpid()}")
-    )
+    idempotent). Lands on the next free ``eq-NNNN.parquet`` with the same
+    ``os.link`` CAS as ``write_delete_file``: concurrent writers never
+    clobber each other's sidecar by claiming the same index. Returns the
+    basename."""
+    staged = stage_eq_delete_file(out_dir, column, values, applies_to, f".eq.tmp.{os.getpid()}")
+    stems = [n[len("eq-") : -len(".parquet")] for n in list_eq_delete_files(out_dir)]
+    k = max((int(s) + 1 for s in stems if s.isdigit()), default=0)
+    try:
+        while True:
+            name = f"eq-{k:04d}.parquet"
+            try:
+                os.link(staged, os.path.join(deletes_dir(out_dir), name))
+                return name
+            except FileExistsError:
+                k += 1
+    finally:
+        os.unlink(staged)
 
 
 def stage_eq_delete_file(out_dir: str, column: str, values, applies_to, stage_name: str) -> str:
     """Write an equality sidecar as ``deletes/<stage_name>``, invisible to
-    readers until :func:`publish_eq_delete_file`; a ``.tmp`` in the name
+    readers until :func:`write_eq_delete_file` or
+    :func:`publish_job_eq_delete_files` publishes it; a ``.tmp`` in the name
     keeps a crashed stage in ``remove_orphan_files``' sweep. Returns the
     staged path."""
     vals = list(values)
@@ -323,23 +339,27 @@ def stage_eq_delete_file(out_dir: str, column: str, values, applies_to, stage_na
     return path
 
 
-def publish_eq_delete_file(out_dir: str, staged: str) -> str:
-    """Link a staged sidecar onto the next free ``eq-NNNN.parquet`` and
-    drop the stage; returns the basename. Same ``os.link`` CAS as
-    ``write_delete_file``: concurrent committers never clobber each
-    other's sidecar by claiming the same index."""
-    existing = list_eq_delete_files(out_dir)
-    k = int(existing[-1][len("eq-") : -len(".parquet")]) + 1 if existing else 0
-    try:
-        while True:
-            name = f"eq-{k:04d}.parquet"
-            try:
-                os.link(staged, os.path.join(deletes_dir(out_dir), name))
-                return name
-            except FileExistsError:
-                k += 1
-    finally:
-        os.unlink(staged)
+def publish_job_eq_delete_files(out_dir: str, job_id: str, staged: list[str]) -> list[str]:
+    """Move one job's staged sidecars onto ``eq-<job tag>-NNNN.parquet``
+    (the tag hashes ``job_id``) and remove every other sidecar under the
+    tag: a replayed job reuses the names its crashed attempt published
+    and sweeps those it does not republish. A crashed attempt's sidecar
+    that another writer's snapshot has pinned since stays as it is, so
+    time travel to that snapshot still reads it. Returns the basenames."""
+    tag = hashlib.sha1(job_id.encode()).hexdigest()[:16]
+    pattern = os.path.join(deletes_dir(out_dir), f"eq-{tag}-*.parquet")
+    old = {os.path.basename(p) for p in glob.glob(pattern)}
+    pinned = set()
+    if old:  # a replay
+        for snap in read_snapshots(out_dir):
+            pinned |= old.intersection(snap.get("eq_delete_files") or ())
+    free = (n for n in (f"eq-{tag}-{i:04d}.parquet" for i in itertools.count()) if n not in pinned)
+    names = [next(free) for _ in staged]
+    for path, name in zip(staged, names):
+        os.replace(path, os.path.join(deletes_dir(out_dir), name))
+    for name in old - pinned - set(names):
+        os.remove(os.path.join(deletes_dir(out_dir), name))
+    return names
 
 
 def read_eq_delete_file(out_dir: str, name: str) -> dict:

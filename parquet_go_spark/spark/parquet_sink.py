@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..compat.parquet_writer import check_writable
 from ..core import codecs
 from .encode_job import manifest_job, prepare_write, reset_table
 
@@ -42,10 +43,12 @@ def encode_table_parquet(
     our own ``read_parquet_table`` — can prune on, plus the reference's
     file- and column-level key-value metadata (``WithMetaData``).
     ``encodings`` names Parquet encodings (``core.codecs.PARQUET_IDS``)
-    and is checked on the driver before any file is written."""
+    and is checked on the driver before any file is written, as are the
+    column types (no decimal or fixed-size binary columns)."""
     fields, arrow_schema = prepare_write(
         out_dir, df.schema, append=False, encodings=encodings, codec_ids=codecs.PARQUET_IDS
     )
+    check_writable(arrow_schema)
     reset_table(out_dir, fields)
     partitions = partitions or max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
     if key_col is not None:

@@ -104,6 +104,12 @@ def test_filter_translation_rules():
         ("url", ">=", "https://b"),
         ("url", "<=", "https://c"),
     ]
+    # the bound skips the surrogate gap; an all-maxed prefix has no bound
+    assert _filter_to_prune(StringStartsWith(("s",), "a\ud7ff")) == [
+        ("s", ">=", "a\ud7ff"),
+        ("s", "<=", "a\ue000"),
+    ]
+    assert _filter_to_prune(StringStartsWith(("s",), "\U0010ffff")) == [("s", ">=", "\U0010ffff")]
     # timestamp/date literals map to the stored int representation
     ts = dt.datetime(2021, 3, 4, 5, 6, 7, 123456)
     micros = (ts - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)

@@ -204,9 +204,10 @@ def test_int96_write_rejects_non_timestamp_and_nested(tmp_path):
 
 
 def test_bytes_minmax_arrow_path_matches_numpy_fallback():
-    """r3: bytes min/max goes through Arrow C++ min_max over a
-    zero-copy view (5-50x the numpy key-narrowing). The numpy fallback
-    must stay byte-for-byte equivalent — run both on tie-heavy shapes."""
+    """Bytes min/max is Arrow C++ ``min_max`` over a zero-copy view, the
+    only path. It must equal Python's exact lexicographic min/max on
+    tie-heavy shapes: shared url prefixes, values that prefix each other,
+    empty and 0xFF values, and ties deeper than 280 bytes."""
     import parquet_go_spark.core.chunk as C
 
     cases = [

@@ -114,3 +114,29 @@ def test_parquet_sink_kv_metadata(spark, tmp_path):
         assert column_kv_metadata(meta, "url") == {"canon": "rfc3986"}
         got = pq.read_metadata(f).metadata
         assert got[b"job"] == b"crawl-2026-08"
+
+
+@pytest.mark.parametrize("fixed", ["decimal", "fixed_size_binary"])
+def test_parquet_sink_refuses_flba_on_the_driver(spark, tmp_path, monkeypatch, fixed):
+    """Decimal and fixed-size binary columns raise on the driver, naming
+    the column, before any task writes a file. Spark has no fixed-size
+    binary type, so that case swaps it into the Arrow schema
+    ``prepare_write`` returns."""
+    import pyarrow as pa
+
+    from parquet_go_spark.spark import parquet_sink
+
+    df = spark.sql("SELECT id, CAST(id AS DECIMAL(9, 2)) AS fx FROM range(10)")
+    if fixed == "fixed_size_binary":
+        df = spark.sql("SELECT id, CAST(CAST(id AS STRING) AS BINARY) AS fx FROM range(10)")
+        real = parquet_sink.prepare_write
+
+        def prepare_fixed(*args, **kwargs):
+            fields, schema = real(*args, **kwargs)
+            return fields, schema.set(1, pa.field("fx", pa.binary(8)))
+
+        monkeypatch.setattr(parquet_sink, "prepare_write", prepare_fixed)
+    out = str(tmp_path / "pq_flba")
+    with pytest.raises(ValueError, match="column 'fx'.*FIXED_LEN_BYTE_ARRAY"):
+        encode_table_parquet(df, out, partitions=2)
+    assert not glob.glob(f"{out}/part-*")

@@ -4,6 +4,7 @@ back bit-identically in pyarrow and DuckDB."""
 
 from __future__ import annotations
 
+import decimal
 import io
 
 import duckdb
@@ -176,3 +177,20 @@ def test_each_chunk_factorizes_once(monkeypatch):
     calls.clear()
     write_parquet(TBL, encodings={"low": "rle_dict", "i32": "plain"})
     assert calls.count("bytes") == 2 and "int32" not in calls
+
+
+@pytest.mark.parametrize(
+    "typ, value",
+    [
+        (pa.decimal128(9, 2), decimal.Decimal("12.34")),
+        (pa.binary(4), b"abcd"),
+        (pa.list_(pa.decimal128(9, 2)), [decimal.Decimal("1.50")]),
+        (pa.struct([("x", pa.binary(2))]), {"x": b"ab"}),
+    ],
+)
+def test_flba_columns_refused_up_front(typ, value):
+    """No FIXED_LEN_BYTE_ARRAY write path: decimal and fixed-size binary
+    leaves, flat or nested, raise a ValueError naming the column."""
+    t = pa.table({"ok": pa.array([1]), "fx": pa.array([value], type=typ)})
+    with pytest.raises(ValueError, match="column 'fx'.*FIXED_LEN_BYTE_ARRAY"):
+        write_parquet(t)

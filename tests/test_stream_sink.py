@@ -152,28 +152,28 @@ def test_stream_sink_end_to_end(spark, tmp_path):
     assert not glob.glob(os.path.join(out, "stage-*.tmp"))
 
 
-def _crash_mid_commit(d: str, job_id: str, msgs) -> None:
+class _DriverDied(Exception):
+    pass
+
+
+def _crash_mid_commit(w: _PGSStreamWriter, batch_id: int, msgs, monkeypatch) -> None:
     """What an attempt that died after its renames, manifests and sidecar
-    publishes but BEFORE its snapshot leaves behind."""
-    base = mf.claim_append_base(d, job_id, len(msgs))
-    for i, m in enumerate(sorted(msgs, key=lambda m: m.stage_name)):
-        pid = base + i
-        os.replace(
-            os.path.join(d, m.stage_name), os.path.join(d, f"part-{pid:05d}.bin")
-        )
-        rows = [
-            {**r, "partition": pid, "file": os.path.join(d, f"part-{pid:05d}.bin")}
-            for r in m.rows
-        ]
-        mf.commit_partition(d, pid, rows)
-        if m.eq_stage:
-            mf.publish_eq_delete_file(d, m.eq_stage)
+    publishes but BEFORE its snapshot leaves behind: the real commit, cut
+    at the snapshot seal."""
+
+    def crash(*args, **kwargs):
+        raise _DriverDied
+
+    with monkeypatch.context() as m:
+        m.setattr(mf, "commit_snapshot", crash)
+        with pytest.raises(_DriverDied):
+            w.commit(msgs, batchId=batch_id)
 
 
-def _table_rows(d: str) -> list[tuple]:
+def _table_rows(d: str, as_of: int | None = None) -> list[tuple]:
     from parquet_go_spark.spark.decode_job import decode_partition, open_partition, plan_scan
 
-    plan, out = plan_scan(d), []
+    plan, out = plan_scan(d, as_of=as_of), []
     for pid in plan.pids:
         b = decode_partition(d, pid, open_partition(d, pid), plan)
         if b is not None:
@@ -181,16 +181,18 @@ def _table_rows(d: str) -> list[tuple]:
     return sorted(out)
 
 
-def test_stream_sink_mid_commit_crash_replay_with_fewer_tasks(tmp_path):
+def test_stream_sink_mid_commit_crash_replay_with_fewer_tasks(tmp_path, monkeypatch):
     """Crash window: attempt 1 renamed+manifested 2 partitions then died
     before its snapshot; the replay delivers the batch in ONE task. The
     replay's commit must sweep the claimed-but-unfilled tail ids, or the
     crashed attempt's second partition would double-count its rows.
     The upsert case ends exact too: the crashed attempt's published
-    sidecars are scoped like the replay's, to the pre-batch snapshot."""
+    sidecars are scoped like the replay's, to the pre-batch snapshot, and
+    the replay republishes under the same job-derived names, sweeping the
+    ones it does not fill."""
     w, d = _mk_writer(tmp_path)
     attempt = [w.write(iter([_batch(0, 100)])), w.write(iter([_batch(100, 250)]))]
-    _crash_mid_commit(d, "stream-q1-batch-0", attempt)
+    _crash_mid_commit(w, 0, attempt, monkeypatch)
     assert len(mf.committed_partitions(d)) == 2
     # replay arrives as ONE task carrying the whole batch
     r = w.write(iter([_batch(0, 250)]))
@@ -210,11 +212,54 @@ def test_stream_sink_mid_commit_crash_replay_with_fewer_tasks(tmp_path):
         pa.record_batch({"url": b["url"], "n": pa.array(np.full(len(b), -1))})
         for b in (_batch(0, 25), _batch(25, 60))
     ]
-    _crash_mid_commit(d, "stream-q1-batch-1", [u.write(iter([b])) for b in changed])
+    _crash_mid_commit(u, 1, [u.write(iter([b])) for b in changed], monkeypatch)
     u.commit([u.write(iter(changed))], batchId=1)
     want = sorted([(f"u{i}", -1) for i in range(60)] + [(f"u{i}", i) for i in range(60, 100)])
     assert _table_rows(d) == want
     assert not glob.glob(os.path.join(mf.deletes_dir(d), "*.tmp"))
+    # the replay replaced the crashed attempt's sidecars: every sidecar on
+    # disk is one a snapshot lists
+    listed = [n for s in mf.read_snapshots(d) for n in s["config"].get("eq_sidecars", [])]
+    assert mf.list_eq_delete_files(d) == sorted(listed)
+
+
+def test_stream_sink_replay_keeps_sidecars_a_snapshot_pinned(tmp_path, monkeypatch):
+    """Another query seals a snapshot between the crash and the replay;
+    that snapshot pins the crashed attempt's sidecars, so the replay
+    keeps them and publishes its own beside them, and time travel to it
+    still reads."""
+    d = str(tmp_path)
+    mf.write_table_schema(d, [{"name": "url", "ddl": "string"}, {"name": "n", "ddl": "bigint"}])
+    u = _PGSStreamWriter(d, ["url", "n"], {}, txn="q1", upsert_key="url")
+    u.commit([u.write(iter([_batch(0, 100)]))], batchId=0)
+    changed = [
+        pa.record_batch({"url": b["url"], "n": pa.array(np.full(len(b), -1))})
+        for b in (_batch(0, 25), _batch(25, 60))
+    ]
+    _crash_mid_commit(u, 1, [u.write(iter([b])) for b in changed], monkeypatch)
+    other = _PGSStreamWriter(d, ["url", "n"], {}, txn="q2")
+    other.commit([other.write(iter([_batch(500, 510)]))], batchId=0)
+    mid = mf.latest_snapshot(d)["seq"]
+    pinned = mf.snapshot_sidecars(d, mid)[1]
+    assert len(pinned) == 2
+    u.commit([u.write(iter(changed))], batchId=1)
+    assert set(pinned) < set(mf.list_eq_delete_files(d))
+    assert len(_table_rows(d, as_of=mid)) == 110
+
+
+def test_job_sidecars_keep_the_numbered_index(tmp_path):
+    """Job-named sidecars sit beside ``write_eq_delete_file``'s numbered
+    ones without breaking its index parse; republishing a job with fewer
+    sidecars sweeps the rest of its names."""
+    d = str(tmp_path)
+    stage = [mf.stage_eq_delete_file(d, "k", [v], [0], f"{v}.eq.tmp") for v in "ab"]
+    names = mf.publish_job_eq_delete_files(d, "stream-q-batch-0", stage)
+    assert mf.write_eq_delete_file(d, "k", ["c"], [0]) == "eq-0000.parquet"
+    assert mf.write_eq_delete_file(d, "k", ["d"], [0]) == "eq-0001.parquet"
+    stage = [mf.stage_eq_delete_file(d, "k", ["e"], [0], "e.eq.tmp")]
+    assert mf.publish_job_eq_delete_files(d, "stream-q-batch-0", stage) == names[:1]
+    assert mf.list_eq_delete_files(d) == sorted(["eq-0000.parquet", "eq-0001.parquet", names[0]])
+    assert mf.read_eq_delete_file(d, names[0])["values"] == ["e"]
 
 
 def test_stream_sink_txn_defaults_to_the_query_id(tmp_path):
